@@ -9,15 +9,19 @@ Builds the engine and the benchmark from source (perfbench/build.py),
 generates the seeded inputs once per (workload, generator version, seed,
 size) (perfbench/gen.py; for neardup_clusters also the DuckDB expected output,
 perfbench/oracle.py), then runs perfbench.Main on one JVM: the job is set up
-five times, warmed up once, then run back to back for --seconds, and every
-output is checked. The last line of standard output is one JSON object with
-`correct`, `attempted`, `failed` and `metrics` (end-to-end metrics with
---trace 0, per-layer metrics with --trace 1). The full result, with input
+once cold and seven more times, warmed up once, then run back to back for
+--seconds, and every output is checked. The expected output of a seed is the
+fingerprint committed in perfbench/expected/<workload>.json (written by
+perfbench/expect.py); for a seed not listed there it is computed through the
+workload's independent reference path. The last line of standard output is
+one JSON object with `correct`, `attempted`, `failed` and `metrics`
+(end-to-end metrics with --trace 0, per-layer metrics with --trace 1). The full result, with input
 properties, routing, host window and spans, is printed on the line before it
 and kept under <build dir>/perfbench/results/.
 
-`--perturb 1` drops rows from every checked output before it is
-fingerprinted; the output gate must then fail every job.
+`--perturb 1` drops one row from every job's output (kg_pipeline: one
+checkpointed triple, before linking; neardup_clusters: one q34 row); the
+output gate must then fail every job.
 """
 import argparse
 import json
@@ -34,7 +38,8 @@ import gen  # noqa: E402
 import oracle  # noqa: E402
 
 # documents per input set
-WORKLOADS = {"kg_pipeline": 1000, "neardup_clusters": 2000}
+WORKLOADS = {"kg_pipeline": 1500, "neardup_clusters": 2000}
+EXPECTED = os.path.join(HERE, "expected")
 RUN_LIMIT_S = 170
 FIRST_RUN_LIMIT_S = 880
 
@@ -66,6 +71,37 @@ def prepare(work, workload, seed):
     return d, time.monotonic() - t0
 
 
+def input_key(workload):
+    """What the committed expected outputs of a workload were computed for."""
+    return f"v{gen.VERSION}-d{WORKLOADS[workload]}"
+
+
+def committed(workload, seed):
+    """The expected output fingerprint committed for this seed, or None."""
+    p = os.path.join(EXPECTED, workload + ".json")
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        spec = json.load(f)
+    return spec["seeds"].get(str(seed)) if spec["inputs"] == input_key(workload) else None
+
+
+def jvm(classes, work):
+    """The java command line of perfbench.Main, up to its arguments."""
+    opens = [x for p in JAVA_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
+    # -XX:-UsePerfData: the JVM would otherwise write its perf counters under the system temp dir
+    return ["java", "-Xms3g", "-Xmx3g", "-XX:+UseG1GC", "-XX:TieredStopAtLevel=1", "-XX:-UsePerfData", *opens,
+            f"-Djava.io.tmpdir={work}/tmp",
+            f"-Dlog4j2.configurationFile={os.path.join(HERE, 'log4j2.properties')}",
+            "-cp", build.classpath(classes), "perfbench.Main"]
+
+
+def workdir():
+    work = os.path.join(build.build_dir(), "perfbench", "work")
+    os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
+    return work
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
@@ -78,23 +114,20 @@ def main():
     t0 = time.monotonic()
     classes = build.build()
     limit = FIRST_RUN_LIMIT_S - (time.monotonic() - t0) if build.LAST_BUILD_COMPILED else RUN_LIMIT_S
-    out_root = build.build_dir()
-    work = os.path.join(out_root, "perfbench", "work")
-    results = os.path.join(out_root, "perfbench", "results")
-    os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
+    work = workdir()
+    results = os.path.join(build.build_dir(), "perfbench", "results")
     os.makedirs(results, exist_ok=True)
     tag = f"{a.workload}-s{a.seed}-t{a.trace}" + ("-perturbed" if a.perturb else "")
     out = os.path.join(results, tag + ".json")
     if os.path.exists(out):
         os.remove(out)
     inputs, gen_s = prepare(work, a.workload, a.seed)
+    expected = committed(a.workload, a.seed)
+    if expected is not None:
+        with open(os.path.join(inputs, "expected.json"), "w") as f:
+            f.write(json.dumps(expected, separators=(",", ":")))
 
-    opens = [x for p in JAVA_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-    # -XX:-UsePerfData: the JVM would otherwise write its perf counters under the system temp dir
-    cmd = ["java", "-Xms3g", "-Xmx3g", "-XX:+UseG1GC", "-XX:TieredStopAtLevel=1", "-XX:-UsePerfData", *opens,
-           f"-Djava.io.tmpdir={work}/tmp",
-           f"-Dlog4j2.configurationFile={os.path.join(HERE, 'log4j2.properties')}",
-           "-cp", build.classpath(classes), "perfbench.Main",
+    cmd = [*jvm(classes, work),
            "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
            "--trace", str(a.trace), "--perturb", str(a.perturb),
            "--inputs", inputs, "--work", work, "--out", out]
@@ -111,6 +144,8 @@ def main():
     with open(out) as f:
         res = json.load(f)
     res["details"]["generation_s"] = gen_s
+    res["details"]["expected_source"] = ("committed" if expected is not None
+                                         else "duckdb" if a.workload == "neardup_clusters" else "reference")
     print(json.dumps({"workload": a.workload, "seed": a.seed, "trace": a.trace, **res}))
     print(json.dumps({k: res[k] for k in ("correct", "attempted", "failed", "metrics")}))
 

@@ -12,8 +12,7 @@ final case class Gate(rows: Long, hash: String) {
 
 object Gate {
   /** Computed in Spark: count and the decimal sum of xxhash64 over all columns. */
-  def of(df0: DataFrame): Gate = {
-    val df = if (Main.perturb) df0.filter(pmod(xxhash64(df0.columns.map(col).toIndexedSeq: _*), lit(1000)) =!= 0) else df0
+  def of(df: DataFrame): Gate = {
     val r = df.agg(count(lit(1)),
       sum(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast("decimal(38,0)"))).head()
     Gate(r.getLong(0), Option(r.getDecimal(1)).map(_.toPlainString).getOrElse("0"))
@@ -22,8 +21,7 @@ object Gate {
   /** Computed on the driver for small outputs that are compared against
     * DuckDB: each row is its values joined by tabs; the row hash is the
     * first 15 hex digits of its md5 (perfbench/oracle.py does the same). */
-  def md5Rows(rows0: Array[Row]): Gate = {
-    val rows = if (Main.perturb) rows0.drop(1) else rows0
+  def md5Rows(rows: Array[Row]): Gate = {
     val md = java.security.MessageDigest.getInstance("MD5")
     var sum = BigInt(0)
     rows.foreach { r =>

@@ -6,16 +6,13 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path, Paths}
 
-/** What one job returned: its output fingerprint and named sub-timings
-  * of the job (seconds). */
-final case class Outcome(gate: Gate, parts: Map[String, Double] = Map.empty)
-
-/** One set-up workload: `run` is the job as a user would run it;
-  * `traced` runs the cumulative layer prefixes and then the job, each
-  * in its own span, and returns the per-layer metrics of that pass. */
+/** One set-up workload: `run` is the job as a user would run it, and
+  * returns its output's fingerprint; `traced` runs the cumulative layer
+  * prefixes and then the job, each in its own span, and returns the
+  * per-layer metrics of that pass. */
 trait Runner {
-  def run(): Outcome
-  def traced(t: Tracer, rep: Int): (Outcome, Map[String, Double])
+  def run(): Gate
+  def traced(t: Tracer, rep: Int): (Gate, Map[String, Double])
   /** Routing the program took on these inputs, with the sizes it used. */
   def routing: Map[String, String] = Map.empty
   /** Per-layer counts measured once per traced run, outside the spans. */
@@ -48,6 +45,14 @@ object Workloads {
   }
 
   def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** `df` without its smallest row (every copy of it), as a layer that
+    * lost one row would return it; `--perturb 1` feeds this to the gate. */
+  def dropOne(df: DataFrame): DataFrame = {
+    val cs = df.columns.toSeq.map(col)
+    val r = df.orderBy(cs: _*).head()
+    df.filter(not(cs.zipWithIndex.map { case (c, i) => c <=> lit(r.get(i)) }.reduce(_ && _)))
+  }
 
   def readDocs(spark: SparkSession, path: String): Dataset[InputDoc] = {
     import spark.implicits._
@@ -100,19 +105,20 @@ import Workloads._
   * spark.graft.cc.localMaxEdges (the distributed CC loop), and checked. */
 object KgPipeline extends Workload {
   val name = "kg_pipeline"
-  val buckets = 4
-  val crashed = 2
+  val buckets = 2
+  val crashed = 1
   val broadcastMax = 15000
   val ccLocalMaxEdges = 10000L
 
   private def gazetteer(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(s"$dir/gazetteer")
 
-  /** Straight-through rewrite with no checkpoint, the broadcast link and
-    * the driver union-find CC, against CheckpointRunner, the salted link
+  /** The unfused `rewrite` → `triples` path straight through with no
+    * checkpoint, the broadcast link and the driver union-find CC, against
+    * the fused `rewriteTriples` inside CheckpointRunner, the salted link
     * and the distributed CC that `run` takes. */
   def reference(spark: SparkSession, dir: String): Option[Gate] = {
-    val t = Pipeline.rewriteTriples(Pipeline.parse(readDocs(spark, s"$dir/docs"), DocGen.columns),
-      Pipeline.parseCascade)
+    val t = Pipeline.triples(Pipeline.rewrite(
+      Pipeline.parse(readDocs(spark, s"$dir/docs"), DocGen.columns), Pipeline.parseCascade))
     val prev = spark.conf.getOption("spark.graft.cc.localMaxEdges")
     spark.conf.unset("spark.graft.cc.localMaxEdges")
     try Some(triplesGate(EntityLinker.canonicalize(spark,
@@ -149,15 +155,19 @@ object KgPipeline extends Workload {
       EntityLinker.canonicalize(spark,
         EntityLinker.linkUnioned(triples.as[TripleRow], gaz, broadcastMax), sameAs)
 
-    private def job(m: Pipeline.Metrics): Outcome = {
+    /** Links, canonicalizes and fingerprints the checkpointed triples;
+      * with `--perturb 1` one triple is dropped from them first. */
+    private def check(triples: DataFrame): Gate =
+      triplesGate(linkCanon(if (Main.perturb) dropOne(triples) else triples))
+
+    private def job(m: Pipeline.Metrics): Gate = {
       iteration += 1
-      val (_, first) = time(checkpoint(Some(m)))
+      checkpoint(Some(m))
       crash()
-      val (triples, resume) = time(checkpoint(Some(m)))
-      Outcome(triplesGate(linkCanon(triples)), Map("first_s" -> first, "resume_s" -> resume))
+      check(checkpoint(Some(m)))
     }
 
-    def run(): Outcome = {
+    def run(): Gate = {
       deleteTree(out)
       job(Pipeline.newMetrics(spark, cascade))
     }
@@ -169,7 +179,7 @@ object KgPipeline extends Workload {
         .map(_.group(1).toDouble / 1e3)
     }.sorted
 
-    def traced(t: Tracer, rep: Int): (Outcome, Map[String, Double]) = {
+    def traced(t: Tracer, rep: Int): (Gate, Map[String, Double]) = {
       def span(name: String)(f: => Unit): TraceSpan = { t.span(name, "run", rep)(f); t.last(name, rep) }
       val scan = span("scan")(noop(input.toDF()))
       val parse = span("SpanParser")(noop(Pipeline.parse(input, DocGen.columns).toDF()))
@@ -187,6 +197,7 @@ object KgPipeline extends Workload {
         noop(EntityLinker.linkUnioned(triples.as[TripleRow], gaz, broadcastMax)))
       val cc = span("ConnectedComponents")(ConnectedComponents.run(spark, sameAs).count())
       val canon = span("EntityLinker.canonicalize")(noop(linkCanon(triples)))
+      val checked = span("check")(check(triples))
       deleteTree(out)
       val m = Pipeline.newMetrics(spark, cascade)
       val o = t.span("job", "", rep)(job(m))
@@ -212,7 +223,7 @@ object KgPipeline extends Workload {
         "ConnectedComponents.jobs" -> ccStats.jobs.toDouble,
         "ConnectedComponents.shuffle_write_bytes" -> ccStats.shuffleWrite.toDouble,
         "ConnectedComponents.driver_only_s" -> t.driverOnlyS(cc),
-        "check.self_s" -> (j.seconds - o.parts("first_s") - o.parts("resume_s") - canon.seconds)))
+        "check.self_s" -> (checked.seconds - canon.seconds)))
     }
 
     /** Mention and link counts of the checkpointed triples, outside the spans. */
@@ -259,8 +270,9 @@ object NeardupClusters extends Workload {
   val name = "neardup_clusters"
   val queries = Seq("q34_dup_clusters", "q37_simhash_hamming")
 
-  private def gateOf(spark: SparkSession, dir: String): Gate = {
-    val gs = queries.map(q => Gate.md5Rows(graft.SparkEntry.queries(q)(spark, dir).collect()))
+  /** The queries' fingerprints, in `queries` order, as perfbench/oracle.py writes them. */
+  private def gateOf(results: Seq[Array[Row]]): Gate = {
+    val gs = results.map(Gate.md5Rows)
     Gate(gs.map(_.rows).sum, gs.map(_.hash).mkString("-"))
   }
 
@@ -273,32 +285,37 @@ object NeardupClusters extends Workload {
 
   def open(spark: SparkSession, dir: String, work: String, seed: Long): Runner = new Runner {
     val q = graft.SparkEntry.queries
+    val docs = spark.read.parquet(s"$dir/documents.parquet").count()
     private def collectQ(name: String): Array[Row] = q(name)(spark, dir).collect()
 
-    def run(): Outcome = {
-      val g = gateOf(spark, dir)
+    /** Both queries, fingerprinted; with `--perturb 1` q34 loses a row. */
+    def run(): Gate = {
+      val rows = queries.map(collectQ)
+      val g = gateOf(if (Main.perturb) rows.updated(0, rows.head.drop(1)) else rows)
       spark.catalog.clearCache()
-      Outcome(g)
+      g
     }
 
-    def traced(t: Tracer, rep: Int): (Outcome, Map[String, Double]) = {
+    def traced(t: Tracer, rep: Int): (Gate, Map[String, Double]) = {
       // plan counters of the two queries the job runs, read from their executed plans
       val (pc34, pc37) = (new PlanCounter, new PlanCounter)
-      def counted(pc: PlanCounter, query: String): TraceSpan = {
+      // each query alone, then its cached tables dropped, inside its span
+      def alone(name: String): Array[Row] = { val r = collectQ(name); spark.catalog.clearCache(); r }
+      def counted(pc: PlanCounter, query: String): (TraceSpan, Array[Row]) = {
         spark.listenerManager.register(pc)
-        try t.span(query, "run", rep)(collectQ(query))
+        val rows = try t.span(query, "run", rep)(alone(query))
         finally {
           org.apache.spark.perfbench.Bus.drain(spark.sparkContext)
           spark.listenerManager.unregister(pc)
         }
-        spark.catalog.clearCache()
-        t.last(query, rep)
+        (t.last(query, rep), rows)
       }
-      val pairs = t.span("DedupQueries.q22", "run", rep)(collectQ("q22_lsh_jaccard"))
-      spark.catalog.clearCache()
+      val pairs = t.span("DedupQueries.q22", "run", rep)(alone("q22_lsh_jaccard"))
       val s22 = t.last("DedupQueries.q22", rep)
-      val s34 = counted(pc34, "q34_dup_clusters")
-      val s37 = counted(pc37, "q37_simhash_hamming")
+      val (s34, r34) = counted(pc34, "q34_dup_clusters")
+      val (s37, r37) = counted(pc37, "q37_simhash_hamming")
+      t.span("check", "run", rep)(gateOf(Seq(r34, r37)))
+      val checked = t.last("check", rep)
       val o = t.span("job", "", rep)(run())
       val j = t.last("job", rep)
       val (st22, st34, st37) = (t.statsFor(s22), t.statsFor(s34), t.statsFor(s37))
@@ -314,7 +331,7 @@ object NeardupClusters extends Workload {
         "ConnectedComponents.jobs" -> (st34.jobs - st22.jobs).toDouble,
         "ConnectedComponents.shuffle_write_bytes" -> (st34.shuffleWrite - st22.shuffleWrite).toDouble,
         "ConnectedComponents.driver_only_s" -> (t.driverOnlyS(s34) - t.driverOnlyS(s22)),
-        "check.self_s" -> (j.seconds - s34.seconds - s37.seconds)))
+        "check.self_s" -> checked.seconds))
     }
 
     override def routing: Map[String, String] = Map(
