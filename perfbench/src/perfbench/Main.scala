@@ -25,19 +25,21 @@ import scala.jdk.CollectionConverters._
   * independent reference path when it is missing. */
 object Main {
 
-  /** Timed set-ups per run, after an untimed cold one; setup_s is their median. */
+  /** Timed set-ups per untraced run, after an untimed cold one; setup_s is
+    * their median. A traced run, which does not report setup_s, skips them. */
   val Setups = 7
   /** Timed jobs per untraced run at least, however short `seconds` is. A
     * traced run needs one, for the tracing overhead, and its time for the
     * traced passes. */
   val MinJobs = 2
   /** Traced passes per traced run; per-layer metrics are their medians.
-    * One keeps a traced kg_pipeline run near 95 s, well inside the 180 s
-    * a run may take; two took 125 s. */
+    * One pass, with its three chains of layer spans, keeps a traced
+    * kg_pipeline run at 90-140 s, inside the 180 s a run may take. */
   val TracedReps = 1
   /** The layer self times of a traced run, each timed in its own span
-    * outside the job, must sum to within this share of the traced job, or
-    * the traced run counts as failed. */
+    * outside the job and the median of `Workloads.Chains`, must sum to
+    * within this share of the run's median job, untraced or traced, or the
+    * traced run counts as failed. */
   val CoverageTolerance = 0.25
 
   /** Set by `--perturb 1`: every job drops one row of its output (see
@@ -162,7 +164,7 @@ object Main {
       s
     }
     val coldS = setUp()
-    val setups = (1 to Setups).map(_ => setUp())
+    val setups = (1 to (if (trace) 0 else Setups)).map(_ => setUp())
     details("cold_setup_s") = Json.num(coldS)
     details("setup_s_samples") = setups.map(Json.num).mkString("[", ",", "]")
     val (_, warmS) = Workloads.time(attempt(runner.run()))
@@ -219,15 +221,19 @@ object Main {
       }.toMap
       val selfSum = PerLayer.selfTimes.map(med).sum
       val tracedJob = median(passes.map(_("trace.job_s")))
-      val coverage = selfSum / tracedJob
+      // medians on both sides: on a shared host one job or chain of spans
+      // can run 30% faster or slower than the next
+      val runJob = median(jobS.toSeq ++ passes.map(_("trace.job_s")))
+      val coverage = selfSum / runJob
       val within = math.abs(coverage - 1) <= CoverageTolerance
       details("coverage") = Json.obj(Seq(
         "self_s_sum" -> Json.num(selfSum), "job_s_traced" -> Json.num(tracedJob),
+        "job_s_median" -> Json.num(runJob),
         "ratio" -> Json.num(coverage), "tolerance" -> Json.num(CoverageTolerance),
         "within" -> within.toString))
       if (!within) {
         failed += 1
-        errors += f"coverage: layer self times sum to $selfSum%.3f s, the traced job took $tracedJob%.3f s"
+        errors += f"coverage: layer self times sum to $selfSum%.3f s, the run's jobs took $runJob%.3f s"
       }
       PerLayer.names.map(k => (k, med(k), PerLayer.unit(k))) ++ Seq(
         ("trace.job_s", tracedJob, "s"),
@@ -271,7 +277,7 @@ object PerLayer {
     graft.conll.Pipeline.parseCascade.map(s => Workloads.scriptKey(s._1.name)).distinct
 
   /** Self times of the layers, each measured in spans outside the job;
-    * their sum is checked against the traced job (Main.CoverageTolerance). */
+    * their sum is checked against the run's job time (Main.CoverageTolerance). */
   val selfTimes: Seq[String] = Seq("scan.self_s", "SpanParser.self_s", "Rules.self_s", "sink.self_s",
     "CheckpointRunner.resume_s", "EntityLinker.self_s", "ConnectedComponents.self_s",
     "DedupQueries.self_s", "check.self_s")

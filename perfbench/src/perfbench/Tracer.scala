@@ -91,6 +91,10 @@ final class Tracer(spark: SparkSession, cores: Int) extends SparkListener {
   def last(name: String, run: Int): TraceSpan =
     spans.filter(s => s.name == name && s.run == run).last
 
+  /** Median seconds of the spans `name` of traced run `run`. */
+  def medianSeconds(name: String, run: Int): Double =
+    Main.median(spans.filter(s => s.name == name && s.run == run).map(_.seconds).toSeq)
+
   /** Counters of a span once the listener bus has delivered its events. */
   def statsFor(s: TraceSpan): SpanStats = {
     org.apache.spark.perfbench.Bus.drain(spark.sparkContext)
