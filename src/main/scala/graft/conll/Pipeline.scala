@@ -148,6 +148,22 @@ object Pipeline {
     }
   }
 
+  /** The per-sentence cascade shared by [[rewrite]] and
+    * [[rewriteTriples]]: each script to its fixpoint on `g`, in place,
+    * counting the sentence, each script's iterations and nanoseconds, and
+    * the triples out. */
+  private def runCascade(g: SentGraph, scripts: Seq[(Script, Int)], metrics: Option[Metrics]): Unit = {
+    metrics.foreach(_.sentencesIn.add(1))
+    for ((script, maxIter) <- scripts) {
+      val t0 = System.nanoTime()
+      val iters = script.run(g, maxIter)
+      metrics.flatMap(_.perScript.get(script.name)).foreach { case (it, ns) =>
+        it.add(iters); ns.add(System.nanoTime() - t0)
+      }
+    }
+    metrics.foreach(_.triplesOut.add(g.size))
+  }
+
   /** Run the rewrite cascade per sentence, to fixpoint per script, with
     * accumulator-backed metrics (reference per-update statistics,
     * CoNLLRDFUpdater.java:100,921-934). Narrow (map). */
@@ -158,16 +174,8 @@ object Pipeline {
   ): Dataset[Sentence] = {
     import sents.sparkSession.implicits._
     sents.map { sentence =>
-      metrics.foreach(_.sentencesIn.add(1))
       val g = SentGraph(sentence)
-      for ((script, maxIter) <- scripts) {
-        val t0 = System.nanoTime()
-        val iters = script.run(g, maxIter)
-        metrics.flatMap(_.perScript.get(script.name)).foreach { case (it, ns) =>
-          it.add(iters); ns.add(System.nanoTime() - t0)
-        }
-      }
-      metrics.foreach(_.triplesOut.add(g.size))
+      runCascade(g, scripts, metrics)
       SentGraph.toSentence(sentence.docId, sentence.sent, sentence.comments, g)
     }
   }
@@ -189,16 +197,8 @@ object Pipeline {
   ): Dataset[TripleRow] = {
     import sents.sparkSession.implicits._
     sents.flatMap { sentence =>
-      metrics.foreach(_.sentencesIn.add(1))
       val g = SentGraph(sentence)
-      for ((script, maxIter) <- scripts) {
-        val t0 = System.nanoTime()
-        val iters = script.run(g, maxIter)
-        metrics.flatMap(_.perScript.get(script.name)).foreach { case (it, ns) =>
-          it.add(iters); ns.add(System.nanoTime() - t0)
-        }
-      }
-      metrics.foreach(_.triplesOut.add(g.size))
+      runCascade(g, scripts, metrics)
       val out = new scala.collection.mutable.ArrayBuffer[TripleRow](g.size)
       g.foreachTriple((s, p, o, u) =>
         out += TripleRow(sentence.docId, sentence.sent, s, p, o, u))

@@ -150,12 +150,8 @@ object ConnectedComponents {
     * @return DataFrame(node: string, component: string) — component is the
     *         lexicographically smallest node id reachable from `node`.
     */
-  /** @param widthOverride fixes the loop's shuffle width instead of the
-    *        measured-edge-count sizing — measurement hook for the
-    *        width-policy A/B probes (tools/CanonProbe); production
-    *        callers leave it None. */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50,
-          strict: Boolean = true, widthOverride: Option[Int] = None): DataFrame = {
+          strict: Boolean = true): DataFrame = {
     import spark.implicits._
     // loop-invariant: partition the symmetrized edges by the join key
     // ONCE, at the width the measured edge count calls for, before the
@@ -176,15 +172,14 @@ object ConnectedComponents {
     // diameter-many shuffle rounds. sym0 IS the exact input graph here,
     // so the union-find result is the exact min-label fixpoint by
     // construction — the convergence trigger and the post-loop
-    // assertComponentLabels have nothing left to check. widthOverride
-    // (the CanonProbe A/B hook) forces the distributed loop.
+    // assertComponentLabels have nothing left to check.
     orderingFor(sym0.schema("src").dataType) match {
-      case Some(ord) if widthOverride.isEmpty && symCount <= localMaxEdges(spark) =>
+      case Some(ord) if symCount <= localMaxEdges(spark) =>
         val es = sym0.collect().map(r => (r.get(0), r.get(1)))
         return localComponents(spark, es, sym0.schema("src").dataType, ord)
       case _ =>
     }
-    val p = widthOverride.getOrElse(widthFor(spark, symCount))
+    val p = widthFor(spark, symCount)
     val sym = sym0.repartition(p, $"src").localCheckpoint()
 
     // seed with min(node, direct neighbors): the state after one

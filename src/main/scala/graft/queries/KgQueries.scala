@@ -47,9 +47,10 @@ object KgQueries {
     Pipeline.rewrite(detParsed(s, dir), Pipeline.analyzeCascade)
 
   /** The kg_entity_canonical entry's inputs — (linked triples, sameAs
-    * star edges) — factored out so tools/CanonProbe can A/B the CC width
-    * policy on the REAL graph this entry resolves (VERDICT r6 item 4);
-    * the entry itself consumes the same function. */
+    * star edges) — factored out so the CC width policy could be A/B'd on
+    * the REAL graph this entry resolves (VERDICT r6 item 4; the A/B is
+    * in docs/ROUND8_NOTES.md §2, its probe in git history); the entry
+    * itself consumes the same function. */
   def entityCanonicalInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
     val parsed = detParsedShared(s, dir)

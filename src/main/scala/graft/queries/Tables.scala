@@ -44,11 +44,12 @@ object Tables {
   /** Split counts already measured for a scan, keyed by
     * path + content fingerprint + session parallelism. Probing a scan's
     * split count via `df.rdd.getNumPartitions` materializes the physical
-    * RDD — measured ~130 ms of driver time PER CALL (tools/WidenProbe at
-    * sf0.1), a real slice of sub-second entry floors across widened()'s
-    * eleven call sites. The count only changes when the on-disk content
-    * changes, which [[srcTag]] detects at ~7 µs, so first use pays the
-    * probe and every later call is a map hit. */
+    * RDD — measured ~130 ms of driver time PER CALL at sf0.1
+    * (docs/ROUND6_NOTES.md; the probe is in git history), a real slice
+    * of sub-second entry floors across widened()'s eleven call sites.
+    * The count only changes when the on-disk content changes, which
+    * [[srcTag]] detects at ~7 µs, so first use pays the probe and every
+    * later call is a map hit. */
   private val splitCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   /** Widen an under-split scan for a NARROW downstream chain: a corpus

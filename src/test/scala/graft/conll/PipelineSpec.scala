@@ -1,6 +1,7 @@
 package graft.conll
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
@@ -26,6 +27,39 @@ class PipelineSpec extends AnyFunSuite {
     val m = metrics.toDf(spark).collect()
     assert(m.nonEmpty && m.forall(_.getAs[Long]("iterations") > 0))
     t.unpersist()
+  }
+
+  /** The fused `rewriteTriples` must emit exactly the rows of the unfused
+    * `triples(rewrite(x))`, as a multiset, and count the same sentences,
+    * triples and per-script iterations. */
+  private def assertFusedEqualsUnfused(
+      sents: Dataset[Sentence], cascade: Seq[(Rules.Script, Int)]): Unit = {
+    val (mU, mF) = (Pipeline.newMetrics(spark, cascade), Pipeline.newMetrics(spark, cascade))
+    val unfused = Pipeline.triples(Pipeline.rewrite(sents, cascade, Some(mU))).collect()
+    val fused = Pipeline.rewriteTriples(sents, cascade, Some(mF)).collect()
+    def multiset(rows: Array[TripleRow]) = rows.groupBy(identity).view.mapValues(_.length).toMap
+    assert(unfused.nonEmpty)
+    assert(multiset(fused) == multiset(unfused))
+    assert(mU.sentencesIn.value > 0 && mF.sentencesIn.value == mU.sentencesIn.value)
+    assert(mU.triplesOut.value == unfused.length && mF.triplesOut.value == fused.length)
+    for ((script, _) <- cascade) {
+      val (itU, itF) = (mU.perScript(script.name)._1.value, mF.perScript(script.name)._1.value)
+      assert(itU > 0 && itF == itU, s"${script.name}: fused $itF iterations, unfused $itU")
+    }
+  }
+
+  test("fused rewriteTriples == triples(rewrite) on DocGen spans with the parse-ud cascade") {
+    assertFusedEqualsUnfused(
+      Pipeline.parse(DocGen.docs(spark, 20), DocGen.columns), Pipeline.parseCascade)
+  }
+
+  test("fused rewriteTriples == triples(rewrite) on the TTL path with the analyze cascade") {
+    import spark.implicits._
+    val ttlDocs = DocGen.docs(spark, 12).map { d =>
+      (d.doc_id, Serializers.toCanonicalTtlDocument(
+        SpanParser.parseDoc(d, DocGen.columns), DocGen.columns, s"urn:graft:${d.doc_id}#"))
+    }
+    assertFusedEqualsUnfused(Pipeline.parseTtl(ttlDocs), Pipeline.analyzeCascade)
   }
 
   test("span-sequence invariant: docsOut preserves (kind,text,media_ref,order) per row") {

@@ -86,7 +86,7 @@ class TreeSourcesSpec extends AnyFunSuite {
   }
 
   test("the reference's bundled bracketing.sample.conll parses (S8 on real data)") {
-    val lines = scala.io.Source.fromFile("/root/reference/data/bracketing.sample.conll")
+    val lines = scala.io.Source.fromFile(ReferenceCorpus.file("bracketing.sample.conll"))
       .getLines().toVector
     val d = InputDoc("ptb", lines.zipWithIndex.map { case (l, i) =>
       val kind =
@@ -120,7 +120,7 @@ class TreeSourcesSpec extends AnyFunSuite {
   }
 
   test("span URIs on the bundled bracketing.sample (hand-traced, incl. the overshoot quirk)") {
-    val lines = scala.io.Source.fromFile("/root/reference/data/bracketing.sample.conll")
+    val lines = scala.io.Source.fromFile(ReferenceCorpus.file("bracketing.sample.conll"))
       .getLines().toVector
     val d = InputDoc("ptb", lines.zipWithIndex.map { case (l, i) =>
       val kind =
@@ -146,7 +146,7 @@ class TreeSourcesSpec extends AnyFunSuite {
   }
 
   test("tree2bracket on the real PTB sample reconstructs plausible brackets") {
-    val lines = scala.io.Source.fromFile("/root/reference/data/bracketing.sample.conll")
+    val lines = scala.io.Source.fromFile(ReferenceCorpus.file("bracketing.sample.conll"))
       .getLines().toVector
     val d = InputDoc("ptb", lines.zipWithIndex.map { case (l, i) =>
       val kind =
@@ -175,7 +175,7 @@ class TreeSourcesSpec extends AnyFunSuite {
   }
 
   test("the reference's bundled SketchEngine.sample parses (S7 on real data)") {
-    val lines = scala.io.Source.fromFile("/root/reference/data/SketchEngine.sample")
+    val lines = scala.io.Source.fromFile(ReferenceCorpus.file("SketchEngine.sample"))
       .getLines().toVector
     val d = InputDoc("ske", lines.zipWithIndex.map { case (l, i) =>
       Span(if (l.trim.matches("^<[^>]*>\\s*$")) "markup" else "token", l, "", i)

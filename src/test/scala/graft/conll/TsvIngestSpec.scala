@@ -10,8 +10,7 @@ import java.util.zip.GZIPInputStream
   * in-memory read. */
 class TsvIngestSpec extends AnyFunSuite {
 
-  private val corpus =
-    "/root/reference/data/ud/UD_English-master/en-ud-dev.conllu.gz"
+  private def corpus = ReferenceCorpus.file("ud/UD_English-master/en-ud-dev.conllu.gz")
   private val cols =
     Seq("ID", "WORD", "LEMMA", "UPOS", "POS", "FEAT", "HEAD", "EDGE", "DEPS", "MISC")
 

@@ -17,7 +17,7 @@ import graft.tools.PrScore
   */
 class UdGoldenSpec extends AnyFunSuite {
 
-  private val corpus = "/root/reference/data/ud/UD_English-master/en-ud-dev.conllu.gz"
+  private def corpus = ReferenceCorpus.file("ud/UD_English-master/en-ud-dev.conllu.gz")
   private val convertCols =
     Seq("ID", "WORD", "LEMMA", "UPOS", "POS", "FEAT", "HEAD", "EDGE", "DEPS", "MISC")
   private val analyzeCols =
