@@ -1,6 +1,6 @@
 package graft.conll
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import Rules.Script
@@ -47,13 +47,14 @@ object CheckpointRunner {
       val t0 = System.nanoTime()
       val subset = docs.filter(pmod(xxhash64($"doc_id"), lit(nBuckets)) === b)
       val out = Pipeline.rewriteTriples(Pipeline.parse(subset, cols), scripts, metrics)
-      out.write.mode("overwrite").parquet(s"$outDir/bucket=$b")
-      val written = spark.read.parquet(s"$outDir/bucket=$b")
-      val stats = written.agg(
-        min($"doc_id").as("mn"), max($"doc_id").as("mx"), count(lit(1)).as("n")).head()
-      val lin = BucketLineage(b,
-        Option(stats.getString(0)).getOrElse(""), Option(stats.getString(1)).getOrElse(""),
-        stats.getLong(2), (System.nanoTime() - t0) / 1000000L, "done")
+      // the lineage stats ride the write job itself (no read-back job)
+      val stats = Observation()
+      out.observe(stats, min($"doc_id").as("mn"), max($"doc_id").as("mx"), count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$outDir/bucket=$b")
+      val st = stats.get
+      def docId(k: String) = Option(st(k)).fold("")(_.toString)
+      val lin = BucketLineage(b, docId("mn"), docId("mx"),
+        st("n").asInstanceOf[Long], (System.nanoTime() - t0) / 1000000L, "done")
       val json =
         s"""{"bucket":${lin.bucket},"doc_min":"${lin.doc_min}","doc_max":"${lin.doc_max}",""" +
           s""""rows":${lin.rows},"wall_ms":${lin.wall_ms},"status":"${lin.status}"}"""
@@ -63,10 +64,10 @@ object CheckpointRunner {
     // Overlap the independent bucket jobs (r9, guide §2.6): buckets are
     // disjoint filters writing disjoint directories, and Spark's
     // scheduler runs concurrent jobs FIFO so a later bucket's tasks
-    // back-fill executors freed by the current bucket's write/agg tail —
+    // back-fill executors freed by the current bucket's write tail —
     // the sequential loop left the cluster idle during every bucket's
-    // commit + stats read-back. 2-3 jobs in flight is the guide's
-    // recommendation: enough to fill the tail, not enough to thrash.
+    // commit. 2-3 jobs in flight is the guide's recommendation: enough
+    // to fill the tail, not enough to thrash.
     // Marker semantics are unchanged (each bucket's marker is written by
     // its own task AFTER its parquet commit; a crash still re-runs
     // exactly the uncommitted buckets).
@@ -84,7 +85,9 @@ object CheckpointRunner {
         }
       } finally pool.shutdown()
     }
-    spark.read.parquet((0 until nBuckets).map(b => s"$outDir/bucket=$b"): _*)
+    // the buckets' schema is known, so no footer-inference job runs
+    spark.read.schema(Encoders.product[TripleRow].schema)
+      .parquet((0 until nBuckets).map(b => s"$outDir/bucket=$b"): _*)
   }
 
   /** The lineage table reconstructed from the manifest markers.

@@ -153,34 +153,32 @@ object ConnectedComponents {
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50,
           strict: Boolean = true): DataFrame = {
     import spark.implicits._
-    // loop-invariant: partition the symmetrized edges by the join key
-    // ONCE, at the width the measured edge count calls for, before the
-    // checkpoint pins the layout — every round's labels⋈sym join then
-    // finds both sides already hash-partitioned on the key at the same
-    // width (labels comes back (node, p)-partitioned from the round's
-    // repartition+groupBy) and inserts no exchange; previously sym was
-    // re-shuffled on src every round at the session default width.
-    val sym0 = edges.select($"src", $"dst")
+    // The symmetrized edges are checkpointed once, unpartitioned: a
+    // localCheckpoint reports UnknownPartitioning (Spark 4.1, AQE on), so
+    // a repartition(p, src) ahead of a second checkpoint could not carry
+    // its layout into the rounds — it cost two extra jobs per call while
+    // the seed groupBy and every round's labels⋈sym join still planned
+    // their own exchange on src.
+    val sym = edges.select($"src", $"dst")
       .union(edges.select($"dst".as("src"), $"src".as("dst")))
       .filter($"src" =!= $"dst")
       .distinct()
       .localCheckpoint()
-    val symCount = sym0.count()
+    val symCount = sym.count()
     // Small-graph cutover (see localMaxEdges): the measured symmetrized
     // edge count is already in hand for the width sizing; under the
     // bound the whole fixpoint is one driver union-find instead of
-    // diameter-many shuffle rounds. sym0 IS the exact input graph here,
+    // diameter-many shuffle rounds. sym IS the exact input graph here,
     // so the union-find result is the exact min-label fixpoint by
     // construction — the convergence trigger and the post-loop
     // assertComponentLabels have nothing left to check.
-    orderingFor(sym0.schema("src").dataType) match {
+    orderingFor(sym.schema("src").dataType) match {
       case Some(ord) if symCount <= localMaxEdges(spark) =>
-        val es = sym0.collect().map(r => (r.get(0), r.get(1)))
-        return localComponents(spark, es, sym0.schema("src").dataType, ord)
+        val es = sym.collect().map(r => (r.get(0), r.get(1)))
+        return localComponents(spark, es, sym.schema("src").dataType, ord)
       case _ =>
     }
     val p = widthFor(spark, symCount)
-    val sym = sym0.repartition(p, $"src").localCheckpoint()
 
     // seed with min(node, direct neighbors): the state after one
     // propagation round of the node-id init, computed inside the same

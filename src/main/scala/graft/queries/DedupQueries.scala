@@ -17,6 +17,40 @@ object DedupQueries {
 
   private def md5s(c: Column): Column = md5(c.cast("binary"))
 
+  /** SimHash signature of each document with ≥1 token, as an `Int`:
+    * (doc_id, sig). Bit `nBits-1-i` is set when hex digit i of the word's
+    * md5 is ≥ '8' on a strict majority of the doc's tokens, so the
+    * signature printed MSB-first is the oracle's '0'/'1' string (bit i
+    * of that string = digit i's vote). A digit is ≥ '8' exactly when its
+    * nibble's top bit is set: each 8-digit group of the md5 is read once
+    * as a 32-bit word (`conv`) and the votes are shifts and masks. The md5
+    * is projected once per token, ahead of the words that share it.
+    * `nBits` ≤ 16 (the md5's first 16 hex digits). */
+  private[graft] def simhashSig(tokens: DataFrame, nBits: Int): DataFrame = {
+    require(nBits >= 1 && nBits <= 16, s"simhash bits must be in 1..16, got $nBits")
+    val words = (0 until (nBits + 7) / 8).map(w =>
+      conv(substring(col("h"), 8 * w + 1, 8), 16, 10).cast("bigint").as(s"w$w"))
+    val votes = (0 until nBits).map(i =>
+      sum(shiftright(col(s"w${i / 8}"), 31 - 4 * (i % 8)).bitwiseAND(1L)).as(s"s$i"))
+    val sig = (0 until nBits).map(i =>
+      when(col(s"s$i") * 2 > col("n"), lit(1 << (nBits - 1 - i))).otherwise(lit(0)))
+      .reduce(_ bitwiseOR _)
+    tokens.select(tokens("doc_id"), md5s(tokens("word")).as("h"))
+      .select(col("doc_id") +: words: _*)
+      .groupBy(col("doc_id"))
+      .agg(votes.head, (votes.tail :+ count(lit(1)).as("n")): _*)
+      .select(col("doc_id"), sig.as("sig"))
+  }
+
+  /** Band b's bucket of a 16-bit [[simhashSig]]: hex-digit group b of the
+    * oracle's '0'/'1' string (`substring(sig, 4b+1, 4)`), bits 15-4b .. 12-4b. */
+  private[graft] def simhashBand(sig: Column, b: Int): Column =
+    shiftright(sig, 12 - 4 * b).bitwiseAND(15)
+
+  /** Hamming distance of two [[simhashSig]] signatures: popcount of their XOR. */
+  private[graft] def simhashHamming(sa: Column, sb: Column): Column =
+    bit_count(sa.bitwiseXOR(sb)).cast("bigint")
+
   /** Fixed per-language character-bigram profiles for q44 (the classic
     * n-gram language-ID shape, Cavnar & Trenkle 1994 scaled down to a
     * deterministic 5-bigram probe per language; shared by the Spark plan
@@ -304,20 +338,12 @@ object DedupQueries {
       "q23_simhash",
       (s, dir) => {
         import s.implicits._
-        val hi = Seq("8", "9", "a", "b", "c", "d", "e", "f")
-        val tk = TextQueries.tokens(s, dir)
-          .withColumn("h", md5s($"word"))
-        val bitSums = (0 until 8).map(i =>
-          sum(when(substring($"h", i + 1, 1).isin(hi: _*), 1L).otherwise(0L)).as(s"s$i"))
-        val agg = tk.groupBy($"doc_id")
-          .agg(bitSums.head, (bitSums.tail :+ count(lit(1)).as("n")): _*)
-        val bits = (0 until 8).map(i =>
-          when(col(s"s$i") * 2 > col("n"), "1").otherwise("0"))
         // measured-width bucket window (r9, Tables.byteWidth): one
         // signature row per doc, so the bucket-size window's exchange is
         // sized from the source bytes instead of the session default
         val p = Tables.byteWidth(s, dir, "documents")
-        val sigd = agg.withColumn("simhash", concat(bits: _*))
+        val sigd = simhashSig(TextQueries.tokens(s, dir), 8)
+          .select($"doc_id", lpad(bin($"sig"), 8, "0").as("simhash"))
         (if (p > 0) sigd.repartition(p, $"simhash") else sigd)
           .withColumn("bucket_size",
             count(lit(1)).over(Window.partitionBy($"simhash")))
@@ -338,32 +364,21 @@ object DedupQueries {
     ),
     Q(
       // SimHash near-dup PAIRS — the Hamming-distance modality q23's
-      // exact-bucket equality can't express: a 16-bit signature (md5
+      // exact-bucket equality can't express: a 16-bit Int signature (md5
       // hex-digit majority votes), banded 4×4 for candidate generation
       // (pigeonhole: ≤ 2 differing bits can touch at most 2 of the 4
       // bands, so near-dups always share a band — recall is exact),
       // the q22 per-band bucket cap against degenerate piles, then
-      // exact Hamming ≤ 2 verification. Pure joins + codegen'd ops.
+      // exact Hamming ≤ 2 verification (popcount of the XOR). Pure joins
+      // + codegen'd ops.
       "q37_simhash_hamming",
       (s, dir) => {
         import s.implicits._
-        val hi = Seq("8", "9", "a", "b", "c", "d", "e", "f")
-        val tk = TextQueries.tokens(s, dir).withColumn("h", md5s($"word"))
-        val bitSums = (0 until 16).map(i =>
-          sum(when(substring($"h", i + 1, 1).isin(hi: _*), 1L).otherwise(0L)).as(s"s$i"))
-        val agg = tk.groupBy($"doc_id")
-          .agg(bitSums.head, (bitSums.tail :+ count(lit(1)).as("n")): _*)
-        val bits = (0 until 16).map(i =>
-          when(col(s"s$i") * 2 > col("n"), "1").otherwise("0"))
-        val sigs = agg.select($"doc_id", concat(bits: _*).as("sig"))
-        // NOT rewritten to the q22 explode(array(struct)) banding (r9
-        // negative result): measured 1.24 s floor vs 1.16 s for this
-        // union form — runtime exchange reuse already deduplicates the
-        // 4 branches (r8 audit: 4 unique + 4 reused), so the explode
-        // only changed plan text, not work. Kept as the audited shape.
-        val bands = (0 until 4).map(b =>
-          sigs.select($"doc_id", $"sig", lit(b).as("band"),
-            substring($"sig", b * 4 + 1, 4).as("bucket")))
+        val sigs = simhashSig(TextQueries.tokens(s, dir), 16)
+        // all four band buckets of a signature come out of ONE explode
+        // pass (the q22 banding shape)
+        val bandStructs = (0 until 4).map(b =>
+          struct(lit(b).as("band"), simhashBand($"sig", b).as("bucket")))
         // measured-width exchanges (r9, Tables.byteWidth — the
         // lshJaccardPairs pattern): bucket window + band self-join share
         // one explicit (band,bucket) exchange; the candidate dedup rides
@@ -371,7 +386,9 @@ object DedupQueries {
         // aggregate's clustering is satisfied with no further shuffle).
         // Same-window interleaved pair at sf0.1: 1.80 → 1.38 s floor.
         val p = Tables.byteWidth(s, dir, "documents")
-        val banded0 = bands.reduce(_ unionByName _)
+        val banded0 = sigs
+          .select($"doc_id", $"sig", explode(array(bandStructs: _*)).as("bk"))
+          .select($"doc_id", $"sig", $"bk.band".as("band"), $"bk.bucket".as("bucket"))
         val banded = (if (p > 0) banded0.repartition(p, $"band", $"bucket") else banded0)
           .withColumn("bn",
             count(lit(1)).over(Window.partitionBy($"band", $"bucket")))
@@ -386,10 +403,7 @@ object DedupQueries {
         val cand =
           if (p > 0) cand0.repartition(p, $"a", $"b").dropDuplicates()
           else cand0.distinct()
-        val hamming = (0 until 16).map(i =>
-          when(substring($"sa", i + 1, 1) =!= substring($"sb", i + 1, 1), 1L)
-            .otherwise(0L)).reduce(_ + _)
-        cand.withColumn("hamming", hamming)
+        cand.withColumn("hamming", simhashHamming($"sa", $"sb"))
           .filter($"hamming" <= 2)
           .select($"a", $"b", $"hamming")
           .orderBy($"a", $"b")

@@ -106,11 +106,12 @@ class PlanSpec extends AnyFunSuite {
     "q23_simhash"             -> (3, 0),
     "q29_ann_lsh_buckets"     -> (3, 0),
     "q33_cdc_chunks"          -> (2, 0),
-    // 8 counted exchanges = 4 unique + 4 reuses: the banded signature
-    // union is computed ONCE and reused by every band and by the
-    // broadcast probe side — the reuse disappearing would read
-    // shuffles>8 here
-    "q37_simhash_hamming"     -> (8, 1),
+    // integer signatures banded by one explode pass: the doc-signature
+    // agg, the (band,bucket) exchange shared by the bucket window and
+    // the band self-join, the (a,b) candidate dedup and the output sort;
+    // the self-join's other side reuses the (band,bucket) exchange and
+    // is broadcast — that reuse disappearing would read shuffles>4
+    "q37_simhash_hamming"     -> (4, 1),
     "q40_repetition"          -> (2, 0),
     // three agg levels (pivot/sent/doc) + sort: the levels exchange
     // successively SMALLER aggregated data — collapsing them into one
