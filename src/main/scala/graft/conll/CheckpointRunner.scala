@@ -2,7 +2,7 @@ package graft.conll
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.hadoop.fs.Path
 import Rules.Script
 
 /** Checkpoint-resumable pipeline execution with per-partition lineage and
@@ -15,6 +15,8 @@ import Rules.Script
   * wall ms). On restart, completed buckets are skipped. Marker files are
   * written AFTER the bucket's parquet commit, so a crash between the two
   * re-runs the bucket — output is overwrite-idempotent, never partial.
+  * Markers go through `outDir`'s own Hadoop FileSystem, as the parquet
+  * does, so they land beside the buckets on any scheme.
   *
   * At cluster scale each bucket is itself fully parallel (it is a filter
   * over the input, processed by all executors); buckets bound the blast
@@ -37,11 +39,11 @@ object CheckpointRunner {
       metrics: Option[Pipeline.Metrics] = None
   ): DataFrame = {
     import spark.implicits._
-    val manifestDir = Paths.get(outDir, "_manifest")
-    Files.createDirectories(manifestDir)
+    val (fs, manifestDir) = manifest(spark, outDir)
+    fs.mkdirs(manifestDir)
 
-    def markerPath(b: Int) = manifestDir.resolve(s"bucket-$b.json")
-    def isDone(b: Int) = Files.exists(markerPath(b))
+    def markerPath(b: Int) = new Path(manifestDir, s"bucket-$b.json")
+    def isDone(b: Int) = fs.exists(markerPath(b))
 
     def runBucket(b: Int): Unit = {
       val t0 = System.nanoTime()
@@ -58,8 +60,8 @@ object CheckpointRunner {
       val json =
         s"""{"bucket":${lin.bucket},"doc_min":"${lin.doc_min}","doc_max":"${lin.doc_max}",""" +
           s""""rows":${lin.rows},"wall_ms":${lin.wall_ms},"status":"${lin.status}"}"""
-      Files.write(markerPath(b), json.getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+      val os = fs.create(markerPath(b), true)
+      try os.write(json.getBytes("UTF-8")) finally os.close()
     }
     // Overlap the independent bucket jobs (r9, guide §2.6): buckets are
     // disjoint filters writing disjoint directories, and Spark's
@@ -99,15 +101,19 @@ object CheckpointRunner {
     */
   def lineage(spark: SparkSession, outDir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    val dir = Paths.get(outDir, "_manifest")
-    val st = Files.list(dir)
-    val lines =
-      try st.iterator().asScala
-        .filter(p => p.getFileName.toString.matches("bucket-\\d+\\.json"))
-        .map(p => new String(Files.readAllBytes(p), "UTF-8"))
-        .toSeq
-      finally st.close()
+    val (fs, dir) = manifest(spark, outDir)
+    val lines = fs.listStatus(dir).toSeq.map(_.getPath)
+      .filter(_.getName.matches("bucket-\\d+\\.json"))
+      .map { p =>
+        val in = fs.open(p)
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      }
     spark.read.json(spark.createDataset(lines))
+  }
+
+  /** `outDir/_manifest` with the FileSystem of `outDir`'s scheme. */
+  private def manifest(spark: SparkSession, outDir: String) = {
+    val dir = new Path(outDir, "_manifest")
+    (dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
   }
 }

@@ -1,5 +1,6 @@
 package graft.conll
 
+import graft.Sizing
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,18 +45,10 @@ object EntityLinker {
         col("entity_id").as("obj"), lit(true).as("obj_is_uri"))
   }
 
-  /** Size-based routing (VERDICT r1 item 6): broadcast only when the
-    * gazetteer is provably small; otherwise the salted shuffle join. The
-    * bounded `limit(max+1).count()` probe stands in for the catalog
-    * row-count stats a real deployment reads for free — an unconditional
-    * broadcast of a corpus-derived vocabulary is unbounded at 100 TB. */
-  def link(triples: DataFrame, gazetteer: DataFrame, broadcastMax: Long = 1000000L): DataFrame = {
-    val probe = gazetteer.limit(math.min(broadcastMax + 1, Int.MaxValue.toLong).toInt).count()
-    if (probe <= broadcastMax) linkBroadcast(triples, gazetteer)
-    else linkSalted(triples, gazetteer)
-  }
-
-  /** triples ∪ entity links, size-routed. The broadcast regime is FUSED:
+  /** triples ∪ entity links, size-routed (VERDICT r1 item 6): broadcast
+    * only when the gazetteer is provably small, otherwise the salted
+    * shuffle join; an unconditional broadcast of a corpus-derived
+    * vocabulary is unbounded at 100 TB. The broadcast regime is FUSED:
     * one narrow flatMap emits each original triple plus its entity triple
     * (map-side hash lookup) — no cache, no second pass over the rewrite
     * cascade, zero shuffle; at 100 TB this is strictly better than
@@ -67,7 +60,7 @@ object EntityLinker {
   def linkUnioned(
       triples: org.apache.spark.sql.Dataset[TripleRow],
       gazetteer: DataFrame,
-      broadcastMax: Int = 1000000): DataFrame = {
+      broadcastMax: Int = Sizing.BroadcastRows): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
     val probe = gazetteer.select(col("surface"), col("entity_id"))
@@ -91,28 +84,20 @@ object EntityLinker {
     vocab.select(lower(col("word")).as("surface")).distinct()
       .withColumn("entity_id", concat(lit("ent:"), substring(md5(col("surface").cast("binary")), 1, 12)))
 
-  /** Entity tables under this many nodes get a STATIC broadcast hint in
-    * [[canonicalize]]: ~1M (node, component) string pairs is tens of MB —
-    * trivially within executor memory, and far cheaper than the
-    * alternative. AQE converts the join to broadcast at runtime anyway
-    * when the component side is small, but only AFTER the corpus-sized
-    * linked side has materialized its full shuffle WRITE (AQE re-plans on
-    * completed map stages); the static hint removes that write entirely.
-    * Measuring instead of guessing is free here because CC's output is
-    * localCheckpointed — the count is a block scan, not a recompute. */
-  val canonicalBroadcastMaxNodes = 1000000L
-
   /** Canonicalize entity ids over sameAs evidence via connected
     * components; rewrites linked triples' objects to the canonical
-    * (minimum) id. Join strategy: broadcast when the MEASURED component
-    * count is under [[canonicalBroadcastMaxNodes]] (skipping the probe
-    * side's shuffle write — see the threshold's doc); above it the
+    * (minimum) id. Join strategy: a STATIC broadcast hint when the
+    * MEASURED component count is under [[Sizing.BroadcastRows]]. AQE
+    * would convert the join at runtime anyway, but only AFTER the
+    * corpus-sized linked side has written its full shuffle; the hint
+    * removes that write. The count is a block scan of CC's
+    * localCheckpointed output, not a recompute. Above the bound the
     * strategy is left to Catalyst/AQE, because the component table is
     * entity-count-sized and outgrows a broadcast at corpus scale. */
   def canonicalize(spark: SparkSession, linked: DataFrame, sameAs: DataFrame): DataFrame = {
     val comp = graft.operators.ConnectedComponents.run(spark, sameAs)
     val compSized =
-      if (comp.count() <= canonicalBroadcastMaxNodes) broadcast(comp) else comp
+      if (comp.count() <= Sizing.BroadcastRows) broadcast(comp) else comp
     linked.join(compSized, linked("obj") === compSized("node"), "left_outer")
       .withColumn("obj", coalesce(col("component"), col("obj")))
       .drop("node", "component")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Sizing
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,44 +32,36 @@ import org.apache.spark.sql.functions._
   *    see [[assertComponentLabels]]) so ANY early-convergence anomaly,
   *    known or unknown, is a loud error rather than a silent wrong
   *    answer. One join over the edge set, once per call.
+  *  - small-graph cutover: under [[Sizing.localMaxEdges]] edges a fixpoint
+  *    finishes as one driver union-find instead of rounds that each
+  *    schedule 3+ exchanges and a checkpoint over data that fits in one
+  *    task (q42's ~480-edge chain graph paid 4.5 s of warm wall at
+  *    sf0.1). Both loops already count their edges for the convergence
+  *    trigger, so the probe is free; runStar's contraction hands the
+  *    O(log n) tail rounds to the driver once the count drops under the
+  *    bound. The union-find takes the minimum member under the ordering
+  *    Spark's MIN uses for the key type, so it computes the identical
+  *    fixpoint; LocalCcSpec pins local == distributed, non-BMP strings
+  *    included.
+  *  - widths: every round's exchanges are sized from the measured edge
+  *    count ([[Sizing.width]], recomputed per round as the star
+  *    contraction shrinks the graph); an explicit width also pins both
+  *    sides of a round's agg+join pair to one co-partitioned layout (AQE
+  *    never coalesces a user-specified width).
   */
 object ConnectedComponents {
 
-  /** Edge-count bound under which a CC fixpoint FINISHES ON THE DRIVER
-    * (r9, guide §1.2 step 1 / §2.2): an iterative round over a tiny edge
-    * set is pure fixed overhead — each round schedules 3+ exchanges, a
-    * checkpoint materialization and (on the final round) the exact
-    * convergence joins, all over data that fits in one task. Measured at
-    * sf0.1: q42's ~480-edge chain graph paid 4.5 s of warm wall for
-    * ~5 star rounds of sub-millisecond compute. The gate is the same
-    * measured-size routing the repo already uses for the gazetteer
-    * broadcast (EntityLinker.link) and the canonicalize hint: both loops
-    * already count their edges for the convergence trigger, so the probe
-    * is free. At 100 TB the INITIAL edge set exceeds any sane bound and
-    * the distributed rounds run unchanged — but the star contraction
-    * shrinks the graph geometrically, so the O(log n) TAIL rounds (tiny
-    * data, full scheduling latency) still cut over to the driver once
-    * the measured count drops under the bound. ≤500k collected edge
-    * pairs is tens of MB on the driver — the same order as a broadcast
-    * build side. Parameterized (spark.graft.cc.localMaxEdges; 0 disables)
-    * so a cluster profile can raise or kill the cutover.
-    *
-    * Exactness: the driver union-find computes the identical fixpoint
-    * (component = minimum member under the column type's ordering — the
-    * same ordering Spark's MIN uses for the supported key types), so the
-    * result is bit-identical to the distributed loop's; LocalCcSpec pins
-    * local == distributed on randomized graphs for both key types.
-    */
-  private def localMaxEdges(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.cc.localMaxEdges").map(_.toLong)
-      .getOrElse(500000L)
-
   /** Orderings matching Spark's MIN/comparison semantics for the key
-    * types the CC entries use; None → no local path (defensive). */
+    * types the CC entries use; None → no local path (defensive). Strings
+    * compare as unsigned UTF-8 bytes, as Spark's do: Java's UTF-16
+    * order differs on non-BMP characters (U+1F600 < U+FFFD in UTF-16). */
   private def orderingFor(dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
     import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
     dt match {
-      case StringType  => Some(Ordering.String.on[Any](_.asInstanceOf[String]))
+      case StringType  => Some(Ordering.fromLessThan[Any]((a, b) =>
+        UTF8String.fromString(a.asInstanceOf[String])
+          .binaryCompare(UTF8String.fromString(b.asInstanceOf[String])) < 0))
       case LongType    => Some(Ordering.Long.on[Any](_.asInstanceOf[Long]))
       case IntegerType => Some(Ordering.Int.on[Any](_.asInstanceOf[Int]))
       case _           => None
@@ -125,22 +118,6 @@ object ConnectedComponents {
       StructType(Seq(StructField("node", dt), StructField("component", dt))))
   }
 
-  /** Shuffle width for the fixpoint loops, sized from the MEASURED edge
-    * count (which both loops already track for their convergence
-    * triggers): ~250k edge rows per partition, floored at 1, capped at
-    * 4× the session's parallelism. An iterative loop pays its shuffle's
-    * fixed per-task cost every ROUND, so a 5k-edge graph on 32-wide
-    * default shuffles spends the rounds scheduling empty tasks; a
-    * 10^10-edge graph gets the full width. Recomputed per round as the
-    * star contraction shrinks the edge set. Explicit numPartitions also
-    * pins both sides of each round's agg+join pair to ONE co-partitioned
-    * layout (AQE never coalesces a user-specified width, so the reuse
-    * can't be broken by runtime replanning). */
-  private def widthFor(spark: SparkSession, rows: Long): Int = {
-    val p = math.ceil(rows.toDouble / 250000.0).toLong
-    math.max(1L, math.min(p, spark.sparkContext.defaultParallelism * 4L)).toInt
-  }
-
   /** @param edges DataFrame with two string columns `src`, `dst` (undirected).
     * @param strict fail loudly if the round budget is exhausted before the
     *               labels converge (non-converged labels are silently WRONG
@@ -165,7 +142,7 @@ object ConnectedComponents {
       .distinct()
       .localCheckpoint()
     val symCount = sym.count()
-    // Small-graph cutover (see localMaxEdges): the measured symmetrized
+    // Small-graph cutover (see the object doc): the measured symmetrized
     // edge count is already in hand for the width sizing; under the
     // bound the whole fixpoint is one driver union-find instead of
     // diameter-many shuffle rounds. sym IS the exact input graph here,
@@ -173,12 +150,12 @@ object ConnectedComponents {
     // construction — the convergence trigger and the post-loop
     // assertComponentLabels have nothing left to check.
     orderingFor(sym.schema("src").dataType) match {
-      case Some(ord) if symCount <= localMaxEdges(spark) =>
+      case Some(ord) if symCount <= Sizing.localMaxEdges(spark) =>
         val es = sym.collect().map(r => (r.get(0), r.get(1)))
         return localComponents(spark, es, sym.schema("src").dataType, ord)
       case _ =>
     }
-    val p = widthFor(spark, symCount)
+    val p = Sizing.width(spark, symCount, Sizing.EdgesPerPartition)
 
     // seed with min(node, direct neighbors): the state after one
     // propagation round of the node-id init, computed inside the same
@@ -314,7 +291,7 @@ object ConnectedComponents {
     var eCount = e.count()
     var converged = false
     var i = 0
-    // Small-graph cutover (see localMaxEdges): checked at every round
+    // Small-graph cutover (see the object doc): checked at every round
     // head, because the star contraction shrinks the edge set
     // geometrically — at 100 TB the first rounds run distributed and the
     // O(log n) tail (tiny data, full per-round scheduling cost) finishes
@@ -329,7 +306,7 @@ object ConnectedComponents {
     // (the true count is ≤ the reading... the reading is ≥ true count,
     // so reading ≤ bound ⟹ true count ≤ bound).
     val starOrd = orderingFor(e.schema("u").dataType)
-    val starLocalMax = localMaxEdges(spark)
+    val starLocalMax = Sizing.localMaxEdges(spark)
     var localOut: Option[DataFrame] = None
     while (localOut.isEmpty && !converged && i < maxIter) {
       if (starOrd.isDefined && eCount <= starLocalMax) {
@@ -345,7 +322,7 @@ object ConnectedComponents {
       // co-partitioned. Three exchanges per round total (sym, ori,
       // final dedup) — the naive formulation paid ~six, all at the
       // session default width regardless of graph size.
-      val p = widthFor(spark, eCount * 2)
+      val p = Sizing.width(spark, eCount * 2, Sizing.EdgesPerPartition)
       // large-star over the symmetrized adjacency
       val sym = e.select($"u", $"v").union(e.select($"v".as("u"), $"u".as("v")))
         .repartition(p, $"u")

@@ -33,29 +33,18 @@ object IterativeClosure {
     *               Leave false for general DAGs / multi-parent graphs.
     * @return (node, depth) for every node reachable from a root by
     *         following child←parent edges downward. */
-  /** Edge-count bound under which the BFS runs ON THE DRIVER (r9, same
-    * measured-size cutover as ConnectedComponents.localMaxEdges): a BFS
-    * level over a small graph is one join's worth of fixed scheduling
-    * cost per LEVEL — depth-many rounds of pure overhead (q30's det
-    * token trees: 7 levels, 4.5 s warm at sf0.1 for milliseconds of
-    * compute). Under the bound the edge list and roots are collected
-    * once (the edges are already localCheckpointed — the collect is a
-    * block read, not a recompute) and the level-synchronous BFS runs in
-    * memory with IDENTICAL semantics: same forest contract check, same
-    * min-depth-on-first-reach regime, same maxIter budget failure. At
-    * 100 TB the edge table exceeds any sane bound and the distributed
-    * loop runs unchanged. Parameterized: spark.graft.bfs.localMaxEdges
-    * (0 disables). */
-  private def localMaxEdges(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.bfs.localMaxEdges").map(_.toLong)
-      .getOrElse(500000L)
-
   def depths(spark: SparkSession, edges: DataFrame, roots: DataFrame,
              maxIter: Int = 64, forest: Boolean = false): DataFrame = {
     import spark.implicits._
     val e = edges.select($"child", $"parent").localCheckpoint()
     val eCount = e.count()
-    if (eCount <= localMaxEdges(spark)) {
+    // Small-graph cutover (graft.Sizing.localMaxEdges): under the bound
+    // the edges and roots are collected once (a block read of the
+    // checkpoint) and the level-synchronous BFS runs in memory with the
+    // identical forest check, min-depth regime and maxIter failure —
+    // depth-many rounds of scheduling cost over a small graph (q30's det
+    // token trees: 7 levels, 4.5 s warm at sf0.1) become one collect.
+    if (eCount <= graft.Sizing.localMaxEdges(spark)) {
       return localDepths(spark, e, roots, maxIter, forest)
     }
     // the forest contract is load-bearing (it justifies skipping the

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Sizing
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -162,13 +163,13 @@ object DedupQueries {
     // pattern — the aggregate sees its clustering satisfied and inserts
     // no session-width shuffle). Banding rows are strictly narrower than
     // the source text, so the session default scheduled core-count-wide
-    // shuffles for kilobytes of keys; p <= 0 (conf-disabled) keeps the
+    // shuffles for kilobytes of keys; p == 0 (unmeasured source) keeps the
     // implicit session-width shape.
     val p = Tables.byteWidth(s, dir, "documents")
     val banded0 = sets
       .select($"doc_id", explode(array(bandStructs: _*)).as("bk"))
       .select($"doc_id", $"bk.band".as("band"), $"bk.bucket".as("bucket"))
-    val banded = (if (p > 0) banded0.repartition(p, $"band", $"bucket") else banded0)
+    val banded = Sizing.repartition(banded0, p, $"band", $"bucket")
       .withColumn("bn", count(lit(1)).over(wB))
       .filter($"bn" <= 100)
       .drop("bn")
@@ -177,9 +178,7 @@ object DedupQueries {
         col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
           col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
-    val candidates =
-      if (p > 0) cand0.repartition(p, $"a", $"b").dropDuplicates()
-      else cand0.distinct()
+    val candidates = Sizing.repartition(cand0, p, $"a", $"b").dropDuplicates()
     // exact verification: set intersection as a narrow array op on the
     // joined pair row — replaces the explode-join-regroup (two wide
     // joins + an aggregation) of the exploded formulation
@@ -344,7 +343,7 @@ object DedupQueries {
         val p = Tables.byteWidth(s, dir, "documents")
         val sigd = simhashSig(TextQueries.tokens(s, dir), 8)
           .select($"doc_id", lpad(bin($"sig"), 8, "0").as("simhash"))
-        (if (p > 0) sigd.repartition(p, $"simhash") else sigd)
+        Sizing.repartition(sigd, p, $"simhash")
           .withColumn("bucket_size",
             count(lit(1)).over(Window.partitionBy($"simhash")))
           .select($"doc_id", $"simhash", $"bucket_size")
@@ -389,7 +388,7 @@ object DedupQueries {
         val banded0 = sigs
           .select($"doc_id", $"sig", explode(array(bandStructs: _*)).as("bk"))
           .select($"doc_id", $"sig", $"bk.band".as("band"), $"bk.bucket".as("bucket"))
-        val banded = (if (p > 0) banded0.repartition(p, $"band", $"bucket") else banded0)
+        val banded = Sizing.repartition(banded0, p, $"band", $"bucket")
           .withColumn("bn",
             count(lit(1)).over(Window.partitionBy($"band", $"bucket")))
           .filter($"bn" <= 100)
@@ -400,9 +399,7 @@ object DedupQueries {
               col("l.doc_id") < col("r.doc_id"))
           .select(col("l.doc_id").as("a"), col("l.sig").as("sa"),
             col("r.doc_id").as("b"), col("r.sig").as("sb"))
-        val cand =
-          if (p > 0) cand0.repartition(p, $"a", $"b").dropDuplicates()
-          else cand0.distinct()
+        val cand = Sizing.repartition(cand0, p, $"a", $"b").dropDuplicates()
         cand.withColumn("hamming", simhashHamming($"sa", $"sb"))
           .filter($"hamming" <= 2)
           .select($"a", $"b", $"hamming")
@@ -639,7 +636,7 @@ object DedupQueries {
         // measured-width bucket exchange (r9, Tables.byteWidth): the cap
         // window and the bucket self-join below share it
         val p = Tables.byteWidth(s, dir, "embeddings")
-        val bucketed = (if (p > 0) bucketed0.repartition(p, $"bucket") else bucketed0)
+        val bucketed = Sizing.repartition(bucketed0, p, $"bucket")
           .withColumn("bn", count(lit(1)).over(Window.partitionBy($"bucket")))
           .filter($"bn" <= 100)
           .drop("bn")

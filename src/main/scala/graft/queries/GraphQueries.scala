@@ -348,8 +348,8 @@ object GraphQueries {
           .select($"src", pmod($"src" * (lit(7L) + $"b"), lit(m)).as("dst"))
           .filter($"src" =!= $"dst").distinct()
           .localCheckpoint()
-        // Small-graph driver evaluation (r9; the ConnectedComponents
-        // localMaxEdges cutover applied to the fixed-round rank loop):
+        // Small-graph driver evaluation (r9; the graph-fixpoint cutover,
+        // graft.Sizing.localMaxEdges, applied to the fixed-round rank loop):
         // 5 rounds × ~5 scheduled jobs over an under-bound graph is
         // pure fixed overhead. All arithmetic is already integer-scaled
         // BIGINT (that was the r6 bit-reproducibility design), so the
@@ -357,10 +357,8 @@ object GraphQueries {
         // truncating div, same dangling-mass share, same 5 rounds.
         // Edge count is measured on the checkpointed edges (block scan);
         // over the bound — any real corpus — the loop below runs
-        // unchanged. Parameterized: spark.graft.pr.localMaxEdges.
-        val prLocalMax = s.conf.getOption("spark.graft.pr.localMaxEdges")
-          .map(_.toLong).getOrElse(500000L)
-        if (edges.count() <= prLocalMax) {
+        // unchanged.
+        if (edges.count() <= graft.Sizing.localMaxEdges(s)) {
           val es = edges.as[(Long, Long)].collect()
           val deg = scala.collection.mutable.HashMap[Long, Long]()
           val nodeSet = scala.collection.mutable.SortedSet[Long]()

@@ -65,7 +65,7 @@ object StreamQueries {
         // its downstream work is nil, so a session-width state layout
         // (= core count under the bench) just multiplies per-batch
         // state-store commits and sink files by the core count; see
-        // StreamingPipeline.adaptiveStateWidth. kg_stream_assemble
+        // graft.Sizing.byteWidth. kg_stream_assemble
         // deliberately does NOT take this: its state operator feeds the
         // per-doc parse+cascade, which a byte-sized (narrow) width would
         // serialize — downstream compute dominates there.
@@ -76,7 +76,7 @@ object StreamQueries {
                 unix_timestamp(col("window.end")).as("we"),
                 col("event_type"), col("n"), col("v")),
             base,
-            stateWidth = Some(StreamingPipeline.adaptiveStateWidth(s, in)))
+            stateWidth = Some(graft.Sizing.byteWidth(s, in)).filter(_ > 0))
           .orderBy(col("ws"), col("event_type"))
       },
       Some("""WITH e AS (

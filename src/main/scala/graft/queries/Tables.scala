@@ -52,6 +52,11 @@ object Tables {
     * later call is a map hit. */
   private val splitCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
+  /** Measured-byte exchange width for a small-row chain fed by table
+    * `name` ([[graft.Sizing.byteWidth]]; 0 keeps the session width). */
+  def byteWidth(s: SparkSession, dir: String, name: String): Int =
+    graft.Sizing.byteWidth(s, s"$dir/$name.parquet")
+
   /** Widen an under-split scan for a NARROW downstream chain: a corpus
     * written as one small parquet file arrives as ONE input split, so a
     * shuffle-free pipeline hung off it (the det parse cascades, the
@@ -68,40 +73,6 @@ object Tables {
     * for columnar scan→agg plans the exchange costs more than the
     * single-threaded vectorized decode saves (measured: widening
     * lineitem made q01 0.4 → 0.7 s warm). */
-  /** Measured-byte shuffle width for a small-row chain fed by table
-    * `name` (r9, guide §2 intro — "make partitioning scale-adaptive
-    * rather than a constant tuned for either local mode or the
-    * cluster"): ceil(on-disk bytes / target), floored at 1, capped at
-    * 4× the session's parallelism — the ConnectedComponents.widthFor /
-    * StreamingPipeline.adaptiveStateWidth policy keyed on FREE
-    * information (the source file bytes srcTag already walks, no probe
-    * job). Candidate-generation chains (LSH banding windows, band
-    * self-joins, pair dedups) hang 3-5 exchanges off rows that are
-    * strictly narrower than the source text, so the session-width
-    * default (= core count under the bench harness) schedules
-    * core-count-wide shuffles for kilobytes of signatures; an explicit
-    * measured width lets the window + join + dedup share tiny exchanges
-    * (measured on the q37 chain at sf0.1: 1.80 → 1.38 s warm floor,
-    * same-window interleaved pair). At scale the byte count drives the
-    * width to the cap and the explicit exchange is full-width — the
-    * constant is data-derived, never core-count-derived.
-    *
-    * Parameterized: spark.graft.sql.targetPartitionBytes (default 64 MB;
-    * <= 0 disables — callers keep their implicit session-width
-    * exchanges, the pre-r9 shape, which is also the A/B lever the
-    * width probes use). */
-  def byteWidth(s: SparkSession, dir: String, name: String): Int = {
-    val target = s.conf.getOption("spark.graft.sql.targetPartitionBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    if (target <= 0) return 0
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles).getOrElse(Array.empty[java.io.File]).map(walk).sum
-    val bytes = walk(new java.io.File(s"$dir/$name.parquet"))
-    val p = math.ceil(bytes.toDouble / target.toDouble).toLong
-    math.max(1L, math.min(p, s.sparkContext.defaultParallelism * 4L)).toInt
-  }
-
   def widened(s: SparkSession, dir: String, name: String): DataFrame = {
     val df  = t(s, dir, name)
     val par = s.sparkContext.defaultParallelism

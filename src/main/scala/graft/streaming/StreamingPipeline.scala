@@ -134,30 +134,6 @@ object StreamingPipeline {
       }
   }
 
-  /** Shuffle/state width for a stateful streaming query, sized from the
-    * MEASURED input bytes (r9; the ConnectedComponents.widthFor policy
-    * applied to streaming state): `spark.sql.shuffle.partitions` is what
-    * fixes a stateful operator's state-store count at first batch, and a
-    * session-width default (= core count under the bench harness) means
-    * every micro-batch commits core-count state files and schedules
-    * core-count tasks REGARDLESS of data volume — fixed overhead per
-    * batch for a keyspace that may fit in one store, and a pinned
-    * constant that does NOT grow with a 100 TB keyspace. Width follows
-    * data instead: ceil(input bytes / target-bytes-per-partition),
-    * floored at 1, capped at 4× the session parallelism (the widthFor
-    * cap). Parameterized: spark.graft.stream.targetPartitionBytes
-    * (default 64 MB). */
-  def adaptiveStateWidth(spark: SparkSession, inputDir: String): Int = {
-    val target = spark.conf.getOption("spark.graft.stream.targetPartitionBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length
-      else Option(f.listFiles).getOrElse(Array.empty[java.io.File]).map(walk).sum
-    val bytes = walk(new java.io.File(inputDir))
-    val p = math.ceil(bytes.toDouble / target.toDouble).toLong
-    math.max(1L, math.min(p, spark.sparkContext.defaultParallelism * 4L)).toInt
-  }
-
   /** Drive a streaming DataFrame to completion into an exactly-once
     * parquet sink under `base` and return the materialized result:
     * `base/out` + `base/cp` are cleared first so the query
@@ -170,7 +146,7 @@ object StreamingPipeline {
     * restored after termination — the streaming engine captures the conf
     * at query start and writes it into the checkpoint, so this is the
     * one seam where a stateful query's width can follow data; see
-    * [[adaptiveStateWidth]]). Results are width-invariant — only the
+    * [[graft.Sizing.byteWidth]]). Results are width-invariant — only the
     * state-store count and sink file layout change. */
   def drainToParquet(df: DataFrame, base: String,
                      stateWidth: Option[Int] = None): DataFrame = {

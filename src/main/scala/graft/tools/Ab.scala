@@ -18,9 +18,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Ab {
 
   /** `k=v` tokens as (key, value) pairs; a token without `=` (or with an
-    * empty key) fails with a message naming it. */
+    * empty key) fails with a message naming it, and so does a
+    * `spark.graft.*` key the engine does not read: setting it would A/B
+    * two identical sessions. */
   def levers(tokens: Seq[String]): Seq[(String, String)] = tokens.map { t =>
     t.split("=", 2) match {
+      case Array(k, _) if graft.Sizing.ignoredKey(k) => throw new IllegalArgumentException(
+        s"'$k' is not read by the engine; the one spark.graft key it reads is ${graft.Sizing.LocalMaxEdgesKey}")
       case Array(k, v) if k.nonEmpty => k -> v
       case _ => throw new IllegalArgumentException(s"expected a k=v lever, got '$t'")
     }

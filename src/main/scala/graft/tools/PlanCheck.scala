@@ -11,8 +11,8 @@ package graft.tools
   *        [--full] [--out <dir> --tag <t>]
   *
   * `k=v` levers are session confs, parsed as in [[Ab]] (e.g.
-  * spark.graft.sql.targetPartitionBytes=-1 for the pre-r9
-  * implicit-width shape). `--full` prints the final adaptive plan.
+  * spark.graft.cc.localMaxEdges=0 for the distributed graph fixpoints).
+  * `--full` prints the final adaptive plan.
   * `--out`/`--tag` write each entry's `.explain("formatted")` plan,
   * taken before execution, to `<dir>/<entry>_<t>.txt` — the committed
   * plan evidence of an optimization round (plans/r<NN>/).

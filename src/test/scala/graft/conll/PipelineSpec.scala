@@ -117,6 +117,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(lin.filter($"status" === "done").count() == 4)
   }
 
+  test("checkpoint runner on a file: URI outDir: markers land beside the buckets, resume re-runs one bucket") {
+    val real = java.nio.file.Files.createTempDirectory("graft-ckpt-uri").toFile
+    val dir = real.toURI.toString // file:/tmp/graft-ckpt-uri.../
+    val docs = DocGen.docs(spark, 12)
+    def run() = CheckpointRunner.run(spark, docs, DocGen.columns, Pipeline.analyzeCascade, dir, nBuckets = 4)
+    val n1 = run().count()
+    val markers = (0 until 4).map(b => new java.io.File(real, s"_manifest/bucket-$b.json"))
+    assert(markers.forall(_.isFile))
+    assert(CheckpointRunner.lineage(spark, dir).count() == 4)
+    // a bucket that re-runs rewrites its parquet under new file names
+    def parts(b: Int) = new java.io.File(real, s"bucket=$b").list().filter(_.endsWith(".parquet")).toSet
+    val before = (0 until 4).map(parts)
+    assert(markers(2).delete())
+    assert(run().count() == n1)
+    assert(markers(2).isFile)
+    assert((0 until 4).filter(b => parts(b) != before(b)) == Seq(2))
+    assert(CheckpointRunner.lineage(spark, dir).count() == 4)
+  }
+
   test("checkpoint markers hold the written buckets' lineage, empty buckets included") {
     import spark.implicits._
     // 3 docs over 8 buckets leaves some buckets empty; the empty input

@@ -15,9 +15,9 @@ class IterativeClosureSpec extends AnyFunSuite with org.scalatest.BeforeAndAfter
   // cutover would otherwise take every graph here); local == distributed
   // is pinned in LocalCcSpec
   override def beforeAll(): Unit =
-    spark.conf.set("spark.graft.bfs.localMaxEdges", "0")
+    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
   override def afterAll(): Unit =
-    spark.conf.unset("spark.graft.bfs.localMaxEdges")
+    spark.conf.unset("spark.graft.cc.localMaxEdges")
 
   private def run(edges: Seq[(String, String)], roots: Seq[String],
                   forest: Boolean): Map[String, Int] =

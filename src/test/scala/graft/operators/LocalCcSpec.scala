@@ -17,7 +17,6 @@ class LocalCcSpec extends AnyFunSuite {
     finally { prev match { case Some(p) => spark.conf.set(key, p); case None => spark.conf.unset(key) } }
   }
   private val CC = "spark.graft.cc.localMaxEdges"
-  private val BFS = "spark.graft.bfs.localMaxEdges"
 
   private def n(i: Int) = f"n$i%04d"
 
@@ -77,9 +76,23 @@ class LocalCcSpec extends AnyFunSuite {
     assert(got == dist)
   }
 
+  test("run()/runStar(): non-BMP labels take Spark's UTF-8 byte order on the driver too") {
+    // U+FFFD < U+1F600 as UTF-8 bytes (EF.. < F0..), as Spark's MIN
+    // compares; UTF-16 code units order them the other way (FFFD > D83D)
+    val (rep, smile) = ("\uFFFD", "\uD83D\uDE00")
+    val df = Seq((smile, rep), ("a" + smile, "a" + rep)).toDF("src", "dst")
+    for (cc <- Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+        ConnectedComponents.run(spark, _), ConnectedComponents.runStar(spark, _))) {
+      val local = cc(df).as[(String, String)].collect().toMap
+      val dist = withConf(CC, "0")(cc(df).as[(String, String)].collect().toMap)
+      assert(dist(smile) == rep && dist("a" + smile) == "a" + rep)
+      assert(local == dist)
+    }
+  }
+
   test("depths(): local == distributed on forest and DAG; same cycle failure") {
     def run(edges: Seq[(String, String)], roots: Seq[String], forest: Boolean,
-            conf: String): Map[String, Int] = withConf(BFS, conf) {
+            conf: String): Map[String, Int] = withConf(CC, conf) {
       IterativeClosure.depths(spark, edges.toDF("child", "parent"),
           roots.toDF("node"), forest = forest)
         .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
@@ -103,13 +116,13 @@ class LocalCcSpec extends AnyFunSuite {
     // seen-filter drains it silently in both (covered above via 'dag')
     val cyc = Seq(("b", "a"), ("a", "b"))
     intercept[IllegalArgumentException] {
-      withConf(BFS, "500000") {
+      withConf(CC, "500000") {
         IterativeClosure.depths(spark, cyc.toDF("child", "parent"),
           Seq("a").toDF("node"), maxIter = 5, forest = true).count()
       }
     }
     intercept[IllegalArgumentException] {
-      withConf(BFS, "0") {
+      withConf(CC, "0") {
         IterativeClosure.depths(spark, cyc.toDF("child", "parent"),
           Seq("a").toDF("node"), maxIter = 5, forest = true).count()
       }
@@ -121,12 +134,10 @@ class LocalCcSpec extends AnyFunSuite {
     assume(new java.io.File(s"$dir/documents.parquet").exists())
     for (name <- Seq("q19_canonicalize_cc", "q42_cc_chain", "q30_tree_depth")) {
       def rows(ccConf: String) = withConf(CC, ccConf) {
-        withConf(BFS, ccConf) {
-          val r = graft.SparkEntry.queries(name)(spark, dir)
-            .collect().map(_.toString).sorted.toSeq
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-          r
-        }
+        val r = graft.SparkEntry.queries(name)(spark, dir)
+          .collect().map(_.toString).sorted.toSeq
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        r
       }
       assert(rows("500000") == rows("0"), s"$name local != distributed")
     }

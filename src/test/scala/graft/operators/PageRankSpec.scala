@@ -92,13 +92,13 @@ class PageRankSpec extends AnyFunSuite {
   }
 
   test("distributed loop (r9 cutover disabled) is byte-identical to the local path") {
-    // the small-graph driver evaluation (spark.graft.pr.localMaxEdges)
+    // the small-graph driver evaluation (spark.graft.cc.localMaxEdges)
     // takes every graph this spec builds — force the distributed rounds
     // and pin both regimes to the same ranks
     val a = runEntry()
-    spark.conf.set("spark.graft.pr.localMaxEdges", "0")
+    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
     try assert(runEntry() == a, "distributed loop != local path")
-    finally spark.conf.unset("spark.graft.pr.localMaxEdges")
+    finally spark.conf.unset("spark.graft.cc.localMaxEdges")
   }
 
   test("ranks are byte-identical across shuffle widths") {
