@@ -19,15 +19,35 @@ import graft.conll._
   */
 object Main {
 
-  private def arg(args: Array[String], name: String): Option[String] =
-    args.sliding(2).collectFirst { case Array(k, v) if k == s"--$name" => v }
+  /** The parsed command line. */
+  final case class Opts(input: String, output: String, cascade: String,
+                        buckets: Int, config: Option[String])
+
+  private val Cascades = Seq("analyze", "parse", "link")
+  private val Flags = Seq("input", "output", "cascade", "buckets", "config")
+
+  /** `--name value` pairs → [[Opts]] (defaults: gen:10000, /tmp/graft-out,
+    * analyze, 64 buckets). An unknown flag, a flag without a value, a
+    * cascade outside analyze|parse|link and a bucket count that is not a
+    * positive integer fail naming the flag, before any session starts. */
+  def parse(args: Array[String]): Opts = {
+    val given = args.grouped(2).map {
+      case Array(k, v) if Flags.exists(f => k == s"--$f") => k.drop(2) -> v
+      case p => throw new IllegalArgumentException(
+        s"expected ${Flags.map("--" + _).mkString("|")} <value>, got '${p.mkString(" ")}'")
+    }.toMap
+    val cascade = given.get("cascade").getOrElse("analyze")
+    require(Cascades.contains(cascade),
+      s"--cascade must be one of ${Cascades.mkString("|")}, got '$cascade'")
+    val buckets = given.get("buckets").getOrElse("64")
+    require(buckets.toIntOption.exists(_ > 0),
+      s"--buckets must be a positive integer, got '$buckets'")
+    Opts(given.get("input").getOrElse("gen:10000"), given.get("output").getOrElse("/tmp/graft-out"),
+      cascade, buckets.toInt, given.get("config"))
+  }
 
   def main(args: Array[String]): Unit = {
-    val input = arg(args, "input").getOrElse("gen:10000")
-    val output = arg(args, "output").getOrElse("/tmp/graft-out")
-    val cascadeName = arg(args, "cascade").getOrElse("analyze")
-    val buckets = arg(args, "buckets").map(_.toInt).getOrElse(64)
-    val config = arg(args, "config")
+    val Opts(input, output, cascadeName, buckets, config) = parse(args)
 
     val builder = SparkSession.builder()
       .appName(s"graft-$cascadeName")
@@ -50,7 +70,7 @@ object Main {
         val cascade = cascadeName match {
           case "parse" => Pipeline.parseCascade
           case "link" => Pipeline.linkCascade
-          case _ => Pipeline.analyzeCascade
+          case "analyze" => Pipeline.analyzeCascade
         }
         val metrics = Pipeline.newMetrics(spark, cascade)
         CheckpointRunner.run(spark, docs, DocGen.columns, cascade, output, buckets, Some(metrics))

@@ -30,18 +30,24 @@ object Similarity {
   def cosine(a: Array[Float], b: Array[Float]): Double =
     dot(a, b) / math.sqrt(normSq(a) * normSq(b))
 
-  /** Keep the k best (sim desc, id asc) in a small sorted buffer. */
-  private[functions] final class TopK(k: Int) {
+  /** Keep the k best (sim desc, id asc) in a small sorted buffer — the
+    * per-partition top-k of every similarity scan (this object's `topK`,
+    * q28, the IVF search of q31/q38). Best first; ties on sim go to the
+    * smaller id, as `ROW_NUMBER() OVER (ORDER BY sim DESC, id)` does. */
+  private[graft] final class TopK(k: Int) {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     private def better(a: (Long, Double), b: (Long, Double)): Boolean =
       a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
-    def offer(id: Long, sim: Double): Unit = {
+    /** Offer a candidate; true when it entered the buffer. */
+    def offer(id: Long, sim: Double): Boolean = {
       val cand = (id, sim)
-      if (buf.length < k || better(cand, buf.last)) {
+      val admit = buf.length < k || better(cand, buf.last)
+      if (admit) {
         val at = buf.indexWhere(e => better(cand, e))
         if (at < 0) buf.append(cand) else buf.insert(at, cand)
         if (buf.length > k) buf.remove(k)
       }
+      admit
     }
   }
 

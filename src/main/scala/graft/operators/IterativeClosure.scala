@@ -19,8 +19,10 @@ import org.apache.spark.sql.functions._
   * anti-join against the already-labeled set and a min-depth regroup
   * deduplicate multi-path reaches; for a FOREST (every child has
   * exactly one parent — CoNLL HEAD columns by construction) each node
-  * is reached exactly once, so `forest = true` skips both. Lineage is
-  * truncated every round with localCheckpoint.
+  * is reached exactly once, so `forest = true` skips both. Each round's
+  * one job is [[Fixpoint.checkpointCounting]]: it truncates lineage and
+  * counts the new frontier (the drain trigger) in the same pass; node ids
+  * never pass through the counting UDF, so they keep their input type.
   */
 object IterativeClosure {
 
@@ -64,30 +66,23 @@ object IterativeClosure {
     var i = 0
     var done = false
     while (!done && i < maxIter) {
-      // the frontier-size check rides the round's one materialization
-      // job (bump-UDF + eager localCheckpoint) instead of a separate
-      // isEmpty action, and `labeled` is NOT re-checkpointed: it is a
-      // union of already-checkpointed frontiers, so its lineage stays
-      // shallow (≤ rounds) with no extra job per round. The accumulator
-      // is only the TRIGGER (exact accumulator semantics hold in
-      // actions only): an empty reading is CONFIRMED by isEmpty on the
-      // checkpointed table before the loop exits, so a lost bump can
-      // cost one cheap confirm, never a truncated closure.
-      val sizeAcc = spark.sparkContext.longAccumulator(s"bfs_frontier_$i")
-      val bump = udf { (n: String) => sizeAcc.add(1); n }
+      // the frontier count replaces a separate isEmpty action, and
+      // `labeled` is NOT re-checkpointed: it is a union of already-
+      // checkpointed frontiers, so its lineage stays shallow (≤ rounds)
+      // with no extra job per round. An empty reading is only the
+      // TRIGGER: it is CONFIRMED by isEmpty on the checkpointed table
+      // before the loop exits, so a lost bump can cost one cheap confirm,
+      // never a truncated closure.
       val reached = e.join(frontier, e("parent") === frontier("node"))
         .select(e("child").as("node"), (frontier("depth") + 1).as("depth"))
-      // the bump rides a throwaway string column (dropped after the
-      // checkpoint materializes it) so node ids keep their exact input
-      // type — the String-typed UDF must never coerce a numeric key
-      val next = (if (forest) reached
+      val (next, size) = Fixpoint.checkpointCounting(
+        if (forest) reached
         else reached
           .join(labeled.select($"node".as("seen")), $"node" === $"seen", "left_anti")
-          .groupBy($"node").agg(min($"depth").as("depth")))
-        .select($"node", $"depth", bump($"node".cast("string")).as("_t"))
-        .localCheckpoint()
-        .drop("_t")
-      if (sizeAcc.value == 0L && next.isEmpty) done = true
+          .groupBy($"node").agg(min($"depth").as("depth")),
+        lit(true),
+        s"bfs_frontier_$i")
+      if (size == 0L && next.isEmpty) done = true
       else {
         labeled = labeled.union(next)
         frontier = next

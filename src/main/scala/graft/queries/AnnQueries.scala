@@ -52,28 +52,18 @@ object AnnQueries {
         val qB = s.sparkContext.broadcast(queries)
         val survivors = emb.filter(_._1 >= 10).mapPartitions { it =>
           val qs = qB.value
-          val heaps = qs.map(_ => scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Double)]) // (c_id, sim), kept sorted best-first
-          def better(a: (Long, Double), b: (Long, Double)): Boolean =
-            a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)
+          val heaps = qs.map(_ => new graft.functions.Similarity.TopK(5))
           for ((cid, v) <- it) {
             val nb = DecimalDot.normSq(v)
             var qi = 0
             while (qi < qs.length) {
               val (_, qv, na) = qs(qi)
-              val sim = DecimalDot.cosine(DecimalDot.dot(qv, v), na, nb)
-              val h = heaps(qi)
-              val cand = (cid, sim)
-              if (h.length < 5 || better(cand, h.last)) {
-                val at = h.indexWhere(e => better(cand, e))
-                if (at < 0) h.append(cand) else h.insert(at, cand)
-                if (h.length > 5) h.remove(5)
-              }
+              heaps(qi).offer(cid, DecimalDot.cosine(DecimalDot.dot(qv, v), na, nb))
               qi += 1
             }
           }
           heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-            h.map { case (cid, sim) => (qs(qi)._1, cid, sim) }
+            h.buf.map { case (cid, sim) => (qs(qi)._1, cid, sim) }
           }
         }.toDF("q_id", "c_id", "sim")
         val w = Window.partitionBy($"q_id").orderBy($"sim".desc, $"c_id")

@@ -52,6 +52,42 @@ object DedupQueries {
   private[graft] def simhashHamming(sa: Column, sb: Column): Column =
     bit_count(sa.bitwiseXOR(sb)).cast("bigint")
 
+  /** A candidate bucket over this many rows is skipped as degenerate: a
+    * pile of identical items makes the bucket self-join quadratic
+    * (exact-dup clusters belong to q20's hash pass). The oracle SQL
+    * mirrors it as a literal `bn <= 100`. */
+  private val BucketCap = 100
+
+  /** `df` minus every `keys` bucket over [[BucketCap]] rows. The count
+    * window rides an explicit exchange on `keys` at the measured `width`
+    * (0 = session width), which a self-join on the same keys reuses. */
+  private def capBuckets(df: DataFrame, width: Int, keys: String*): DataFrame = {
+    val ks = keys.map(col)
+    Sizing.repartition(df, width, ks: _*)
+      .withColumn("bn", count(lit(1)).over(Window.partitionBy(ks: _*)))
+      .filter(col("bn") <= BucketCap)
+      .drop("bn")
+  }
+
+  /** The one blocking stage of the LSH entries (q22/q43/q34 via
+    * [[lshJaccardPairs]], q37): the distinct pairs of docs a < b sharing
+    * a capped (band, bucket) of `banded` (doc_id, band, bucket, carry...),
+    * as (a, c_a..., b, c_b...) for each carried column c. The cap window
+    * and the self-join share one (band, bucket) exchange; the dedup rides
+    * an explicit (a, b) exchange at the same width, so the aggregate sees
+    * its clustering satisfied and adds no session-width shuffle. */
+  private def bandPairs(banded: DataFrame, width: Int, carry: String*): DataFrame = {
+    val capped = capBuckets(banded, width, "band", "bucket")
+    def side(t: String, id: String) =
+      col(s"$t.doc_id").as(id) +: carry.map(c => col(s"$t.$c").as(s"${c}_$id"))
+    val pairs = capped.alias("l")
+      .join(capped.alias("r"),
+        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
+          col("l.doc_id") < col("r.doc_id"))
+      .select(side("l", "a") ++ side("r", "b"): _*)
+    Sizing.repartition(pairs, width, col("a"), col("b")).dropDuplicates()
+  }
+
   /** Fixed per-language character-bigram profiles for q44 (the classic
     * n-gram language-ID shape, Cavnar & Trenkle 1994 scaled down to a
     * deterministic 5-bigram probe per language; shared by the Spark plan
@@ -155,30 +191,13 @@ object DedupQueries {
           (0 until nRows).map(k => mhCol(j * nRows + k)): _*))
       struct(lit(j).as("band"), key.as("bucket"))
     }
-    val wB = Window.partitionBy($"band", $"bucket")
-    // measured-width exchanges (r9, Tables.byteWidth): the bucket window
-    // and the band self-join share one explicit (band,bucket) exchange
-    // sized from the source bytes, and the candidate dedup rides an
-    // explicit (a,b) exchange at the same width (the runStar dedup
-    // pattern — the aggregate sees its clustering satisfied and inserts
-    // no session-width shuffle). Banding rows are strictly narrower than
-    // the source text, so the session default scheduled core-count-wide
-    // shuffles for kilobytes of keys; p == 0 (unmeasured source) keeps the
-    // implicit session-width shape.
-    val p = Tables.byteWidth(s, dir, "documents")
-    val banded0 = sets
+    // measured width (r9): banding rows are strictly narrower than the
+    // source text, so the session default scheduled core-count-wide
+    // shuffles for kilobytes of keys
+    val banded = sets
       .select($"doc_id", explode(array(bandStructs: _*)).as("bk"))
       .select($"doc_id", $"bk.band".as("band"), $"bk.bucket".as("bucket"))
-    val banded = Sizing.repartition(banded0, p, $"band", $"bucket")
-      .withColumn("bn", count(lit(1)).over(wB))
-      .filter($"bn" <= 100)
-      .drop("bn")
-    val cand0 = banded
-      .alias("l").join(banded.alias("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"))
-    val candidates = Sizing.repartition(cand0, p, $"a", $"b").dropDuplicates()
+    val candidates = bandPairs(banded, Tables.byteWidth(s, dir, "documents"))
     // exact verification: set intersection as a narrow array op on the
     // joined pair row — replaces the explode-join-regroup (two wide
     // joins + an aggregation) of the exploded formulation
@@ -273,11 +292,8 @@ object DedupQueries {
       // Scale hardening (VERDICT r1 #5 + q22 audit): the narrow per-doc
       // shingle-set table feeds its three consumers (banding keys, sizes,
       // exact verify) from one persist — everything before the bucket
-      // window is shuffle-free (see lshJaccardPairs);
-      // and buckets holding > 100 docs are skipped as degenerate (a pile
-      // of identical docs makes the band self-join quadratic in the
-      // bucket — exact-dup clusters belong to q20's hash pass). The cap
-      // is mirrored in the oracle SQL.
+      // window is shuffle-free (see lshJaccardPairs) — and degenerate
+      // buckets are capped (bandPairs, mirrored in the oracle SQL).
       "q22_lsh_jaccard",
       (s, dir) => {
         import s.implicits._
@@ -378,29 +394,14 @@ object DedupQueries {
         // pass (the q22 banding shape)
         val bandStructs = (0 until 4).map(b =>
           struct(lit(b).as("band"), simhashBand($"sig", b).as("bucket")))
-        // measured-width exchanges (r9, Tables.byteWidth — the
-        // lshJaccardPairs pattern): bucket window + band self-join share
-        // one explicit (band,bucket) exchange; the candidate dedup rides
-        // an explicit (a,b) exchange ((a,b) ⊆ the dedup keys, so the
-        // aggregate's clustering is satisfied with no further shuffle).
-        // Same-window interleaved pair at sf0.1: 1.80 → 1.38 s floor.
-        val p = Tables.byteWidth(s, dir, "documents")
-        val banded0 = sigs
+        // measured-width band join (r9, Tables.byteWidth), carrying each
+        // side's signature. Same-window interleaved pair at sf0.1: 1.80 →
+        // 1.38 s floor.
+        val banded = sigs
           .select($"doc_id", $"sig", explode(array(bandStructs: _*)).as("bk"))
           .select($"doc_id", $"sig", $"bk.band".as("band"), $"bk.bucket".as("bucket"))
-        val banded = Sizing.repartition(banded0, p, $"band", $"bucket")
-          .withColumn("bn",
-            count(lit(1)).over(Window.partitionBy($"band", $"bucket")))
-          .filter($"bn" <= 100)
-          .drop("bn")
-        val cand0 = banded.alias("l")
-          .join(banded.alias("r"),
-            col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-              col("l.doc_id") < col("r.doc_id"))
-          .select(col("l.doc_id").as("a"), col("l.sig").as("sa"),
-            col("r.doc_id").as("b"), col("r.sig").as("sb"))
-        val cand = Sizing.repartition(cand0, p, $"a", $"b").dropDuplicates()
-        cand.withColumn("hamming", simhashHamming($"sa", $"sb"))
+        val cand = bandPairs(banded, Tables.byteWidth(s, dir, "documents"), "sig")
+        cand.withColumn("hamming", simhashHamming($"sig_a", $"sig_b"))
           .filter($"hamming" <= 2)
           .select($"a", $"b", $"hamming")
           .orderBy($"a", $"b")
@@ -597,7 +598,7 @@ object DedupQueries {
       // same table on BOTH engines; the op then has real positives to
       // find. Plan shape: narrow augment + per-row bucketing (zero
       // shuffle), bucket self-join (the q22 band-join shape) with the
-      // q22 per-bucket cap (bn <= 100, oracle-mirrored) so the join's
+      // q22 per-bucket cap (capBuckets, oracle-mirrored) so the join's
       // output stays bounded when the corpus outgrows the fixed 4096-
       // bucket key space (VERDICT r2 wrong-item 2), per-pair decimal
       // cosine. Recall < 100% by design — that's LSH.
@@ -636,10 +637,7 @@ object DedupQueries {
         // measured-width bucket exchange (r9, Tables.byteWidth): the cap
         // window and the bucket self-join below share it
         val p = Tables.byteWidth(s, dir, "embeddings")
-        val bucketed = Sizing.repartition(bucketed0, p, $"bucket")
-          .withColumn("bn", count(lit(1)).over(Window.partitionBy($"bucket")))
-          .filter($"bn" <= 100)
-          .drop("bn")
+        val bucketed = capBuckets(bucketed0, p, "bucket")
         val l = bucketed.select($"vec_id".as("a"), $"bucket", $"emb".as("ea"))
         val r = bucketed.select($"vec_id".as("b"), $"bucket", $"emb".as("eb"))
         l.join(r, Seq("bucket")).filter($"a" < $"b")

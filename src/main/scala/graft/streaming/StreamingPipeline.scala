@@ -152,9 +152,13 @@ object StreamingPipeline {
                      stateWidth: Option[Int] = None): DataFrame = {
     val outP = s"$base/out"
     val cp = s"$base/cp"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(outP))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cp))
     val spark = df.sparkSession
+    // cleared through base's own Hadoop FileSystem (as CheckpointRunner
+    // writes its markers): java.io.File cannot see a file: URI or any
+    // other scheme, and a surviving checkpoint would append the new input
+    // to the previous drain's rows
+    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(outP, cp).foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
     val widthKey = "spark.sql.shuffle.partitions"
     val prevWidth = stateWidth.map(_ => spark.conf.get(widthKey))
     stateWidth.foreach(w => spark.conf.set(widthKey, w.toString))

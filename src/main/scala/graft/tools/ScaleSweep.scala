@@ -100,15 +100,30 @@ object ScaleSweep {
       }
     }
 
-  private def peakState(q: org.apache.spark.sql.streaming.StreamingQuery): (Long, Long, Double, Int) = {
+  /** Drain `stream` to a noop sink (AvailableNow, checkpoint `cp`) and
+    * read its peak state off recentProgress: (peak state rows, peak state
+    * bytes, mean ms of the batches with input, those batches, total s).
+    * `cp` is cleared before and after: a crashed prior run leaves it
+    * behind, and resuming from it would process zero new files and
+    * report near-zero peak state (ADVICE r6). */
+  private def drainPeakState(stream: org.apache.spark.sql.DataFrame,
+                             cp: String): (Long, Long, Double, Int, Double) = {
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cp))
+    val t0 = System.nanoTime()
+    val q = stream.writeStream.format("noop")
+      .option("checkpointLocation", cp)
+      .outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
     val ps = q.recentProgress.toSeq
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cp))
     val rows = ps.flatMap(_.stateOperators.map(_.numRowsTotal)).maxOption.getOrElse(0L)
     val bytes = ps.flatMap(_.stateOperators.map(_.memoryUsedBytes)).maxOption.getOrElse(0L)
     val withData = ps.filter(_.numInputRows > 0)
     val meanMs = if (withData.isEmpty) 0.0
       else withData.map(_.durationMs.getOrDefault("triggerExecution", 0L).toDouble)
         .sum / withData.size
-    (rows, bytes, meanMs, withData.size)
+    (rows, bytes, meanMs, withData.size, (System.nanoTime() - t0) / 1e9)
   }
 
   /** Keyed-state assembly at scale (VERDICT r5 #5): each document's
@@ -147,10 +162,6 @@ object ScaleSweep {
     mtimeOrder(waveDirs.toSeq.map(_.listFiles().filter(f =>
       !f.getName.startsWith("_") && !f.getName.startsWith(".")).toSeq))
     val schema = implicitly[org.apache.spark.sql.Encoder[WaveFrag]].schema
-    // a crashed prior run leaves cp-$tag behind; resuming from it would
-    // process zero new files and report near-zero peak state (ADVICE r6)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$base/cp-$tag"))
-    val t0 = System.nanoTime()
     val frags = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(in)
       .select($"doc_id", $"kind", $"text", $"media_ref", $"offset")
@@ -158,15 +169,7 @@ object ScaleSweep {
     // mtime order guarantees fragments-before-doc_end per document, the
     // NoTimeout contract (the gated entry's regime); state.remove() on
     // doc_end means state rows == open documents, exactly
-    val docs = StreamingPipeline.assembleDocs(frags, timeoutMs = 0L)
-    val q = docs.toDF().writeStream.format("noop")
-      .option("checkpointLocation", s"$base/cp-$tag")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val (rows, bytes, meanMs, batches) = peakState(q)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$base/cp-$tag"))
-    (rows, bytes, meanMs, batches, (System.nanoTime() - t0) / 1e9)
+    drainPeakState(StreamingPipeline.assembleDocs(frags, timeoutMs = 0L).toDF(), s"$base/cp-$tag")
   }
 
   /** Watermarked window-agg state at scale: events are fed in EVENT-TIME
@@ -197,20 +200,9 @@ object ScaleSweep {
       .sortBy(_.getName)
     mtimeOrder(parts.toSeq.map(Seq(_)))
     val schema = spark.read.parquet(in).schema
-    // same stale-checkpoint guard as assembleStateProbe (ADVICE r6)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$base/cp-$tag"))
-    val t0 = System.nanoTime()
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = StreamingPipeline.windowedEventCounts(stream)
-      .writeStream.format("noop")
-      .option("checkpointLocation", s"$base/cp-$tag")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val (rows, bytes, meanMs, batches) = peakState(q)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$base/cp-$tag"))
-    (rows, bytes, meanMs, batches, (System.nanoTime() - t0) / 1e9)
+    drainPeakState(StreamingPipeline.windowedEventCounts(stream), s"$base/cp-$tag")
   }
 
   def main(args: Array[String]): Unit = {
@@ -225,18 +217,11 @@ object ScaleSweep {
     val nA = 5000L // the sf0.1 shape
     val nB = 50000L // the sf1 shape
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the state probes read peak state from recentProgress, whose
-      // buffer holds only the last N updates (default 100) — the 50k
-      // probes run ~100 one-file batches, so the default would silently
-      // truncate the window the peak is computed over (review r6)
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the state probes read peak state from recentProgress, whose buffer
+    // holds only the last N updates (default 100) — the 50k probes run
+    // ~100 one-file batches, so the default would silently truncate the
+    // window the peak is computed over (review r6)
+    val spark = Ab.session(Seq("spark.sql.streaming.numRecentProgressUpdates" -> "2000"))
     generate(spark, dirA, nA)
     generate(spark, dirB, nB)
 
@@ -246,9 +231,59 @@ object ScaleSweep {
       val fn = graft.SparkEntry.queries(name)
       val t0 = System.nanoTime()
       fn(spark, dir).count()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      (System.nanoTime() - t0) / 1e9
+      val t = (System.nanoTime() - t0) / 1e9
+      Ab.reset(spark)
+      t
+    }
+
+    // WARM FLOORS, steal-gated, for both decades (r7; VERDICT r6 #1: a
+    // hot-window min-of-2 once put a 7.3× row next to a history of ~4×
+    // for the same entry). One unrecorded warm-up execution per (entry,
+    // size) — first executions of a plan shape swing 2-3× on this host —
+    // then interleaved rounds: each round times a still-needed entry at
+    // both sizes back-to-back, so a slow window degrades both sides of its
+    // ratio, not one. An entry drops out once each size has 3 steal-clean
+    // samples, so a busy window can be outwaited up to `cap` rounds
+    // without re-timing the whole list (VERDICT r7 #6). Samples whose
+    // window overlapped a steal burst never enter the floor;
+    // unreadable-gate samples are UNGATED (counted separately), never
+    // clean (ADVICE r7). Returns per entry the two floors (min over clean
+    // samples, or over all when none was clean) with their clean counts,
+    // and the rounds run.
+    var ungatedSamples = 0
+    def warmFloors(names: Seq[String], small: (String, String), large: (String, String),
+                   cap: Int, phase: String): (Seq[(String, Double, Double, Int, Int)], Int) = {
+      val sizes = Seq(small, large) // (label, dir)
+      names.foreach(n => sizes.foreach { case (_, dir) => timeOnce(n, dir) })
+      val clean = scala.collection.mutable.Map[(String, String), List[Double]]().withDefaultValue(Nil)
+      val all = scala.collection.mutable.Map[(String, String), List[Double]]().withDefaultValue(Nil)
+      def needs(n: String): Boolean = sizes.exists { case (k, _) => clean((n, k)).size < 3 }
+      var round = 0
+      while (names.exists(needs) && round < cap) {
+        round += 1
+        names.filter(needs).foreach { n =>
+          sizes.foreach { case (k, dir) =>
+            val (t, steal) = HostGauge.stealWindow(timeOnce(n, dir))
+            all((n, k)) ::= t
+            if (HostGauge.isClean(steal)) clean((n, k)) ::= t
+            else if (steal.isEmpty) {
+              ungatedSamples += 1
+              System.err.println(s"[scale] steal gate unreadable ($phase sample ungated): $n $k")
+            } else System.err.println(s"[scale] $phase sample polluted by steal (${steal.get} jiffies): $n $k")
+          }
+        }
+      }
+      val rows = names.map { n =>
+        def floor(k: String): (Double, Int) = {
+          val c = clean((n, k))
+          if (c.nonEmpty) (c.min, c.size) else (all((n, k)).min, 0)
+        }
+        val (t0, c0) = floor(small._1)
+        val (t1, c1) = floor(large._1)
+        System.err.println(f"[scale] $phase $n%-22s ${t0}%6.2f s -> ${t1}%6.2f s  ratio ${t1 / t0}%5.2f (clean $c0/$c1 of $round rounds)")
+        (n, t0, t1, c0, c1)
+      }
+      (rows, round)
     }
 
     // --only=a,b scopes a dev run to named entries (and skips the
@@ -262,52 +297,8 @@ object ScaleSweep {
           " — a typo here would write an artifact that measured nothing")
     }
 
-    // WARM FLOORS, steal-gated, for the base decade too (r7): the min-of-2
-    // regime this replaces let one hot window put a 7.3× row next to a
-    // history of ~4× for the same entry — the exact artifact-vs-prose
-    // divergence VERDICT r6 #1 flagged for decade-4. One unrecorded
-    // warm-up execution per (entry, size), then ≥3 interleaved rounds
-    // (each round times the entry at 5k then 50k back-to-back, so a slow
-    // window degrades both sizes of a ratio, not one); samples whose
-    // window overlapped a steal burst never enter the floor.
-    // shared steal gate (graft.tools.HostGauge): unreadable-gate samples
-    // are UNGATED (counted separately), never clean (ADVICE r7)
-    var ungatedSamples = 0
-    val baseNames = entries.filter(n => only.forall(_.contains(n)))
-    baseNames.foreach { n => timeOnce(n, dirA); timeOnce(n, dirB) }
-    val bClean = scala.collection.mutable.Map[(String, String), List[Double]]().withDefaultValue(Nil)
-    val bAll = scala.collection.mutable.Map[(String, String), List[Double]]().withDefaultValue(Nil)
-    var bRound = 0
-    def bEntryNeeds(n: String): Boolean =
-      bClean((n, "A")).size < 3 || bClean((n, "B")).size < 3
-    // cap raised 6 → 8 and SATISFIED entries drop out of later rounds,
-    // so a busy window can be outwaited without re-timing the whole list
-    // (the sizes of a still-needed entry stay paired back-to-back — a
-    // slow window degrades both sides of its ratio, not one)
-    while (baseNames.exists(bEntryNeeds) && bRound < 8) {
-      bRound += 1
-      baseNames.filter(bEntryNeeds).foreach { n =>
-        Seq("A" -> dirA, "B" -> dirB).foreach { case (k, dir) =>
-          val (t, steal) = HostGauge.stealWindow(timeOnce(n, dir))
-          bAll((n, k)) ::= t
-          if (HostGauge.isClean(steal)) bClean((n, k)) ::= t
-          else if (steal.isEmpty) {
-            ungatedSamples += 1
-            System.err.println(s"[scale] steal gate unreadable (sample ungated): $n $k")
-          } else System.err.println(s"[scale] base sample polluted by steal (${steal.get} jiffies): $n $k")
-        }
-      }
-    }
-    val rows = baseNames.map { name =>
-      def floor(k: String): (Double, Int) = {
-        val c = bClean((name, k))
-        if (c.nonEmpty) (c.min, c.size) else (bAll((name, k)).min, 0)
-      }
-      val (tA, cA) = floor("A")
-      val (tB, cB) = floor("B")
-      System.err.println(f"[scale] $name%-22s ${tA}%6.2f s -> ${tB}%6.2f s  ratio ${tB / tA}%5.2f (clean $cA/$cB of $bRound rounds)")
-      (name, tA, tB, cA, cB)
-    }
+    val (rows, bRound) = warmFloors(entries.filter(n => only.forall(_.contains(n))),
+      "A" -> dirA, "B" -> dirB, cap = 8, phase = "base")
     val entriesJson = rows.map { case (n, a, b, cA, cB) =>
       f""""$n":{"t_5k":$a%.3f,"t_50k":$b%.3f,"ratio":${b / a}%.3f,""" +
         s""""clean_samples_5k":$cA,"clean_samples_50k":$cB}"""
@@ -352,16 +343,9 @@ object ScaleSweep {
 
     // fourth decade (VERDICT r5 #6), opt-in: 500k docs for the iterative-
     // round entries whose 10× ratios were the sweep's worst — confirms
-    // the round-count story holds one more decade.
-    //
-    // WARM FLOORS, steal-gated (VERDICT r6 #1): the r6 committed row for
-    // q34 was a hot-window min-of-2 (84.6 s / ratio 5.25) that
-    // contradicted the standalone warm floor (~52 s / ~3.3) — the decade-4
-    // numbers now come from ≥3 clean interleaved rounds (each round times
-    // every entry at 50k then 500k back-to-back, so a slow window hits
-    // both sizes; samples whose window overlapped a steal burst don't
-    // count as clean), after one unrecorded warm-up pass. The committed
-    // artifact and the prose then agree by construction.
+    // the round-count story holds one more decade. Same warm floors as
+    // the base decade, with up to 12 rounds: the r7 run exhausted 6
+    // all-entry rounds with q34's 500k side never once steal-clean.
     val decade4Json = if (want4) {
       // --d4names=a,b scopes the decade-4 phase (r8: lets a single entry —
       // e.g. kg_entity_canonical after its vacuity fix — get a 500k point
@@ -371,46 +355,11 @@ object ScaleSweep {
       }.getOrElse(Seq("q34_dup_clusters", "q30_tree_depth", "q42_cc_chain", "q48_pagerank"))
       require(names.nonEmpty && names.forall(graft.SparkEntry.queries.contains),
         s"unknown --d4names entry among: $names")
-      // warm-up: first executions of a plan shape swing 2-3× on this host
-      names.foreach { n => timeOnce(n, dirB); timeOnce(n, dirC) }
-      val clean = scala.collection.mutable.Map[(String, String), List[Double]]().withDefaultValue(Nil)
-      val all = scala.collection.mutable.Map[(String, String), List[Double]]().withDefaultValue(Nil)
-      var round = 0
-      def entryNeeds(n: String): Boolean =
-        clean((n, "B")).size < 3 || clean((n, "C")).size < 3
-      // round cap 6 → 12 with satisfied entries dropping out (VERDICT r7
-      // #6): the r7 run exhausted its 6 all-entry rounds with q34's 500k
-      // side never once steal-clean, leaving the committed row's floor
-      // polluted and the clean 41.45 s confirmation in a side artifact —
-      // the q34-only confirm run showed clean 500k windows DO arrive
-      // when the loop can outwait the bursts, so the main artifact now
-      // does exactly that in-place
-      while (names.exists(entryNeeds) && round < 12) {
-        round += 1
-        names.filter(entryNeeds).foreach { n =>
-          Seq("B" -> dirB, "C" -> dirC).foreach { case (k, dir) =>
-            val (t, steal) = HostGauge.stealWindow(timeOnce(n, dir))
-            all((n, k)) ::= t
-            if (HostGauge.isClean(steal)) clean((n, k)) ::= t
-            else if (steal.isEmpty) {
-              ungatedSamples += 1
-              System.err.println(s"[scale] steal gate unreadable (d4 sample ungated): $n $k")
-            } else System.err.println(s"[scale] d4 sample polluted by steal (${steal.get} jiffies): $n $k")
-          }
-        }
-      }
-      val d4 = names.map { name =>
-        def floor(k: String): (Double, Int) = {
-          val c = clean((name, k))
-          if (c.nonEmpty) (c.min, c.size) else (all((name, k)).min, 0)
-        }
-        val (tB, cB) = floor("B")
-        val (tC, cC) = floor("C")
-        System.err.println(f"[scale] d4 $name%-22s ${tB}%6.2f s -> ${tC}%6.2f s  ratio ${tC / tB}%5.2f (clean $cB/$cC of $round rounds)")
+      val (d4, round) = warmFloors(names, "B" -> dirB, "C" -> dirC, cap = 12, phase = "d4")
+      d4.map { case (name, tB, tC, cB, cC) =>
         f""""$name":{"t_50k":$tB%.3f,"t_500k":$tC%.3f,"ratio":${tC / tB}%.3f,""" +
           s""""clean_samples_50k":$cB,"clean_samples_500k":$cC,"rounds":$round,"method":"warm floor: min over steal-clean samples, interleaved sizes, 1 warm-up pass"}"""
       }.mkString(s""","decade4":{"n_docs":$nC,"entries":{""", ",", "}}")
-      d4
     } else ""
 
     val json =

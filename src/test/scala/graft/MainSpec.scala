@@ -1,0 +1,34 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `graft.Main`'s flag parsing; no session is started. */
+class MainSpec extends AnyFunSuite {
+  test("flags: defaults, and each flag read from its --name value pair") {
+    assert(Main.parse(Array()) == Main.Opts("gen:10000", "/tmp/graft-out", "analyze", 64, None))
+    assert(Main.parse(Array("--cascade", "link", "--buckets", "8", "--input", "in",
+      "--output", "out", "--config", "c.json")) ==
+      Main.Opts("in", "out", "link", 8, Some("c.json")))
+  }
+
+  test("flags: an unknown --cascade fails naming the flag and the cascades") {
+    val e = intercept[IllegalArgumentException](Main.parse(Array("--cascade", "analyse")))
+    assert(e.getMessage.contains("--cascade"))
+    assert(e.getMessage.contains("analyze|parse|link"))
+    assert(e.getMessage.contains("'analyse'"))
+  }
+
+  test("flags: a non-integer or non-positive --buckets fails naming the flag") {
+    for (b <- Seq("x", "0", "-3", "2.5", "")) {
+      val e = intercept[IllegalArgumentException](Main.parse(Array("--buckets", b)))
+      assert(e.getMessage.contains("--buckets"), b)
+    }
+  }
+
+  test("flags: an unknown flag or a flag without a value fails naming it") {
+    assert(intercept[IllegalArgumentException](Main.parse(Array("--bucket", "8")))
+      .getMessage.contains("'--bucket 8'"))
+    assert(intercept[IllegalArgumentException](Main.parse(Array("--cascade", "link", "--input")))
+      .getMessage.contains("'--input'"))
+  }
+}

@@ -54,6 +54,21 @@ class MultimodalStreamingSpec extends AnyFunSuite {
     assert(got == batch) // stream == batch on the same input
   }
 
+  test("streaming: a second drain to the same file: base returns only the new input") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-drain").toUri.toString
+    val in = s"${root}in"
+    val schema = Seq((0L, "")).toDF("id", "s").schema
+    def drain(rows: Seq[(Long, String)]): Set[(Long, String)] = {
+      rows.toDF("id", "s").write.mode("overwrite").parquet(in)
+      StreamingPipeline.drainToParquet(spark.readStream.schema(schema).parquet(in), s"${root}base")
+        .as[(Long, String)].collect().toSet
+    }
+    assert(root.startsWith("file:"))
+    assert(drain(Seq(1L -> "a", 2L -> "b")) == Set(1L -> "a", 2L -> "b"))
+    assert(drain(Seq(3L -> "c")) == Set(3L -> "c"))
+  }
+
   test("streaming: stateful cross-batch document assembly (flatMapGroupsWithState)") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -69,6 +69,8 @@ class PlanSpec extends AnyFunSuite {
     "q44_langid_bigram" -> (1, 0),
     "q41_decontaminate" -> (4, 2), // broadcast n-gram probe, corpus side narrow
     "q31_ann_ivf"      -> (2, 0), // zero-shuffle assignment; per-partition top-k + sort
+    "q28_ann_topk"     -> (2, 0), // broadcast queries, per-partition top-k + rank window + sort
+    "q38_ann_ivf_multiprobe" -> (2, 0), // q31's IVF search with two probed cells
     "q48_pagerank"     -> (1, 0), // post-loop tail: output sort
     "q30_tree_depth"   -> (1, 0),
     "q42_cc_chain"     -> (1, 0),
