@@ -10,12 +10,16 @@ import graft.conll._
   *     --input <spans parquet dir | gen:<nDocs>> \
   *     --output <dir> \
   *     --cascade analyze|parse|link \
-  *     [--buckets 64] [--config <pipeline.json>]
+  *     [--buckets 64]
+  *   spark-submit --class graft.Main app.jar \
+  *     --config <pipeline.json> --output <dir>
   *
   * Runs the KG-construction pipeline checkpoint-resumably (bucket
   * manifest + lineage, CheckpointRunner) and writes the metrics table
-  * next to the output. In local mode, pass --master local[N] to
-  * spark-submit as usual; the session here inherits it.
+  * next to the output; with `--config`, runs the JSON-configured
+  * pipeline ([[graft.conll.PipelineManager]]) once instead. In local
+  * mode, pass --master local[N] to spark-submit as usual; the session
+  * here inherits it.
   */
 object Main {
 
@@ -23,27 +27,34 @@ object Main {
   final case class Opts(input: String, output: String, cascade: String,
                         buckets: Int, config: Option[String])
 
-  private val Cascades = Seq("analyze", "parse", "link")
   private val Flags = Seq("input", "output", "cascade", "buckets", "config")
 
   /** `--name value` pairs → [[Opts]] (defaults: gen:10000, /tmp/graft-out,
     * analyze, 64 buckets). An unknown flag, a flag without a value, a
-    * cascade outside analyze|parse|link and a bucket count that is not a
-    * positive integer fail naming the flag, before any session starts. */
+    * cascade the catalogue ([[PipelineManager.cascades]]) does not name, a
+    * `gen:` input whose document count is not a non-negative integer, a
+    * bucket count that is not a positive integer, and `--input`,
+    * `--cascade` or `--buckets` beside `--config` (the JSON names its own
+    * input and stages) fail naming the flag, before any session starts. */
   def parse(args: Array[String]): Opts = {
-    val given = args.grouped(2).map {
+    val values = args.grouped(2).map {
       case Array(k, v) if Flags.exists(f => k == s"--$f") => k.drop(2) -> v
       case p => throw new IllegalArgumentException(
         s"expected ${Flags.map("--" + _).mkString("|")} <value>, got '${p.mkString(" ")}'")
     }.toMap
-    val cascade = given.get("cascade").getOrElse("analyze")
-    require(Cascades.contains(cascade),
-      s"--cascade must be one of ${Cascades.mkString("|")}, got '$cascade'")
-    val buckets = given.get("buckets").getOrElse("64")
+    for (f <- Seq("input", "cascade", "buckets") if values.contains("config") && values.contains(f))
+      throw new IllegalArgumentException(
+        s"--$f is not used with --config (the pipeline JSON names its input and stages)")
+    val input = values.getOrElse("input", "gen:10000")
+    require(!input.startsWith("gen:") || input.stripPrefix("gen:").toLongOption.exists(_ >= 0),
+      s"--input gen:<nDocs> needs a non-negative integer, got '$input'")
+    val cascade = values.getOrElse("cascade", "analyze")
+    require(PipelineManager.cascades.contains(cascade),
+      s"--cascade must be one of ${PipelineManager.cascades.keys.mkString("|")}, got '$cascade'")
+    val buckets = values.getOrElse("buckets", "64")
     require(buckets.toIntOption.exists(_ > 0),
       s"--buckets must be a positive integer, got '$buckets'")
-    Opts(given.get("input").getOrElse("gen:10000"), given.get("output").getOrElse("/tmp/graft-out"),
-      cascade, buckets.toInt, given.get("config"))
+    Opts(input, values.getOrElse("output", "/tmp/graft-out"), cascade, buckets.toInt, values.get("config"))
   }
 
   def main(args: Array[String]): Unit = {
@@ -67,11 +78,7 @@ object Main {
         val docs = if (input.startsWith("gen:"))
           DocGen.docs(spark, input.stripPrefix("gen:").toLong)
         else spark.read.parquet(input).as[InputDoc]
-        val cascade = cascadeName match {
-          case "parse" => Pipeline.parseCascade
-          case "link" => Pipeline.linkCascade
-          case "analyze" => Pipeline.analyzeCascade
-        }
+        val cascade = PipelineManager.cascade(cascadeName)
         val metrics = Pipeline.newMetrics(spark, cascade)
         CheckpointRunner.run(spark, docs, DocGen.columns, cascade, output, buckets, Some(metrics))
         metrics.toDf(spark).write.mode("overwrite").parquet(s"$output/_metrics")

@@ -98,65 +98,4 @@ object DocGen {
     import spark.implicits._
     spark.range(0, nDocs).map(id => genDoc(seed, id))
   }
-
-  /** SketchEngine-shaped XML-TSV documents (markup + 2-col TSV). */
-  def genXmlDoc(seed: Long, docId: Long): InputDoc = {
-    val rng = Rng(seed ^ (docId * 0x5851f42d4c957f2dL) ^ 0x1234L)
-    val spans = scala.collection.mutable.ArrayBuffer[Span]()
-    var off = 0
-    def add(kind: String, text: String): Unit = { spans += Span(kind, text, "", off); off += 1 }
-    add("markup", s"""<doc id="$docId" lang="en">""")
-    val nPars = 1 + rng.nextInt(3)
-    for (_ <- 0 until nPars) {
-      add("markup", "<p>")
-      val nSents = 1 + rng.nextInt(3)
-      for (_ <- 0 until nSents) {
-        add("markup", "<s>")
-        for (row <- sentenceRows(rng)) {
-          val cells = row.split("\t")
-          add("token", s"${cells(1)}\t${cells(4)}") // WORD, POS
-        }
-        add("markup", "</s>")
-        if (rng.nextInt(4) == 0) add("markup", "<g/>")
-      }
-      add("markup", "</p>")
-    }
-    add("markup", "</doc>")
-    InputDoc(s"xdoc$docId", spans.toSeq)
-  }
-
-  def xmlDocs(spark: SparkSession, nDocs: Long, seed: Long = 42L): Dataset[InputDoc] = {
-    import spark.implicits._
-    spark.range(0, nDocs).map(id => genXmlDoc(seed, id))
-  }
-
-  /** PTB-bracketing-shaped documents (WORD POS PARSE columns). */
-  def genBracketDoc(seed: Long, docId: Long): InputDoc = {
-    val rng = Rng(seed ^ (docId * 0x5851f42d4c957f2dL) ^ 0x9999L)
-    val spans = scala.collection.mutable.ArrayBuffer[Span]()
-    var off = 0
-    def add(kind: String, text: String): Unit = { spans += Span(kind, text, "", off); off += 1 }
-    val nSents = 1 + rng.nextInt(4)
-    for (_ <- 0 until nSents) {
-      val rows = sentenceRows(rng)
-      // simple projective parse: (S (NP first-two) (VP rest))
-      for ((row, i) <- rows.zipWithIndex) {
-        val cells = row.split("\t")
-        val parse =
-          if (i == 0) "( (S (NP *"
-          else if (i == 1) "*)"
-          else if (i == 2) "(VP *"
-          else if (i == rows.length - 1) "*))"
-          else "*"
-        add("token", s"${cells(1)}\t${cells(4)}\t$parse")
-      }
-      add("sentence_break", "")
-    }
-    InputDoc(s"bdoc$docId", spans.toSeq)
-  }
-
-  def bracketDocs(spark: SparkSession, nDocs: Long, seed: Long = 42L): Dataset[InputDoc] = {
-    import spark.implicits._
-    spark.range(0, nDocs).map(id => genBracketDoc(seed, id))
-  }
 }

@@ -44,13 +44,8 @@ object Ontology {
     }
     val nodes = inGraph.flatMap(t => Seq(t.s, t.o)).distinct
     nodes.map { n =>
-      val seen = mutable.LinkedHashSet(n)
-      val queue = mutable.Queue(n)
-      while (queue.nonEmpty) {
-        val x = queue.dequeue()
-        for (y <- succ.getOrElse(x, mutable.LinkedHashSet()); if seen.add(y)) queue += y
-      }
-      n -> seen.toSeq.filter(keep)
+      val star = mutable.LinkedHashSet(n) ++ Rules.closure(n)(succ.getOrElse(_, Nil))
+      n -> star.toSeq.filter(keep)
     }.toMap
   }
 
@@ -79,15 +74,7 @@ object Ontology {
     val succ = mutable.HashMap[String, mutable.LinkedHashSet[String]]()
     for (t <- triples if t.graph == graph && (t.p == SUBCLASS || t.p == EQUIV))
       succ.getOrElseUpdate(t.s, mutable.LinkedHashSet()) += t.o
-    succ.keys.map { n =>
-      val seen = mutable.LinkedHashSet[String]()
-      val queue = mutable.Queue(n)
-      while (queue.nonEmpty) {
-        val x = queue.dequeue()
-        for (y <- succ.getOrElse(x, mutable.LinkedHashSet()); if seen.add(y)) queue += y
-      }
-      n -> seen.toSeq.filter(keep)
-    }.toMap
+    succ.keys.map(n => n -> Rules.closure(n)(succ.getOrElse(_, Nil)).toSeq.filter(keep)).toMap
   }
 
   /** Deterministic mini-OLiA fixture (FIXTURES.md F4): the UD/Penn tag
@@ -226,13 +213,7 @@ object Ontology {
       }.flatMap(l => inG.collect { case t if t.s == l && t.p == FIRST => t.o })
       direct ++ viaList
     }
-    val seen = mutable.LinkedHashSet(start)
-    val queue = mutable.Queue(start)
-    while (queue.nonEmpty) {
-      val x = queue.dequeue()
-      for (y <- succ(x); if seen.add(y)) queue += y
-    }
-    seen.toSeq
+    (mutable.LinkedHashSet(start) ++ Rules.closure(start)(succ)).toSeq
   }
 
   /** Compile the penn graph into runtime matchers with precomputed insert

@@ -18,6 +18,10 @@ import Rules.Script
   * embarrassingly parallel over input splits; the only shuffles are the
   * optional canonicalization (ConnectedComponents) and any downstream
   * analytics.
+  *
+  * The compiled scripts and the three named cascades live in one
+  * catalogue, [[PipelineManager.scripts]] and [[PipelineManager.cascades]];
+  * the cascade `def`s below look them up.
   */
 object Pipeline {
 
@@ -219,39 +223,12 @@ object Pipeline {
     docs.toDF().join(t, Seq("doc_id"), "left_outer")
   }
 
-  /** The analyze-ud cascade (examples/analyze-ud.json):
-    * remove-IGNORE → UPOS-to-POSsynt → EDGE-to-POSsynt → consolidate. */
-  def analyzeCascade: Seq[(Script, Int)] = Seq(
-    AnalyzeScripts.removeIgnore -> 1,
-    AnalyzeScripts.uposToPossynt -> 1,
-    AnalyzeScripts.edgeToPossynt -> 1,
-    AnalyzeScripts.consolidatePossynt -> 1
-  )
+  /** The analyze-ud cascade, from the catalogue ([[PipelineManager.cascades]]). */
+  def analyzeCascade: Seq[(Script, Int)] = PipelineManager.cascade("analyze")
 
-  /** The link-ud cascade over the bundled mini ontology. */
-  def linkCascade: Seq[(Script, Int)] = {
-    val t2c = Ontology.tagToConcepts(Ontology.miniOlia, Ontology.GRAPH_UD, Ontology.keepOlia)
-    val sup = Ontology.superClosure(Ontology.miniOlia, Ontology.GRAPH_UD, Ontology.keepOlia)
-    Seq(
-      LinkScripts.linkUposSimple(t2c) -> 1,
-      LinkScripts.inferOliaConcepts(sup) -> 1,
-      LinkScripts.removeAnnotationModel() -> 1
-    )
-  }
+  /** The link-ud cascade over the bundled mini ontology, from the catalogue. */
+  def linkCascade: Seq[(Script, Int)] = PipelineManager.cascade("link")
 
-  /** The parse-ud cascade, mirroring examples/parse-ud.sh:35-53 exactly:
-    * remove-ID, remove-IGNORE, link-penn-POS (5-mode), remove-annotation-
-    * model, infer-olia-concepts (olia.owl graph), then the SR parser
-    * generations with the reference's iteration budgets. */
-  def parseCascade: Seq[(Script, Int)] = {
-    val links = Ontology.pennLinks(Ontology.miniOlia, Ontology.GRAPH_PENN)
-    val sup = Ontology.superClosure(Ontology.miniOlia, Ontology.GRAPH_OLIA, Ontology.keepOlia)
-    Seq(
-      AnalyzeScripts.removeId -> 1,
-      AnalyzeScripts.removeIgnore -> 1,
-      LinkScripts.linkPennPosFull(links) -> 1,
-      LinkScripts.removeAnnotationModel() -> 1,
-      LinkScripts.inferOliaConcepts(sup) -> 1
-    ) ++ ParseScripts.cascade
-  }
+  /** The parse-ud cascade (examples/parse-ud.sh:35-53), from the catalogue. */
+  def parseCascade: Seq[(Script, Int)] = PipelineManager.cascade("parse")
 }

@@ -2,6 +2,7 @@ package graft.conll
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 import Rules.Script
 
@@ -21,15 +22,17 @@ import Rules.Script
   *   ]
   * }
   *
-  * Update scripts are referenced by registry name (the compiled
-  * equivalents of examples/sparql/), with the reference's `{n}` iteration
-  * suffix carried by "iter". JSON parsing uses Spark's bundled Jackson —
-  * no extra dependency.
+  * Update scripts are referenced by reference script name in the one
+  * catalogue, [[scripts]] and [[cascades]], with the reference's `{n}`
+  * iteration suffix carried by "iter". JSON parsing uses Spark's bundled
+  * Jackson — no extra dependency.
   */
 object PipelineManager {
 
-  /** Registry of compiled scripts by their reference script name. */
-  val scriptRegistry: Map[String, Script] = {
+  /** The compiled examples/sparql/ scripts by reference script name, their
+    * ontology closures computed once on the driver (SURVEY §2.4 U12c).
+    * infer-olia-concepts over the UD graph is `infer-olia-concepts-ud`. */
+  val scripts: Map[String, Script] = {
     val links = Ontology.pennLinks(Ontology.miniOlia, Ontology.GRAPH_PENN)
     val t2c = Ontology.tagToConcepts(Ontology.miniOlia, Ontology.GRAPH_UD, Ontology.keepOlia)
     val supUd = Ontology.superClosure(Ontology.miniOlia, Ontology.GRAPH_UD, Ontology.keepOlia)
@@ -58,6 +61,22 @@ object PipelineManager {
     )
   }
 
+  /** The reference stacks as (script name, iterations) in run order:
+    * examples/analyze-ud.json, parse-ud.sh:35-53 and link-ud. */
+  val cascades: ListMap[String, Seq[(String, Int)]] = ListMap(
+    "analyze" -> once("remove-IGNORE", "UPOS-to-POSsynt", "EDGE-to-POSsynt", "consolidate-POSsynt"),
+    "parse" -> (once("remove-ID", "remove-IGNORE", "link-penn-POS", "remove-annotation-model",
+      "infer-olia-concepts") ++ ParseScripts.cascade.map { case (s, n) => s.name -> n }),
+    "link" -> once("link-UPOS-simple", "infer-olia-concepts-ud", "remove-annotation-model"))
+
+  private def once(names: String*): Seq[(String, Int)] = names.map(_ -> 1)
+
+  /** A named cascade's scripts, each under its reference name (the
+    * [[Pipeline.Metrics]] key): the UD closure runs as `infer-olia-concepts`. */
+  def cascade(name: String): Seq[(Script, Int)] = cascades(name).map { case (s, n) =>
+    (if (s == "infer-olia-concepts-ud") scripts(s).copy(name = "infer-olia-concepts") else scripts(s)) -> n
+  }
+
   final case class Config(
       input: Either[Long, String], // docs count | parquet path
       columns: Seq[String],
@@ -65,8 +84,12 @@ object PipelineManager {
       format: String,              // triples | conll | ntriples
       formatColumns: Seq[String])
 
+  /** A missing or malformed key, script or class fails naming it. */
   def parseConfig(json: String): Config = {
     val root: JsonNode = new ObjectMapper().readTree(json)
+    def field(node: JsonNode, key: String, where: String): JsonNode =
+      Option(node.get(key)).getOrElse(
+        throw new IllegalArgumentException(s"pipeline config: $where has no \"$key\""))
     val input = Option(root.get("input")) match {
       case Some(i) if i.has("parquet") => Right(i.get("parquet").asText())
       case Some(i) if i.has("docs") => Left(i.get("docs").asLong())
@@ -76,15 +99,15 @@ object PipelineManager {
     var updates: Seq[(Script, Int)] = Seq.empty
     var format = "triples"
     var formatColumns: Seq[String] = Seq.empty
-    for (stage <- root.get("pipeline").elements().asScala) {
-      stage.get("class").asText() match {
+    for (stage <- field(root, "pipeline", "the document").elements().asScala) {
+      field(stage, "class", "a pipeline stage").asText() match {
         case "CoNLLStreamExtractor" =>
           if (stage.has("columns"))
             columns = stage.get("columns").elements().asScala.map(_.asText()).toSeq
         case "CoNLLRDFUpdater" =>
           val SuffixRe = "\\{([0-9]+|u|\\*)\\}$".r
-          updates = stage.get("updates").elements().asScala.map { u =>
-            val rawPath = u.get("path").asText()
+          updates = field(stage, "updates", "the CoNLLRDFUpdater stage").elements().asScala.map { u =>
+            val rawPath = field(u, "path", "an update").asText()
             // reference `script.sparql{n}` / `{u}` / `{*}` iteration suffix
             // (CoNLLRDFCommandLine.parseUpdate:266-274: no suffix → 1,
             // "u" → "*" → run to fixpoint capped at MAXITERATE)
@@ -96,9 +119,10 @@ object PipelineManager {
               else suffixIter.getOrElse("1")
             val iter = iterStr match {
               case "u" | "*" => Rules.MAXITERATE
-              case n => n.toInt
+              case n => n.toIntOption.getOrElse(throw new IllegalArgumentException(
+                s"pipeline config: \"iter\" of $name must be an integer, u or *, got '$n'"))
             }
-            val script = scriptRegistry.getOrElse(name,
+            val script = scripts.getOrElse(name,
               throw new IllegalArgumentException(s"unknown update script: $name"))
             script -> iter
           }.toSeq
@@ -128,35 +152,21 @@ object PipelineManager {
     val docs = Pipeline.validateUtf8(raw,
       spark.sparkContext.longAccumulator("utf8_rejected"),
       rejectReplacementChar = true)
+    val parsed = Pipeline.parse(docs, cfg.columns)
+    lazy val triples = Pipeline.rewriteTriples(parsed, cfg.updates)
+    val outCols = if (cfg.formatColumns.nonEmpty) cfg.formatColumns else cfg.columns
+    def rendered(name: String)(f: Sentence => String): DataFrame =
+      Pipeline.rewrite(parsed, cfg.updates).map(s => (s.docId, s.sent, f(s)))
+        .toDF("doc_id", "sent", name)
     cfg.format match {
-      case "conll" => Serializers.toConllTsv(
-        Pipeline.rewriteTriples(Pipeline.parse(docs, cfg.columns), cfg.updates).toDF(),
-        if (cfg.formatColumns.nonEmpty) cfg.formatColumns else cfg.columns)
-      case "ntriples" => Serializers.toSortedNTriples(
-        Pipeline.rewriteTriples(Pipeline.parse(docs, cfg.columns), cfg.updates))
-        .toDF("line")
+      case "conll" => Serializers.toConllTsv(triples.toDF(), outCols)
+      case "ntriples" => Serializers.toSortedNTriples(triples).toDF("line")
       // K5/K6 diagnostics: per-sentence renderers, narrow map
-      case "dot" | "grammar" | "debug" | "semantics" =>
-        val sents = Pipeline.rewrite(Pipeline.parse(docs, cfg.columns), cfg.updates)
-        val outCols =
-          if (cfg.formatColumns.nonEmpty) cfg.formatColumns else cfg.columns
-        cfg.format match {
-          case "dot" =>
-            sents.map(s => (s.docId, s.sent, Viz.toDot(s)))
-              .toDF("doc_id", "sent", "dot")
-          case "grammar" =>
-            sents.map(s => (s.docId, s.sent, Viz.asciiTree(s)))
-              .toDF("doc_id", "sent", "grammar")
-          case "semantics" =>
-            sents.map(s => (s.docId, s.sent, Viz.termGraph(s)))
-              .toDF("doc_id", "sent", "semantics")
-          case _ =>
-            sents.map(s => (s.docId, s.sent,
-                Viz.colorTtl(Serializers.toCanonicalTtl(s, outCols))))
-              .toDF("doc_id", "sent", "ttl_ansi")
-        }
-      case _ =>
-        Pipeline.rewriteTriples(Pipeline.parse(docs, cfg.columns), cfg.updates).toDF()
+      case "dot" => rendered("dot")(Viz.toDot(_))
+      case "grammar" => rendered("grammar")(Viz.asciiTree(_))
+      case "semantics" => rendered("semantics")(Viz.termGraph(_))
+      case "debug" => rendered("ttl_ansi")(s => Viz.colorTtl(Serializers.toCanonicalTtl(s, outCols)))
+      case _ => triples.toDF()
     }
   }
 }

@@ -126,10 +126,21 @@ object Rules {
   }
   def rex(p: String): Re = new Re(p)
 
+  /** The property-path walk `p+` (SURVEY §2.4 U12): breadth-first from
+    * `start` over `step`, every node reached in discovery order. `start`
+    * is in the result only when it lies on a cycle; a `p*` walk is
+    * `LinkedHashSet(start) ++ closure(start)(step)`. */
+  def closure[A](start: A)(step: A => Iterable[A]): mutable.LinkedHashSet[A] = {
+    val seen = mutable.LinkedHashSet[A]()
+    val queue = mutable.Queue(start)
+    while (queue.nonEmpty)
+      for (y <- step(queue.dequeue()) if seen.add(y)) queue += y
+    seen
+  }
+
   // ---- shared vocabulary ----
   val A = "rdf:type"
   val NEXT_WORD = "nif:nextWord"
-  val NEXT_SENT = "nif:nextSentence"
   val WORD_TYPE = "nif:Word"
   def conll(c: String) = s"conll:$c"
 

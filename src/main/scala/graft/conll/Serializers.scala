@@ -299,18 +299,13 @@ object Serializers {
           x => x.getField("obj")),
         " ").as("sentence"))
 
-  /** K3: examples/sparql/count_xml_triples.sparql. */
-  def countXmlTriples(triples: DataFrame): DataFrame =
-    triples.filter(col("pred") === "rdf:type" && col("obj") === "conll:XML_DATA")
-      .agg(count(lit(1)).as("n"))
-
-  /** countXmlTriples without the full TripleRow explode: the per-sentence
-    * count happens inside the narrow object pipeline (one Long per
-    * sentence reaches the aggregate, instead of every triple of the graph
-    * being materialized as a row and then filtered — at 100 TB that's the
-    * difference between shuffling a per-sentence scalar and building the
-    * whole long table for one number). Same output contract as
-    * countXmlTriples: a single-row (n: bigint) frame. */
+  /** K3: examples/sparql/count_xml_triples.sparql — the number of
+    * `rdf:type conll:XML_DATA` triples, as a single-row (n: bigint)
+    * frame. The count happens per sentence inside the narrow object
+    * pipeline: one Long per sentence reaches the aggregate, instead of
+    * every triple of the graph being materialized as a row and then
+    * filtered (at 100 TB, a per-sentence scalar instead of the whole long
+    * table for one number). */
   def countXmlNodes(sents: Dataset[Sentence]): DataFrame = {
     import sents.sparkSession.implicits._
     sents.map(_.triples.count(t =>

@@ -33,7 +33,6 @@ import java.util.regex.Pattern
   */
 object SpanParser {
 
-  private val EmptyCell = Pattern.compile("^(O|-|--|_|__)?$")
   private val GlobalColumns = Pattern.compile("^#\\s*global\\.columns\\s*=\\s*(.*)$")
   private val SPMarkup = Pattern.compile("<[\\/]?[psPS]( [^>]*>|>)")
   private val OtherMarkup = Pattern.compile("^<[^>]*>$")

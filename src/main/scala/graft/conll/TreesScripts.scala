@@ -16,22 +16,9 @@ object TreesScripts {
   private val FIRST = "tmp:first"
   private val LAST = "tmp:last"
 
-  /** Generic BFS closure (excluding the start unless reachable). */
-  private def closure(start: String, step: String => Iterable[String]): Set[String] = {
-    val seen = mutable.LinkedHashSet[String]()
-    val queue = mutable.Queue[String](start)
-    var first = true
-    while (queue.nonEmpty) {
-      val x = queue.dequeue()
-      for (y <- step(x); if !seen.contains(y)) { seen += y; queue += y }
-      first = false
-    }
-    val _ = first
-    seen.toSet
-  }
-
-  private def closureWithStart(start: String, step: String => Iterable[String]): Set[String] =
-    closure(start, step) + start
+  /** `p*`: the start, then its `p+` walk. */
+  private def closureWithStart(start: String)(step: String => Iterable[String]) =
+    mutable.LinkedHashSet(start) ++ closure(start)(step)
 
   /** `(powla:hasParent|powla:next)* / powla:next / (^powla:hasParent|powla:next)*`
     * (emptyNode2Word.sparql:33-35) — "a precedes b" over the tree.
@@ -41,11 +28,11 @@ object TreesScripts {
     * linear chain — the dominant cost of the emptyNode2Word entry). */
   private def precedes(
       g: SentGraph, a: String,
-      down: mutable.HashMap[String, Set[String]]): Set[String] = {
-    val up = closureWithStart(a, x => g.objects(x, HAS_PARENT) ++ g.objects(x, NEXT))
+      down: mutable.HashMap[String, collection.Set[String]]): collection.Set[String] = {
+    val up = closureWithStart(a)(x => g.objects(x, HAS_PARENT) ++ g.objects(x, NEXT))
     val afterNext = up.flatMap(x => g.objects(x, NEXT))
     afterNext.flatMap(x => down.getOrElseUpdate(x,
-      closureWithStart(x, y => g.subjects(HAS_PARENT, y) ++ g.objects(y, NEXT))))
+      closureWithStart(x)(y => g.subjects(HAS_PARENT, y) ++ g.objects(y, NEXT))))
   }
 
   /** trees/xAttributes2value.sparql — fold x:* attributes into rdf:value. */
@@ -87,8 +74,8 @@ object TreesScripts {
     stage { (g, out) =>
       val empties = g.subjects(conll("WORD"), "")
       if (empties.nonEmpty) {
-        val down = mutable.HashMap[String, Set[String]]()
-        val cache = mutable.HashMap[String, Set[String]]()
+        val down = mutable.HashMap[String, collection.Set[String]]()
+        val cache = mutable.HashMap[String, collection.Set[String]]()
         def prec(a: String) = cache.getOrElseUpdate(a, precedes(g, a, down))
         for ((last, next, _) <- g.pairs(NEXT_WORD); e <- empties
              if prec(last).contains(e) && prec(e).contains(next)) {
@@ -100,7 +87,7 @@ object TreesScripts {
     },
     // (2a) initial empties → first word (literal `?first a conll:WORD`)
     stage { (g, out) =>
-      val down = mutable.HashMap[String, Set[String]]()
+      val down = mutable.HashMap[String, collection.Set[String]]()
       for (e <- g.subjects(conll("WORD"), "")
            if g.subjects(NEXT_WORD, e).isEmpty && g.objects(e, NEXT_WORD).isEmpty;
            first <- precedes(g, e, down)
@@ -110,7 +97,7 @@ object TreesScripts {
     },
     // (2b) remaining empties ← last word (literal `?last a conll:WORD`)
     stage { (g, out) =>
-      val down = mutable.HashMap[String, Set[String]]()
+      val down = mutable.HashMap[String, collection.Set[String]]()
       for (e <- g.subjects(conll("WORD"), "")
            if g.subjects(NEXT_WORD, e).isEmpty && g.objects(e, NEXT_WORD).isEmpty;
            last <- g.all.collect { case t if t.p == A && t.o == "conll:WORD" => t.s }
@@ -120,7 +107,7 @@ object TreesScripts {
     },
     // (3a) order same-position siblings by URI
     stage { (g, out) =>
-      def nextPlus(x: String) = closure(x, y => g.objects(y, NEXT_WORD))
+      def nextPlus(x: String) = closure(x)(y => g.objects(y, NEXT_WORD))
       for ((last, x, _) <- g.pairs(NEXT_WORD); y <- g.objects(last, NEXT_WORD)
            if x < y;
            nx <- g.objects(x, NEXT_WORD) if g.has(y, NEXT_WORD, nx)
@@ -130,7 +117,7 @@ object TreesScripts {
     },
     // (3b) delete transitive nextWords
     stage { (g, out) =>
-      def nextPlus(x: String) = closure(x, y => g.objects(y, NEXT_WORD))
+      def nextPlus(x: String) = closure(x)(y => g.objects(y, NEXT_WORD))
       for ((x, z, _) <- g.pairs(NEXT_WORD);
            y <- g.objects(x, NEXT_WORD) if y != z && nextPlus(y).contains(z))
         out.del(x, NEXT_WORD, z)
@@ -138,10 +125,10 @@ object TreesScripts {
     // (4) HEAD default for empties via (nextWord+|(^nextWord)+)/HEAD+
     stage { (g, out) =>
       for (x <- g.subjects(conll("WORD"), "") if !g.has(x, conll("HEAD"))) {
-        val fwd = closure(x, y => g.objects(y, NEXT_WORD))
-        val bwd = closure(x, y => g.subjects(NEXT_WORD, y))
+        val fwd = closure(x)(y => g.objects(y, NEXT_WORD))
+        val bwd = closure(x)(y => g.subjects(NEXT_WORD, y))
         val heads = (fwd ++ bwd).flatMap(w =>
-          closure(w, y => g.objects(y, conll("HEAD"))))
+          closure(w)(y => g.objects(y, conll("HEAD"))))
         for (s <- heads if g.has(s, A, "nif:Sentence"))
           out.insUri(x, conll("HEAD"), s)
       }
@@ -156,7 +143,7 @@ object TreesScripts {
       for (x <- g.subjects(A, "powla:Node")) {
         val children = g.subjects(HAS_PARENT, x)
         if (children.nonEmpty) {
-          def nextPlus(c: String) = closure(c, y => g.objects(y, NEXT))
+          def nextPlus(c: String) = closure(c)(y => g.objects(y, NEXT))
           val firsts = children.filter(f => !children.exists(c => nextPlus(c).contains(f)))
           val lasts = children.filter(l => !children.exists(c => nextPlus(l).contains(c)))
           for (f <- firsts) out.insUri(x, FIRST, f)
@@ -171,16 +158,16 @@ object TreesScripts {
       for (w <- g.subjects(A, WORD_TYPE); parent <- g.objects(w, HAS_PARENT);
            tpe <- nodeTypes(parent).distinct) {
         // nodes whose tmp:first chain reaches w, of this type
-        val firstAnc = closure(w, m => g.subjects(FIRST, m)).filter(n => g.has(n, A, tpe))
+        val firstAnc = closure(w)(m => g.subjects(FIRST, m)).filter(n => g.has(n, A, tpe))
         // depth = #type-typed first*-ancestors → outermost (min) first
-        def firstStarAnc(n: String) = closureWithStart(n, m => g.subjects(FIRST, m))
+        def firstStarAnc(n: String) = closureWithStart(n)(m => g.subjects(FIRST, m))
         val pre = firstAnc.toSeq
           .sortBy(n => firstStarAnc(n).count(p => g.has(p, A, tpe)))
           .map { n =>
             val vals = g.objects(n, VALUE).distinct.sorted.mkString("|")
             if (vals.nonEmpty) s"($vals " else "("
           }.mkString("")
-        val lastAnc = closure(w, m => g.subjects(LAST, m)).filter(n => g.has(n, A, tpe))
+        val lastAnc = closure(w)(m => g.subjects(LAST, m)).filter(n => g.has(n, A, tpe))
         val post = ")" * lastAnc.size
         val b =
           if (pre.nonEmpty && post.nonEmpty) s"$pre * $post"

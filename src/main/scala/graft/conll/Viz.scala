@@ -114,16 +114,8 @@ object Viz {
         case None => "   "
       }
     }
-    val depth = order.map { w =>
-      // COUNT(DISTINCT ?h) over conll:HEAD+ — a per-sentence BFS
-      val seen = mutable.HashSet[String]()
-      val queue = mutable.Queue(w)
-      while (queue.nonEmpty) {
-        val x = queue.dequeue()
-        for (h <- g.objects(x, "conll:HEAD"); if seen.add(h)) queue += h
-      }
-      seen.size
-    }
+    // COUNT(DISTINCT ?h) over conll:HEAD+, walked per sentence
+    val depth = order.map(w => Rules.closure(w)(g.objects(_, "conll:HEAD")).size)
     val edges = order.map { w =>
       val es = g.objects(w, "conll:EDGE")
       if (es.isEmpty) "" else es.maxBy(e => (e.length, e))

@@ -135,12 +135,15 @@ object ConnectedComponents {
     // its layout into the rounds — it cost two extra jobs per call while
     // the seed groupBy and every round's labels⋈sym join still planned
     // their own exchange on src.
-    val sym = edges.select($"src", $"dst")
-      .union(edges.select($"dst".as("src"), $"src".as("dst")))
-      .filter($"src" =!= $"dst")
-      .distinct()
-      .localCheckpoint()
-    val symCount = sym.count()
+    // The checkpoint counts its rows in the same job. The reading is
+    // at-least-once, so it only routes: a retry-inflated count keeps a
+    // small graph distributed or widens the rounds, never mislabels.
+    val (sym, symCount) = Fixpoint.checkpointCounting(
+      edges.select($"src", $"dst")
+        .union(edges.select($"dst".as("src"), $"src".as("dst")))
+        .filter($"src" =!= $"dst")
+        .distinct(),
+      lit(true), "cc_sym_edges")
     // Small-graph cutover (see the object doc): the measured symmetrized
     // edge count is already in hand for the width sizing; under the
     // bound the whole fixpoint is one driver union-find instead of
@@ -264,13 +267,14 @@ object ConnectedComponents {
     * ~log2(d) rounds, not d). */
   def runStarStats(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
     import spark.implicits._
-    var e = edges.select($"src".as("u"), $"dst".as("v"))
-      .filter($"u" =!= $"v").distinct().localCheckpoint()
+    val (e0, e0Count) = Fixpoint.checkpointCounting(
+      edges.select($"src".as("u"), $"dst".as("v")).filter($"u" =!= $"v").distinct(),
+      lit(true), "star_edges_in")
     // keep the checkpointed ORIGINAL edge set for the final label
     // verification — re-traversing the caller's raw plan would recompute
     // its full upstream chain (q34's LSH cascade) a second time
-    val e0 = e
-    var eCount = e.count()
+    var e = e0
+    var eCount = e0Count
     var converged = false
     var i = 0
     // Small-graph cutover (see the object doc): checked at every round

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.udf
 
 /** The one materialization round of the graph fixpoints (CC min-label,
-  * CC large-star/small-star, BFS closure). */
+  * CC large-star/small-star, BFS closure, PageRank): each checkpoints its
+  * input edges and every round with it. */
 object Fixpoint {
 
   /** Eagerly `localCheckpoint` `df`, counting in the same job the rows on
@@ -16,7 +17,8 @@ object Fixpoint {
     * so the optimizer may neither fold a constant `counted` nor move or
     * repeat the bump. The reading is at-least-once (a task retry can
     * inflate it): callers use it as a convergence TRIGGER and confirm an
-    * exit exactly.
+    * exit exactly, or to route (the driver cutover, the exchange width),
+    * where an inflated reading only keeps a small graph distributed.
     *
     * @return the checkpointed frame (`df`'s columns) and the reading */
   def checkpointCounting(df: DataFrame, counted: Column, name: String): (DataFrame, Long) = {

@@ -38,8 +38,10 @@ object IterativeClosure {
   def depths(spark: SparkSession, edges: DataFrame, roots: DataFrame,
              maxIter: Int = 64, forest: Boolean = false): DataFrame = {
     import spark.implicits._
-    val e = edges.select($"child", $"parent").localCheckpoint()
-    val eCount = e.count()
+    // at-least-once reading: it only routes, an inflated one keeps a
+    // small graph distributed
+    val (e, eCount) = Fixpoint.checkpointCounting(
+      edges.select($"child", $"parent"), lit(true), "closure_edges")
     // Small-graph cutover (graft.Sizing.localMaxEdges): under the bound
     // the edges and roots are collected once (a block read of the
     // checkpoint) and the level-synchronous BFS runs in memory with the

@@ -299,12 +299,13 @@ object GraphQueries {
           docs.select($"doc_id".as("node"), $"doc_id".as("pr"))
         else {
         val m = mRow.getLong(0) + 1L
-        val edges = docs
-          .select($"doc_id".as("src"),
-            explode(expr("sequence(bigint(1), bigint(1 + doc_id % 3))")).as("b"))
-          .select($"src", pmod($"src" * (lit(7L) + $"b"), lit(m)).as("dst"))
-          .filter($"src" =!= $"dst").distinct()
-          .localCheckpoint()
+        val (edges, edgeCount) = graft.operators.Fixpoint.checkpointCounting(
+          docs
+            .select($"doc_id".as("src"),
+              explode(expr("sequence(bigint(1), bigint(1 + doc_id % 3))")).as("b"))
+            .select($"src", pmod($"src" * (lit(7L) + $"b"), lit(m)).as("dst"))
+            .filter($"src" =!= $"dst").distinct(),
+          lit(true), "pr_edges")
         // Small-graph driver evaluation (r9; the graph-fixpoint cutover,
         // graft.Sizing.localMaxEdges, applied to the fixed-round rank loop):
         // 5 rounds × ~5 scheduled jobs over an under-bound graph is
@@ -312,10 +313,12 @@ object GraphQueries {
         // BIGINT (that was the r6 bit-reproducibility design), so the
         // driver evaluation is exactly the distributed one: same
         // truncating div, same dangling-mass share, same 5 rounds.
-        // Edge count is measured on the checkpointed edges (block scan);
-        // over the bound — any real corpus — the loop below runs
-        // unchanged.
-        if (edges.count() <= graft.Sizing.localMaxEdges(s)) {
+        // The edge count rides the checkpoint's job; it is at-least-once,
+        // so it only picks the route (an inflated one keeps a small graph
+        // distributed). Over the bound — any real corpus — the loop below
+        // runs unchanged, and nN, which divides rank mass, stays an exact
+        // count.
+        if (edgeCount <= graft.Sizing.localMaxEdges(s)) {
           val es = edges.as[(Long, Long)].collect()
           val deg = scala.collection.mutable.HashMap[Long, Long]()
           val nodeSet = scala.collection.mutable.SortedSet[Long]()

@@ -46,12 +46,15 @@ object KgQueries {
   private def detAnalyzed(s: SparkSession, dir: String) =
     Pipeline.rewrite(detParsed(s, dir), Pipeline.analyzeCascade)
 
-  /** The kg_entity_canonical entry's inputs — (linked triples, sameAs
-    * star edges) — factored out so the CC width policy could be A/B'd on
-    * the REAL graph this entry resolves (VERDICT r6 item 4; the A/B is
-    * in docs/ROUND8_NOTES.md §2, its probe in git history); the entry
-    * itself consumes the same function. */
-  def entityCanonicalInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  /** link-ud cascade + gazetteer entity links. The parse runs ONCE
+    * (detParsedShared) and feeds the vocabulary pass and the cascade
+    * pass; the vocabulary comes from the PARSE-ONLY triples (the link
+    * cascade never touches conll:WORD, so the vocab is identical and the
+    * expensive cascade runs exactly once). A gazetteer of at most
+    * `broadcastMax` rows fuses into the cascade's own flatMap
+    * (EntityLinker.linkUnioned), a larger one takes the salted join. */
+  private def detLinked(s: SparkSession, dir: String,
+      broadcastMax: Int = graft.Sizing.BroadcastRows): DataFrame = {
     import s.implicits._
     val parsed = detParsedShared(s, dir)
     val vocab = Pipeline.triples(parsed)
@@ -59,7 +62,17 @@ object KgQueries {
     val gaz = EntityLinker.gazetteerFromVocab(vocab)
     val t = Pipeline.triples(
       Pipeline.rewrite(parsed, Pipeline.linkCascade))
-    val linked = EntityLinker.linkUnioned(t, gaz)
+    EntityLinker.linkUnioned(t, gaz, broadcastMax)
+  }
+
+  /** The kg_entity_canonical entry's inputs — (linked triples, sameAs
+    * star edges) — factored out so the CC width policy could be A/B'd on
+    * the REAL graph this entry resolves (VERDICT r6 item 4; the A/B is
+    * in docs/ROUND8_NOTES.md §2, its probe in git history); the entry
+    * itself consumes the same function. */
+  def entityCanonicalInputs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val linked = detLinked(s, dir)
     // ONE hex char (16 buckets): the det vocab is 25 fixed words, so by
     // pigeonhole ≥9 buckets hold multiple entities and the star edge set
     // is non-empty BY CONSTRUCTION (verified: 14 edges across 11 buckets,
@@ -104,27 +117,9 @@ object KgQueries {
       Some(KgOracle.parseSql)
     ),
     Q(
-      // link-ud cascade + gazetteer entity links. The parse runs ONCE
-      // (detParsedShared localCheckpoint) and feeds both the vocabulary
-      // pass and the cascade pass; the vocabulary comes from the
-      // PARSE-ONLY triples (the link cascade never touches conll:WORD,
-      // so the vocab is identical and the expensive cascade runs exactly
-      // once), and the broadcast regime fuses link+union into the
-      // cascade's own flatMap (EntityLinker.linkUnioned). Gazetteer
-      // routing is size-bounded — oversize vocabularies fall back to the
-      // salted shuffle join.
       "kg_pipeline_link",
-      (s, dir) => {
-        import s.implicits._
-        val parsed = detParsedShared(s, dir)
-        val vocab = Pipeline.triples(parsed)
-          .filter($"pred" === "conll:WORD").select($"obj".as("word"))
-        val gaz = EntityLinker.gazetteerFromVocab(vocab)
-        val t = Pipeline.triples(
-          Pipeline.rewrite(parsed, Pipeline.linkCascade))
-        EntityLinker.linkUnioned(t, gaz)
-          .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj"))
-      },
+      (s, dir) => detLinked(s, dir)
+        .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj")),
       Some(KgOracle.linkSql)
     ),
     Q(
@@ -136,17 +131,8 @@ object KgQueries {
       // oracle. The skew machinery itself is now under the hash gate,
       // not just SkewSpec.
       "kg_pipeline_link_salted",
-      (s, dir) => {
-        import s.implicits._
-        val parsed = detParsedShared(s, dir)
-        val vocab = Pipeline.triples(parsed)
-          .filter($"pred" === "conll:WORD").select($"obj".as("word"))
-        val gaz = EntityLinker.gazetteerFromVocab(vocab)
-        val t = Pipeline.triples(
-          Pipeline.rewrite(parsed, Pipeline.linkCascade))
-        EntityLinker.linkUnioned(t, gaz, broadcastMax = 0)
-          .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj"))
-      },
+      (s, dir) => detLinked(s, dir, broadcastMax = 0)
+        .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj")),
       Some(KgOracle.linkSql)
     ),
     Q(

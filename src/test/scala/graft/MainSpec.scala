@@ -7,8 +7,24 @@ class MainSpec extends AnyFunSuite {
   test("flags: defaults, and each flag read from its --name value pair") {
     assert(Main.parse(Array()) == Main.Opts("gen:10000", "/tmp/graft-out", "analyze", 64, None))
     assert(Main.parse(Array("--cascade", "link", "--buckets", "8", "--input", "in",
-      "--output", "out", "--config", "c.json")) ==
-      Main.Opts("in", "out", "link", 8, Some("c.json")))
+      "--output", "out")) == Main.Opts("in", "out", "link", 8, None))
+    assert(Main.parse(Array("--output", "out", "--config", "c.json")) ==
+      Main.Opts("gen:10000", "out", "analyze", 64, Some("c.json")))
+  }
+
+  test("flags: --input, --cascade or --buckets beside --config fails naming the flag") {
+    for ((f, v) <- Seq("--input" -> "in", "--cascade" -> "link", "--buckets" -> "8")) {
+      val e = intercept[IllegalArgumentException](Main.parse(Array("--config", "c.json", f, v)))
+      assert(e.getMessage.contains(f) && e.getMessage.contains("--config"), f)
+    }
+  }
+
+  test("flags: a gen: input without a non-negative document count fails naming --input") {
+    for (in <- Seq("gen:x", "gen:", "gen:-1", "gen:1.5")) {
+      val e = intercept[IllegalArgumentException](Main.parse(Array("--input", in)))
+      assert(e.getMessage.contains("--input") && e.getMessage.contains(s"'$in'"), in)
+    }
+    assert(Main.parse(Array("--input", "gen:0")).input == "gen:0")
   }
 
   test("flags: an unknown --cascade fails naming the flag and the cascades") {

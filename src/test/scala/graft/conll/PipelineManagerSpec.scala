@@ -74,4 +74,49 @@ class PipelineManagerSpec extends AnyFunSuite {
           {"class":"CoNLLRDFUpdater","updates":[{"path":"no-such.sparql"}]}]}""")
     }
   }
+
+  /** A triples-mode config running `updates` over the same 20 DocGen docs. */
+  private def stackJson(updates: String*): String = {
+    val paths = updates.map(u => "{\"path\": \"" + u + "\"}").mkString(", ")
+    s"""{"input": {"docs": 20}, "pipeline": [
+      {"class": "CoNLLRDFUpdater", "updates": [$paths]},
+      {"class": "CoNLLRDFFormatter", "mode": "triples"}]}"""
+  }
+
+  test("the parse-ud and link-ud stacks through the manager equal Pipeline.parseCascade and linkCascade") {
+    import spark.implicits._
+    val stacks = Seq(
+      Pipeline.parseCascade -> stackJson("sparql/remove-ID.sparql{1}", "sparql/remove-IGNORE.sparql",
+        "link/link-penn-POS.sparql{1}", "link/remove-annotation-model.sparql",
+        "link/infer-olia-concepts.sparql{1}", "parse/initialize-SHIFT.sparql",
+        "parse/REDUCE-english-1.sparql{5}", "parse/REDUCE-english-2.sparql{5}",
+        "parse/REDUCE-english-3.sparql{5}", "parse/REDUCE-english-4.sparql{3}",
+        "parse/REDUCE-to-HEAD.sparql{1}"),
+      Pipeline.linkCascade -> stackJson("link/link-UPOS-simple.sparql{1}",
+        "infer-olia-concepts-ud{1}", "link/remove-annotation-model.sparql{1}"))
+    for ((cascade, json) <- stacks) {
+      assert(PipelineManager.parseConfig(json).updates.map(_._2) == cascade.map(_._2))
+      val got = PipelineManager.run(spark, json).as[TripleRow].collect().sortBy(_.toString).toSeq
+      val want = Pipeline.triples(Pipeline.rewrite(
+        Pipeline.parse(DocGen.docs(spark, 20), DocGen.columns), cascade)).collect().sortBy(_.toString).toSeq
+      assert(got.nonEmpty && got == want)
+    }
+    // the cascades' script names are the Pipeline.Metrics keys
+    assert(Pipeline.linkCascade.map(_._1.name) ==
+      Seq("link-UPOS-simple", "infer-olia-concepts", "remove-annotation-model"))
+    assert(PipelineManager.scripts("infer-olia-concepts-ud").name == "infer-olia-concepts-ud")
+  }
+
+  test("a malformed config fails naming the missing or malformed key") {
+    def failure(json: String): String =
+      intercept[IllegalArgumentException](PipelineManager.parseConfig(json)).getMessage
+    assert(failure("""{"input": {"docs": 1}}""").contains("\"pipeline\""))
+    assert(failure("""{"pipeline": [{"mode": "triples"}]}""").contains("\"class\""))
+    assert(failure("""{"pipeline": [{"class": "CoNLLRDFUpdater"}]}""").contains("\"updates\""))
+    assert(failure("""{"pipeline": [{"class": "CoNLLRDFUpdater", "updates": [{"iter": "1"}]}]}""")
+      .contains("\"path\""))
+    val iter = failure(
+      """{"pipeline": [{"class": "CoNLLRDFUpdater", "updates": [{"path": "remove-ID.sparql", "iter": "x"}]}]}""")
+    assert(iter.contains("\"iter\"") && iter.contains("remove-ID") && iter.contains("'x'"))
+  }
 }
