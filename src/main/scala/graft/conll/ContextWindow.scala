@@ -40,59 +40,41 @@ object ContextWindow {
       .as[SentenceWithContext]
   }
 
-  /** Run a context-aware rewrite: the rule sees (sentence, lookback,
-    * lookahead) and returns the rewritten sentence. Narrow after the one
-    * context shuffle. */
-  def rewriteWithContext(
-      ctx: Dataset[SentenceWithContext]
-  )(rule: SentenceWithContext => Sentence): Dataset[Sentence] = {
-    import ctx.sparkSession.implicits._
-    ctx.map(rule)
-  }
-
   /** Demonstration cross-sentence rule (the reference exposes lookback/
     * lookahead graphs to user scripts, README.md:160-166, but bundles no
     * script that uses them): a sentence-initial pronoun is annotated with
     * the nearest preceding sentence's subject surface form as
     * `conll:ANTECEDENT` — the lookback graph read is the point, not the
-    * linguistics. */
-  def pronounAntecedent(c: SentenceWithContext): Sentence = {
-    val g = SentGraph(c.sentence)
-    val firstWord = g.words.headOption
-    val isPronoun = firstWord.exists(w =>
-      g.objects(w, "conll:UPOS").contains("PRON"))
-    if (isPronoun) {
-      val antecedent = c.lookback.reverseIterator.flatMap { prev =>
-        val pg = SentGraph(prev)
-        pg.pairs("conll:EDGE").collect {
-          case (w, "nsubj", _) => pg.objects(w, "conll:WORD").headOption
-        }.flatten.lastOption
-      }.find(_ => true)
-      antecedent.foreach(a =>
-        g.add(Triple(firstWord.get, "conll:ANTECEDENT", a, oUri = false)))
-    }
-    SentGraph.toSentence(c.sentence.docId, c.sentence.sent, c.sentence.comments, g)
-  }
+    * linguistics. Run it as `ctx.map(pronounAntecedent)`, narrow after the
+    * one context shuffle. */
+  def pronounAntecedent(c: SentenceWithContext): Sentence =
+    pronounContext(c, c.lookback.reverseIterator, "conll:ANTECEDENT")
 
   /** Lookahead mirror of [[pronounAntecedent]] (the reference exposes BOTH
     * window graphs — CoNLLRDFUpdater.java:131-132): a sentence-initial
     * pronoun is annotated with the last nsubj surface of the NEAREST
     * following sentence (within the window) that has one, as
     * `conll:POSTCEDENT`. */
-  def pronounCataphor(c: SentenceWithContext): Sentence = {
+  def pronounCataphor(c: SentenceWithContext): Sentence =
+    pronounContext(c, c.lookahead.iterator, "conll:POSTCEDENT")
+
+  /** The one pronoun context rule: a sentence-initial pronoun gets, as
+    * `pred`, the last nsubj surface of the first sentence of `window`
+    * (nearest first) that has one. */
+  private def pronounContext(
+      c: SentenceWithContext, window: Iterator[Sentence], pred: String): Sentence = {
     val g = SentGraph(c.sentence)
     val firstWord = g.words.headOption
     val isPronoun = firstWord.exists(w =>
       g.objects(w, "conll:UPOS").contains("PRON"))
     if (isPronoun) {
-      val postcedent = c.lookahead.iterator.flatMap { nxt =>
-        val pg = SentGraph(nxt)
-        pg.pairs("conll:EDGE").collect {
-          case (w, "nsubj", _) => pg.objects(w, "conll:WORD").headOption
+      val subject = window.flatMap { other =>
+        val og = SentGraph(other)
+        og.pairs("conll:EDGE").collect {
+          case (w, "nsubj", _) => og.objects(w, "conll:WORD").headOption
         }.flatten.lastOption
       }.find(_ => true)
-      postcedent.foreach(a =>
-        g.add(Triple(firstWord.get, "conll:POSTCEDENT", a, oUri = false)))
+      subject.foreach(a => g.add(Triple(firstWord.get, pred, a, oUri = false)))
     }
     SentGraph.toSentence(c.sentence.docId, c.sentence.sent, c.sentence.comments, g)
   }

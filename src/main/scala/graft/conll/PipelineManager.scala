@@ -17,7 +17,9 @@ import Rules.Script
   *     { "class": "CoNLLRDFUpdater",
   *       "updates": [ {"path": "remove-IGNORE", "iter": "1"},
   *                    {"path": "REDUCE-english-1", "iter": "5"} ] },
-  *     { "class": "CoNLLRDFFormatter", "mode": "triples" | "conll",
+  *     { "class": "CoNLLRDFFormatter",
+  *       "mode": "triples" | "conll" | "ntriples" | "dot" | "grammar" |
+  *               "semantics" | "debug",
   *       "columns": [...] }
   *   ]
   * }
@@ -81,8 +83,11 @@ object PipelineManager {
       input: Either[Long, String], // docs count | parquet path
       columns: Seq[String],
       updates: Seq[(Script, Int)],
-      format: String,              // triples | conll | ntriples
+      format: String,              // one of Modes
       formatColumns: Seq[String])
+
+  /** The formatter modes [[run]] writes. */
+  private val Modes: Seq[String] = Seq("triples", "conll", "ntriples", "dot", "grammar", "semantics", "debug")
 
   /** A missing or malformed key, script or class fails naming it. */
   def parseConfig(json: String): Config = {
@@ -92,7 +97,10 @@ object PipelineManager {
         throw new IllegalArgumentException(s"pipeline config: $where has no \"$key\""))
     val input = Option(root.get("input")) match {
       case Some(i) if i.has("parquet") => Right(i.get("parquet").asText())
-      case Some(i) if i.has("docs") => Left(i.get("docs").asLong())
+      case Some(i) if i.has("docs") =>
+        val docs = i.get("docs").asText()
+        Left(docs.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+          s"pipeline config: \"docs\" must be a non-negative integer, got '$docs'")))
       case _ => Left(1000L)
     }
     var columns: Seq[String] = DocGen.columns
@@ -128,6 +136,8 @@ object PipelineManager {
           }.toSeq
         case "CoNLLRDFFormatter" =>
           if (stage.has("mode")) format = stage.get("mode").asText().toLowerCase
+          if (!Modes.contains(format)) throw new IllegalArgumentException(
+            s"pipeline config: \"mode\" must be one of ${Modes.mkString("|")}, got '$format'")
           if (stage.has("columns"))
             formatColumns = stage.get("columns").elements().asScala.map(_.asText()).toSeq
         case other =>
@@ -166,7 +176,7 @@ object PipelineManager {
       case "grammar" => rendered("grammar")(Viz.asciiTree(_))
       case "semantics" => rendered("semantics")(Viz.termGraph(_))
       case "debug" => rendered("ttl_ansi")(s => Viz.colorTtl(Serializers.toCanonicalTtl(s, outCols)))
-      case _ => triples.toDF()
+      case "triples" => triples.toDF()
     }
   }
 }

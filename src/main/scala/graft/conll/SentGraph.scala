@@ -219,6 +219,27 @@ final class SentGraph private (init: Iterable[Triple]) {
 
   /** Subjects of rdf:type nif:Word — the word nodes. */
   def words: collection.IndexedSeq[String] = subjects("rdf:type", "nif:Word")
+
+  /** The nodes of the nif:nextWord chains in reading order: the chain
+    * heads (words with no incoming nextWord) in Lexiconumeric order, each
+    * followed along nif:nextWord, every node listed once. The word order
+    * of select-conllu's `?ordinal` and of the GRAMMAR/SEMANTICS renderers. */
+  def wordOrder: Seq[String] = {
+    val next = pairs("nif:nextWord").map(t => t._1 -> t._2).toMap
+    val incoming = next.values.toSet
+    val heads = words.filterNot(incoming.contains)
+      .sortBy(graft.functions.Lexiconumeric.keyString)
+    val seen = mutable.HashSet[String]()
+    val order = mutable.ArrayBuffer[String]()
+    for (head <- heads) {
+      var cur: String = head
+      while (cur != null && seen.add(cur)) {
+        order += cur
+        cur = next.getOrElse(cur, null)
+      }
+    }
+    order.toSeq
+  }
 }
 
 object SentGraph {

@@ -254,22 +254,7 @@ object Serializers {
     val isHead: Seq[Boolean] = cols.map(_.toUpperCase.matches("^HEAD[0-9]*$"))
     val rows = sents.flatMap { s =>
       val g = SentGraph(s)
-      val next = g.pairs("nif:nextWord").map(t => t._1 -> t._2).toMap
-      val words = g.words
-      val incoming = next.values.toSet
-      // chain heads (no incoming nextWord); deterministic across runs
-      val starts = words.filterNot(incoming.contains)
-        .sortBy(graft.functions.Lexiconumeric.keyString)
-      val seen = scala.collection.mutable.HashSet[String]()
-      val order = scala.collection.mutable.ArrayBuffer[String]()
-      for (st <- starts) {
-        var cur: String = st
-        while (cur != null && seen.add(cur)) {
-          order += cur
-          cur = next.getOrElse(cur, null)
-        }
-      }
-      order.iterator.zipWithIndex.map { case (w, i) =>
+      g.wordOrder.iterator.zipWithIndex.map { case (w, i) =>
         val cells = cols.zip(isHead).map { case (c, hd) =>
           val vs = g.objects(w, s"conll:$c")
           val rendered = if (hd) vs.map(_.replaceFirst("^:s[0-9]+_", "")) else vs

@@ -49,30 +49,13 @@ object Viz {
       .replaceAll("(conll:[^ \n]*)([^;\n]*[;]?)",
         CYAN_BK + BRIGHTER + BLUE + "$1" + RESET + CYAN_BK + BRIGHTER + "$2" + RESET)
 
-  private def chainOrder(g: SentGraph): Seq[String] = {
-    val next = g.pairs("nif:nextWord").map(t => t._1 -> t._2).toMap
-    val incoming = next.values.toSet
-    val starts = g.words.filterNot(incoming.contains)
-      .sortBy(graft.functions.Lexiconumeric.keyString)
-    val seen = mutable.HashSet[String]()
-    val order = mutable.ArrayBuffer[String]()
-    for (st <- starts) {
-      var cur: String = st
-      while (cur != null && seen.add(cur)) {
-        order += cur
-        cur = next.getOrElse(cur, null)
-      }
-    }
-    order.toSeq
-  }
-
   private def digits(s: String): String = s.replaceAll("[^0-9]", "")
 
   /** K6 GRAMMAR renderer (extractCoNLLGraph). Deterministic where the
     * reference leaves order to Jena (same-rel values, OLiA type order). */
   def asciiTree(sentence: Sentence, includeTermConcepts: Boolean = true): String = {
     val g = SentGraph(sentence)
-    val order = chainOrder(g)
+    val order = g.wordOrder
 
     val ids = order.map(_.replaceAll(".*[\\\\/#:]", ""))
     val words = order.map(w => g.objects(w, "conll:WORD").headOption.getOrElse(""))
@@ -165,7 +148,7 @@ object Viz {
     val g = SentGraph(sentence)
     val base = s"urn:graft:${sentence.docId}#"
     val sb = new StringBuilder
-    for (w <- chainOrder(g); word <- g.objects(w, "conll:WORD").headOption)
+    for (w <- g.wordOrder; word <- g.objects(w, "conll:WORD").headOption)
       sb.append(word).append(" ")
 
     // ?s ?r ?o rows: open-IE content, non-conll predicate (:358-360)

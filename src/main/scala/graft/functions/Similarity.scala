@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** Production similarity-search path: plain IEEE float/double math (no
   * decimal detour — that discipline lives in the oracle-anchored queries,
@@ -12,8 +14,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   *   reduction.
   *
   * No exploded vectors, no join on the dimension index, no shuffle of
-  * pairwise scores — the same plan that q28/q31 use, minus the exact-
-  * decimal bookkeeping (~10× cheaper per element).
+  * pairwise scores — the one scan q28/q31/q38 call ([[scan]]), here with
+  * the float dot product instead of the exact-decimal one (~10× cheaper
+  * per element).
   */
 object Similarity {
 
@@ -31,8 +34,7 @@ object Similarity {
     dot(a, b) / math.sqrt(normSq(a) * normSq(b))
 
   /** Keep the k best (sim desc, id asc) in a small sorted buffer — the
-    * per-partition top-k of every similarity scan (this object's `topK`,
-    * q28, the IVF search of q31/q38). Best first; ties on sim go to the
+    * per-partition top-k of [[scan]]. Best first; ties on sim go to the
     * smaller id, as `ROW_NUMBER() OVER (ORDER BY sim DESC, id)` does. */
   private[graft] final class TopK(k: Int) {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
@@ -51,37 +53,62 @@ object Similarity {
     }
   }
 
+  /** The one top-k similarity scan: [[topK]], q28's brute force and the
+    * IVF search of q31/q38. The queries, each with its squared norm and
+    * its probe set (the cells it admits), are broadcast with `cellOf`;
+    * one narrow pass over the corpus scores each row against the queries
+    * probing the row's own cell, as `dot(q, c) / sqrt(nq * nc)` with
+    * squared norms `dot(v, v)`, into one [[TopK]] per query; a
+    * `row_number` window by (sim desc, c_id) ranks the ≤ k·|queries| rows
+    * each partition emits. Flat search is IVF with one cell: the default
+    * `cellOf` puts every row in cell 0, so a query probing `Set(0L)`
+    * scores the whole corpus.
+    *
+    * @param dot    `graft.queries.DecimalDot.dot` for the oracle entries,
+    *               [[Similarity.dot]] for the float path
+    * @param cellOf a corpus row's cell from its vector and squared norm
+    * @return (q_id, cell, rnk, c_id, sim): cell = the admitted row's own
+    *         cell, rnk 1-based, sim unrounded */
+  private[graft] def scan(
+      corpus: Dataset[(Long, Array[Float])],
+      queries: Array[(Long, Array[Float], Set[Long])],
+      k: Int,
+      dot: (Array[Float], Array[Float]) => Double,
+      cellOf: (Array[Float], Double) => Long = (_, _) => 0L): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val qB = spark.sparkContext.broadcast(
+      (queries.map { case (id, v, cells) => (id, v, dot(v, v), cells) }, cellOf))
+    val survivors = corpus.mapPartitions { it =>
+      val (qs, cellOfRow) = qB.value
+      val heaps = qs.map(_ => new TopK(k))
+      val cells = scala.collection.mutable.LongMap.empty[Long] // admitted rows only
+      for ((cid, v) <- it) {
+        val nv = dot(v, v)
+        val cell = cellOfRow(v, nv)
+        var qi = 0
+        while (qi < qs.length) {
+          val (_, qv, qn, probes) = qs(qi)
+          if (probes.contains(cell) && heaps(qi).offer(cid, dot(qv, v) / math.sqrt(qn * nv)))
+            cells(cid) = cell
+          qi += 1
+        }
+      }
+      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
+        h.buf.map { case (cid, sim) => (qs(qi)._1, cells(cid), cid, sim) }
+      }
+    }.toDF("q_id", "cell", "c_id", "sim")
+    val w = Window.partitionBy($"q_id").orderBy($"sim".desc, $"c_id")
+    survivors.withColumn("rnk", row_number().over(w))
+      .filter($"rnk" <= k)
+      .select($"q_id", $"cell", $"rnk", $"c_id", $"sim")
+  }
+
   /** Brute-force cosine top-k of a bounded query set against a corpus.
     * Output: (q_id, rnk, c_id, sim), rnk 1-based by (sim desc, c_id). */
   def topK(
       corpus: Dataset[(Long, Array[Float])],
       queries: Array[(Long, Array[Float])],
-      k: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val qB = spark.sparkContext.broadcast(
-      queries.map { case (id, v) => (id, v, normSq(v)) })
-    val survivors = corpus.mapPartitions { it =>
-      val qs = qB.value
-      val heaps = qs.map(_ => new TopK(k))
-      for ((cid, v) <- it) {
-        val nv = normSq(v)
-        var qi = 0
-        while (qi < qs.length) {
-          val (_, qv, qn) = qs(qi)
-          heaps(qi).offer(cid, dot(qv, v) / math.sqrt(qn * nv))
-          qi += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.buf.map { case (cid, sim) => (qs(qi)._1, cid, sim) }
-      }
-    }.toDF("q_id", "c_id", "sim")
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy($"q_id").orderBy($"sim".desc, $"c_id")
-    survivors.withColumn("rnk", row_number().over(w))
-      .filter($"rnk" <= k)
-      .select($"q_id", $"rnk", $"c_id", $"sim")
-  }
+      k: Int): DataFrame =
+    scan(corpus, queries.map { case (id, v) => (id, v, Set(0L)) }, k, dot).drop("cell")
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.Sizing
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Distributed connected components by iterative min-label propagation.
   *
@@ -31,17 +32,18 @@ import org.apache.spark.sql.functions._
   *    see [[assertComponentLabels]]) so ANY early-convergence anomaly,
   *    known or unknown, is a loud error rather than a silent wrong
   *    answer. One join over the edge set, once per call.
-  *  - small-graph cutover: under [[Sizing.localMaxEdges]] edges a fixpoint
-  *    finishes as one driver union-find instead of rounds that each
-  *    schedule 3+ exchanges and a checkpoint over data that fits in one
-  *    task (q42's ~480-edge chain graph paid 4.5 s of warm wall at
-  *    sf0.1). Both loops already count their edges for the convergence
-  *    trigger, so the probe is free; runStar's contraction hands the
-  *    O(log n) tail rounds to the driver once the count drops under the
-  *    bound. The union-find takes the minimum member under the ordering
-  *    Spark's MIN uses for the key type, so it computes the identical
-  *    fixpoint; LocalCcSpec pins local == distributed, non-BMP strings
-  *    included.
+  *  - small-graph cutover: both loops pass their counted edges and a
+  *    driver union-find to the one driver finish, [[Fixpoint.driverFinish]]:
+  *    under [[Sizing.localMaxEdges]] edges the fixpoint is solved on the
+  *    driver instead of in rounds that each schedule 3+ exchanges and a
+  *    checkpoint over data that fits in one task (q42's ~480-edge chain
+  *    graph paid 4.5 s of warm wall at sf0.1). Both loops already count
+  *    their edges for the convergence trigger, so the probe is free;
+  *    runStar's contraction hands the O(log n) tail rounds to the driver
+  *    once the count drops under the bound. The union-find takes the
+  *    minimum member under the ordering Spark's MIN uses for the key
+  *    type, so it computes the identical fixpoint; LocalCcSpec pins
+  *    local == distributed, non-BMP strings included.
   *  - widths: every round's exchanges are sized from the measured edge
   *    count ([[Sizing.width]], recomputed per round as the star
   *    contraction shrinks the graph); an explicit width also pins both
@@ -54,8 +56,7 @@ object ConnectedComponents {
     * types the CC entries use; None → no local path (defensive). Strings
     * compare as unsigned UTF-8 bytes, as Spark's do: Java's UTF-16
     * order differs on non-BMP characters (U+1F600 < U+FFFD in UTF-16). */
-  private def orderingFor(dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
-    import org.apache.spark.sql.types._
+  private def orderingFor(dt: DataType): Option[Ordering[Any]] = {
     import org.apache.spark.unsafe.types.UTF8String
     dt match {
       case StringType  => Some(Ordering.fromLessThan[Any]((a, b) =>
@@ -67,15 +68,12 @@ object ConnectedComponents {
     }
   }
 
-  /** Driver-side union-find over a collected edge list: returns one
-    * (node, minimum-of-component) row per distinct endpoint, as a
-    * DataFrame with the loop outputs' exact schema. Path-compressed,
-    * union-by-size; O(E α(E)) — sub-millisecond at the cutover bound. */
-  private def localComponents(
-      spark: SparkSession,
-      edges: Array[(Any, Any)],
-      dt: org.apache.spark.sql.types.DataType,
-      ord: Ordering[Any]): DataFrame = {
+  /** Driver-side union-find over collected (a, b) edge rows — the
+    * solver both loops pass to [[Fixpoint.driverFinish]]: one
+    * (node, minimum-of-component) row per distinct endpoint, under the
+    * loop outputs' exact schema. Path-compressed, union-by-size;
+    * O(E α(E)) — sub-millisecond at the cutover bound. */
+  private def unionFind(dt: DataType, ord: Ordering[Any])(edges: Array[Row]): (StructType, Seq[Row]) = {
     val idx = new java.util.HashMap[Any, Integer]()
     val nodes = scala.collection.mutable.ArrayBuffer[Any]()
     def id(v: Any): Int = {
@@ -90,8 +88,8 @@ object ConnectedComponents {
       while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
-    for ((a, b) <- edges) {
-      val ia = id(a); val ib = id(b)
+    for (e <- edges) {
+      val ia = id(e.get(0)); val ib = id(e.get(1))
       while (parent.length < nodes.length) { parent += parent.length; size += 1 }
       val ra = find(ia); val rb = find(ib)
       if (ra != rb) {
@@ -108,26 +106,18 @@ object ConnectedComponents {
       if (cur == null || ord.lt(nodes(i), cur)) minOf.put(r, nodes(i))
       i += 1
     }
-    import org.apache.spark.sql.types.{StructField, StructType}
-    val rows = (0 until nodes.length).map { j =>
-      org.apache.spark.sql.Row(nodes(j), minOf.get(find(j)))
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(StructField("node", dt), StructField("component", dt))))
+    (StructType(Seq(StructField("node", dt), StructField("component", dt))),
+      (0 until nodes.length).map(j => Row(nodes(j), minOf.get(find(j)))))
   }
 
   /** @param edges DataFrame with two string columns `src`, `dst` (undirected).
-    * @param strict fail loudly if the round budget is exhausted before the
-    *               labels converge (non-converged labels are silently WRONG
-    *               on any node a distant minimum hasn't reached yet); only
-    *               diagnostics that deliberately inspect a capped run turn
-    *               this off.
     * @return DataFrame(node: string, component: string) — component is the
     *         lexicographically smallest node id reachable from `node`.
+    *         Labels that do not converge in `maxIter` rounds (silently
+    *         WRONG on any node a distant minimum has not reached yet) fail
+    *         loudly instead.
     */
-  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50,
-          strict: Boolean = true): DataFrame = {
+  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame = {
     import spark.implicits._
     // The symmetrized edges are checkpointed once, unpartitioned: a
     // localCheckpoint reports UnknownPartitioning (Spark 4.1, AQE on), so
@@ -151,12 +141,10 @@ object ConnectedComponents {
     // so the union-find result is the exact min-label fixpoint by
     // construction — the convergence trigger and the post-loop
     // assertComponentLabels have nothing left to check.
-    orderingFor(sym.schema("src").dataType) match {
-      case Some(ord) if symCount <= Sizing.localMaxEdges(spark) =>
-        val es = sym.collect().map(r => (r.get(0), r.get(1)))
-        return localComponents(spark, es, sym.schema("src").dataType, ord)
-      case _ =>
-    }
+    val dt = sym.schema("src").dataType
+    val local = orderingFor(dt).flatMap(ord =>
+      Fixpoint.driverFinish(sym, symCount)(unionFind(dt, ord)))
+    if (local.isDefined) return local.get
     val p = Sizing.width(spark, symCount, Sizing.EdgesPerPartition)
 
     // seed with min(node, direct neighbors): the state after one
@@ -197,16 +185,14 @@ object ConnectedComponents {
     // non-convergence means silently-wrong labels (a label may not yet
     // have propagated across a long chain) — fail loudly; callers with
     // high-diameter graphs should use runStar (O(log n) rounds)
-    require(!strict || converged,
+    require(converged,
       s"min-label CC did not converge in $maxIter rounds — graph diameter " +
         "exceeds the round budget; use runStar for high-diameter graphs")
     val out = labels.select($"node", $"lbl".as("component"))
-    // capped non-strict runs are diagnostics of a known-wrong state —
-    // verifying them would (correctly) throw. Verify against the
-    // CHECKPOINTED symmetrized edges, not the caller's raw plan: the
-    // input may hang off an expensive un-persisted chain (q34's LSH
-    // cascade) that a second traversal would recompute in full.
-    if (converged) assertComponentLabels(sym, out)
+    // Verify against the CHECKPOINTED symmetrized edges, not the caller's
+    // raw plan: the input may hang off an expensive un-persisted chain
+    // (q34's LSH cascade) that a second traversal would recompute in full.
+    assertComponentLabels(sym, out)
     out
   }
 
@@ -291,14 +277,12 @@ object ConnectedComponents {
     // the cutover by a round, never fires it early on a too-big graph
     // (the true count is ≤ the reading... the reading is ≥ true count,
     // so reading ≤ bound ⟹ true count ≤ bound).
-    val starOrd = orderingFor(e.schema("u").dataType)
-    val starLocalMax = Sizing.localMaxEdges(spark)
+    val dt = e.schema("u").dataType
+    val ord = orderingFor(dt)
     var localOut: Option[DataFrame] = None
     while (localOut.isEmpty && !converged && i < maxIter) {
-      if (starOrd.isDefined && eCount <= starLocalMax) {
-        val es = e.collect().map(r => (r.get(0), r.get(1)))
-        localOut = Some(localComponents(spark, es, e.schema("u").dataType, starOrd.get))
-      } else {
+      localOut = ord.flatMap(o => Fixpoint.driverFinish(e, eCount)(unionFind(dt, o)))
+      if (localOut.isEmpty) {
       // Each star pass shares ONE exchange between its aggregation and
       // its join: the adjacency is explicitly hash-partitioned on `u`
       // at the width the CURRENT edge count calls for (the count is

@@ -1,11 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.Sizing
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.types.StructType
 
 /** The one materialization round of the graph fixpoints (CC min-label,
   * CC large-star/small-star, BFS closure, PageRank): each checkpoints its
-  * input edges and every round with it. */
+  * input edges and every round with it. And their one driver finish: a
+  * counted checkpoint under [[Sizing.localMaxEdges]] is solved on the
+  * driver instead of in distributed rounds. */
 object Fixpoint {
 
   /** Eagerly `localCheckpoint` `df`, counting in the same job the rows on
@@ -26,5 +30,28 @@ object Fixpoint {
     val bump = udf { (hit: Boolean) => if (hit) acc.add(1); hit }.asNondeterministic()
     val out = df.withColumn("_counted", bump(counted)).localCheckpoint().drop("_counted")
     (out, acc.value)
+  }
+
+  /** The small-graph cutover of every graph fixpoint (CC `run` and
+    * `runStar`, `IterativeClosure.depths`, q48's PageRank): over a graph
+    * that fits one task each distributed round is pure scheduling cost.
+    * When `reading`, the at-least-once size of the checkpointed `edges`
+    * (from [[checkpointCounting]]), is at most [[Sizing.localMaxEdges]],
+    * `edges` is collected, `solve` computes the fixpoint from its rows on
+    * the driver, and the solver's rows come back as a one-partition frame
+    * with the solver's schema. Otherwise None: the caller runs its
+    * distributed rounds. An inflated reading only keeps a small graph
+    * distributed; the reading is ≥ the true size, so the cutover never
+    * fires on a graph over the bound.
+    *
+    * @param solve the driver solver: collected edge rows → (schema, rows) */
+  def driverFinish(edges: DataFrame, reading: Long)(
+      solve: Array[Row] => (StructType, Seq[Row])): Option[DataFrame] = {
+    val spark = edges.sparkSession
+    if (reading > Sizing.localMaxEdges(spark)) None
+    else {
+      val (schema, rows) = solve(edges.collect())
+      Some(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema))
+    }
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Distributed BFS-level computation over an edge table — the scale path
   * for transitive-closure queries that exceed one sentence (SURVEY §2.4
@@ -23,6 +24,9 @@ import org.apache.spark.sql.functions._
   * one job is [[Fixpoint.checkpointCounting]]: it truncates lineage and
   * counts the new frontier (the drain trigger) in the same pass; node ids
   * never pass through the counting UDF, so they keep their input type.
+  * Under [[graft.Sizing.localMaxEdges]] counted edges the closure takes
+  * the one driver finish of the graph fixpoints, [[Fixpoint.driverFinish]],
+  * with an in-memory level BFS of the same semantics.
   */
 object IterativeClosure {
 
@@ -42,15 +46,14 @@ object IterativeClosure {
     // small graph distributed
     val (e, eCount) = Fixpoint.checkpointCounting(
       edges.select($"child", $"parent"), lit(true), "closure_edges")
-    // Small-graph cutover (graft.Sizing.localMaxEdges): under the bound
+    // Small-graph cutover (Fixpoint.driverFinish): under the bound
     // the edges and roots are collected once (a block read of the
     // checkpoint) and the level-synchronous BFS runs in memory with the
     // identical forest check, min-depth regime and maxIter failure —
     // depth-many rounds of scheduling cost over a small graph (q30's det
     // token trees: 7 levels, 4.5 s warm at sf0.1) become one collect.
-    if (eCount <= graft.Sizing.localMaxEdges(spark)) {
-      return localDepths(spark, e, roots, maxIter, forest)
-    }
+    val local = Fixpoint.driverFinish(e, eCount)(levelBfs(roots, maxIter, forest))
+    if (local.isDefined) return local.get
     // the forest contract is load-bearing (it justifies skipping the
     // seen-filter, and a multi-parent child would re-enter the frontier
     // every round as silently duplicated rows) — verify it against the
@@ -102,7 +105,8 @@ object IterativeClosure {
     labeled
   }
 
-  /** Driver-side level-synchronous BFS — the small-graph cutover body.
+  /** Driver-side level-synchronous BFS over collected (child, parent)
+    * rows — the solver `depths` passes to [[Fixpoint.driverFinish]].
     * Semantics mirror the distributed loop exactly: same forest-contract
     * check (row counts per child, not distinct parents), forest mode
     * propagates WITHOUT a seen-filter (a root that is also some node's
@@ -110,10 +114,8 @@ object IterativeClosure {
     * does), DAG mode labels each node once at its minimum depth, and an
     * undrained frontier after maxIter rounds fails with the same loud
     * message. */
-  private def localDepths(spark: SparkSession, e: DataFrame, roots: DataFrame,
-                          maxIter: Int, forest: Boolean): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val es = e.collect()
+  private def levelBfs(roots: DataFrame, maxIter: Int, forest: Boolean)(
+      es: Array[Row]): (StructType, Seq[Row]) = {
     if (forest) {
       val perChild = new java.util.HashMap[Any, Integer]()
       es.foreach { r =>
@@ -134,9 +136,9 @@ object IterativeClosure {
       if (b == null) { b = scala.collection.mutable.ArrayBuffer[Any](); children.put(r.get(1), b) }
       b += r.get(0)
     }
-    val rootVals = roots.select(org.apache.spark.sql.functions.col("node"))
+    val rootVals = roots.select(col("node"))
       .distinct().collect().map(_.get(0))
-    val nodeDt = roots.select(org.apache.spark.sql.functions.col("node"))
+    val nodeDt = roots.select(col("node"))
       .schema.head.dataType
     val labeled = scala.collection.mutable.ArrayBuffer[(Any, Int)]()
     val seen = new java.util.HashSet[Any]()
@@ -159,9 +161,7 @@ object IterativeClosure {
     require(done,
       s"BFS closure did not drain the frontier in $maxIter rounds — " +
         "path length exceeds the budget (or a root-reachable cycle)")
-    val rows = labeled.map { case (n, d) => org.apache.spark.sql.Row(n, d) }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1),
-      StructType(Seq(StructField("node", nodeDt), StructField("depth", IntegerType))))
+    (StructType(Seq(StructField("node", nodeDt), StructField("depth", IntegerType))),
+      labeled.toSeq.map { case (n, d) => Row(n, d) })
   }
 }

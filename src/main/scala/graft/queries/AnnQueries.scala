@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.Similarity
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -11,11 +12,12 @@ import org.apache.spark.sql.expressions.Window
   * assembled in IEEE double with an identical expression tree on both
   * sides, so ranks and 6-dp rounded similarities match bit-for-bit.
   *
-  * The library's throughput path (graft.functions.Similarity.topK) uses
-  * plain float/double math without the decimal detour (~10× cheaper per
-  * element, same broadcast + per-partition-top-k plan); this query is
-  * the correctness anchor, and SimilaritySpec pins the two paths to the
-  * same ranks on the test corpus.
+  * q28 and the IVF entries (GraphQueries q31/q38) are calls to the one
+  * scan, `Similarity.scan`, with `DecimalDot.dot`; the library's
+  * throughput path (`Similarity.topK`) is the same scan with plain
+  * float/double math (~10× cheaper per element). This query is the
+  * correctness anchor, and SimilaritySpec pins the two dot products to
+  * the same ranks on the test corpus.
   */
 object AnnQueries {
 
@@ -48,27 +50,8 @@ object AnnQueries {
         val emb = Tables.widened(s, dir, "embeddings")
           .select($"vec_id", $"embedding").as[(Long, Array[Float])]
         val queries = emb.filter(_._1 < 10).collect().sortBy(_._1)
-          .map { case (id, v) => (id, v, DecimalDot.normSq(v)) }
-        val qB = s.sparkContext.broadcast(queries)
-        val survivors = emb.filter(_._1 >= 10).mapPartitions { it =>
-          val qs = qB.value
-          val heaps = qs.map(_ => new graft.functions.Similarity.TopK(5))
-          for ((cid, v) <- it) {
-            val nb = DecimalDot.normSq(v)
-            var qi = 0
-            while (qi < qs.length) {
-              val (_, qv, na) = qs(qi)
-              heaps(qi).offer(cid, DecimalDot.cosine(DecimalDot.dot(qv, v), na, nb))
-              qi += 1
-            }
-          }
-          heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-            h.buf.map { case (cid, sim) => (qs(qi)._1, cid, sim) }
-          }
-        }.toDF("q_id", "c_id", "sim")
-        val w = Window.partitionBy($"q_id").orderBy($"sim".desc, $"c_id")
-        survivors.withColumn("rnk", row_number().over(w))
-          .filter($"rnk" <= 5)
+          .map { case (id, v) => (id, v, Set(0L)) }
+        Similarity.scan(emb.filter(_._1 >= 10), queries, 5, DecimalDot.dot)
           .select($"q_id", $"rnk", $"c_id", round($"sim", 6).as("sim"))
           .orderBy($"q_id", $"rnk")
       },

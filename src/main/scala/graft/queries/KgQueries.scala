@@ -268,8 +268,9 @@ object KgQueries {
       // then the narrow context-aware rule; driver-hash-checked.
       "kg_context_antecedent",
       (s, dir) => {
+        import s.implicits._
         val ctx = ContextWindow.attach(detParsed(s, dir), lookback = 2, lookahead = 0)
-        val out = ContextWindow.rewriteWithContext(ctx)(ContextWindow.pronounAntecedent)
+        val out = ctx.map(ContextWindow.pronounAntecedent)
         Pipeline.triples(out).toDF()
           .filter(col("pred") === "conll:ANTECEDENT")
           .select(col("doc_id"), col("sent"), col("subj"), col("obj").as("antecedent"))
@@ -326,8 +327,9 @@ object KgQueries {
       // (same one-window-shuffle plan; VERDICT r2 item 5).
       "kg_context_cataphora",
       (s, dir) => {
+        import s.implicits._
         val ctx = ContextWindow.attach(detParsed(s, dir), lookback = 0, lookahead = 2)
-        val out = ContextWindow.rewriteWithContext(ctx)(ContextWindow.pronounCataphor)
+        val out = ctx.map(ContextWindow.pronounCataphor)
         Pipeline.triples(out).toDF()
           .filter(col("pred") === "conll:POSTCEDENT")
           .select(col("doc_id"), col("sent"), col("subj"), col("obj").as("postcedent"))

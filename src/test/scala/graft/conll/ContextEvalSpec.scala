@@ -35,9 +35,8 @@ class ContextEvalSpec extends AnyFunSuite {
     }
     val docs = Seq(InputDoc("d1", spans)).toDS
     val sents = Pipeline.parse(docs, Seq("ID", "WORD", "UPOS", "HEAD", "EDGE"))
-    val out = ContextWindow.rewriteWithContext(
-      ContextWindow.attach(sents, lookback = 2, lookahead = 0))(
-      ContextWindow.pronounAntecedent)
+    val out = ContextWindow.attach(sents, lookback = 2, lookahead = 0)
+      .map(ContextWindow.pronounAntecedent)
     val s2 = out.filter(_.sent == 2L).head()
     assert(s2.triples.contains(Triple(":s2_1", "conll:ANTECEDENT", "dog", false)))
     // sentence 1 has no lookback → unannotated

@@ -119,4 +119,22 @@ class PipelineManagerSpec extends AnyFunSuite {
       """{"pipeline": [{"class": "CoNLLRDFUpdater", "updates": [{"path": "remove-ID.sparql", "iter": "x"}]}]}""")
     assert(iter.contains("\"iter\"") && iter.contains("remove-ID") && iter.contains("'x'"))
   }
+
+  test("a docs count that is not a non-negative integer, or an unknown mode, fails naming the key") {
+    def failure(json: String): String =
+      intercept[IllegalArgumentException](PipelineManager.parseConfig(json)).getMessage
+    for (docs <- Seq("\"abc\"", "-5", "1.5", "\"\"")) {
+      val msg = failure(s"""{"input": {"docs": $docs}, "pipeline": []}""")
+      assert(msg.contains("\"docs\"") && msg.contains("non-negative integer"), msg)
+    }
+    assert(PipelineManager.parseConfig("""{"input": {"docs": 0}, "pipeline": []}""").input == Left(0L))
+    assert(PipelineManager.parseConfig("""{"input": {"docs": "12"}, "pipeline": []}""").input == Left(12L))
+    val mode = failure("""{"pipeline": [{"class": "CoNLLRDFFormatter", "mode": "tripels"}]}""")
+    assert(mode.contains("\"mode\"") && mode.contains("'tripels'"), mode)
+    for (m <- Seq("triples", "conll", "ntriples", "dot", "grammar", "semantics", "debug")) {
+      assert(mode.contains(m), mode)
+      val json = s"""{"pipeline": [{"class": "CoNLLRDFFormatter", "mode": "${m.toUpperCase}"}]}"""
+      assert(PipelineManager.parseConfig(json).format == m)
+    }
+  }
 }
