@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 import graft.conll._
 
@@ -19,7 +20,7 @@ import graft.conll._
   * next to the output; with `--config`, runs the JSON-configured
   * pipeline ([[graft.conll.PipelineManager]]) once instead. In local
   * mode, pass --master local[N] to spark-submit as usual; the session
-  * here inherits it.
+  * here inherits it ([[sessionConf]]).
   */
 object Main {
 
@@ -57,17 +58,21 @@ object Main {
     Opts(input, values.getOrElse("output", "/tmp/graft-out"), cascade, buckets.toInt, values.get("config"))
   }
 
+  /** The conf Main's session is built from: `submitted` (spark-submit's
+    * conf) with the [[Session]] policy keys on top, and a
+    * `local[<processors>]` master only when none was submitted. Shuffle
+    * width and UI stay as submitted, else Spark's defaults. */
+  def sessionConf(submitted: SparkConf, appName: String): SparkConf = {
+    val conf = submitted.clone().setAppName(appName).setAll(Session.keys)
+    if (conf.contains("spark.master")) conf
+    else conf.setMaster(s"local[${Runtime.getRuntime.availableProcessors}]")
+  }
+
   def main(args: Array[String]): Unit = {
     val Opts(input, output, cascadeName, buckets, config) = parse(args)
-
-    val builder = SparkSession.builder()
-      .appName(s"graft-$cascadeName")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    // spark-submit injects the master; default for bare JVM launches
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(s"local[${Runtime.getRuntime.availableProcessors}]"))
-      .getOrCreate()
+    // new SparkConf() reads the spark.* system properties spark-submit sets
+    val spark = SparkSession.builder()
+      .config(sessionConf(new SparkConf(), s"graft-$cascadeName")).getOrCreate()
     import spark.implicits._
 
     config match {

@@ -41,7 +41,7 @@ object KgOracle {
     * single ~600 KB parquet file → one input split → every shuffle-free
     * det parse cascade ran single-threaded regardless of session cores
     * (measured 3.5 s vs 0.4 s for the identical 5k-doc corpus written as
-    * 64 files — graft.tools.ScaleSweep surfaced it). At scale the guard
+    * 64 files — a `gen:` corpus of graft.tools.Probe surfaced it). At scale the guard
     * is a no-op; see the Scaladoc on Tables.widened. */
   private def docTexts(s: SparkSession, dir: String): Dataset[(String, String)] = {
     import s.implicits._

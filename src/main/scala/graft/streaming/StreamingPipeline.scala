@@ -13,7 +13,8 @@ import graft.conll.Rules.Script
   *
   * The KG pipeline is a purely narrow transformation (parse + rewrite are
   * per-document maps), so it lifts to streaming unchanged: readStream over
-  * a spans-table directory → same Pipeline.rewrite → append-mode sink.
+  * a spans-table directory → the same fused Pipeline.rewriteTriples →
+  * append-mode sink.
   * No state, no watermark needed — each micro-batch is embarrassingly
   * parallel, and exactly-once comes from the file-source + checkpoint
   * contract.
@@ -32,7 +33,7 @@ object StreamingPipeline {
       .schema(implicitly[org.apache.spark.sql.Encoder[InputDoc]].schema)
       .parquet(inputDir)
       .as[InputDoc]
-    Pipeline.triples(Pipeline.rewrite(Pipeline.parse(docs, cols), scripts)).toDF()
+    Pipeline.rewriteTriples(Pipeline.parse(docs, cols), scripts).toDF()
   }
 
   /** Windowed event aggregation with watermarking (late-data handling) —

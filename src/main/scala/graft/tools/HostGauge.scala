@@ -1,6 +1,6 @@
 package graft.tools
 
-/** Host-health gauges shared by Bench / ScaleSweep / Ab / perfbench.
+/** Host-health gauges shared by Bench / Probe / perfbench.
   *
   * Two failure modes this factoring fixes (ADVICE r7):
   *  - the per-tool stealJiffies() copies returned 0 on ANY /proc/stat

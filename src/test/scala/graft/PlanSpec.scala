@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Probe
 
 /** Physical-plan regression gate (VERDICT r6 item 3): the exchange /
   * broadcast structure of the plan-audited registry entries, pinned as
@@ -9,14 +10,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * surfaced rounds later as a bench regression; this spec fails the
   * build the day it happens instead.
   *
-  * Counted on the FINAL adaptive plan — the df's own QueryExecution is
-  * executed (`toRdd.count()`) and only the `== Final Plan ==` section is
-  * counted; same method as `tools/PlanCheck`. (Until r8 both measured
-  * the PRE-execution tree: `df.count()` finalizes the count's separate
-  * QueryExecution, so AQE's runtime SMJ→BHJ conversions were invisible
-  * and the pins described the static plan.) Broadcasts inside cached
-  * subtrees print as TableCacheQueryStage leaves and are not counted.
-  * Only shuffles and broadcasts are pinned — scan /
+  * Counted on the FINAL adaptive plan by `graft.tools.Probe.planCounts`,
+  * the same counter `Probe plan` prints (its Scaladoc gives the rules:
+  * df's own QueryExecution executed, the tree walked through AQE stages
+  * and cached subtrees, broadcasts inside caches counted). Until r8 the
+  * pins measured the PRE-execution tree: `df.count()` finalizes the
+  * count's separate QueryExecution, so AQE's runtime SMJ→BHJ conversions
+  * were invisible. Only shuffles and broadcasts are pinned — scan /
   * codegen counts vary with session shape and are not the regression
   * class this guards. Iterative entries (q30/q34/q42/q48) checkpoint per
   * round, so their FINAL plan is the post-loop tail (≈1 shuffle: the
@@ -29,12 +29,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * and broadcast decisions depend on data sizes, which are fixed by the
   * committed testdata). A legitimate plan improvement that CHANGES a
   * count should update the pinned value in the same commit, with the
-  * new `tools/PlanCheck` line in the message.
+  * new `Probe plan` line in the message.
   *
   * MEASURED UNDER SPARK 4.1.2 (ADVICE r7): the exact broadcast pins tie
   * these tests to AQE's size-estimate behavior for the committed
   * testdata. If a Spark minor-version bump or a parquet-stats change
-  * fails many of these at once, re-audit with tools/PlanCheck and re-pin
+  * fails many of these at once, re-audit with `Probe plan` and re-pin
   * — a wholesale failure after an upgrade is a measurement-basis change,
   * not 22 simultaneous plan regressions.
   */
@@ -100,7 +100,7 @@ class PlanSpec extends AnyFunSuite {
     "q32_embed_neardup"       -> (3, 1), // hyperplane buckets + pair join + sort; broadcast pair→vec
     "q46_url_canonical"       -> (2, 0), // canonical-group agg + sort
     "q47_ngram_boilerplate"   -> (2, 0), // map-side-combinable count + sort
-    // r8 widening (runtime-final basis, counts from tools/PlanCheck):
+    // r8 widening (runtime-final basis):
     "q01_pricing_summary"     -> (3, 0), // two-phase COUNT DISTINCT + sort
     "q13_sessionize"          -> (2, 0), // session window + sort
     "q15_conll_triples"       -> (2, 0), // union sides reuse one exchange
@@ -124,59 +124,10 @@ class PlanSpec extends AnyFunSuite {
     "kg_file_ingest"          -> (1, 0)
   )
 
-  /** Count exchanges by TRAVERSING the executed plan tree (r9, ADVICE
-    * r8): the r8 text-regex count was blind to (a) broadcasts whose
-    * build side sits under a TableCacheQueryStage — where the cache
-    * boundary lands at runtime is timing-dependent, which made the
-    * persist-backed LSH pins flaky — and (b) anything past the point
-    * where a nested InMemoryRelation's inline plan text breaks the
-    * outer tree rendering (q22's two pair→set BroadcastExchanges were
-    * simply absent from the string). The walk steps through the
-    * children-opaque wrappers explicitly (AdaptiveSparkPlan →
-    * executedPlan, query stages → plan, InMemoryTableScan →
-    * relation.cachedPlan). Counting rules keep the r8 pin semantics:
-    * shuffles = non-round-robin ShuffleExchange nodes OUTSIDE cached
-    * subtrees (a cached exchange executes once per materialization,
-    * and round-robin is Tables.widened's small-file guard, excluded
-    * as before); broadcasts = ALL BroadcastExchange nodes including
-    * cached subtrees (the invariant total); ReusedExchange is a reuse,
-    * not a new exchange. Stage reuse walks the shared stage again —
-    * same double-count the text had, and shuffle pins are upper bounds. */
   private def counts(name: String): (Int, Int) = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
-    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-    val df = SparkEntry.queries(name)(spark, dir)
-    // execute df's OWN plan: df.count() finalizes the count's separate
-    // QueryExecution, leaving this one isFinalPlan=false — the pre-r8
-    // pins were therefore of the PRE-execution adaptive tree, blind to
-    // AQE's runtime SMJ→BHJ conversions (e.g. kg_entity_canonical's
-    // canonicalize join, which AQE broadcasts at runtime)
-    df.queryExecution.toRdd.count()
-    var shuffles = 0
-    var bcasts = 0
-    def walk(p: SparkPlan, inCache: Boolean): Unit = {
-      p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan, inCache)
-        case q: QueryStageExec => walk(q.plan, inCache)
-        case t: InMemoryTableScanExec => walk(t.relation.cachedPlan, inCache = true)
-        case s: ShuffleExchangeExec =>
-          s.outputPartitioning match {
-            case _: RoundRobinPartitioning => ()
-            case _ => if (!inCache) shuffles += 1
-          }
-        case _: BroadcastExchangeExec => bcasts += 1
-        case _: ReusedExchangeExec => ()
-        case _ =>
-      }
-      p.children.foreach(walk(_, inCache))
-    }
-    walk(df.queryExecution.executedPlan, inCache = false)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    (shuffles, bcasts)
+    val c = Probe.planCounts(SparkEntry.queries(name)(spark, dir))
+    Probe.reset(spark)
+    c
   }
 
   expected.toSeq.sortBy(_._1).foreach { case (name, (maxShuffles, nBroadcasts)) =>
@@ -184,7 +135,7 @@ class PlanSpec extends AnyFunSuite {
       val (s, b) = counts(name)
       assert(s <= maxShuffles,
         s"$name gained a shuffle: $s > $maxShuffles (got shuffles=$s broadcasts=$b; " +
-          "if intentional, re-audit with tools/PlanCheck and update PlanSpec)")
+          "if intentional, re-audit with Probe plan and update PlanSpec)")
       assert(b == nBroadcasts,
         s"$name broadcast count changed: $b != $nBroadcasts (got shuffles=$s broadcasts=$b; " +
           "a broadcast degrading to a shuffle join is the 100 TB regression this gates)")
