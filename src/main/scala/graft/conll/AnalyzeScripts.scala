@@ -54,48 +54,34 @@ object AnalyzeScripts {
     * dependency labels to POSsynt_UD for word and/or head; the propagation
     * statement appears twice in the source (= 2 hops per script run). */
   val edgeToPossynt: Script = {
-    // common INSERT shape: word gets wv (if set), every HEAD gets hv (if set)
-    def edgeRule(pat: String, wv: Option[String], hv: Option[String]): Stage = {
+    // the statements' one WHERE shape: each word `w` whose EDGE matches
+    // `pat`, paired with each of its HEADs `h`
+    def edgeHead(pat: String)(f: (SentGraph, Out, String, String) => Unit): Stage = {
       val matches = rex(pat)
       stage { (g, out) =>
         g.foreachPair(EDGE) { (w, edge, _) =>
-          if (matches(edge))
-            g.foreachObject(w, HEAD) { h =>
-              wv.foreach(v => out.insLit(w, PS_UD, v))
-              hv.foreach(v => out.insLit(h, PS_UD, v))
-            }
+          if (matches(edge)) g.foreachObject(w, HEAD)(h => f(g, out, w, h))
         }
       }
     }
-    val negRe = rex("^(neg)")
-    val negAv: Stage = stage { (g, out) =>
-      g.foreachPair(EDGE) { (w, edge, _) =>
-        if (negRe(edge))
-          g.foreachObject(w, HEAD) { h =>
-            if (!g.has(w, PS_UD) && g.has(h, PS_UD) && !g.has(h, PS_UD, "N"))
-              out.insLit(w, PS_UD, "AV")
-          }
+    // common INSERT shape: word gets wv (if set), every HEAD gets hv (if set)
+    def edgeRule(pat: String, wv: Option[String], hv: Option[String]): Stage =
+      edgeHead(pat) { (_, out, w, h) =>
+        wv.foreach(v => out.insLit(w, PS_UD, v))
+        hv.foreach(v => out.insLit(h, PS_UD, v))
       }
+    val negAv: Stage = edgeHead("^(neg)") { (g, out, w, h) =>
+      if (!g.has(w, PS_UD) && g.has(h, PS_UD) && !g.has(h, PS_UD, "N"))
+        out.insLit(w, PS_UD, "AV")
     }
-    val negAn: Stage = stage { (g, out) =>
-      g.foreachPair(EDGE) { (w, edge, _) =>
-        if (negRe(edge))
-          g.foreachObject(w, HEAD) { h =>
-            if (g.has(h, PS_UD, "N")) out.insLit(w, PS_UD, "AN")
-          }
-      }
+    val negAn: Stage = edgeHead("^(neg)") { (g, out, w, h) =>
+      if (g.has(h, PS_UD, "N")) out.insLit(w, PS_UD, "AN")
     }
-    val propRe = rex("^(conj|parataxis|flat|compound|fixed|mwe|list)")
-    val propagate: Stage = stage { (g, out) =>
-      g.foreachPair(EDGE) { (w, edge, _) =>
-        if (propRe(edge))
-          g.foreachObject(w, HEAD) { h =>
-            if (!g.has(h, PS_UD))
-              g.foreachObject(w, PS_UD) { p => out.insLit(w, PS_UD, p); out.insLit(h, PS_UD, p) }
-            if (!g.has(w, PS_UD))
-              g.foreachObject(h, PS_UD) { p => out.insLit(w, PS_UD, p); out.insLit(h, PS_UD, p) }
-          }
-      }
+    val propagate: Stage = edgeHead("^(conj|parataxis|flat|compound|fixed|mwe|list)") { (g, out, w, h) =>
+      if (!g.has(h, PS_UD))
+        g.foreachObject(w, PS_UD) { p => out.insLit(w, PS_UD, p); out.insLit(h, PS_UD, p) }
+      if (!g.has(w, PS_UD))
+        g.foreachObject(h, PS_UD) { p => out.insLit(w, PS_UD, p); out.insLit(h, PS_UD, p) }
     }
     val rootRe = rex("^(root)")
     val root: Stage = stage { (g, out) =>
@@ -122,35 +108,31 @@ object AnalyzeScripts {
   }
 
   /** analyze/consolidate-POSsynt.sparql — agreement pruning + match flag. */
-  val consolidatePossynt: Script = Script("consolidate-POSsynt", Seq(
-    // (1a) drop POSsynt_UD alternatives when some value matches POSsynt_UPOS
-    stage { (g, out) =>
+  val consolidatePossynt: Script = {
+    // (1a)/(1b): where a POSsynt_UD value matches POSsynt_UPOS, drop the
+    // word's other values of `p`
+    def pruneAlternatives(p: String): Stage = stage { (g, out) =>
       g.foreachPair(PS_UD) { (w, v, _) =>
         if (g.has(w, PS_UPOS, v))
-          g.foreachObject(w, PS_UD) { other =>
-            if (other != v) out.del(w, PS_UD, other, uri = false)
+          g.foreachObject(w, p) { other =>
+            if (other != v) out.del(w, p, other, uri = false)
           }
       }
-    },
-    // (1b) symmetric for POSsynt_UPOS
-    stage { (g, out) =>
-      g.foreachPair(PS_UD) { (w, v, _) =>
-        if (g.has(w, PS_UPOS, v))
-          g.foreachObject(w, PS_UPOS) { other =>
-            if (other != v) out.del(w, PS_UPOS, other, uri = false)
-          }
-      }
-    },
-    // (2a) POSsynt_match "1" where a shared value exists
-    stage { (g, out) =>
-      g.foreachPair(PS_UD) { (w, v, _) =>
-        if (g.has(w, PS_UPOS, v)) out.insLit(w, conll("POSsynt_match"), "1")
-      }
-    },
-    // (2b) default "0" for untouched words
-    stage { (g, out) =>
-      for (w <- g.words if !g.has(w, conll("POSsynt_match")))
-        out.insLit(w, conll("POSsynt_match"), "0")
     }
-  ))
+    Script("consolidate-POSsynt", Seq(
+      pruneAlternatives(PS_UD),   // (1a)
+      pruneAlternatives(PS_UPOS), // (1b) symmetric
+      // (2a) POSsynt_match "1" where a shared value exists
+      stage { (g, out) =>
+        g.foreachPair(PS_UD) { (w, v, _) =>
+          if (g.has(w, PS_UPOS, v)) out.insLit(w, conll("POSsynt_match"), "1")
+        }
+      },
+      // (2b) default "0" for untouched words
+      stage { (g, out) =>
+        for (w <- g.words if !g.has(w, conll("POSsynt_match")))
+          out.insLit(w, conll("POSsynt_match"), "0")
+      }
+    ))
+  }
 }

@@ -47,22 +47,21 @@ object LinkScripts {
     ))
 
   /** link/remove-annotation-model.sparql — delete triples mentioning
-    * annotation-model namespaces (anything OLiA-flavored that is not the
-    * reference model). In our prefix encoding the annotation models are
-    * `ud:` / `penn:`; the reference model is `olia:`. */
-  def removeAnnotationModel(isAnnotationNs: String => Boolean = defaultAnnotationNs): Script =
+    * annotation-model namespaces: anything OLiA-flavored that is not the
+    * reference model. In our prefix encoding those are the penn/ud
+    * annotation models and oliasys (all under http://purl.org/olia/
+    * except olia.owl — remove-annotation-model.sparql:3-8); the reference
+    * model is `olia:`. */
+  def removeAnnotationModel(): Script = {
+    def annotationNs(uri: String): Boolean =
+      uri.startsWith("ud:") || uri.startsWith("penn:") || uri.startsWith("oliasys:")
     Script("remove-annotation-model", Seq(
       stage { (g, out) =>
         g.foreachTriple { (s, p, o, u) =>
-          if (isAnnotationNs(s) || isAnnotationNs(p) || (u && isAnnotationNs(o)))
+          if (annotationNs(s) || annotationNs(p) || (u && annotationNs(o)))
             out.del(s, p, o, u)
         }
       }
     ))
-
-  /** "olia-flavored but not the reference model": penn/ud annotation
-    * models AND oliasys (all under http://purl.org/olia/ except olia.owl —
-    * remove-annotation-model.sparql:3-8). */
-  def defaultAnnotationNs(uri: String): Boolean =
-    uri.startsWith("ud:") || uri.startsWith("penn:") || uri.startsWith("oliasys:")
+  }
 }

@@ -27,6 +27,32 @@ object ParseScripts {
   private def isA(g: SentGraph, x: String, cls: String): Boolean =
     g.has(x, A, cls)
 
+  // The two REDUCE moves. Both insert SHIFT, then REDUCE, then EDGE:
+  // SentGraph lists predicates in first-insert order, so this order can
+  // show in a sentence's output order.
+
+  /** Left REDUCE (`dep` stands before `head`): unlink `dep` from the
+    * SHIFT chain, reattach its predecessor `last` to `head`, then insert
+    * `dep REDUCE head` and `dep EDGE edge`. */
+  private def reduceLeft(out: Out, last: Option[String], dep: String, head: String, edge: String): Unit = {
+    last.foreach(l => out.del(l, SHIFT, dep))
+    out.del(dep, SHIFT, head)
+    last.foreach(l => out.insUri(l, SHIFT, head))
+    out.insUri(dep, REDUCE, head)
+    out.insLit(dep, EDGE, edge)
+  }
+
+  /** Right REDUCE (`dep` stands after `head`): unlink `dep` from the
+    * SHIFT chain, pass its successor `next` to `head`, then insert
+    * `dep REDUCE head` and `dep EDGE edge`. */
+  private def reduceRight(out: Out, head: String, dep: String, next: Option[String], edge: String): Unit = {
+    out.del(head, SHIFT, dep)
+    next.foreach(n => out.del(dep, SHIFT, n))
+    next.foreach(n => out.insUri(head, SHIFT, n))
+    out.insUri(dep, REDUCE, head)
+    out.insLit(dep, EDGE, edge)
+  }
+
   /** parse/initialize-SHIFT.sparql — nextWord → SHIFT. */
   val initializeShift: Script = Script("initialize-SHIFT", Seq(
     stage { (g, out) =>
@@ -69,26 +95,16 @@ object ParseScripts {
            head <- g.objects(dep, SHIFT) if isA(g, head, "olia:Noun");
            next <- opt(g.objects(head, SHIFT));
            last <- opt(g.subjects(SHIFT, dep))
-           if next.forall(n => !isA(g, n, "olia:Noun"))) {
-        last.foreach(l => out.del(l, SHIFT, dep))
-        out.del(dep, SHIFT, head)
-        last.foreach(l => out.insUri(l, SHIFT, head))
-        out.insUri(dep, REDUCE, head)
-        out.insLit(dep, EDGE, "nmod")
-      }
+           if next.forall(n => !isA(g, n, "olia:Noun")))
+        reduceLeft(out, last, dep, head, "nmod")
     },
     // (2) adverb-adjective: adjective heads
     stage { (g, out) =>
       for (dep <- g.subjects(A, "olia:Adverb");
            head <- g.objects(dep, SHIFT)
            if isA(g, head, "olia:Adjective") || isA(g, head, "olia:Gerund");
-           last <- opt(g.subjects(SHIFT, dep))) {
-        last.foreach(l => out.del(l, SHIFT, dep))
-        out.del(dep, SHIFT, head)
-        last.foreach(l => out.insUri(l, SHIFT, head))
-        out.insUri(dep, REDUCE, head)
-        out.insLit(dep, EDGE, "amod")
-      }
+           last <- opt(g.subjects(SHIFT, dep)))
+        reduceLeft(out, last, dep, head, "amod")
     }
   ))
 
@@ -111,13 +127,8 @@ object ParseScripts {
              last <- opt(g.subjects(SHIFT, dep));
              next <- opt(g.objects(head, SHIFT))
              if last.forall(l => lastGuard.forall(c => !isA(g, l, c))) &&
-               next.forall(n => !isA(g, n, "olia:Noun"))) {
-          last.foreach(l => out.del(l, SHIFT, dep))
-          out.del(dep, SHIFT, head)
-          last.foreach(l => out.insUri(l, SHIFT, head))
-          out.insUri(dep, REDUCE, head)
-          out.insLit(dep, EDGE, edge)
-        }
+               next.forall(n => !isA(g, n, "olia:Noun")))
+          reduceLeft(out, last, dep, head, edge)
       }
     Script("REDUCE-english-2", Seq(
       npRule(Seq("olia:Adjective", "olia:Gerund"), "nmod", Some("olia:Adverb")), // (3)
@@ -129,13 +140,8 @@ object ParseScripts {
              dep <- g.objects(head, SHIFT);
              next <- opt(g.objects(dep, SHIFT))
              if isA(g, dep, "olia:Pronoun") ||
-               (isA(g, dep, "olia:Noun") && next.forall(n => noneOf(g, n, npClasses)))) {
-          out.del(head, SHIFT, dep)
-          next.foreach(n => out.del(dep, SHIFT, n))
-          out.insUri(dep, REDUCE, head)
-          next.foreach(n => out.insUri(head, SHIFT, n))
-          out.insLit(dep, EDGE, "np")
-        }
+               (isA(g, dep, "olia:Noun") && next.forall(n => noneOf(g, n, npClasses))))
+          reduceRight(out, head, dep, next, "np")
       }
     ))
   }
@@ -154,12 +160,8 @@ object ParseScripts {
         for ((pp, dep) <- branchA ++ branchB if g.has(dep, LEMMA, "of");
              next <- opt(g.objects(dep, SHIFT))
              if next.forall(n => noneOf(g, n, guard))) {
-          out.del(head, SHIFT, dep)
           pp.foreach(p => out.del(p, SHIFT, dep))
-          next.foreach(n => out.del(dep, SHIFT, n))
-          out.insUri(dep, REDUCE, head)
-          next.foreach(n => out.insUri(head, SHIFT, n))
-          out.insLit(dep, EDGE, "nmod")
+          reduceRight(out, head, dep, next, "nmod")
         }
       }
     },
@@ -170,13 +172,8 @@ object ParseScripts {
            sbj <- g.subjects(SHIFT, vfin)
            if isA(g, sbj, "olia:Noun") || isA(g, sbj, "olia:Pronoun");
            last <- opt(g.subjects(SHIFT, sbj))
-           if last.forall(l => noneOf(g, l, guard))) {
-        last.foreach(l => out.del(l, SHIFT, sbj))
-        out.del(sbj, SHIFT, vfin)
-        last.foreach(l => out.insUri(l, SHIFT, vfin))
-        out.insUri(sbj, REDUCE, vfin)
-        out.insLit(sbj, EDGE, "sbj")
-      }
+           if last.forall(l => noneOf(g, l, guard)))
+        reduceLeft(out, last, sbj, vfin, "sbj")
     },
     // (9) object: NP following a finite verb
     stage { (g, out) =>
@@ -184,13 +181,8 @@ object ParseScripts {
            obj <- g.objects(vfin, SHIFT);
            next <- opt(g.objects(obj, SHIFT))
            if isA(g, obj, "olia:Pronoun") ||
-             (isA(g, obj, "olia:Noun") && next.forall(n => !isA(g, n, "olia:Noun")))) {
-        out.del(vfin, SHIFT, obj)
-        next.foreach(n => out.del(obj, SHIFT, n))
-        next.foreach(n => out.insUri(vfin, SHIFT, n))
-        out.insUri(obj, REDUCE, vfin)
-        out.insLit(obj, EDGE, "obj")
-      }
+             (isA(g, obj, "olia:Noun") && next.forall(n => !isA(g, n, "olia:Noun"))))
+        reduceRight(out, vfin, obj, next, "obj")
     },
     // (10) postverbal adverbials (ADVs / completed PPs)
     stage { (g, out) =>
@@ -201,13 +193,7 @@ object ParseScripts {
         val b1 = isA(g, adv, "olia:Adverb") && next.forall(n => !isA(g, n, "olia:Adjective"))
         val b2 = isPP && next.isEmpty
         val b3 = isPP && !g.objects(adv, SHIFT).exists(x => g.has(x, LEMMA, "of"))
-        if (b1 || b2 || b3) {
-          out.del(vfin, SHIFT, adv)
-          next.foreach(n => out.del(adv, SHIFT, n))
-          out.insUri(adv, REDUCE, vfin)
-          out.insLit(adv, EDGE, "adv")
-          next.foreach(n => out.insUri(vfin, SHIFT, n))
-        }
+        if (b1 || b2 || b3) reduceRight(out, vfin, adv, next, "adv")
       }
     },
     // (11) preverbal adverbials
@@ -218,13 +204,7 @@ object ParseScripts {
         val b1 = isA(g, adv, "olia:Adverb")
         val b2 = isA(g, adv, "olia:Preposition") && g.subjects(REDUCE, adv).nonEmpty &&
           g.objects(adv, LEMMA).exists(_ != "of")
-        if (b1 || b2) {
-          last.foreach(l => out.del(l, SHIFT, adv))
-          out.del(adv, SHIFT, vfin)
-          last.foreach(l => out.insUri(l, SHIFT, vfin))
-          out.insUri(adv, REDUCE, vfin)
-          out.insLit(adv, EDGE, "adv")
-        }
+        if (b1 || b2) reduceLeft(out, last, adv, vfin, "adv")
       }
     }
   ))
@@ -235,26 +215,16 @@ object ParseScripts {
     stage { (g, out) =>
       for (to <- g.subjects(LEMMA, "to") if g.subjects(REDUCE, to).isEmpty;
            verb <- g.objects(to, SHIFT) if isA(g, verb, "olia:Verb");
-           next <- opt(g.objects(verb, SHIFT))) {
-        out.del(to, SHIFT, verb)
-        next.foreach(n => out.del(verb, SHIFT, n))
-        out.insUri(verb, REDUCE, to)
-        out.insLit(verb, EDGE, "cls")
-        next.foreach(n => out.insUri(to, SHIFT, n))
-      }
+           next <- opt(g.objects(verb, SHIFT)))
+        reduceRight(out, to, verb, next, "cls")
     },
     // (13) attach "to"-clauses to the preceding finite verb
     stage { (g, out) =>
       for (verb <- g.subjects(EDGE, "cls");
            to <- g.objects(verb, REDUCE) if g.has(to, LEMMA, "to");
            matrixv <- g.subjects(SHIFT, to) if isA(g, matrixv, "olia:FiniteVerb");
-           next <- opt(g.objects(to, SHIFT))) {
-        out.del(matrixv, SHIFT, to)
-        next.foreach(n => out.del(to, SHIFT, n))
-        out.insUri(to, REDUCE, matrixv)
-        out.insLit(to, EDGE, "to")
-        next.foreach(n => out.insUri(matrixv, SHIFT, n))
-      }
+           next <- opt(g.objects(to, SHIFT)))
+        reduceRight(out, matrixv, to, next, "to")
     }
   ))
 

@@ -59,26 +59,22 @@ object Pipeline {
 
   /** U18: UTF-8 validation over the decoded span table (the reference
     * aborts on non-UTF-8 input — CoNLLRDFUpdater.java:779-789; a streaming
-    * 100 TB job filters and counts instead). Always rejects unpaired
-    * surrogates (genuinely un-encodable); with `rejectReplacementChar` it
-    * ALSO drops docs containing U+FFFD — the reference-parity mode for
-    * inputs where upstream decoding replaced malformed bytes, at the cost
-    * of dropping documents that legitimately contain the replacement
-    * character (ADVICE r2: prefer `isValidUtf8` at the byte-bearing
-    * source, where the two cases are distinguishable).
+    * 100 TB job filters and counts instead). Drops docs with unpaired
+    * surrogates (genuinely un-encodable) and docs containing U+FFFD —
+    * reference parity for inputs where upstream decoding replaced
+    * malformed bytes, at the cost of dropping documents that legitimately
+    * contain the replacement character (ADVICE r2: prefer `isValidUtf8`
+    * at the byte-bearing source, where the two cases are
+    * distinguishable).
     *
     * `rejected` is incremented inside a filter: Spark's at-least-once
     * task semantics can over-count it under retries or plan
     * re-evaluation — a diagnostic alarm (the reference aborts outright on
     * ANY invalid input), not an exactly-once count. Narrow (filter). */
-  def validateUtf8(
-      docs: Dataset[InputDoc],
-      rejected: LongAccumulator,
-      rejectReplacementChar: Boolean = false): Dataset[InputDoc] =
+  def validateUtf8(docs: Dataset[InputDoc], rejected: LongAccumulator): Dataset[InputDoc] =
     docs.filter { d =>
       val ok = !d.spans.exists(s =>
-        hasUnpairedSurrogate(s.text) ||
-          (rejectReplacementChar && s.text.indexOf('\uFFFD') >= 0))
+        hasUnpairedSurrogate(s.text) || s.text.indexOf('\uFFFD') >= 0)
       if (!ok) rejected.add(1)
       ok
     }
@@ -170,7 +166,13 @@ object Pipeline {
 
   /** Run the rewrite cascade per sentence, to fixpoint per script, with
     * accumulator-backed metrics (reference per-update statistics,
-    * CoNLLRDFUpdater.java:100,921-934). Narrow (map). */
+    * CoNLLRDFUpdater.java:100,921-934). Narrow (map).
+    *
+    * Triple tables take the fused [[rewriteTriples]]; this unfused form
+    * serves callers that need the rewritten `Sentence`s (the per-sentence
+    * renderers of [[PipelineManager.run]]), and `triples(rewrite(x))` is
+    * the reference the fused path is checked against (PipelineSpec,
+    * perfbench's `--reference` run). */
   def rewrite(
       sents: Dataset[Sentence],
       scripts: Seq[(Script, Int)],
@@ -192,8 +194,9 @@ object Pipeline {
   }
 
   /** Fused rewrite + explode: one flatMap, no intermediate Sentence
-    * materialization — the hot production path (Catalyst already fuses
-    * the operator chain; this also skips re-building the Seq[Triple]). */
+    * materialization — the path of every triple table (Catalyst already
+    * fuses the operator chain; this also skips re-building the
+    * Seq[Triple]). Same rows, in the same order, as `triples(rewrite(x))`. */
   def rewriteTriples(
       sents: Dataset[Sentence],
       scripts: Seq[(Script, Int)],
@@ -217,7 +220,7 @@ object Pipeline {
       cols: Seq[String],
       scripts: Seq[(Script, Int)]
   ): DataFrame = {
-    val t = triples(rewrite(parse(docs, cols), scripts))
+    val t = rewriteTriples(parse(docs, cols), scripts)
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("sent")).as("n_sentences"), count(lit(1)).as("n_triples"))
     docs.toDF().join(t, Seq("doc_id"), "left_outer")

@@ -157,11 +157,8 @@ object PipelineManager {
     }
     // U18: external input is UTF-8-validated; rejects are counted in the
     // named accumulator (surfaces in the Spark UI / status API). The
-    // manager mirrors the reference CLI, which aborts on malformed bytes —
-    // strict mode also drops docs whose upstream decode left U+FFFD.
-    val docs = Pipeline.validateUtf8(raw,
-      spark.sparkContext.longAccumulator("utf8_rejected"),
-      rejectReplacementChar = true)
+    // manager mirrors the reference CLI, which aborts on malformed bytes.
+    val docs = Pipeline.validateUtf8(raw, spark.sparkContext.longAccumulator("utf8_rejected"))
     val parsed = Pipeline.parse(docs, cfg.columns)
     lazy val triples = Pipeline.rewriteTriples(parsed, cfg.updates)
     val outCols = if (cfg.formatColumns.nonEmpty) cfg.formatColumns else cfg.columns

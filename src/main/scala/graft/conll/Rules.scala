@@ -23,53 +23,50 @@ object Rules {
 
   final case class Script(name: String, stages: Seq[Stage]) {
 
-    def runOnce(g: SentGraph): Unit =
-      stages.foreach { st =>
-        val (dels, ins) = st(g)
-        dels.foreach(g.remove)
-        ins.foreach(g.add)
-      }
+    /** One pass over the statements (the run of iteration budget 1). */
+    def runOnce(g: SentGraph): Unit = run(g)
 
     /** Run the whole script up to `maxIter` times while the graph changes
       * (reference `{n}` / `{u}` iteration suffix; default 1).
       * @return iterations actually executed. */
-    def run(g: SentGraph, maxIter: Int = 1): Int = {
-      val cap = math.min(math.max(maxIter, 1), MAXITERATE)
-      var it = 0
-      var changed = true
-      while (changed && it < cap) {
-        val v0 = g.version
-        runOnce(g)
-        it += 1
-        changed = g.version != v0
-      }
-      it
-    }
+    def run(g: SentGraph, maxIter: Int = 1): Int = fixpoint(g, maxIter)((_, _) => ())
 
-    /** K4 debug mode: run to fixpoint, dumping the sorted triple lines
-      * after every statement that CHANGED the graph — one dump per
+    /** K4 debug mode: [[run]], dumping the sorted triple lines after
+      * every statement that CHANGED the graph — one dump per
       * (iteration, statement), the reference's -triplesout gating
       * (CoNLLRDFUpdater.produceNTRIPLES + change checks,
       * CoNLLRDFUpdater.java:336-366,453-477). */
     def runTraced(g: SentGraph, maxIter: Int = 1): Seq[StepDump] = {
+      val dumps = mutable.ArrayBuffer[StepDump]()
+      fixpoint(g, maxIter)((it, st) => dumps += StepDump(name, it, st, sortedLines(g)))
+      dumps.toSeq
+    }
+
+    /** The fixpoint loop: each statement applies its deletes, then its
+      * inserts; `observe(iteration, statement)` (both 1-based) sees
+      * every statement that changed `g`. Stops after an iteration that
+      * changed nothing or at the cap.
+      * @return iterations executed. */
+    private def fixpoint(g: SentGraph, maxIter: Int)(observe: (Int, Int) => Unit): Int = {
       val cap = math.min(math.max(maxIter, 1), MAXITERATE)
-      val dumps = scala.collection.mutable.ArrayBuffer[StepDump]()
       var it = 0
       var changed = true
       while (changed && it < cap) {
         val v0 = g.version
-        for ((st, idx) <- stages.zipWithIndex) {
+        it += 1
+        var st = 0
+        val todo = stages.iterator
+        while (todo.hasNext) {
           val vs = g.version
-          val (dels, ins) = st(g)
+          val (dels, ins) = todo.next()(g)
           dels.foreach(g.remove)
           ins.foreach(g.add)
-          if (g.version != vs)
-            dumps += StepDump(name, it + 1, idx + 1, sortedLines(g))
+          st += 1
+          if (g.version != vs) observe(it, st)
         }
-        it += 1
         changed = g.version != v0
       }
-      dumps.toSeq
+      it
     }
 
     private def sortedLines(g: SentGraph): Seq[String] =

@@ -44,7 +44,7 @@ object KgQueries {
     Fixtures.detSpansParquet(s, dir)
 
   private def detAnalyzed(s: SparkSession, dir: String) =
-    Pipeline.rewrite(detParsed(s, dir), Pipeline.analyzeCascade)
+    Pipeline.rewriteTriples(detParsed(s, dir), Pipeline.analyzeCascade)
 
   /** link-ud cascade + gazetteer entity links. The parse runs ONCE
     * (detParsedShared) and feeds the vocabulary pass and the cascade
@@ -60,8 +60,7 @@ object KgQueries {
     val vocab = Pipeline.triples(parsed)
       .filter($"pred" === "conll:WORD").select($"obj".as("word"))
     val gaz = EntityLinker.gazetteerFromVocab(vocab)
-    val t = Pipeline.triples(
-      Pipeline.rewrite(parsed, Pipeline.linkCascade))
+    val t = Pipeline.rewriteTriples(parsed, Pipeline.linkCascade)
     EntityLinker.linkUnioned(t, gaz, broadcastMax)
   }
 
@@ -97,7 +96,7 @@ object KgQueries {
       // analyze-ud cascade through the full engine, driver-hash-checked
       // against the statement-by-statement SQL mirror of the cascade.
       "kg_pipeline_analyze",
-      (s, dir) => Pipeline.triples(detAnalyzed(s, dir)).toDF()
+      (s, dir) => detAnalyzed(s, dir).toDF()
         .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj")),
       Some(KgOracle.analyzeSql)
     ),
@@ -109,10 +108,9 @@ object KgQueries {
       // (KgOracle.parseTree; rule-by-rule traces in ParseDetSpec). The
       // real-corpus SR behavior stays golden-covered in UdGoldenSpec.
       "kg_pipeline_parse",
-      (s, dir) => Pipeline.triples(
-        Pipeline.rewrite(
-          Pipeline.parse(KgOracle.detParseDocs(s, dir), KgOracle.detParseCols),
-          Pipeline.parseCascade)).toDF()
+      (s, dir) => Pipeline.rewriteTriples(
+        Pipeline.parse(KgOracle.detParseDocs(s, dir), KgOracle.detParseCols),
+        Pipeline.parseCascade).toDF()
         .orderBy(col("doc_id"), col("sent"), col("subj"), col("pred"), col("obj")),
       Some(KgOracle.parseSql)
     ),
@@ -183,7 +181,7 @@ object KgQueries {
       "kg_eval_possynt",
       (s, dir) =>
         Serializers.evalPossyntSelect(
-            Pipeline.triples(detAnalyzed(s, dir)).toDF())
+            detAnalyzed(s, dir).toDF())
           .orderBy(col("doc_id"), col("subj")),
       Some(KgOracle.evalPossyntSql)
     ),
@@ -303,10 +301,9 @@ object KgQueries {
       // IGNORE branch) — the input-noise paths that were golden-only,
       // now driver-hash-checked.
       "kg_tsv_fidelity",
-      (s, dir) => Pipeline.triples(
-        Pipeline.rewrite(
-          Pipeline.parse(KgOracle.detDirtyDocs(s, dir), KgOracle.detDirtyCols),
-          Seq(AnalyzeScripts.removeIgnore -> 1))).toDF()
+      (s, dir) => Pipeline.rewriteTriples(
+        Pipeline.parse(KgOracle.detDirtyDocs(s, dir), KgOracle.detDirtyCols),
+        Seq(AnalyzeScripts.removeIgnore -> 1)).toDF()
         .orderBy(col("doc_id"), col("sent"), col("subj"), col("pred"), col("obj")),
       Some(KgOracle.dirtySql)
     ),
@@ -348,8 +345,7 @@ object KgQueries {
         import s.implicits._
         val sents = KgOracle.detXmlDocs(s, dir)
           .flatMap(x => XmlTsvParser.parseDoc(x, KgOracle.detXmlCols))
-        Pipeline.triples(Pipeline.rewrite(sents,
-          Seq(TreesScripts.xAttributes2value -> 1))).toDF()
+        Pipeline.rewriteTriples(sents, Seq(TreesScripts.xAttributes2value -> 1)).toDF()
           .orderBy(col("doc_id"), col("sent"), col("subj"), col("pred"), col("obj"))
       },
       Some(KgOracle.xmltsvSql)
@@ -365,8 +361,7 @@ object KgQueries {
         import s.implicits._
         val sents = KgOracle.detXmlGlueDocs(s, dir)
           .flatMap(x => XmlTsvParser.parseDoc(x, KgOracle.detXmlCols))
-        Pipeline.triples(Pipeline.rewrite(sents,
-          Seq(TreesScripts.emptyNode2Word -> 1))).toDF()
+        Pipeline.rewriteTriples(sents, Seq(TreesScripts.emptyNode2Word -> 1)).toDF()
           .orderBy(col("doc_id"), col("sent"), col("subj"), col("pred"), col("obj"))
       },
       Some(KgOracle.xmltsvEmptySql)
@@ -403,8 +398,7 @@ object KgQueries {
         import s.implicits._
         val sents = KgOracle.detBracketDocs(s, dir)
           .flatMap(x => BracketsParser.parseDoc(x, KgOracle.detBracketCols))
-        Pipeline.triples(Pipeline.rewrite(sents,
-          Seq(TreesScripts.tree2bracket -> 1))).toDF()
+        Pipeline.rewriteTriples(sents, Seq(TreesScripts.tree2bracket -> 1)).toDF()
           .orderBy(col("doc_id"), col("sent"), col("subj"), col("pred"), col("obj"))
       },
       Some(KgOracle.bracketsSql)

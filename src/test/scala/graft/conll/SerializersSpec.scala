@@ -139,15 +139,10 @@ class SerializersSpec extends AnyFunSuite {
       InputDoc("ok", Seq(Span("token", "1\tx\tNOUN\t0\troot", "", 0))),
       InputDoc("fffd", Seq(Span("token", s"1\t$bad\tNOUN\t0\troot", "", 0)))
     ).toDS
-    // default: docs legitimately containing U+FFFD are KEPT
-    val r1 = spark.sparkContext.longAccumulator("utf8_rejected_default")
-    val kept1 = Pipeline.validateUtf8(docs, r1).collect()
-    assert(kept1.map(_.doc_id).toSet == Set("ok", "fffd"))
-    assert(r1.value == 0L)
-    // strict reference-parity mode (the CLI manager): FFFD docs drop
-    val r2 = spark.sparkContext.longAccumulator("utf8_rejected_strict")
-    val kept2 = Pipeline.validateUtf8(docs, r2, rejectReplacementChar = true).collect()
-    assert(kept2.map(_.doc_id).toSeq == Seq("ok"))
-    assert(r2.value == 1L)
+    // reference parity (the CLI manager's mode): FFFD docs drop
+    val r = spark.sparkContext.longAccumulator("utf8_rejected_strict")
+    val kept = Pipeline.validateUtf8(docs, r).collect()
+    assert(kept.map(_.doc_id).toSeq == Seq("ok"))
+    assert(r.value == 1L)
   }
 }
