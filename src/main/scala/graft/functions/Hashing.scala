@@ -21,7 +21,10 @@ object Hashing {
   def md5hex(v: String): String = {
     val md = digests.get()
     md.reset()
-    val d = md.digest(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    hex(md.digest(v.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+  }
+
+  private def hex(d: Array[Byte]): String = {
     val out = new Array[Char](32)
     var i = 0
     while (i < 16) {
@@ -30,5 +33,32 @@ object Hashing {
       i += 1
     }
     new String(out)
+  }
+
+  /** The `n` MinHash values of a shingle set: element j is the least
+    * `md5hex(s"$j|$x")` over the set's non-null elements `x`, i.e. Spark's
+    * `array_min(transform(xs, x -> md5(cast('j|' || x AS binary))))`. One
+    * pass: each element is UTF-8-encoded once, each salted digest is kept
+    * raw and compared unsigned, and only the `n` winners are hex-encoded
+    * (fixed-width lowercase hex orders as the unsigned bytes do). As with
+    * `array_min`, an empty or null set gives nulls. */
+  def minMd5Hex(xs: Seq[String], n: Int): Array[String] = {
+    val md = digests.get()
+    val salts = Array.tabulate(n)(j => s"$j|".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val best = new Array[Array[Byte]](n)
+    if (xs != null) xs.foreach { x =>
+      if (x != null) {
+        val bytes = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        var j = 0
+        while (j < n) {
+          md.reset()
+          md.update(salts(j))
+          val d = md.digest(bytes)
+          if (best(j) == null || java.util.Arrays.compareUnsigned(d, best(j)) < 0) best(j) = d
+          j += 1
+        }
+      }
+    }
+    best.map(d => if (d == null) null else hex(d))
   }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Sizing
+import graft.functions.Hashing
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -122,12 +123,16 @@ object DedupQueries {
       )).as("shset"))
   }
 
-  /** MinHash j as a narrow expression over the shingle-set array: min
-    * over the set of the salted md5 — same value the grouped `MIN` agg
-    * produced, with no shuffle (MIN is duplicate-invariant, so set vs
-    * multiset is immaterial). */
-  private def mhCol(j: Int): Column =
-    expr(s"array_min(transform(shset, x -> md5(cast('$j|' || x AS binary))))")
+  /** MinHash 0..n-1 as one narrow array column `mh` over the shingle-set
+    * array: element j is the min over the set of the j-salted md5 — the
+    * value the grouped `MIN` agg produced, with no shuffle (MIN is
+    * duplicate-invariant, so set vs multiset is immaterial). One
+    * [[Hashing.minMd5Hex]] call per document digests every shingle once
+    * per salt and hex-encodes only the n winners: an
+    * `array_min(transform(…))` per salt would run its lambda without
+    * codegen and build a hex string per shingle per salt. */
+  private def minhashes(n: Int): Column =
+    udf((xs: Seq[String]) => Hashing.minMd5Hex(xs, n)).apply(col("shset")).as("mh")
 
   private val shinglesCte: String =
     s"""${TextQueries.tokensCte}, sh AS (
@@ -143,8 +148,8 @@ object DedupQueries {
     * whole signature table is one shuffle-free projection. */
   private def minhashDf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cols = (0 until 8).map(j => mhCol(j).as(s"mh$j"))
-    shingleSets(s, dir).select($"doc_id" +: cols: _*)
+    val cols = (0 until 8).map(j => $"mh"(j).as(s"mh$j"))
+    shingleSets(s, dir).select($"doc_id", minhashes(8)).select($"doc_id" +: cols: _*)
   }
 
   private def minhashSelectFor(nHashes: Int): String = {
@@ -172,7 +177,7 @@ object DedupQueries {
       nBands: Int = 8, nRows: Int = 1): DataFrame = {
     import s.implicits._
     // ONE narrow shingle-set table feeds everything: the banding keys
-    // (via the per-doc minhash expressions), the set sizes (`size`), and
+    // (via the per-doc minhash array), the set sizes (`size`), and
     // the exact-Jaccard verification (`array_intersect`). Persisted once;
     // everything before the band-bucket window is shuffle-free (the r5
     // formulation paid a window sort + a global distinct + a grouped
@@ -182,19 +187,20 @@ object DedupQueries {
     // candidate distinct, and the two pair→set hash joins.
     val sets = shingleSets(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one struct per band, exploded in a single pass (no nBands-way
-    // self-union of the signature table)
+    // one struct per band over the doc's one minhash array, exploded in
+    // a single pass (no nBands-way self-union of the signature table)
     val bandStructs = (0 until nBands).map { j =>
       val key =
-        if (nRows == 1) mhCol(j)
+        if (nRows == 1) $"mh"(j)
         else md5s(concat_ws("|",
-          (0 until nRows).map(k => mhCol(j * nRows + k)): _*))
+          (0 until nRows).map(k => $"mh"(j * nRows + k)): _*))
       struct(lit(j).as("band"), key.as("bucket"))
     }
     // measured width (r9): banding rows are strictly narrower than the
     // source text, so the session default scheduled core-count-wide
     // shuffles for kilobytes of keys
     val banded = sets
+      .select($"doc_id", minhashes(nBands * nRows))
       .select($"doc_id", explode(array(bandStructs: _*)).as("bk"))
       .select($"doc_id", $"bk.band".as("band"), $"bk.bucket".as("bucket"))
     val candidates = bandPairs(banded, Tables.byteWidth(s, dir, "documents"))

@@ -31,7 +31,8 @@ import graft.streaming.StreamingPipeline
   *  - `plan`: [[planCounts]] per entry, with the levers set on the
   *    session. `--full` prints the final adaptive plan; `--out`/`--tag`
   *    write each entry's `.explain("formatted")` plan, taken before
-  *    execution, to `<dir>/<entry>_<t>.txt` (the plans/r<NN>/ evidence).
+  *    execution, to `<dir>/<entry>_<t>.txt` (the plans/r<NN>/ evidence),
+  *    with its identity tokens made stable by [[stablePlan]].
   *  - `state`: peak streaming state of keyed document assembly and of the
   *    watermarked window count over `gen:<nDocs>`, fed as micro-batches
   *    (10 waves, 50k events in 12 files per 5k docs). Peak state should
@@ -163,6 +164,18 @@ object Probe {
     walk(df.queryExecution.executedPlan, inCache = false)
   }
 
+  /** A formatted plan with its run-dependent identity tokens replaced by
+    * fixed placeholders, so dumps of one plan from two trees or two
+    * builds compare equal: `[plan_id=N]` and an RDD's `RDD[N]` (JVM-global
+    * counters) become `[plan_id=_]` and `RDD[_]`, and a closure's
+    * `$$Lambda$N/0x…@hash` (JDK 17) or `$$Lambda/0x…@hash` (JDK 21)
+    * becomes `$$Lambda`. Expression ids (`name#N`) are kept: they tie
+    * each attribute to the operator that made it. */
+  def stablePlan(txt: String): String =
+    txt.replaceAll("""\[plan_id=\d+\]""", "[plan_id=_]")
+      .replaceAll("""RDD\[\d+\]""", "RDD[_]")
+      .replaceAll("""\$\$Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+""", java.util.regex.Matcher.quoteReplacement("$$Lambda"))
+
   // ------------------------------------------------------------ generator
 
   /** `gen:<nDocs>` → Some(nDocs), any other dir → None; a `gen:` dir
@@ -290,8 +303,8 @@ object Probe {
     c.entries.foreach { name =>
       val df = entry(name)(spark, dir)
       for ((d, t) <- c.dump) {
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        val txt = stablePlan(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
         Files.writeString(Paths.get(d, s"${name}_$t.txt"), txt)
         println(s"[plan] wrote $d/${name}_$t.txt (${txt.length} chars)")
       }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions.broadcast
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.Probe
 
-/** `graft.tools.Probe`'s command line (no session is started) and its
-  * plan counter. */
+/** `graft.tools.Probe`'s command line (no session is started), its
+  * plan counter and its plan-dump normalization. */
 class ProbeSpec extends AnyFunSuite {
   private def fails(args: String*): String =
     intercept[IllegalArgumentException](Probe.parse(args.toArray)).getMessage
@@ -91,5 +91,26 @@ class ProbeSpec extends AnyFunSuite {
     val df = cached.join(broadcast(spark.range(0, 20).toDF("k")), "k")
     try assert(Probe.planCounts(df)._2 == 2)
     finally Probe.reset(spark)
+  }
+
+  test("stablePlan: dumps that differ only in plan ids, RDD ids and closure identities compare equal") {
+    def dump(planId: Int, rdd: Int, lambda: String) =
+      s"""(1) Scan ExistingRDD
+         |Arguments: [node#638L, component#639L], MapPartitionsRDD[$rdd] at createDataFrame at Fixpoint.scala:54, ExistingRDD, UnknownPartitioning(0)
+         |(4) MapElements
+         |Arguments: graft.conll.EntityLinker$$$$$lambda, obj#12: java.lang.String
+         |(9) BroadcastExchange
+         |Arguments: HashedRelationBroadcastMode(List(input[0, string, false]),false), [plan_id=$planId]
+         |""".stripMargin
+    val a = dump(412, 122, "Lambda$1873/0x000000080176c9a8@5d9b7a8c")
+    val b = dump(438, 118, "Lambda$2051/0x00000008017f1c40@1f2e3d4c")
+    val jdk21 = dump(7, 3, "Lambda/0x00007f3a2c1b2e18@6a0b1c2d")
+    assert(a != b)
+    assert(Probe.stablePlan(a) == Probe.stablePlan(b))
+    assert(Probe.stablePlan(a) == Probe.stablePlan(jdk21))
+    for (token <- Seq("[plan_id=_]", "MapPartitionsRDD[_] at", "EntityLinker$$Lambda, obj#12"))
+      assert(Probe.stablePlan(a).contains(token), token)
+    // any other difference survives
+    assert(Probe.stablePlan(a) != Probe.stablePlan(a.replace("obj#12", "obj#13")))
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.functions.{col, md5}
+import org.apache.spark.sql.functions.{array, col, expr, md5}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -10,7 +10,8 @@ import graft.TestSpark
   * DuckDB) and a fresh `MessageDigest` over the UTF-8 bytes printed with
   * `%02x`. Generated strings mix ASCII, BMP (surrogates excluded) and
   * non-BMP characters (surrogate pairs in UTF-16, 4 bytes in UTF-8), the
-  * empty string and strings over 1 KB. */
+  * empty string and strings over 1 KB. `Hashing.minMd5Hex`, the MinHash
+  * kernel, ≡ its per-salt slow paths over generated shingle sets. */
 class HashingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -44,5 +45,47 @@ class HashingSpec extends AnyFunSuite {
     assert(nonBmpStrings > 0, "no string with a non-BMP character was generated")
     assert(empty > 0, "no empty string was generated")
     assert(long > 0, "no string over 1 KB was generated")
+  }
+
+  test("minMd5Hex equals the per-salt min of md5hex and Spark's array_min(transform(md5)) expression") {
+    import spark.implicits._
+    val element = Gen.frequency(12 -> string, 1 -> Gen.const(null: String))
+    val set: Gen[Seq[String]] = Gen.frequency(
+      1 -> Gen.const(null: Seq[String]),
+      12 -> Gen.choose(0, 10).flatMap(k => Gen.listOfN(k, element))
+        .flatMap(xs => Gen.oneOf(xs, xs ++ xs.take(2))))
+    def slow(xs: Seq[String], n: Int): Seq[String] = (0 until n).map { j =>
+      val hs = Option(xs).getOrElse(Nil).filter(_ != null).map(x => Hashing.md5hex(s"$j|$x"))
+      if (hs.isEmpty) null else hs.min
+    }
+    def viaSpark(sets: Seq[Seq[String]], n: Int): Seq[Seq[String]] =
+      sets.toDF("xs").select(array((0 until n).map(j =>
+        expr(s"array_min(transform(xs, x -> md5(cast('$j|' || x AS binary))))")): _*))
+        .as[Seq[String]].collect().toSeq
+    var nullSets, emptySets, dupSets, nullElems, nonBmpSets, longSets = 0
+    val prop = Prop.forAll(Gen.listOfN(30, set)) { sets =>
+      val present = sets.filter(_ != null)
+      nullSets += sets.count(_ == null)
+      emptySets += present.count(_.isEmpty)
+      dupSets += present.count(xs => xs.distinct.size < xs.size)
+      nullElems += present.count(_.contains(null))
+      nonBmpSets += present.count(_.exists(x =>
+        x != null && x.codePoints().anyMatch(Character.isSupplementaryCodePoint)))
+      longSets += present.count(_.exists(x =>
+        x != null && x.getBytes(java.nio.charset.StandardCharsets.UTF_8).length > 1024))
+      Seq(1, 8).forall { n =>
+        val fast = sets.map(xs => Hashing.minMd5Hex(xs, n).toSeq)
+        fast == sets.map(slow(_, n)) && fast == viaSpark(sets, n)
+      }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25), prop)
+    assert(res.passed, res.status.toString)
+    // the generator must reach the cases named above
+    assert(nullSets > 0, "no null set was generated")
+    assert(emptySets > 0, "no empty set was generated")
+    assert(dupSets > 0, "no set with a duplicate element was generated")
+    assert(nullElems > 0, "no set with a null element was generated")
+    assert(nonBmpSets > 0, "no set with a non-BMP string was generated")
+    assert(longSets > 0, "no set with a string over 1 KB was generated")
   }
 }

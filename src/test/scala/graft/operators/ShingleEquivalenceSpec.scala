@@ -6,7 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import graft.TestSpark
 
 /** Round-6 rewrite guard: the narrow per-doc array formulation of the
-  * shingle/minhash pipeline (DedupQueries.shingleSets / mhCol) must be
+  * shingle/minhash pipeline (DedupQueries.shingleSets / minhashes, one
+  * `Hashing.minMd5Hex` call per document) must be
   * observationally identical to the exploded window-lead formulation it
   * replaced. The comparison runs through the PUBLIC entries (q21
   * signatures, q22 verified pairs) against references computed here with
