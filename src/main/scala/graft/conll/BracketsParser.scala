@@ -18,7 +18,10 @@ import scala.collection.mutable
   *    per-column, per-document counter
   *    (CoNLLBracketsWithDefaultURIs2RDF.java:32-40);
   *  - non-bracket columns are delegated to the CoNLL core with bracket
-  *    cells blanked (:117-121).
+  *    cells blanked (:117-121): the sentence assembler
+  *    (`SpanParser.Assembler`) numbers sentences and tokens, applies the
+  *    ID-cell rule and builds each sentence's CoNLL triples, exactly as
+  *    for plain TSV; this reader adds the bracket tree triples.
   */
 object BracketsParser {
 
@@ -109,70 +112,48 @@ object BracketsParser {
   }
 
   def parseDoc(doc: InputDoc, cols: Seq[String], spanUris: Boolean = false): Seq[Sentence] = {
-    val meta = new SpanParser.SchemaMeta(cols.toVector)
     val tokenRows = doc.spans.sortBy(_.offset)
       .filter(s => s.kind == "token" && s.text.trim.nonEmpty && !s.text.trim.startsWith("#"))
       .map(_.text.trim.split("\t", -1))
     val isBracket = detectBracketColumns(tokenRows, math.max(cols.length, tokenRows.map(_.length).maxOption.getOrElse(0)))
 
-    val sentences = mutable.ArrayBuffer[Sentence]()
-    var sent = 1L
-    var tok = 0
-    var rows = mutable.ArrayBuffer[(Int, String, Array[String])]()
+    val asm = new SpanParser.Assembler(doc.doc_id, cols)
     val colEntries = mutable.LinkedHashMap[Int, mutable.ArrayBuffer[String]]()
     val uriCounter = mutable.HashMap[String, Int]()
 
     def colLabel(i: Int): String = if (i < cols.length) cols(i) else cols.last
-
-    def flush(): Unit = {
-      if (rows.nonEmpty) {
-        val base = SpanParser.buildSentence(doc.doc_id, sent, rows.toSeq, Seq.empty, meta,
-          linkPrev = sent > 1L)
-        val trees = colEntries.toSeq.sortBy(_._1).flatMap { case (i, entries) =>
-          treeTriples(entries.toSeq, colLabel(i), uriCounter, spanUris)
-        }
-        sentences += base.copy(triples = base.triples ++ trees)
-        sent += 1; tok = 0
-        rows = mutable.ArrayBuffer()
-        colEntries.clear()
-      }
+    def trees: Seq[Triple] = colEntries.toSeq.sortBy(_._1).flatMap { case (i, entries) =>
+      treeTriples(entries.toSeq, colLabel(i), uriCounter, spanUris)
     }
 
     for (span <- doc.spans.sortBy(_.offset)) {
       val line = span.text.trim
       span.kind match {
-        case "sentence_break" => flush()
         case "media" | "comment" | "markup" => // no tree effect
-        case _ =>
-          if (line.isEmpty) flush()
-          else if (!line.startsWith("#")) {
-            tok += 1
-            val cells = line.split("\t", -1)
-            val idString =
-              if (meta.idCol >= 0 && meta.idCol < cells.length) cells(meta.idCol).trim
-              else tok.toString
-            val uri = s":s${sent}_$idString"
-            val kept = cells.clone()
-            for (i <- cells.indices if i < isBracket.length && isBracket(i)) {
-              val e = colEntries.getOrElseUpdate(i, mutable.ArrayBuffer())
-              val v = cells(i).trim
-              if (SpanParser.isEmptyCell(v)) e += uri
-              else if (v.contains("*")) {
-                e += v.replaceFirst("\\*[^\\*]*$", ""); e += uri
-                e += v.replaceAll(".*\\*", "")
-              } else if (v.contains(")")) {
-                e += v.replaceFirst("\\).*", ""); e += uri
-                e += v.replaceAll("^[\\)]*\\)", ")")
-              } else {
-                e += v; e += uri
-              }
-              kept(i) = "" // bracket annotation removed from the CoNLL row
+        case kind if kind == "sentence_break" || line.isEmpty =>
+          if (asm.flush(trees)) colEntries.clear()
+        case _ if !line.startsWith("#") =>
+          val cells = line.split("\t", -1)
+          val uri = asm.row(cells) // cells are read at flush: blanked below
+          for (i <- cells.indices if i < isBracket.length && isBracket(i)) {
+            val e = colEntries.getOrElseUpdate(i, mutable.ArrayBuffer())
+            val v = cells(i).trim
+            if (SpanParser.isEmptyCell(v)) e += uri
+            else if (v.contains("*")) {
+              e += v.replaceFirst("\\*[^\\*]*$", ""); e += uri
+              e += v.replaceAll(".*\\*", "")
+            } else if (v.contains(")")) {
+              e += v.replaceFirst("\\).*", ""); e += uri
+              e += v.replaceAll("^[\\)]*\\)", ")")
+            } else {
+              e += v; e += uri
             }
-            rows += ((tok, idString, kept))
+            cells(i) = "" // bracket annotation removed from the CoNLL row
           }
+        case _ => // '#' line: no row
       }
     }
-    flush()
-    sentences.toSeq
+    asm.flush(trees)
+    asm.sentences
   }
 }

@@ -27,6 +27,11 @@ import java.util.regex.Pattern
   *  - `<s>`/`<p>` markup acts as a sentence break; other single-line XML
   *    markup is skipped (CoNLL2RDF.java:74-75).
   *
+  * Sentence and token numbering, the ID-cell rule and sentence chaining
+  * live in `Assembler`, which the XML-TSV (`XmlTsvParser`) and bracketing
+  * (`BracketsParser`) readers share; each reader keeps its own span-kind
+  * switch.
+  *
   * Parsing is per-document and runs inside Dataset[InputDoc].flatMap —
   * sequential within a doc (the format is inherently stateful), parallel
   * across docs.
@@ -50,11 +55,6 @@ object SpanParser {
     case _ => false
   }
 
-  /** Parse one document's span sequence into sentences.
-    *
-    * @param cols declared column labels (positional); overridden by a
-    *             `# global.columns = ...` comment if present.
-    */
   /** Per-schema metadata, computed once per columns vector (hot path:
     * avoids regex + string building per cell). */
   private[conll] final class SchemaMeta(val cs: Vector[String]) {
@@ -72,12 +72,12 @@ object SpanParser {
     val idCol: Int = cs.indexWhere(_.equalsIgnoreCase("ID"))
   }
 
-  /** One sentence's token rows → triple graph (the S2 core, shared with the
-    * XML-TSV and bracketing sources). */
-  private[conll] def buildSentence(
+  /** One sentence's token rows `(id, cells)` → triple graph (the S2 core,
+    * shared with the XML-TSV and bracketing sources through `Assembler`). */
+  private def buildSentence(
       docId: String,
       sent: Long,
-      rows: Seq[(Int, String, Array[String])],
+      rows: Iterable[(String, Array[String])],
       comments: Seq[String],
       meta: SchemaMeta,
       linkPrev: Boolean
@@ -100,7 +100,7 @@ object SpanParser {
     val argProps = mutable.LinkedHashSet[String]()
 
     var prevUri: String = null
-    for ((_, idString, cells) <- rows) {
+    for ((idString, cells) <- rows) {
       val uri = s":s${sent}_$idString"
       if (prevUri != null)
         g += Triple(prevUri, "nif:nextWord", uri, oUri = true)
@@ -138,48 +138,80 @@ object SpanParser {
     Sentence(docId, sent, comments, g.toSeq)
   }
 
-  def parseDoc(doc: InputDoc, cols: Seq[String]): Seq[Sentence] = {
-    var columns: Vector[String] = cols.toVector
-    var meta = new SchemaMeta(columns)
-    val sentences = mutable.ArrayBuffer[Sentence]()
+  /** One document's sentence assembly: the sentence number (sentences
+    * emitted + 1), the positional token number (pending rows + 1), the
+    * pending rows and comments, the ID-cell rule and `nif:nextSentence`
+    * chaining. A reader resets its own per-sentence tree state when
+    * `flush` reports an emitted sentence. */
+  private[conll] final class Assembler(docId: String, cols: Seq[String]) {
+    /** Replaced mid-document by a `# global.columns = ...` comment. */
+    var meta = new SchemaMeta(cols.toVector)
+    val comments = mutable.ArrayBuffer[String]()
+    private val rows = mutable.ArrayBuffer[(String, Array[String])]()
+    private val out = mutable.ArrayBuffer[Sentence]()
 
-    var sent = 1L
-    var tok = 0
-    var rows = mutable.ArrayBuffer[(Int, String, Array[String])]() // (tok, idString, cells)
-    var comments = mutable.ArrayBuffer[String]()
+    private def sent: Long = out.length + 1L
 
-    def flush(): Unit = {
-      if (rows.nonEmpty) {
-        sentences += buildSentence(doc.doc_id, sent, rows.toSeq, comments.toSeq, meta,
-          linkPrev = sent > 1L)
-        sent += 1
-        tok = 0
-        rows = mutable.ArrayBuffer()
-        comments = mutable.ArrayBuffer()
-      }
+    /** Adds a token row to the pending sentence and returns its URI
+      * `:s{sent}_{id}`. The cells are read again at `flush`, so a reader
+      * may still blank cells it consumed itself.
+      *
+      * A declared ID column overrides the positional id, and its cell is
+      * obligatory (CoNLL2RDF.java:112-117). NOTE: the reference declares
+      * "ID must contain integers" but its check is dead code (the catch at
+      * CoNLL2RDF.java:116 can never fire — nothing parses the int); IDs
+      * pass through verbatim, e.g. CoNLL-U ranges "1-2" mint :s1_1-2. We
+      * match the actual behavior, only failing on a missing cell. */
+    def row(cells: Array[String]): String = {
+      val idCol = meta.idCol
+      val id =
+        if (idCol < 0) (rows.length + 1).toString
+        else if (idCol < cells.length) cells(idCol).trim
+        else throw new ArrayIndexOutOfBoundsException(
+          s"if defined as label, the ID column is obligatory " +
+            s"(doc $docId, sentence $sent, row ${rows.length + 1})")
+      rows += ((id, cells))
+      s":s${sent}_$id"
     }
 
+    /** Emits the pending sentence, its triples followed by `extra`, if any
+      * row is pending; `extra` is evaluated only then. Returns whether a
+      * sentence was emitted (pending comments carry over otherwise). */
+    def flush(extra: => Seq[Triple]): Boolean = rows.nonEmpty && {
+      val s = buildSentence(docId, sent, rows, comments.toSeq, meta, linkPrev = sent > 1L)
+      val x = extra
+      out += (if (x.isEmpty) s else s.copy(triples = s.triples ++ x))
+      rows.clear()
+      comments.clear()
+      true
+    }
+
+    def sentences: Seq[Sentence] = out.toSeq
+  }
+
+  /** Parse one document's span sequence into sentences.
+    *
+    * @param cols declared column labels (positional); overridden by a
+    *             `# global.columns = ...` comment if present.
+    */
+  def parseDoc(doc: InputDoc, cols: Seq[String]): Seq[Sentence] = {
+    val asm = new Assembler(doc.doc_id, cols)
     for (span <- doc.spans.sortBy(_.offset)) {
       span.kind match {
         case "media" => // opaque payload; preserved upstream, ignored here
-        case "sentence_break" => flush()
+        case "sentence_break" => asm.flush(Nil)
         case "comment" =>
           val m = GlobalColumns.matcher(span.text.trim)
-          if (m.matches()) {
-            columns = m.group(1).trim.split("\\s+").toVector
-            meta = new SchemaMeta(columns)
-            // the reference PEEKS for global.columns and resets the stream
-            // (CoNLLStreamExtractor.findFieldsFromComments), so the line
-            // also flows through as an ordinary comment → rdfs:comment;
-            // the formatter later re-discovers columns from it
-            // (CoNLLRDFFormatter.findColumnNamesInRDFBuffer)
-            comments += span.text.trim.replaceFirst("^#\\s?", "")
-          } else {
-            comments += span.text.trim.replaceFirst("^#\\s?", "")
-          }
+          // the reference PEEKS for global.columns and resets the stream
+          // (CoNLLStreamExtractor.findFieldsFromComments), so the line
+          // also flows through as an ordinary comment → rdfs:comment;
+          // the formatter later re-discovers columns from it
+          // (CoNLLRDFFormatter.findColumnNamesInRDFBuffer)
+          if (m.matches()) asm.meta = new SchemaMeta(m.group(1).trim.split("\\s+").toVector)
+          asm.comments += span.text.trim.replaceFirst("^#\\s?", "")
         case "markup" =>
           val stripped = SPMarkup.matcher(span.text).replaceAll("").trim
-          if (stripped.isEmpty) flush() // <s>/<p> double as sentence breaks
+          if (stripped.isEmpty) asm.flush(Nil) // <s>/<p> double as sentence breaks
           else if (OtherMarkup.matcher(stripped).matches()) () // skip other XML
           else () // markup with trailing text: out of scope for core TSV path
         case _ => // "token"
@@ -189,31 +221,14 @@ object SpanParser {
             if (raw.indexOf('<') >= 0) SPMarkup.matcher(raw).replaceAll("").trim
             else raw.trim
           if (raw.indexOf('<') >= 0 && OtherMarkup.matcher(line).matches()) ()
-          else if (line.isEmpty) flush()
+          else if (line.isEmpty) asm.flush(Nil)
           else {
             if (line.indexOf('#') >= 0) line = line.replaceFirst("#.*", "").trim
-            if (line.nonEmpty) {
-              tok += 1
-              val cells = line.split("\t", -1)
-              val idCol = meta.idCol
-              // NOTE: the reference declares "ID must contain integers" but
-              // its check is dead code (the catch at CoNLL2RDF.java:116 can
-              // never fire — nothing parses the int); IDs pass through
-              // verbatim, e.g. CoNLL-U ranges "1-2" mint :s1_1-2. We match
-              // the actual behavior, only failing on a missing cell.
-              val idString =
-                if (idCol >= 0) {
-                  if (idCol >= cells.length)
-                    throw new ArrayIndexOutOfBoundsException(
-                      "if defined as label, the ID column is obligatory")
-                  cells(idCol).trim
-                } else tok.toString
-              rows += ((tok, idString, cells))
-            }
+            if (line.nonEmpty) asm.row(line.split("\t", -1))
           }
       }
     }
-    flush()
-    sentences.toSeq
+    asm.flush(Nil)
+    asm.sentences
   }
 }

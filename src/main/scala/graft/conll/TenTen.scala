@@ -125,16 +125,9 @@ object TenTen {
     out.toSeq
   }
 
-  /** Converted lines → the span-table contract, ready for XmlTsvParser:
-    * single-line XML → "markup", everything else → "token". */
-  def toSpans(lines: Seq[String]): Seq[Span] =
-    lines.zipWithIndex.map { case (l, i) =>
-      val kind = if (l.trim.matches("<[^>]*>")) "markup" else "token"
-      Span(kind, l, "", i)
-    }
-
-  /** Dataset surface: (doc_id, vertical lines) → repaired InputDocs.
-    * Narrow (map); plugs straight into XmlTsvParser.parseDoc. */
+  /** Dataset surface: (doc_id, vertical lines) → repaired InputDocs, the
+    * converted lines classified by `TsvIngest.toSpans`. Narrow (map);
+    * plugs straight into XmlTsvParser.parseDoc. */
   def repairDocs(
       docs: Dataset[(String, Seq[String])],
       dataTags: Seq[String] = defaultDataTags,
@@ -142,7 +135,7 @@ object TenTen {
       repair: Boolean = true): Dataset[InputDoc] = {
     import docs.sparkSession.implicits._
     docs.map { case (id, lines) =>
-      InputDoc(id, toSpans(convert(lines, dataTags, keep, repair)))
+      InputDoc(id, TsvIngest.toSpans(convert(lines, dataTags, keep, repair)))
     }
   }
 }

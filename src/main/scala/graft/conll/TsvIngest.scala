@@ -18,10 +18,11 @@ object TsvIngest {
 
   /** Classify raw lines exactly like the stream reader would: empty →
     * sentence_break, '#' → comment, single-line XML → markup, else
-    * token. SpanParser re-applies the markup/comment semantics (this
-    * classification only routes span kinds). */
-  def toSpans(text: String): Seq[Span] =
-    text.split("\n", -1).toSeq.zipWithIndex.map { case (line, i) =>
+    * token. The readers re-apply the markup/comment semantics (this
+    * classification only routes span kinds); it also classifies
+    * `TenTen.repairDocs`' converted lines. */
+  def toSpans(lines: Seq[String]): Seq[Span] =
+    lines.zipWithIndex.map { case (line, i) =>
       val t = line.trim
       val kind =
         if (t.isEmpty) "sentence_break"
@@ -129,7 +130,8 @@ object TsvIngest {
           val bytes = if (p.endsWith(".gz")) gunzip(raw) else raw
           require(Pipeline.isValidUtf8(bytes), s"non-UTF-8 input file: $p")
           InputDoc(docIdOf(p),
-            toSpans(new String(bytes, java.nio.charset.StandardCharsets.UTF_8)))
+            toSpans(new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+              .split("\n", -1).toSeq))
         }
       }
   }

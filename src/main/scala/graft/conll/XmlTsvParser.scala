@@ -16,7 +16,10 @@ import java.util.regex.Pattern
   *  - ~90 breaking element names (HTML + TEI) force sentence breaks, with
   *    still-open elements re-asserted as parents in the following sentence
   *    (:18-30, :66-80);
-  *  - TSV rows are delegated to the CoNLL core (our buildSentence).
+  *  - TSV rows are delegated to the CoNLL core: the sentence assembler
+  *    (`SpanParser.Assembler`) numbers sentences and tokens, applies the
+  *    ID-cell rule and builds each sentence's CoNLL triples, exactly as
+  *    for plain TSV; this reader adds the powla tree triples.
   *
   * Parsing is per-document (inherently sequential within a doc), parallel
   * across docs — run inside Dataset[InputDoc].flatMap.
@@ -62,7 +65,7 @@ object XmlTsvParser {
 
   /** The getTTL stack algorithm (XMLTSV2RDF.java:131-173): turn a
     * sentence's tree-entry sequence into powla triples. */
-  private def treeTriples(entries: Seq[TreeEntry]): Seq[Triple] = {
+  private def treeTriples(entries: Iterable[TreeEntry]): Seq[Triple] = {
     val out = mutable.LinkedHashSet[Triple]()
     val nodeUris = mutable.Stack[String]()
     var lastSibling: String = null
@@ -90,40 +93,24 @@ object XmlTsvParser {
   }
 
   def parseDoc(doc: InputDoc, cols: Seq[String]): Seq[Sentence] = {
-    val meta = new SpanParser.SchemaMeta(cols.toVector)
-    val sentences = mutable.ArrayBuffer[Sentence]()
-
+    val asm = new SpanParser.Assembler(doc.doc_id, cols)
     var xmlId = 0
-    var sent = 1L
-    var tok = 0
-    var rows = mutable.ArrayBuffer[(Int, String, Array[String])]()
-    var tree = mutable.ArrayBuffer[TreeEntry]()
-    // still-open elements: (entry) re-asserted after each sentence break
+    val tree = mutable.ArrayBuffer[TreeEntry]()
+    // still-open elements, re-asserted at the start of each new sentence
     val stack = mutable.ArrayBuffer[OpenEl]()
-
-    def flush(): Unit = {
-      if (rows.nonEmpty) {
-        val base = SpanParser.buildSentence(doc.doc_id, sent, rows.toSeq, Seq.empty, meta,
-          linkPrev = sent > 1L)
-        val withTree = base.copy(triples = base.triples ++ treeTriples(tree.toSeq))
-        sentences += withTree
-        sent += 1
-        tok = 0
-        rows = mutable.ArrayBuffer()
-        tree = mutable.ArrayBuffer() ++ stack.map(o => o: TreeEntry)
-      }
-    }
 
     for (span <- doc.spans.sortBy(_.offset)) {
       val line = span.text.trim
       span.kind match {
-        case "sentence_break" => flush()
         case "media" | "comment" => // passthrough, no tree effect
+        case kind if kind == "sentence_break" || line.isEmpty =>
+          if (asm.flush(treeTriples(tree))) { tree.clear(); tree ++= stack }
         case _ if MarkupLine.matcher(line).matches() =>
           val isClose = line.startsWith("</")
           val isSelf = line.contains("/>")
           if (!isClose) xmlId += 1
-          if (breakingMarkupElements.contains(elementName(line))) flush()
+          if (breakingMarkupElements.contains(elementName(line)) &&
+              asm.flush(treeTriples(tree))) { tree.clear(); tree ++= stack }
           if (isClose) {
             tree += CloseEl
             if (stack.nonEmpty) stack.remove(stack.length - 1)
@@ -133,22 +120,11 @@ object XmlTsvParser {
             if (!isSelf) stack += o
           }
         case _ =>
-          if (line.isEmpty) flush()
-          else {
-            val cleaned = if (line.indexOf('#') >= 0) line.replaceFirst("#.*", "").trim else line
-            if (cleaned.nonEmpty) {
-              tok += 1
-              val cells = cleaned.split("\t", -1)
-              val idString =
-                if (meta.idCol >= 0 && meta.idCol < cells.length) cells(meta.idCol).trim
-                else tok.toString
-              rows += ((tok, idString, cells))
-              tree += WordRef(s":s${sent}_$idString")
-            }
-          }
+          val cleaned = if (line.indexOf('#') >= 0) line.replaceFirst("#.*", "").trim else line
+          if (cleaned.nonEmpty) tree += WordRef(asm.row(cleaned.split("\t", -1)))
       }
     }
-    flush()
-    sentences.toSeq
+    asm.flush(treeTriples(tree))
+    asm.sentences
   }
 }

@@ -125,7 +125,21 @@ class PlanSpec extends AnyFunSuite {
     // the intended shape, not an accident
     "kg_conll_text"           -> (4, 0),
     "kg_ttl_ingest"           -> (1, 0), // narrow roundtrip; output sort only
-    "kg_file_ingest"          -> (1, 0)
+    "kg_file_ingest"          -> (1, 0),
+    // the reader entries (S2/S5/S7/S8/S9/S10): each reader is a narrow
+    // per-doc flatMap, so one exchange follows it (the output sort, or
+    // kg_count_xml's count); kg_conllu_plus adds toConllTsv's token-pivot
+    // aggregate. Each count read the same in five of five `Probe plan` runs
+    "kg_tsv_fidelity"         -> (1, 0),
+    "kg_srl_args"             -> (1, 0),
+    "kg_conllu_plus"          -> (2, 0),
+    "kg_segments"             -> (1, 0),
+    "kg_xmltsv_powla"         -> (1, 0),
+    "kg_xmltsv_emptyword"     -> (1, 0),
+    "kg_count_xml"            -> (1, 0),
+    "kg_tenten"               -> (1, 0),
+    "kg_brackets_roundtrip"   -> (1, 0),
+    "kg_brackets_spanuri"     -> (1, 0)
   )
 
   private def counts(name: String): (Int, Int) = {

@@ -224,7 +224,7 @@ class DetSeedSweepSpec extends AnyFunSuite {
     if (nSents == 0) assert(lines.isEmpty)
     else {
       val doc = InputDoc("d1",
-        TenTen.toSpans(TenTen.convert(lines, repair = true)))
+        TsvIngest.toSpans(TenTen.convert(lines, repair = true)))
       val sents = XmlTsvParser.parseDoc(doc, KgOracle.detTenCols)
       assert(sents.length == nSents)
       for ((s, si) <- sents.zipWithIndex) {

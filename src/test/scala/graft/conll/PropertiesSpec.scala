@@ -98,6 +98,53 @@ class PropertiesSpec extends AnyFunSuite {
     }, n = 15)
   }
 
+  test("property: the XML-TSV and bracket readers parse plain TSV exactly like SpanParser") {
+    // plain-TSV docs: token and sentence_break spans only, no '#', '<',
+    // '(' or ')' in any cell. Cells never start or end with whitespace
+    // and the first one is never empty, so trimming a line never shifts
+    // a declared ID column off its cell.
+    val genWord = for {
+      h <- Gen.oneOf("abcxyz019&\"\\*.-")
+      t <- Gen.chooseNum(0, 5).flatMap(Gen.listOfN(_, Gen.oneOf("abcxyz019 &\"\\*.-")))
+    } yield (h +: t).mkString.trim
+    val genFilled = Gen.frequency(6 -> genWord, 2 -> Gen.oneOf("_", "-", "O", "--", "__"))
+    val genCell = Gen.frequency(8 -> genFilled, 1 -> Gen.const(""))
+    val genId = Gen.oneOf(Gen.choose(1, 30).map(_.toString), Gen.const("1-2"), genWord)
+    val genDoc = for {
+      labels <- Gen.choose(1, 4).flatMap(n => Gen.pick(n, Seq("WORD", "UPOS", "LEMMA", "HEAD", "EDGE", "MISC")))
+      idAt <- Gen.oneOf(Gen.const(None), Gen.choose(0, labels.length).map(Some(_)))
+      cols = idAt.fold(labels.toSeq)(i => labels.patch(i, Seq("ID"), 0).toSeq)
+      genRow = Gen.sequence[Seq[String], String](cols.indices.map { i =>
+        if (idAt.contains(i)) genId else if (i == 0) genFilled else genCell
+      })
+      sizes <- Gen.oneOf(Gen.const(Seq(1)),
+        Gen.choose(2, 4).flatMap(n => Gen.listOfN(n, Gen.choose(1, 5))))
+      // sentence_break runs: before the first sentence, between
+      // sentences (at least one) and after the last
+      lead <- Gen.choose(0, 2)
+      gaps <- Gen.listOfN(sizes.length - 1, Gen.choose(1, 2))
+      trail <- Gen.choose(0, 2)
+      rows <- Gen.sequence[Seq[List[Seq[String]]], List[Seq[String]]](sizes.map(Gen.listOfN(_, genRow)))
+    } yield {
+      val texts = Seq.fill(lead)(None) ++ rows.zip(gaps :+ trail).flatMap { case (sent, b) =>
+        sent.map(r => Some(r.mkString("\t"))) ++ Seq.fill(b)(None)
+      }
+      val spans = texts.zipWithIndex.map {
+        case (Some(t), i) => Span("token", t, "", i)
+        case (None, i) => Span("sentence_break", "", "", i)
+      }
+      (InputDoc("dp", spans), cols, idAt.isDefined, sizes == Seq(1))
+    }
+    val seen = scala.collection.mutable.Set[String]()
+    check(Prop.forAllNoShrink(genDoc) { case (d, cols, hasId, singleRow) =>
+      seen += (if (hasId) "ID column" else "no ID column")
+      seen += (if (singleRow) "single row" else "multi-sentence")
+      val ref = SpanParser.parseDoc(d, cols)
+      XmlTsvParser.parseDoc(d, cols) == ref && BracketsParser.parseDoc(d, cols) == ref
+    }, n = 200)
+    assert(seen == Set("ID column", "no ID column", "single row", "multi-sentence"), seen)
+  }
+
   test("property: lexiconumeric key is order-isomorphic to numeric token order") {
     val genTok = Gen.choose(0, 5000)
     check(Prop.forAll(genTok, genTok) { (a, b) =>

@@ -102,6 +102,23 @@ class SpanParserSpec extends AnyFunSuite {
     assert(sents.head.triples.exists(t => t.s == ":s1_1-2" && t.p == "conll:WORD"))
   }
 
+  // The ID-cell rule lives in the sentence assembler that all three
+  // CoNLL-family readers share: a declared ID column whose cell is
+  // missing fails. A positional fallback would mint :s1_2 for both rows
+  // here, one URI carrying two conll:WORD values.
+  private val idRuleCols = Seq("WORD", "ID")
+  Seq[(String, InputDoc => Seq[Sentence])](
+    "SpanParser" -> (SpanParser.parseDoc(_, idRuleCols)),
+    "XmlTsvParser" -> (XmlTsvParser.parseDoc(_, idRuleCols)),
+    "BracketsParser" -> (BracketsParser.parseDoc(_, idRuleCols))
+  ).foreach { case (reader, parse) =>
+    test(s"$reader: a declared ID column with a missing cell fails naming doc, sentence and row") {
+      val e = intercept[ArrayIndexOutOfBoundsException](parse(doc(Seq("foo\t2", "bar", ""))))
+      assert(e.getMessage ==
+        "if defined as label, the ID column is obligatory (doc d1, sentence 1, row 2)")
+    }
+  }
+
   test("media spans are ignored by parsing") {
     val d = InputDoc("d1", Seq(
       Span("token", "1\tx\tNOUN\t0\troot", "", 0),

@@ -26,9 +26,9 @@ class TsvIngestSpec extends AnyFunSuite {
     val text = try src.mkString finally src.close()
 
     // identical span classification and identical parse
-    assert(docs.head.spans == TsvIngest.toSpans(text))
+    assert(docs.head.spans == TsvIngest.toSpans(text.split("\n", -1).toSeq))
     val viaSpark = SpanParser.parseDoc(docs.head, cols)
-    val direct = SpanParser.parseDoc(InputDoc("en-ud-dev", TsvIngest.toSpans(text)), cols)
+    val direct = SpanParser.parseDoc(InputDoc("en-ud-dev", TsvIngest.toSpans(text.split("\n", -1).toSeq)), cols)
     assert(viaSpark.length == direct.length)
     assert(viaSpark == direct)
     // the known corpus shape: ~2k sentences
@@ -74,7 +74,7 @@ class TsvIngestSpec extends AnyFunSuite {
       .collect().map(d => d.doc_id -> d).toMap
     assert(got.keySet == docs.map(_._1).toSet)
     for ((id, text) <- docs)
-      assert(got(id).spans == TsvIngest.toSpans(text), s"doc $id")
+      assert(got(id).spans == TsvIngest.toSpans(text.split("\n", -1).toSeq), s"doc $id")
   }
 
   test("non-UTF-8 input files fail loudly at the byte layer") {
