@@ -24,8 +24,10 @@ object Sizing {
   val EdgesPerPartition: Long = 250000L
 
   /** Row bound under which a join side is broadcast: the gazetteer in
-    * `EntityLinker.linkUnioned` and the component table in
-    * `EntityLinker.canonicalize`. ~1M string pairs is tens of MB. */
+    * `EntityLinker.linkUnioned` (at most this many rows: the fused
+    * map-side lookup; more: a plain equi-join whose strategy is
+    * Catalyst's) and the component table in `EntityLinker.canonicalize`.
+    * ~1M string pairs is tens of MB. */
   val BroadcastRows: Int = 1000000
 
   /** Edge-count bound under which the graph fixpoints finish on the

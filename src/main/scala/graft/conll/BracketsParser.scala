@@ -21,7 +21,11 @@ import scala.collection.mutable
   *    cells blanked (:117-121): the sentence assembler
   *    (`SpanParser.Assembler`) numbers sentences and tokens, applies the
   *    ID-cell rule and builds each sentence's CoNLL triples, exactly as
-  *    for plain TSV; this reader adds the bracket tree triples.
+  *    for plain TSV; this reader adds the bracket tree triples;
+  *  - lines are read by SpanParser's line rule (`SpanParser.coreLine`):
+  *    an `<s>`/`<p>` line breaks the sentence, other single-line markup
+  *    is skipped, and an inline `#…` comment is cut from a token row
+  *    before its cells are split, for bracket-column detection too.
   */
 object BracketsParser {
 
@@ -112,9 +116,12 @@ object BracketsParser {
   }
 
   def parseDoc(doc: InputDoc, cols: Seq[String], spanUris: Boolean = false): Seq[Sentence] = {
-    val tokenRows = doc.spans.sortBy(_.offset)
-      .filter(s => s.kind == "token" && s.text.trim.nonEmpty && !s.text.trim.startsWith("#"))
-      .map(_.text.trim.split("\t", -1))
+    import SpanParser.{Break, Row}
+    // "media" and "comment" spans have no tree or row effect
+    val lines = doc.spans.sortBy(_.offset).collect {
+      case s if s.kind != "media" && s.kind != "comment" => SpanParser.coreLine(s.kind, s.text)
+    }
+    val tokenRows = lines.collect { case Row(cells) => cells }
     val isBracket = detectBracketColumns(tokenRows, math.max(cols.length, tokenRows.map(_.length).maxOption.getOrElse(0)))
 
     val asm = new SpanParser.Assembler(doc.doc_id, cols)
@@ -126,32 +133,27 @@ object BracketsParser {
       treeTriples(entries.toSeq, colLabel(i), uriCounter, spanUris)
     }
 
-    for (span <- doc.spans.sortBy(_.offset)) {
-      val line = span.text.trim
-      span.kind match {
-        case "media" | "comment" | "markup" => // no tree effect
-        case kind if kind == "sentence_break" || line.isEmpty =>
-          if (asm.flush(trees)) colEntries.clear()
-        case _ if !line.startsWith("#") =>
-          val cells = line.split("\t", -1)
-          val uri = asm.row(cells) // cells are read at flush: blanked below
-          for (i <- cells.indices if i < isBracket.length && isBracket(i)) {
-            val e = colEntries.getOrElseUpdate(i, mutable.ArrayBuffer())
-            val v = cells(i).trim
-            if (SpanParser.isEmptyCell(v)) e += uri
-            else if (v.contains("*")) {
-              e += v.replaceFirst("\\*[^\\*]*$", ""); e += uri
-              e += v.replaceAll(".*\\*", "")
-            } else if (v.contains(")")) {
-              e += v.replaceFirst("\\).*", ""); e += uri
-              e += v.replaceAll("^[\\)]*\\)", ")")
-            } else {
-              e += v; e += uri
-            }
-            cells(i) = "" // bracket annotation removed from the CoNLL row
+    lines.foreach {
+      case Break =>
+        if (asm.flush(trees)) colEntries.clear()
+      case Row(cells) =>
+        val uri = asm.row(cells) // cells are read at flush: blanked below
+        for (i <- cells.indices if i < isBracket.length && isBracket(i)) {
+          val e = colEntries.getOrElseUpdate(i, mutable.ArrayBuffer())
+          val v = cells(i).trim
+          if (SpanParser.isEmptyCell(v)) e += uri
+          else if (v.contains("*")) {
+            e += v.replaceFirst("\\*[^\\*]*$", ""); e += uri
+            e += v.replaceAll(".*\\*", "")
+          } else if (v.contains(")")) {
+            e += v.replaceFirst("\\).*", ""); e += uri
+            e += v.replaceAll("^[\\)]*\\)", ")")
+          } else {
+            e += v; e += uri
           }
-        case _ => // '#' line: no row
-      }
+          cells(i) = "" // bracket annotation removed from the CoNLL row
+        }
+      case _ => // other markup, a '#' line: no row
     }
     asm.flush(trees)
     asm.sentences

@@ -1,22 +1,41 @@
 package graft.conll
 
 import graft.Sizing
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Mention detection + entity linking against a gazetteer, plus
   * connected-components canonicalization (north_rule extensions; the
   * reference has no analog — its skew unit is one sentence).
   *
-  * Two join strategies:
-  *  - `linkBroadcast`: gazetteers that fit on executors (the common case —
-  *    OLiA-style models are tiny) → broadcast-hash join, zero shuffle.
-  *  - `linkSalted`: huge gazetteers with Zipf-skewed surfaces → shuffle
-  *    join with explicit key salting: the mention side gets a random salt
-  *    in [0, S), the gazetteer side is exploded ×S, so one hot surface
-  *    ("the") spreads over S reducers instead of one straggler. AQE
-  *    skew-join splitting is complementary (post-hoc splitting of oversize
-  *    partitions); explicit salting guards the pathological head key.
+  * `linkUnioned` takes one of two routes, chosen by the gazetteer's
+  * measured row count:
+  *  - at most `broadcastMax` rows, the FUSED route: the gazetteer is
+  *    collected, grouped by surface and broadcast, and one narrow flatMap
+  *    emits each triple plus its entity triples (a map-side lookup). No
+  *    shuffle, and the input is read once.
+  *  - above the bound, `triples ∪ linkJoined(triples, gazetteer)`: a plain
+  *    equi-join on the surface. Catalyst picks a broadcast or a shuffle
+  *    join from the gazetteer's size. At scale, a Zipf-hot surface ("the")
+  *    makes one shuffle partition oversize; AQE's skew-join split (on by
+  *    default, and `graft.Session` leaves it on) spreads that partition
+  *    over several tasks from the sizes measured at run time, so the join
+  *    needs no salt and no replicated gazetteer side. The split needs both
+  *    join inputs to be shuffle stages, as for a gazetteer read from
+  *    storage; one aggregated on the surface in the same plan
+  *    (`gazetteerFromVocab`) keeps that aggregate's partitioning, and
+  *    AQE leaves the join unsplit.
+  *
+  * The fused route stays because the union reads its input twice, which
+  * on an in-plan rewrite cascade runs the cascade twice: the union in its
+  * place measured 35–120% slower on the registry's link entries
+  * (OPTIMIZATION_r09 §17).
+  *
+  * Both routes lowercase a mention with the function Spark's `lower`
+  * evaluates ([[lowerCase]]) and emit one link per matching gazetteer row.
   */
 object EntityLinker {
 
@@ -25,40 +44,35 @@ object EntityLinker {
     triples.filter(col("pred") === "conll:WORD")
       .select(col("doc_id"), col("sent"), col("subj"), lower(col("obj")).as("surface"))
 
-  def linkBroadcast(triples: DataFrame, gazetteer: DataFrame): DataFrame =
-    mentions(triples)
-      .join(broadcast(gazetteer), "surface")
-      .select(col("doc_id"), col("sent"), col("subj"),
-        lit("conll:ENTITY").as("pred"),
-        col("entity_id").as("obj"), lit(true).as("obj_is_uri"))
-
-  def linkSalted(triples: DataFrame, gazetteer: DataFrame, saltBuckets: Int = 16): DataFrame = {
-    val m = mentions(triples)
-      // deterministic pseudo-salt: spreads each hot surface's mentions
-      // across buckets without an RNG (resume-safe)
-      .withColumn("salt", pmod(xxhash64(col("subj")), lit(saltBuckets)))
-    val g = gazetteer
-      .withColumn("salt", explode(sequence(lit(0), lit(saltBuckets - 1))))
-    m.join(g, Seq("surface", "salt"))
-      .select(col("doc_id"), col("sent"), col("subj"),
-        lit("conll:ENTITY").as("pred"),
-        col("entity_id").as("obj"), lit(true).as("obj_is_uri"))
+  /** Spark's `lower` for the default collation (UTF8_BINARY), as a driver
+    * or executor function: the same case mapping under any JVM default
+    * locale (Java's `toLowerCase()` maps `I` to dotless `ı` under tr_TR). */
+  private[conll] def lowerCase(): String => String = {
+    val icu = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+    s => CollationSupport.Lower.exec(
+      UTF8String.fromString(s), CollationFactory.UTF8_BINARY_COLLATION_ID, icu).toString
   }
 
-  /** triples ∪ entity links, size-routed (VERDICT r1 item 6): broadcast
-    * only when the gazetteer is provably small, otherwise the salted
-    * shuffle join; an unconditional broadcast of a corpus-derived
-    * vocabulary is unbounded at 100 TB. The broadcast regime is FUSED:
-    * one narrow flatMap emits each original triple plus its entity triple
-    * (map-side hash lookup) — no cache, no second pass over the rewrite
-    * cascade, zero shuffle; at 100 TB this is strictly better than
-    * `t.union(broadcastJoin(t))`, which consumes `t` twice. The salted
-    * regime keeps the explicit union (the shuffle join needs its own
-    * pass); there the caller should persist `triples` if recompute is
-    * expensive. The bounded `limit(max+1).collect()` probe doubles as the
-    * broadcast payload. */
+  /** The links as a plain equi-join on the lowercased surface; the join
+    * strategy is Catalyst's and AQE's. */
+  def linkJoined(triples: DataFrame, gazetteer: DataFrame): DataFrame =
+    mentions(triples)
+      .join(gazetteer, "surface")
+      .select(col("doc_id"), col("sent"), col("subj"),
+        lit("conll:ENTITY").as("pred"),
+        col("entity_id").as("obj"), lit(true).as("obj_is_uri"))
+
+  def linkBroadcast(triples: DataFrame, gazetteer: DataFrame): DataFrame =
+    linkJoined(triples, broadcast(gazetteer))
+
+  /** triples ∪ entity links, size-routed (VERDICT r1 item 6): the fused
+    * route only when the gazetteer is provably small, otherwise the
+    * equi-join; an unconditional broadcast of a corpus-derived vocabulary
+    * is unbounded at 100 TB. On the join route the caller should persist
+    * `triples` if recompute is expensive. The bounded
+    * `limit(max+1).collect()` probe doubles as the broadcast payload. */
   def linkUnioned(
-      triples: org.apache.spark.sql.Dataset[TripleRow],
+      triples: Dataset[TripleRow],
       gazetteer: DataFrame,
       broadcastMax: Int = Sizing.BroadcastRows): DataFrame = {
     val spark = triples.sparkSession
@@ -67,16 +81,17 @@ object EntityLinker {
       .limit(broadcastMax + 1).collect()
     if (probe.length <= broadcastMax) {
       val b = spark.sparkContext.broadcast(
-        probe.map(r => r.getString(0) -> r.getString(1)).toMap)
+        probe.toSeq.groupMap(_.getString(0))(_.getString(1)))
+      val lowered = lowerCase()
       triples.flatMap { t =>
-        if (t.pred == "conll:WORD") b.value.get(t.obj.toLowerCase) match {
-          case Some(e) =>
-            Seq(t, TripleRow(t.doc_id, t.sent, t.subj, "conll:ENTITY", e, obj_is_uri = true))
+        if (t.pred == "conll:WORD" && t.obj != null) b.value.get(lowered(t.obj)) match {
+          case Some(es) =>
+            t +: es.map(e => TripleRow(t.doc_id, t.sent, t.subj, "conll:ENTITY", e, obj_is_uri = true))
           case None => Seq(t)
         }
         else Seq(t)
       }.toDF()
-    } else triples.toDF().unionByName(linkSalted(triples.toDF(), gazetteer))
+    } else triples.toDF().unionByName(linkJoined(triples.toDF(), gazetteer))
   }
 
   /** Derive a deterministic gazetteer from a vocabulary DataFrame(word). */

@@ -30,7 +30,8 @@ import java.util.regex.Pattern
   * Sentence and token numbering, the ID-cell rule and sentence chaining
   * live in `Assembler`, which the XML-TSV (`XmlTsvParser`) and bracketing
   * (`BracketsParser`) readers share; each reader keeps its own span-kind
-  * switch.
+  * switch. The bracketing reader also reads its token and markup lines
+  * with this reader's line rule, `coreLine`.
   *
   * Parsing is per-document and runs inside Dataset[InputDoc].flatMap —
   * sequential within a doc (the format is inherently stateful), parallel
@@ -54,6 +55,36 @@ object SpanParser {
     case 2 => v == "--" || v == "__"
     case _ => false
   }
+
+  /** What the CoNLL core reads from a `token`, `markup` or
+    * `sentence_break` span. */
+  private[conll] sealed trait CoreLine
+  /** A `sentence_break` span, an `<s>`/`<p>` line, or a token line with
+    * nothing on it. */
+  private[conll] case object Break extends CoreLine
+  /** Other single-line markup, or a line that is all `#` comment. */
+  private[conll] case object NoRow extends CoreLine
+  /** A token row's cells, `<s>`/`<p>` tags and an inline `#…` stripped. */
+  private[conll] final case class Row(cells: Array[String]) extends CoreLine
+
+  /** The one line rule of the SpanParser and BracketsParser cores
+    * (CoNLL2RDF.java:74-75): a `markup` span breaks the sentence iff it is
+    * only `<s>`/`<p>` tags; any kind but these two is a token line. */
+  private[conll] def coreLine(kind: String, raw: String): CoreLine =
+    if (kind == "sentence_break") Break
+    else if (kind == "markup") {
+      if (SPMarkup.matcher(raw).replaceAll("").trim.isEmpty) Break else NoRow
+    } else {
+      // fast path: lines without '<' or '#' skip the regex machinery
+      val tagged = raw.indexOf('<') >= 0
+      val line = if (tagged) SPMarkup.matcher(raw).replaceAll("").trim else raw.trim
+      if (tagged && OtherMarkup.matcher(line).matches()) NoRow
+      else if (line.isEmpty) Break
+      else {
+        val row = if (line.indexOf('#') >= 0) line.replaceFirst("#.*", "").trim else line
+        if (row.isEmpty) NoRow else Row(row.split("\t", -1))
+      }
+    }
 
   /** Per-schema metadata, computed once per columns vector (hot path:
     * avoids regex + string building per cell). */
@@ -199,7 +230,6 @@ object SpanParser {
     for (span <- doc.spans.sortBy(_.offset)) {
       span.kind match {
         case "media" => // opaque payload; preserved upstream, ignored here
-        case "sentence_break" => asm.flush(Nil)
         case "comment" =>
           val m = GlobalColumns.matcher(span.text.trim)
           // the reference PEEKS for global.columns and resets the stream
@@ -209,23 +239,11 @@ object SpanParser {
           // (CoNLLRDFFormatter.findColumnNamesInRDFBuffer)
           if (m.matches()) asm.meta = new SchemaMeta(m.group(1).trim.split("\\s+").toVector)
           asm.comments += span.text.trim.replaceFirst("^#\\s?", "")
-        case "markup" =>
-          val stripped = SPMarkup.matcher(span.text).replaceAll("").trim
-          if (stripped.isEmpty) asm.flush(Nil) // <s>/<p> double as sentence breaks
-          else if (OtherMarkup.matcher(stripped).matches()) () // skip other XML
-          else () // markup with trailing text: out of scope for core TSV path
-        case _ => // "token"
-          // fast path: lines without '<' or '#' skip the regex machinery
-          val raw = span.text
-          var line =
-            if (raw.indexOf('<') >= 0) SPMarkup.matcher(raw).replaceAll("").trim
-            else raw.trim
-          if (raw.indexOf('<') >= 0 && OtherMarkup.matcher(line).matches()) ()
-          else if (line.isEmpty) asm.flush(Nil)
-          else {
-            if (line.indexOf('#') >= 0) line = line.replaceFirst("#.*", "").trim
-            if (line.nonEmpty) asm.row(line.split("\t", -1))
-          }
+        case kind => coreLine(kind, span.text) match {
+          case Break => asm.flush(Nil)
+          case Row(cells) => asm.row(cells)
+          case NoRow =>
+        }
       }
     }
     asm.flush(Nil)

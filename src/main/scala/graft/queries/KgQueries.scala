@@ -52,7 +52,8 @@ object KgQueries {
     * cascade never touches conll:WORD, so the vocab is identical and the
     * expensive cascade runs exactly once). A gazetteer of at most
     * `broadcastMax` rows fuses into the cascade's own flatMap
-    * (EntityLinker.linkUnioned), a larger one takes the salted join. */
+    * (EntityLinker.linkUnioned), a larger one takes the plain equi-join
+    * (`EntityLinker.linkJoined`) beside the cascade. */
   private def detLinked(s: SparkSession, dir: String,
       broadcastMax: Int = graft.Sizing.BroadcastRows): DataFrame = {
     import s.implicits._
@@ -121,13 +122,13 @@ object KgQueries {
       Some(KgOracle.linkSql)
     ),
     Q(
-      // The SALTED-join regime of the same link pipeline (north_rule
-      // skew handling): broadcastMax = 0 forces the explicit-salt
-      // shuffle join (deterministic per-mention salt, gazetteer
-      // exploded ×16) — and the output must be BIT-IDENTICAL to the
-      // broadcast/fused regime, so this entry shares kg_pipeline_link's
-      // oracle. The skew machinery itself is now under the hash gate,
-      // not just SkewSpec.
+      // The JOIN route of the same link pipeline (north_rule skew
+      // handling): broadcastMax = 0 takes triples ∪ the plain equi-join
+      // on the surface (EntityLinker.linkJoined), whose strategy and
+      // skew split are Catalyst's and AQE's; the name is kept from the
+      // explicitly salted join it replaced. The output must be
+      // BIT-IDENTICAL to the fused route's, so this entry shares
+      // kg_pipeline_link's oracle; SkewSpec pins the skew split.
       "kg_pipeline_link_salted",
       (s, dir) => detLinked(s, dir, broadcastMax = 0)
         .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj")),

@@ -72,14 +72,14 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.filter($"n_triples".isNull || $"n_triples" === 0).count() == 0)
   }
 
-  test("entity linking: broadcast and salted joins produce identical links") {
+  test("entity linking: broadcast and plain joins produce identical links") {
     import spark.implicits._
     val docs = DocGen.docs(spark, 10)
     val t = Pipeline.triples(Pipeline.parse(docs, DocGen.columns)).toDF().cache()
     val vocab = t.filter($"pred" === "conll:WORD").select($"obj".as("word"))
     val gaz = EntityLinker.gazetteerFromVocab(vocab).cache()
     val a = EntityLinker.linkBroadcast(t, gaz)
-    val b = EntityLinker.linkSalted(t, gaz, saltBuckets = 4)
+    val b = EntityLinker.linkJoined(t, gaz)
     assert(a.count() > 0)
     assert(a.exceptAll(b).count() == 0)
     assert(b.exceptAll(a).count() == 0)

@@ -119,6 +119,27 @@ class SpanParserSpec extends AnyFunSuite {
     }
   }
 
+  // SpanParser's line rule, which the bracketing reader shares and the
+  // XML-TSV reader matches: an inline '#' comment is cut from a token row,
+  // and an <s> line, of kind token or markup, breaks the sentence.
+  private val lineRuleCols = Seq("WORD", "POS")
+  Seq[(String, InputDoc => Seq[Sentence])](
+    "SpanParser" -> (SpanParser.parseDoc(_, lineRuleCols)),
+    "XmlTsvParser" -> (XmlTsvParser.parseDoc(_, lineRuleCols)),
+    "BracketsParser" -> (BracketsParser.parseDoc(_, lineRuleCols))
+  ).foreach { case (reader, parse) =>
+    test(s"$reader: an inline '#' comment is cut from a token row") {
+      val t = parse(doc(Seq("foo\tNN # note", ""))).flatMap(_.triples)
+      assert(t.filter(_.p == "conll:POS").map(_.o) == Seq("NN"))
+    }
+    for (kind <- Seq("token", "markup"))
+      test(s"$reader: an <s> line of kind $kind breaks the sentence") {
+        val sents = parse(doc(Seq("foo\tNN", "<s>", "bar\tVB", ""),
+          Seq("token", kind, "token", "sentence_break")))
+        assert(sents.map(_.triples.filter(_.p == "conll:WORD").map(_.o)) == Seq(Seq("foo"), Seq("bar")))
+      }
+  }
+
   test("media spans are ignored by parsing") {
     val d = InputDoc("d1", Seq(
       Span("token", "1\tx\tNOUN\t0\troot", "", 0),
