@@ -69,26 +69,36 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val Opts(input, output, cascadeName, buckets, config) = parse(args)
+    val opts = parse(args)
     // new SparkConf() reads the spark.* system properties spark-submit sets
     val spark = SparkSession.builder()
-      .config(sessionConf(new SparkConf(), s"graft-$cascadeName")).getOrCreate()
-    import spark.implicits._
+      .config(sessionConf(new SparkConf(), s"graft-${opts.cascade}")).getOrCreate()
+    try run(spark, opts) finally spark.stop()
+  }
 
+  /** Runs `opts` on `spark`. The flag path drops documents that fail UTF-8
+    * validation, as a `--config` run does ([[Pipeline.validateUtf8]]), and
+    * prints `utf8_rejected`: an alarm, since each bucket job that runs
+    * reads, and counts, every rejected document. */
+  def run(spark: SparkSession, opts: Opts): Unit = {
+    import spark.implicits._
+    val Opts(input, output, cascadeName, buckets, config) = opts
     config match {
       case Some(path) =>
         val json = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8")
         PipelineManager.run(spark, json).write.mode("overwrite").parquet(output)
       case None =>
-        val docs = if (input.startsWith("gen:"))
+        val raw = if (input.startsWith("gen:"))
           DocGen.docs(spark, input.stripPrefix("gen:").toLong)
         else spark.read.parquet(input).as[InputDoc]
+        val rejected = spark.sparkContext.longAccumulator("utf8_rejected")
+        val docs = Pipeline.validateUtf8(raw, rejected)
         val cascade = PipelineManager.cascade(cascadeName)
         val metrics = Pipeline.newMetrics(spark, cascade)
         CheckpointRunner.run(spark, docs, DocGen.columns, cascade, output, buckets, Some(metrics))
         metrics.toDf(spark).write.mode("overwrite").parquet(s"$output/_metrics")
-        CheckpointRunner.lineage(spark, output).show(buckets, truncate = false)
+        CheckpointRunner.lineage(spark, output).drop("layout").show(buckets, truncate = false)
+        println(s"utf8_rejected: ${rejected.value}")
     }
-    spark.stop()
   }
 }

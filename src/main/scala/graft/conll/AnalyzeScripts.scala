@@ -16,7 +16,7 @@ object AnalyzeScripts {
 
   /** remove-ID.sparql / remove-IGNORE.sparql:1-7 — drop one column. */
   def removeColumn(col: String): Script = Script(s"remove-$col", Seq(
-    stage { (g, out) =>
+    { (g, out) =>
       g.foreachPair(conll(col))((s, o, u) => out.del(s, conll(col), o, u))
     }
   ))
@@ -30,13 +30,12 @@ object AnalyzeScripts {
   val uposToPossynt: Script = {
     def classify(pat: String, exact: Boolean, values: Seq[String], guard: Boolean): Stage = {
       val matches = if (exact) null else rex(pat)
-      stage { (g, out) =>
+      (g, out) =>
         g.foreachPair(UPOS) { (w, upos, _) =>
           if ((!guard || !g.has(w, PS_UPOS)) &&
               (if (exact) upos == pat else matches(upos)))
             values.foreach(v => out.insLit(w, PS_UPOS, v))
         }
-      }
     }
     Script("UPOS-to-POSsynt", Seq(
       classify("NOUN|PROPN|PRON", exact = false, Seq("N"), guard = false),
@@ -58,11 +57,10 @@ object AnalyzeScripts {
     // `pat`, paired with each of its HEADs `h`
     def edgeHead(pat: String)(f: (SentGraph, Out, String, String) => Unit): Stage = {
       val matches = rex(pat)
-      stage { (g, out) =>
+      (g, out) =>
         g.foreachPair(EDGE) { (w, edge, _) =>
           if (matches(edge)) g.foreachObject(w, HEAD)(h => f(g, out, w, h))
         }
-      }
     }
     // common INSERT shape: word gets wv (if set), every HEAD gets hv (if set)
     def edgeRule(pat: String, wv: Option[String], hv: Option[String]): Stage =
@@ -84,7 +82,7 @@ object AnalyzeScripts {
         g.foreachObject(h, PS_UD) { p => out.insLit(w, PS_UD, p); out.insLit(h, PS_UD, p) }
     }
     val rootRe = rex("^(root)")
-    val root: Stage = stage { (g, out) =>
+    val root: Stage = { (g, out) =>
       g.foreachPair(EDGE) { (w, edge, _) =>
         if (g.has(w, HEAD) && !g.has(w, PS_UD) && rootRe(edge))
           out.insLit(w, PS_UD, "V")
@@ -111,7 +109,7 @@ object AnalyzeScripts {
   val consolidatePossynt: Script = {
     // (1a)/(1b): where a POSsynt_UD value matches POSsynt_UPOS, drop the
     // word's other values of `p`
-    def pruneAlternatives(p: String): Stage = stage { (g, out) =>
+    def pruneAlternatives(p: String): Stage = { (g, out) =>
       g.foreachPair(PS_UD) { (w, v, _) =>
         if (g.has(w, PS_UPOS, v))
           g.foreachObject(w, p) { other =>
@@ -123,13 +121,13 @@ object AnalyzeScripts {
       pruneAlternatives(PS_UD),   // (1a)
       pruneAlternatives(PS_UPOS), // (1b) symmetric
       // (2a) POSsynt_match "1" where a shared value exists
-      stage { (g, out) =>
+      { (g, out) =>
         g.foreachPair(PS_UD) { (w, v, _) =>
           if (g.has(w, PS_UPOS, v)) out.insLit(w, conll("POSsynt_match"), "1")
         }
       },
       // (2b) default "0" for untouched words
-      stage { (g, out) =>
+      { (g, out) =>
         for (w <- g.words if !g.has(w, conll("POSsynt_match")))
           out.insLit(w, conll("POSsynt_match"), "0")
       }

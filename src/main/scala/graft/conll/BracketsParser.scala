@@ -21,7 +21,8 @@ import scala.collection.mutable
   *    cells blanked (:117-121): the sentence assembler
   *    (`SpanParser.Assembler`) numbers sentences and tokens, applies the
   *    ID-cell rule and builds each sentence's CoNLL triples, exactly as
-  *    for plain TSV; this reader adds the bracket tree triples;
+  *    for plain TSV; this reader adds the bracket tree triples to the
+  *    same sentence graph (`SentGraph`), column by column;
   *  - lines are read by SpanParser's line rule (`SpanParser.coreLine`):
   *    an `<s>`/`<p>` line breaks the sentence, other single-line markup
   *    is skipped, and an inline `#…` comment is cut from a token row
@@ -68,27 +69,28 @@ object BracketsParser {
     lines(first) + "_" + lines(last).replaceAll(".*:", "")
   }
 
-  /** getTTL (CoNLLBrackets2RDF.java:163-198); URI minting selects the
-    * default counter strategy or span URIs. */
+  /** getTTL (CoNLLBrackets2RDF.java:163-198), adding one column's tree
+    * to the sentence graph `g`; URI minting selects the default counter
+    * strategy or span URIs. */
   private def treeTriples(
+      g: SentGraph,
       entries: Seq[String],
       col: String,
       counter: mutable.Map[String, Int],
       spanUris: Boolean
-  ): Seq[Triple] = {
+  ): Unit = {
     // re-split at parens: each '(' starts a line, each ')' ends one
     val lines = entries.mkString("\n")
       .replaceAll("\\(", "\n(").replaceAll("\\)", ")\n")
       .split("\n").map(_.trim).filter(_.nonEmpty)
-    val out = mutable.LinkedHashSet[Triple]()
     val nodes = mutable.Stack[String]()
     var lastSibling: String = null
     for (i <- lines.indices) {
       val n = lines(i)
       if (n.startsWith(":")) {
         if (nodes.nonEmpty) {
-          if (lastSibling != null) out += Triple(lastSibling, "powla:next", n, oUri = true)
-          out += Triple(n, "powla:hasParent", nodes.top, oUri = true)
+          if (lastSibling != null) g.add(lastSibling, "powla:next", n, oUri = true)
+          g.add(n, "powla:hasParent", nodes.top, oUri = true)
           lastSibling = n
         }
       } else if (n.startsWith("(")) {
@@ -101,18 +103,17 @@ object BracketsParser {
           }
         val v = n.replaceFirst("^\\(", "").trim
         if (lastSibling != null && nodes.nonEmpty)
-          out += Triple(lastSibling, "powla:next", uri, oUri = true)
-        out += Triple(uri, "rdf:type", "powla:Node", oUri = true)
-        out += Triple(uri, "rdf:type", s"conll:$col", oUri = true)
-        if (nodes.nonEmpty) out += Triple(uri, "powla:hasParent", nodes.top, oUri = true)
-        if (v.nonEmpty) out += Triple(uri, "rdf:value", SpanParser.escapeLit(v), oUri = false)
+          g.add(lastSibling, "powla:next", uri, oUri = true)
+        g.add(uri, "rdf:type", "powla:Node", oUri = true)
+        g.add(uri, "rdf:type", s"conll:$col", oUri = true)
+        if (nodes.nonEmpty) g.add(uri, "powla:hasParent", nodes.top, oUri = true)
+        if (v.nonEmpty) g.add(uri, "rdf:value", SpanParser.escapeLit(v), oUri = false)
         nodes.push(uri)
         lastSibling = null
       } else if (n.endsWith(")")) {
         lastSibling = if (nodes.nonEmpty) nodes.pop() else null
       }
     }
-    out.toSeq
   }
 
   def parseDoc(doc: InputDoc, cols: Seq[String], spanUris: Boolean = false): Seq[Sentence] = {
@@ -129,8 +130,8 @@ object BracketsParser {
     val uriCounter = mutable.HashMap[String, Int]()
 
     def colLabel(i: Int): String = if (i < cols.length) cols(i) else cols.last
-    def trees: Seq[Triple] = colEntries.toSeq.sortBy(_._1).flatMap { case (i, entries) =>
-      treeTriples(entries.toSeq, colLabel(i), uriCounter, spanUris)
+    def trees(g: SentGraph): Unit = colEntries.toSeq.sortBy(_._1).foreach { case (i, entries) =>
+      treeTriples(g, entries.toSeq, colLabel(i), uriCounter, spanUris)
     }
 
     lines.foreach {

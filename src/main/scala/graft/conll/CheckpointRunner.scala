@@ -2,7 +2,9 @@ package graft.conll
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import Rules.Script
 
 /** Checkpoint-resumable pipeline execution with per-partition lineage and
@@ -12,9 +14,12 @@ import Rules.Script
   * Work is split into `nBuckets` doc-hash buckets; each bucket is one
   * restartable unit written to `outDir/bucket=<b>/` with a manifest marker
   * `outDir/_manifest/bucket-<b>.json` recording lineage (doc range, rows,
-  * wall ms). On restart, completed buckets are skipped. Marker files are
-  * written AFTER the bucket's parquet commit, so a crash between the two
-  * re-runs the bucket — output is overwrite-idempotent, never partial.
+  * wall ms) and the run's layout (bucket count, columns, each cascade
+  * script and its budget). On restart, completed buckets are skipped; a
+  * run whose layout differs from a marker's fails naming both. Marker
+  * files are written AFTER the bucket's parquet commit, so a crash
+  * between the two re-runs the bucket — output is overwrite-idempotent,
+  * never partial.
   * Markers go through `outDir`'s own Hadoop FileSystem, as the parquet
   * does, so they land beside the buckets on any scheme.
   *
@@ -25,9 +30,18 @@ import Rules.Script
   */
 object CheckpointRunner {
 
-  final case class BucketLineage(
-      bucket: Int, doc_min: String, doc_max: String,
-      rows: Long, wall_ms: Long, status: String)
+  private val Json = new ObjectMapper()
+
+  /** The layout every marker of one output directory must share. */
+  private def layout(nBuckets: Int, cols: Seq[String], scripts: Seq[(Script, Int)]): ObjectNode = {
+    val l = Json.createObjectNode().put("buckets", nBuckets)
+    val columns = l.putArray("columns")
+    cols.foreach(c => columns.add(c))
+    val cascade = l.putArray("cascade")
+    for ((script, budget) <- scripts)
+      cascade.addObject().put("script", script.name).put("budget", budget)
+    l
+  }
 
   def run(
       spark: SparkSession,
@@ -41,9 +55,18 @@ object CheckpointRunner {
     import spark.implicits._
     val (fs, manifestDir) = manifest(spark, outDir)
     fs.mkdirs(manifestDir)
+    val runLayout = layout(nBuckets, cols, scripts)
+    val done = markers(fs, manifestDir).map { case (path, marker) =>
+      val l = Json.readTree(marker).get("layout")
+      if (l != runLayout)
+        throw new IllegalStateException(
+          s"$outDir holds buckets of another layout: marker $path has " +
+            s"${Option(l).getOrElse("no layout")}, this run has $runLayout; " +
+            "resume with the marker's layout or write to an empty directory")
+      path.getName
+    }.toSet
 
     def markerPath(b: Int) = new Path(manifestDir, s"bucket-$b.json")
-    def isDone(b: Int) = fs.exists(markerPath(b))
 
     def runBucket(b: Int): Unit = {
       val t0 = System.nanoTime()
@@ -55,13 +78,13 @@ object CheckpointRunner {
         .write.mode("overwrite").parquet(s"$outDir/bucket=$b")
       val st = stats.get
       def docId(k: String) = Option(st(k)).fold("")(_.toString)
-      val lin = BucketLineage(b, docId("mn"), docId("mx"),
-        st("n").asInstanceOf[Long], (System.nanoTime() - t0) / 1000000L, "done")
-      val json =
-        s"""{"bucket":${lin.bucket},"doc_min":"${lin.doc_min}","doc_max":"${lin.doc_max}",""" +
-          s""""rows":${lin.rows},"wall_ms":${lin.wall_ms},"status":"${lin.status}"}"""
+      val marker = Json.createObjectNode().put("bucket", b)
+        .put("doc_min", docId("mn")).put("doc_max", docId("mx"))
+        .put("rows", st("n").asInstanceOf[Long])
+        .put("wall_ms", (System.nanoTime() - t0) / 1000000L).put("status", "done")
+      marker.set[ObjectNode]("layout", runLayout)
       val os = fs.create(markerPath(b), true)
-      try os.write(json.getBytes("UTF-8")) finally os.close()
+      try os.write(Json.writeValueAsBytes(marker)) finally os.close()
     }
     // Overlap the independent bucket jobs (r9, guide §2.6): buckets are
     // disjoint filters writing disjoint directories, and Spark's
@@ -73,7 +96,7 @@ object CheckpointRunner {
     // Marker semantics are unchanged (each bucket's marker is written by
     // its own task AFTER its parquet commit; a crash still re-runs
     // exactly the uncommitted buckets).
-    val todo = (0 until nBuckets).filterNot(isDone)
+    val todo = (0 until nBuckets).filterNot(b => done(markerPath(b).getName))
     if (todo.nonEmpty) {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(3, todo.size))
@@ -102,14 +125,17 @@ object CheckpointRunner {
   def lineage(spark: SparkSession, outDir: String): DataFrame = {
     import spark.implicits._
     val (fs, dir) = manifest(spark, outDir)
-    val lines = fs.listStatus(dir).toSeq.map(_.getPath)
+    spark.read.json(spark.createDataset(markers(fs, dir).map(_._2)))
+  }
+
+  /** Every marker in `dir`, as (path, JSON text). */
+  private def markers(fs: FileSystem, dir: Path): Seq[(Path, String)] =
+    fs.listStatus(dir).toSeq.map(_.getPath)
       .filter(_.getName.matches("bucket-\\d+\\.json"))
       .map { p =>
         val in = fs.open(p)
-        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+        try (p, new String(in.readAllBytes(), "UTF-8")) finally in.close()
       }
-    spark.read.json(spark.createDataset(lines))
-  }
 
   /** `outDir/_manifest` with the FileSystem of `outDir`'s scheme. */
   private def manifest(spark: SparkSession, outDir: String) = {

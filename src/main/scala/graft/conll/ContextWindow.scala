@@ -29,14 +29,11 @@ object ContextWindow {
   ): Dataset[SentenceWithContext] = {
     import sents.sparkSession.implicits._
     val w = Window.partitionBy($"docId").orderBy($"sent")
+    val sentence = struct($"docId", $"sent", $"triples")
     sents
-      .withColumn("lb", collect_list(struct($"docId", $"sent", $"comments", $"triples"))
-        .over(w.rowsBetween(-lookback.toLong, -1)))
-      .withColumn("la", collect_list(struct($"docId", $"sent", $"comments", $"triples"))
-        .over(w.rowsBetween(1, lookahead.toLong)))
-      .select(
-        struct($"docId", $"sent", $"comments", $"triples").as("sentence"),
-        $"lb".as("lookback"), $"la".as("lookahead"))
+      .withColumn("lb", collect_list(sentence).over(w.rowsBetween(-lookback.toLong, -1)))
+      .withColumn("la", collect_list(sentence).over(w.rowsBetween(1, lookahead.toLong)))
+      .select(sentence.as("sentence"), $"lb".as("lookback"), $"la".as("lookahead"))
       .as[SentenceWithContext]
   }
 
@@ -76,6 +73,6 @@ object ContextWindow {
       }.find(_ => true)
       subject.foreach(a => g.add(Triple(firstWord.get, pred, a, oUri = false)))
     }
-    SentGraph.toSentence(c.sentence.docId, c.sentence.sent, c.sentence.comments, g)
+    Sentence(c.sentence.docId, c.sentence.sent, g.all)
   }
 }

@@ -12,7 +12,7 @@ object LinkScripts {
     * concept reachable from its UPOS tag's annotation-model class. */
   def linkUposSimple(tagToConcepts: Map[String, Seq[String]]): Script =
     Script("link-UPOS-simple", Seq(
-      stage { (g, out) =>
+      { (g, out) =>
         g.foreachPair(conll("UPOS")) { (w, pos, _) =>
           tagToConcepts.getOrElse(pos, Seq.empty).foreach(c => out.insUri(w, A, c))
         }
@@ -25,7 +25,7 @@ object LinkScripts {
     * driver-precompiled to Ontology.PennLink entries. */
   def linkPennPosFull(links: Seq[Ontology.PennLink]): Script =
     Script("link-penn-POS", Seq(
-      stage { (g, out) =>
+      { (g, out) =>
         for ((w, pos, _) <- g.pairs(conll("POS")); link <- links if link.matches(pos)) {
           for ((p, o, isUri) <- link.wordInserts)
             if (isUri) out.insUri(w, p, o) else out.insLit(w, p, o)
@@ -38,7 +38,7 @@ object LinkScripts {
     * (subClassOf|equivalentClass)+ within the reference namespace. */
   def inferOliaConcepts(supers: Map[String, Seq[String]]): Script =
     Script("infer-olia-concepts", Seq(
-      stage { (g, out) =>
+      { (g, out) =>
         g.foreachPair(A) { (w, c, _) =>
           if (c.startsWith("olia:"))
             supers.getOrElse(c, Seq.empty).foreach(sup => out.insUri(w, A, sup))
@@ -56,7 +56,7 @@ object LinkScripts {
     def annotationNs(uri: String): Boolean =
       uri.startsWith("ud:") || uri.startsWith("penn:") || uri.startsWith("oliasys:")
     Script("remove-annotation-model", Seq(
-      stage { (g, out) =>
+      { (g, out) =>
         g.foreachTriple { (s, p, o, u) =>
           if (annotationNs(s) || annotationNs(p) || (u && annotationNs(o)))
             out.del(s, p, o, u)

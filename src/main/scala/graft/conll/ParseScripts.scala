@@ -55,14 +55,14 @@ object ParseScripts {
 
   /** parse/initialize-SHIFT.sparql — nextWord → SHIFT. */
   val initializeShift: Script = Script("initialize-SHIFT", Seq(
-    stage { (g, out) =>
+    { (g, out) =>
       for ((a, b, _) <- g.pairs(NEXT_WORD)) out.insUri(a, SHIFT, b)
     }
   ))
 
   /** parse/REDUCE-to-HEAD.sparql — replace REDUCE by HEAD. */
   val reduceToHead: Script = Script("REDUCE-to-HEAD", Seq(
-    stage { (g, out) =>
+    { (g, out) =>
       for ((a, b, _) <- g.pairs(REDUCE); h <- g.objects(a, HEAD)) {
         out.del(a, HEAD, h)
         out.del(a, REDUCE, b)
@@ -74,7 +74,7 @@ object ParseScripts {
   /** REDUCE-english-1.sparql — 1st generation: MWEs, adjective phrases. */
   val reduceEnglish1: Script = Script("REDUCE-english-1", Seq(
     // (0a) compounds: resolve hyphens
-    stage { (g, out) =>
+    { (g, out) =>
       for (hyphen <- g.subjects(POS, "HYPH");
            dep <- g.subjects(SHIFT, hyphen);
            head <- g.objects(hyphen, SHIFT);
@@ -90,7 +90,7 @@ object ParseScripts {
       }
     },
     // (1) noun-noun compounds: right-most noun becomes head
-    stage { (g, out) =>
+    { (g, out) =>
       for (dep <- g.subjects(A, "olia:Noun");
            head <- g.objects(dep, SHIFT) if isA(g, head, "olia:Noun");
            next <- opt(g.objects(head, SHIFT));
@@ -99,7 +99,7 @@ object ParseScripts {
         reduceLeft(out, last, dep, head, "nmod")
     },
     // (2) adverb-adjective: adjective heads
-    stage { (g, out) =>
+    { (g, out) =>
       for (dep <- g.subjects(A, "olia:Adverb");
            head <- g.objects(dep, SHIFT)
            if isA(g, head, "olia:Adjective") || isA(g, head, "olia:Gerund");
@@ -121,7 +121,7 @@ object ParseScripts {
   val reduceEnglish2: Script = {
     // shared shape of (3)/(4)/(5): dep-class → noun head, EDGE label
     def npRule(depClasses: Seq[String], edge: String, lastGuard: Option[String]): Stage =
-      stage { (g, out) =>
+      { (g, out) =>
         for (dep <- depClasses.flatMap(c => g.subjects(A, c)).distinct;
              head <- g.objects(dep, SHIFT) if isA(g, head, "olia:Noun");
              last <- opt(g.subjects(SHIFT, dep));
@@ -135,7 +135,7 @@ object ParseScripts {
       npRule(Seq("olia:Determiner"), "det", None),                               // (4)
       npRule(Seq("olia:CardinalNumber"), "num", None),                           // (5)
       // (6) preposition - (pro)noun
-      stage { (g, out) =>
+      { (g, out) =>
         for (head <- g.subjects(A, "olia:Preposition");
              dep <- g.objects(head, SHIFT);
              next <- opt(g.objects(dep, SHIFT))
@@ -149,7 +149,7 @@ object ParseScripts {
   /** REDUCE-english-3.sparql — 3rd generation: clausal arguments. */
   val reduceEnglish3: Script = Script("REDUCE-english-3", Seq(
     // (7) attach "of"-PPs to nominal matrix
-    stage { (g, out) =>
+    { (g, out) =>
       val guard = npClasses :+ "olia:Pronoun"
       for (head <- g.subjects(A, "olia:Noun")) {
         // UNION branch A: head is an NP, dep directly shifted
@@ -166,7 +166,7 @@ object ParseScripts {
       }
     },
     // (8) subject: NP preceding a finite verb
-    stage { (g, out) =>
+    { (g, out) =>
       val guard = npClasses :+ "olia:Pronoun"
       for (vfin <- g.subjects(A, "olia:FiniteVerb");
            sbj <- g.subjects(SHIFT, vfin)
@@ -176,7 +176,7 @@ object ParseScripts {
         reduceLeft(out, last, sbj, vfin, "sbj")
     },
     // (9) object: NP following a finite verb
-    stage { (g, out) =>
+    { (g, out) =>
       for (vfin <- g.subjects(A, "olia:FiniteVerb");
            obj <- g.objects(vfin, SHIFT);
            next <- opt(g.objects(obj, SHIFT))
@@ -185,7 +185,7 @@ object ParseScripts {
         reduceRight(out, vfin, obj, next, "obj")
     },
     // (10) postverbal adverbials (ADVs / completed PPs)
-    stage { (g, out) =>
+    { (g, out) =>
       for (vfin <- g.subjects(A, "olia:FiniteVerb");
            adv <- g.objects(vfin, SHIFT);
            next <- opt(g.objects(adv, SHIFT))) {
@@ -197,7 +197,7 @@ object ParseScripts {
       }
     },
     // (11) preverbal adverbials
-    stage { (g, out) =>
+    { (g, out) =>
       for (vfin <- g.subjects(A, "olia:FiniteVerb");
            adv <- g.subjects(SHIFT, vfin);
            last <- opt(g.subjects(SHIFT, adv))) {
@@ -212,14 +212,14 @@ object ParseScripts {
   /** REDUCE-english-4.sparql — 4th generation: multi-clausal structures. */
   val reduceEnglish4: Script = Script("REDUCE-english-4", Seq(
     // (12) "to" + verb
-    stage { (g, out) =>
+    { (g, out) =>
       for (to <- g.subjects(LEMMA, "to") if g.subjects(REDUCE, to).isEmpty;
            verb <- g.objects(to, SHIFT) if isA(g, verb, "olia:Verb");
            next <- opt(g.objects(verb, SHIFT)))
         reduceRight(out, to, verb, next, "cls")
     },
     // (13) attach "to"-clauses to the preceding finite verb
-    stage { (g, out) =>
+    { (g, out) =>
       for (verb <- g.subjects(EDGE, "cls");
            to <- g.objects(verb, REDUCE) if g.has(to, LEMMA, "to");
            matrixv <- g.subjects(SHIFT, to) if isA(g, matrixv, "olia:FiniteVerb");

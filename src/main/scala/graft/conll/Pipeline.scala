@@ -143,7 +143,7 @@ object Pipeline {
           c
         }
         last = n
-        Sentence(docId, n, Seq.empty, triples)
+        Sentence(docId, n, triples)
       }
     }
   }
@@ -182,7 +182,7 @@ object Pipeline {
     sents.map { sentence =>
       val g = SentGraph(sentence)
       runCascade(g, scripts, metrics)
-      SentGraph.toSentence(sentence.docId, sentence.sent, sentence.comments, g)
+      Sentence(sentence.docId, sentence.sent, g.all)
     }
   }
 

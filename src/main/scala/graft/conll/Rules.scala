@@ -18,8 +18,10 @@ object Rules {
 
   val MAXITERATE = 999
 
-  /** A statement: graph → (deletes, inserts), computed without mutating. */
-  type Stage = SentGraph => (Seq[Triple], Seq[Triple])
+  /** A statement: it reads the graph and collects its deletes and inserts
+    * into the `Out`, without mutating the graph; the script's fixpoint
+    * loop applies them after the statement. */
+  type Stage = (SentGraph, Out) => Unit
 
   final case class Script(name: String, stages: Seq[Stage]) {
 
@@ -42,13 +44,15 @@ object Rules {
       dumps.toSeq
     }
 
-    /** The fixpoint loop: each statement applies its deletes, then its
-      * inserts; `observe(iteration, statement)` (both 1-based) sees
-      * every statement that changed `g`. Stops after an iteration that
-      * changed nothing or at the cap.
+    /** The fixpoint loop: one `Out` collects each statement's deletes and
+      * inserts; after the statement `g` takes the deletes, then the
+      * inserts, and the buffers are cleared. `observe(iteration,
+      * statement)` (both 1-based) sees every statement that changed `g`.
+      * Stops after an iteration that changed nothing or at the cap.
       * @return iterations executed. */
     private def fixpoint(g: SentGraph, maxIter: Int)(observe: (Int, Int) => Unit): Int = {
       val cap = math.min(math.max(maxIter, 1), MAXITERATE)
+      val out = new Out
       var it = 0
       var changed = true
       while (changed && it < cap) {
@@ -58,9 +62,10 @@ object Rules {
         val todo = stages.iterator
         while (todo.hasNext) {
           val vs = g.version
-          val (dels, ins) = todo.next()(g)
-          dels.foreach(g.remove)
-          ins.foreach(g.add)
+          todo.next()(g, out)
+          out.dels.foreach(g.remove)
+          out.ins.foreach(g.add)
+          out.dels.clear(); out.ins.clear()
           st += 1
           if (g.version != vs) observe(it, st)
         }
@@ -141,7 +146,8 @@ object Rules {
   val WORD_TYPE = "nif:Word"
   def conll(c: String) = s"conll:$c"
 
-  /** Collector DSL: stages append into these buffers. */
+  /** Collector DSL: a statement appends into these buffers, which its
+    * script's fixpoint loop applies and clears. */
   final class Out {
     val dels = mutable.ArrayBuffer[Triple]()
     val ins = mutable.ArrayBuffer[Triple]()
@@ -149,12 +155,5 @@ object Rules {
       dels += Triple(s, p, o, uri)
     def insUri(s: String, p: String, o: String): Unit = ins += Triple(s, p, o, oUri = true)
     def insLit(s: String, p: String, o: String): Unit = ins += Triple(s, p, o, oUri = false)
-    def result: (Seq[Triple], Seq[Triple]) = (dels.toSeq, ins.toSeq)
-  }
-
-  def stage(f: (SentGraph, Out) => Unit): Stage = { g =>
-    val out = new Out
-    f(g, out)
-    out.result
   }
 }

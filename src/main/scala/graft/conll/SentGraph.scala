@@ -2,8 +2,9 @@ package graft.conll
 
 import scala.collection.mutable
 
-/** Mutable per-sentence triple store — the executor state for one
-  * sentence's rewrite cascade.
+/** Mutable per-sentence triple store — the one triple set of a sentence:
+  * the readers build it (`SpanParser.Assembler`, `TtlParser.parseChunk`),
+  * and it is the executor state of the sentence's rewrite cascade.
   *
   * Semantics mirror a Jena Model under SPARQL Update
   * (reference: CoNLLRDFUpdater.executeUpdates, CoNLLRDFUpdater.java:284-398):
@@ -64,16 +65,19 @@ final class SentGraph private (init: Iterable[Triple]) {
   private var mutations = 0L
   private var total = 0
 
-  init.foreach(add)
+  init.foreach(t => add(t))
   mutations = 0L
 
   def version: Long = mutations
 
-  def add(t: Triple): Boolean = {
-    val b = buckets.getOrElseUpdate(t.p, new Bucket)
-    if (b.indexOf(t.s, t.o, t.oUri) >= 0) false
+  def add(t: Triple): Boolean = add(t.s, t.p, t.o, t.oUri)
+
+  /** [[add]] without a `Triple`: the readers' form. */
+  def add(s: String, p: String, o: String, oUri: Boolean): Boolean = {
+    val b = buckets.getOrElseUpdate(p, new Bucket)
+    if (b.indexOf(s, o, oUri) >= 0) false
     else {
-      b.append(t.s, t.o, t.oUri)
+      b.append(s, o, oUri)
       total += 1; mutations += 1
       true
     }
@@ -245,7 +249,4 @@ final class SentGraph private (init: Iterable[Triple]) {
 object SentGraph {
   def apply(sentence: Sentence): SentGraph = new SentGraph(sentence.triples)
   def empty: SentGraph = new SentGraph(Nil)
-
-  def toSentence(docId: String, sent: Long, comments: Seq[String], g: SentGraph): Sentence =
-    Sentence(docId, sent, comments, g.all)
 }

@@ -31,7 +31,9 @@ import java.util.regex.Pattern
   * live in `Assembler`, which the XML-TSV (`XmlTsvParser`) and bracketing
   * (`BracketsParser`) readers share; each reader keeps its own span-kind
   * switch. The bracketing reader also reads its token and markup lines
-  * with this reader's line rule, `coreLine`.
+  * with this reader's line rule, `coreLine`. Each sentence is built in
+  * one `SentGraph`, the graph its rewrite cascade starts from, and is
+  * emitted as that graph's snapshot.
   *
   * Parsing is per-document and runs inside Dataset[InputDoc].flatMap —
   * sequential within a doc (the format is inherently stateful), parallel
@@ -103,77 +105,76 @@ object SpanParser {
     val idCol: Int = cs.indexWhere(_.equalsIgnoreCase("ID"))
   }
 
-  /** One sentence's token rows `(id, cells)` → triple graph (the S2 core,
-    * shared with the XML-TSV and bracketing sources through `Assembler`). */
+  /** One sentence's token rows `(id, cells)` → its CoNLL triples, added
+    * to `g` (the S2 core, shared with the XML-TSV and bracketing sources
+    * through `Assembler`). */
   private def buildSentence(
-      docId: String,
+      g: SentGraph,
       sent: Long,
       rows: Iterable[(String, Array[String])],
-      comments: Seq[String],
+      comments: Iterable[String],
       meta: SchemaMeta,
       linkPrev: Boolean
-  ): Sentence = {
+  ): Unit = {
     val cs = meta.cs
     val hasHead = meta.hasHead
     val hasArgs = meta.hasArgs
     val argBase = meta.argBase
     val predCol = meta.predCol
 
-    val g = mutable.LinkedHashSet[Triple]()
     val sentNode = s":s${sent}_0"
     if (linkPrev)
-      g += Triple(s":s${sent - 1}_0", "nif:nextSentence", sentNode, oUri = true)
-    g += Triple(sentNode, "rdf:type", "nif:Sentence", oUri = true)
+      g.add(s":s${sent - 1}_0", "nif:nextSentence", sentNode, oUri = true)
+    g.add(sentNode, "rdf:type", "nif:Sentence", oUri = true)
 
     // SRL: the i-th ARGs column refers to the i-th predicate-marked row.
     val predicates = mutable.ArrayBuffer[String]()
     val argTriples = mutable.ArrayBuffer[(Int, String, String)]() // (predIdx, role, wordUri)
-    val argProps = mutable.LinkedHashSet[String]()
 
     var prevUri: String = null
     for ((idString, cells) <- rows) {
       val uri = s":s${sent}_$idString"
       if (prevUri != null)
-        g += Triple(prevUri, "nif:nextWord", uri, oUri = true)
+        g.add(prevUri, "nif:nextWord", uri, oUri = true)
       prevUri = uri
-      g += Triple(uri, "rdf:type", "nif:Word", oUri = true)
+      g.add(uri, "rdf:type", "nif:Word", oUri = true)
       var i = 0
       while (i < cells.length) {
         val v = cells(i).trim
         if (!isEmptyCell(v)) {
           if (i < cs.length && meta.isHead(i)) {
-            g += Triple(uri, meta.colPred(i), s":s${sent}_$v", oUri = true)
+            g.add(uri, meta.colPred(i), s":s${sent}_$v", oUri = true)
           } else if (i < cs.length - 1 || (i == cs.length - 1 && !hasArgs)) {
             if (i < cs.length)
-              g += Triple(uri, meta.colPred(i), escapeLit(v), oUri = false)
+              g.add(uri, meta.colPred(i), escapeLit(v), oUri = false)
           } else if (hasArgs) {
             // i-th physical ARGs column (may overflow declared schema)
             argTriples += ((i + 1 - cs.length, v, uri))
-            argProps += v
           }
           if (predCol >= 0 && i == predCol) predicates += uri
         }
         i += 1
       }
       if (!hasHead)
-        g += Triple(uri, "conll:HEAD", sentNode, oUri = true)
+        g.add(uri, "conll:HEAD", sentNode, oUri = true)
     }
     for ((pi, role, wordUri) <- argTriples; if pi >= 0 && pi < predicates.length)
-      g += Triple(predicates(pi), s"conll:$role", wordUri, oUri = true)
-    for (role <- argProps)
-      g += Triple(s"conll:$role", "rdfs:subPropertyOf", s"conll:$argBase", oUri = true)
+      g.add(predicates(pi), s"conll:$role", wordUri, oUri = true)
+    // one axiom per role, in order of first use: the graph drops repeats
+    for ((_, role, _) <- argTriples)
+      g.add(s"conll:$role", "rdfs:subPropertyOf", s"conll:$argBase", oUri = true)
 
     if (comments.nonEmpty)
-      g += Triple(sentNode, "rdfs:comment", escapeLit(comments.mkString("\n")), oUri = false)
-
-    Sentence(docId, sent, comments, g.toSeq)
+      g.add(sentNode, "rdfs:comment", escapeLit(comments.mkString("\n")), oUri = false)
   }
 
   /** One document's sentence assembly: the sentence number (sentences
     * emitted + 1), the positional token number (pending rows + 1), the
     * pending rows and comments, the ID-cell rule and `nif:nextSentence`
-    * chaining. A reader resets its own per-sentence tree state when
-    * `flush` reports an emitted sentence. */
+    * chaining. Each emitted sentence is built in one [[SentGraph]], the
+    * graph its rewrite cascade starts from: first the CoNLL triples, then
+    * the reader's tree triples. A reader resets its own per-sentence tree
+    * state when `flush` reports an emitted sentence. */
   private[conll] final class Assembler(docId: String, cols: Seq[String]) {
     /** Replaced mid-document by a `# global.columns = ...` comment. */
     var meta = new SchemaMeta(cols.toVector)
@@ -205,13 +206,15 @@ object SpanParser {
       s":s${sent}_$id"
     }
 
-    /** Emits the pending sentence, its triples followed by `extra`, if any
-      * row is pending; `extra` is evaluated only then. Returns whether a
-      * sentence was emitted (pending comments carry over otherwise). */
-    def flush(extra: => Seq[Triple]): Boolean = rows.nonEmpty && {
-      val s = buildSentence(docId, sent, rows, comments.toSeq, meta, linkPrev = sent > 1L)
-      val x = extra
-      out += (if (x.isEmpty) s else s.copy(triples = s.triples ++ x))
+    /** Emits the pending sentence, if any row is pending: its graph gets
+      * the CoNLL triples, then `tree` adds the reader's own; `tree` runs
+      * only then. Returns whether a sentence was emitted (pending comments
+      * carry over otherwise). */
+    def flush(tree: SentGraph => Unit): Boolean = rows.nonEmpty && {
+      val g = SentGraph.empty
+      buildSentence(g, sent, rows, comments, meta, linkPrev = sent > 1L)
+      tree(g)
+      out += Sentence(docId, sent, g.all)
       rows.clear()
       comments.clear()
       true
@@ -240,13 +243,13 @@ object SpanParser {
           if (m.matches()) asm.meta = new SchemaMeta(m.group(1).trim.split("\\s+").toVector)
           asm.comments += span.text.trim.replaceFirst("^#\\s?", "")
         case kind => coreLine(kind, span.text) match {
-          case Break => asm.flush(Nil)
+          case Break => asm.flush(_ => ())
           case Row(cells) => asm.row(cells)
           case NoRow =>
         }
       }
     }
-    asm.flush(Nil)
+    asm.flush(_ => ())
     asm.sentences
   }
 }

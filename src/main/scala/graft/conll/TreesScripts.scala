@@ -37,7 +37,7 @@ object TreesScripts {
 
   /** trees/xAttributes2value.sparql — fold x:* attributes into rdf:value. */
   val xAttributes2value: Script = Script("xAttributes2value", Seq(
-    stage { (g, out) =>
+    { (g, out) =>
       for (x <- g.subjects(A, "powla:Node")) {
         val atts = g.all.filter(t => t.s == x && t.p.startsWith("x:"))
           .map(t => s"""${t.p.stripPrefix("x:")}="${t.o}"""")
@@ -62,7 +62,7 @@ object TreesScripts {
     * type words with conll:WORD, as the reference source is written). */
   val emptyNode2Word: Script = Script("emptyNode2Word", Seq(
     // (1) childless powla:Node → empty nif:Word child
-    stage { (g, out) =>
+    { (g, out) =>
       for (node <- g.subjects(A, "powla:Node") if g.subjects(HAS_PARENT, node).isEmpty) {
         val empty = s"${node}_word"
         out.insUri(empty, A, "nif:Word")
@@ -71,7 +71,7 @@ object TreesScripts {
       }
     },
     // (2) splice empties between last and next
-    stage { (g, out) =>
+    { (g, out) =>
       val empties = g.subjects(conll("WORD"), "")
       if (empties.nonEmpty) {
         val down = mutable.HashMap[String, collection.Set[String]]()
@@ -86,7 +86,7 @@ object TreesScripts {
       }
     },
     // (2a) initial empties → first word (literal `?first a conll:WORD`)
-    stage { (g, out) =>
+    { (g, out) =>
       val down = mutable.HashMap[String, collection.Set[String]]()
       for (e <- g.subjects(conll("WORD"), "")
            if g.subjects(NEXT_WORD, e).isEmpty && g.objects(e, NEXT_WORD).isEmpty;
@@ -96,7 +96,7 @@ object TreesScripts {
         out.insUri(e, NEXT_WORD, first)
     },
     // (2b) remaining empties ← last word (literal `?last a conll:WORD`)
-    stage { (g, out) =>
+    { (g, out) =>
       val down = mutable.HashMap[String, collection.Set[String]]()
       for (e <- g.subjects(conll("WORD"), "")
            if g.subjects(NEXT_WORD, e).isEmpty && g.objects(e, NEXT_WORD).isEmpty;
@@ -106,7 +106,7 @@ object TreesScripts {
         out.insUri(last, NEXT_WORD, e)
     },
     // (3a) order same-position siblings by URI
-    stage { (g, out) =>
+    { (g, out) =>
       def nextPlus(x: String) = closure(x)(y => g.objects(y, NEXT_WORD))
       for ((last, x, _) <- g.pairs(NEXT_WORD); y <- g.objects(last, NEXT_WORD)
            if x < y;
@@ -116,14 +116,14 @@ object TreesScripts {
         out.insUri(x, NEXT_WORD, y)
     },
     // (3b) delete transitive nextWords
-    stage { (g, out) =>
+    { (g, out) =>
       def nextPlus(x: String) = closure(x)(y => g.objects(y, NEXT_WORD))
       for ((x, z, _) <- g.pairs(NEXT_WORD);
            y <- g.objects(x, NEXT_WORD) if y != z && nextPlus(y).contains(z))
         out.del(x, NEXT_WORD, z)
     },
     // (4) HEAD default for empties via (nextWord+|(^nextWord)+)/HEAD+
-    stage { (g, out) =>
+    { (g, out) =>
       for (x <- g.subjects(conll("WORD"), "") if !g.has(x, conll("HEAD"))) {
         val fwd = closure(x)(y => g.objects(y, NEXT_WORD))
         val bwd = closure(x)(y => g.subjects(NEXT_WORD, y))
@@ -139,7 +139,7 @@ object TreesScripts {
     * and strip POWLA structure. */
   val tree2bracket: Script = Script("tree2bracket", Seq(
     // (1) first/last child per powla:Node
-    stage { (g, out) =>
+    { (g, out) =>
       for (x <- g.subjects(A, "powla:Node")) {
         val children = g.subjects(HAS_PARENT, x)
         if (children.nonEmpty) {
@@ -152,7 +152,7 @@ object TreesScripts {
       }
     },
     // (2) bracket-string property per (word, conll type)
-    stage { (g, out) =>
+    { (g, out) =>
       def nodeTypes(n: String): collection.Seq[String] =
         g.objects(n, A).filter(t => t != "powla:Node" && g.has(n, A, "powla:Node"))
       for (w <- g.subjects(A, WORD_TYPE); parent <- g.objects(w, HAS_PARENT);
@@ -178,19 +178,19 @@ object TreesScripts {
       }
     },
     // (3) remove tmp:first / tmp:last
-    stage { (g, out) =>
+    { (g, out) =>
       for (t <- g.all if (t.p == FIRST || t.p == LAST) && g.has(t.o, HAS_PARENT, t.s))
         out.dels += t
     },
     // (4) remove powla nodes and their triples
-    stage { (g, out) =>
+    { (g, out) =>
       val doomed = g.subjects(A, "powla:Node")
         .filterNot(n => g.has(n, A, WORD_TYPE) || g.has(n, A, "nif:Sentence")).toSet
       for (t <- g.all if doomed.contains(t.s) || (t.oUri && doomed.contains(t.o)))
         out.dels += t
     },
     // (5) remove any remaining powla-namespace triples
-    stage { (g, out) =>
+    { (g, out) =>
       for (t <- g.all
            if t.s.startsWith("powla:") || t.p.startsWith("powla:") ||
              (t.oUri && t.o.startsWith("powla:")))

@@ -16,9 +16,11 @@ import scala.collection.mutable
   */
 object TtlParser {
 
-  /** Parse one TTL chunk (one or more statements) into triples. */
+  /** Parse one TTL chunk (one or more statements) into triples: a
+    * snapshot of the chunk's [[SentGraph]], in the graph's order
+    * (predicates by first use), the order its rewrite cascade sees. */
   def parseChunk(text: String): Seq[Triple] = {
-    val out = mutable.LinkedHashSet[Triple]()
+    val g = SentGraph.empty
     // join continuation lines into statements terminated by '.'
     val body = text.split("\n")
       .filterNot(l => l.trim.startsWith("@prefix") || l.trim.startsWith("#"))
@@ -34,17 +36,15 @@ object TtlParser {
             val predRaw = rest.head
             val pred = if (predRaw == "a") "rdf:type" else predRaw
             for (obj <- rest.tail if obj != ",") {
-              if (obj.startsWith("\"")) {
-                out += Triple(subj, pred, obj.substring(1, obj.length - 1), oUri = false)
-              } else {
-                out += Triple(subj, pred, obj, oUri = true)
-              }
+              if (obj.startsWith("\""))
+                g.add(subj, pred, obj.substring(1, obj.length - 1), oUri = false)
+              else g.add(subj, pred, obj, oUri = true)
             }
           }
         }
       }
     }
-    out.toSeq
+    g.all
   }
 
   /** Parse a whole document of blank-line-separated sentence chunks. */

@@ -19,7 +19,8 @@ import java.util.regex.Pattern
   *  - TSV rows are delegated to the CoNLL core: the sentence assembler
   *    (`SpanParser.Assembler`) numbers sentences and tokens, applies the
   *    ID-cell rule and builds each sentence's CoNLL triples, exactly as
-  *    for plain TSV; this reader adds the powla tree triples.
+  *    for plain TSV; this reader adds the powla tree triples to the same
+  *    sentence graph (`SentGraph`).
   *
   * Parsing is per-document (inherently sequential within a doc), parallel
   * across docs — run inside Dataset[InputDoc].flatMap.
@@ -63,33 +64,31 @@ object XmlTsvParser {
     out.toSeq
   }
 
-  /** The getTTL stack algorithm (XMLTSV2RDF.java:131-173): turn a
-    * sentence's tree-entry sequence into powla triples. */
-  private def treeTriples(entries: Iterable[TreeEntry]): Seq[Triple] = {
-    val out = mutable.LinkedHashSet[Triple]()
+  /** The getTTL stack algorithm (XMLTSV2RDF.java:131-173): add a
+    * sentence's tree-entry sequence to its graph as powla triples. */
+  private def treeTriples(entries: Iterable[TreeEntry])(g: SentGraph): Unit = {
     val nodeUris = mutable.Stack[String]()
     var lastSibling: String = null
     for (e <- entries) e match {
       case WordRef(uri) =>
         if (nodeUris.nonEmpty) {
-          if (lastSibling != null) out += Triple(lastSibling, "powla:next", uri, oUri = true)
-          out += Triple(uri, "powla:hasParent", nodeUris.top, oUri = true)
+          if (lastSibling != null) g.add(lastSibling, "powla:next", uri, oUri = true)
+          g.add(uri, "powla:hasParent", nodeUris.top, oUri = true)
         }
         lastSibling = uri
       case CloseEl =>
         lastSibling = if (nodeUris.nonEmpty) nodeUris.pop() else null
       case OpenEl(id, element, atts, selfClose) =>
         val uri = s":x$id"
-        if (lastSibling != null) out += Triple(lastSibling, "powla:next", uri, oUri = true)
-        if (nodeUris.nonEmpty) out += Triple(uri, "powla:hasParent", nodeUris.top, oUri = true)
-        out += Triple(uri, "rdf:type", "powla:Node", oUri = true)
-        out += Triple(uri, "rdf:type", "conll:XML_DATA", oUri = true)
-        out += Triple(uri, "rdf:value", SpanParser.escapeLit(element), oUri = false)
-        for ((k, v) <- atts) out += Triple(uri, s"x:$k", SpanParser.escapeLit(v), oUri = false)
+        if (lastSibling != null) g.add(lastSibling, "powla:next", uri, oUri = true)
+        if (nodeUris.nonEmpty) g.add(uri, "powla:hasParent", nodeUris.top, oUri = true)
+        g.add(uri, "rdf:type", "powla:Node", oUri = true)
+        g.add(uri, "rdf:type", "conll:XML_DATA", oUri = true)
+        g.add(uri, "rdf:value", SpanParser.escapeLit(element), oUri = false)
+        for ((k, v) <- atts) g.add(uri, s"x:$k", SpanParser.escapeLit(v), oUri = false)
         if (selfClose) lastSibling = uri
         else { lastSibling = null; nodeUris.push(uri) }
     }
-    out.toSeq
   }
 
   def parseDoc(doc: InputDoc, cols: Seq[String]): Seq[Sentence] = {

@@ -25,11 +25,15 @@ final case class Triple(s: String, p: String, o: String, oUri: Boolean)
   * per sentence, CoNLLRDFUpdater.java:104-195). All rewrite rules are
   * sentence-local, so a Dataset[Sentence] maps over partitions with zero
   * shuffles through the whole rewrite cascade.
+  *
+  * The readers and `Pipeline.rewrite` emit `triples` as the snapshot
+  * `g.all` of the sentence's [[SentGraph]], so `SentGraph(s).all ==
+  * s.triples`: the cascade starts from exactly the graph the reader
+  * built. Comment lines are the `rdfs:comment` triple.
   */
 final case class Sentence(
     docId: String,
     sent: Long,
-    comments: Seq[String],
     triples: Seq[Triple]
 )
 

@@ -80,7 +80,7 @@ object GraphQueries {
         val edges = tk.filter($"tok" > 1).select($"child", $"parent")
         val roots = tk.filter($"tok" === 1).select($"child".as("node"))
         // forest: parent(i) = i/2 gives every token exactly one parent
-        IterativeClosure.depths(s, edges, roots, forest = true)
+        IterativeClosure.depths(s, edges, roots)
           .select($"node", $"depth")
           .orderBy($"node")
       },

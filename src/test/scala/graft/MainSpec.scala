@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `graft.Main`'s flag parsing; no session is started. */
+/** `graft.Main`'s flag parsing, which starts no session, and its run on
+  * the suite's session. */
 class MainSpec extends AnyFunSuite {
   test("flags: defaults, and each flag read from its --name value pair") {
     assert(Main.parse(Array()) == Main.Opts("gen:10000", "/tmp/graft-out", "analyze", 64, None))
@@ -46,5 +47,26 @@ class MainSpec extends AnyFunSuite {
       .getMessage.contains("'--bucket 8'"))
     assert(intercept[IllegalArgumentException](Main.parse(Array("--cascade", "link", "--input")))
       .getMessage.contains("'--input'"))
+  }
+
+  test("run: a bucketed run over parquet drops a document that is not valid UTF-8") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val base = java.nio.file.Files.createTempDirectory("graft-main-utf8")
+    val (in, out) = (base.resolve("in").toString, base.resolve("out").toString)
+    val docs = graft.conll.DocGen.docs(spark, 4).toDF()
+    val ids = docs.select($"doc_id").as[String].collect().sorted
+    // the bytes of a lone surrogate (U+D800) in every span of one doc:
+    // parquet keeps them, and reading decodes them to U+FFFD
+    docs.withColumn("spans", when($"doc_id" === ids.head, expr(
+      "transform(spans, s -> named_struct('kind', s.kind, " +
+        "'text', concat(s.text, cast(unhex('EDA080') AS STRING)), " +
+        "'media_ref', s.media_ref, 'offset', s.offset))")).otherwise($"spans"))
+      .write.parquet(in)
+    Main.run(spark, Main.Opts(in, out, "analyze", 2, None))
+    val written = spark.read.parquet(s"$out/bucket=0", s"$out/bucket=1")
+      .select($"doc_id").distinct().as[String].collect().sorted
+    assert(written.toSeq == ids.tail.toSeq)
   }
 }

@@ -186,4 +186,42 @@ class PipelineSpec extends AnyFunSuite {
     assert(sortedRows(resumed).sameElements(expected))
     assert(CheckpointRunner.lineage(spark, dirB).filter($"status" === "done").count() == 4)
   }
+
+  test("checkpoint resume under another bucket count, column list or cascade fails naming both layouts") {
+    val docs = DocGen.docs(spark, 40)
+    def tmp() = java.nio.file.Files.createTempDirectory("graft-ckpt-layout").toString
+    def run(dir: String, n: Int, cols: Seq[String] = DocGen.columns,
+            cascade: Seq[(Rules.Script, Int)] = Pipeline.analyzeCascade) =
+      CheckpointRunner.run(spark, docs, cols, cascade, dir, nBuckets = n).count()
+    // a crashed 4-bucket run resumed with 8 buckets, and the reverse
+    for ((first, second) <- Seq(4 -> 8, 8 -> 4)) {
+      val dir = tmp()
+      run(dir, first)
+      assert(new java.io.File(s"$dir/_manifest/bucket-1.json").delete())
+      val e = intercept[IllegalStateException](run(dir, second))
+      assert(e.getMessage.contains(s""""buckets":$first,""") &&
+        e.getMessage.contains(s""""buckets":$second,"""), e.getMessage)
+    }
+    val dir = tmp()
+    val rows = run(dir, 4)
+    assert(new java.io.File(s"$dir/_manifest/bucket-2.json").delete())
+    val cascade = intercept[IllegalStateException](run(dir, 4, cascade = Pipeline.parseCascade))
+    assert(cascade.getMessage.contains("UPOS-to-POSsynt") && cascade.getMessage.contains("initialize-SHIFT"))
+    intercept[IllegalStateException](run(dir, 4, cols = DocGen.columns.reverse))
+    intercept[IllegalStateException](
+      run(dir, 4, cascade = Pipeline.analyzeCascade.map { case (s, n) => (s, n + 1) }))
+    // the same layout resumes
+    assert(run(dir, 4) == rows)
+  }
+
+  test("checkpoint markers are JSON whatever the doc ids hold") {
+    import spark.implicits._
+    val docs = DocGen.docs(spark, 3).map(d => d.copy(doc_id = "a\"b\\c{" + d.doc_id))
+    val ids = docs.map(_.doc_id).collect()
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-json").toString
+    CheckpointRunner.run(spark, docs, DocGen.columns, Pipeline.analyzeCascade, dir, nBuckets = 1)
+    val lin = CheckpointRunner.lineage(spark, dir)
+      .select($"doc_min", $"doc_max", $"status").as[(String, String, String)].collect()
+    assert(lin.toSeq == Seq((ids.min, ids.max, "done")))
+  }
 }

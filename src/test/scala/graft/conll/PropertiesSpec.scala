@@ -153,4 +153,38 @@ class PropertiesSpec extends AnyFunSuite {
       (a == b) || ((a < b) == (ka < kb))
     }, n = 200)
   }
+
+  test("property: each reader emits the graph its cascade starts from: triples(parse(x)) == rewriteTriples(parse(x), Nil), row for row") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    import graft.queries.KgOracle
+    // words over letters, digits and the escaped characters, with the
+    // empty-cell forms among them
+    val genWord = Gen.oneOf(
+      Gen.chooseNum(1, 6).flatMap(n => Gen.listOfN(n, Gen.oneOf(
+        Gen.alphaNumChar, Gen.oneOf('&', '"', '\\'))).map(_.mkString)),
+      Gen.oneOf("_", "O", "--"))
+    val genDocs = Gen.listOfN(6, Gen.chooseNum(1, 40).flatMap(n => Gen.listOfN(n, genWord)))
+    val (xmlCols, bracketCols, srlCols, detCols) =
+      (KgOracle.detXmlCols, KgOracle.detBracketCols, KgOracle.detSrlCols, KgOracle.detCols)
+    def same(sents: org.apache.spark.sql.Dataset[Sentence]): Boolean =
+      Pipeline.triples(sents).collect().toSeq == Pipeline.rewriteTriples(sents, Nil).collect().toSeq
+    check(Prop.forAll(genDocs, genDocId) { (texts, id) =>
+      val words = texts.map(_.toArray).zipWithIndex.map { case (w, i) => (s"d$i", w) }
+      def docs(spans: (String, Array[String]) => Seq[Span]) =
+        words.map { case (d, w) => InputDoc(d, spans(d, w)) }.toDS()
+      val ttl = words.map { case (d, w) =>
+        (d, Serializers.toCanonicalTtlDocument(
+          SpanParser.parseDoc(InputDoc(d, KgOracle.detSpansFor(w)), detCols), detCols, s"urn:graft:$d#"))
+      }.toDS()
+      same(Pipeline.parse(spark.createDataset((0L until 4L).map(k => DocGen.genDoc(42L, id + k))),
+          DocGen.columns)) &&
+        same(docs(KgOracle.xmlSpansFor).flatMap(d => XmlTsvParser.parseDoc(d, xmlCols))) &&
+        same(docs((_, w) => KgOracle.bracketSpansFor(w)).flatMap(d => BracketsParser.parseDoc(d, bracketCols))) &&
+        same(docs((_, w) => KgOracle.bracketSpansFor(w))
+          .flatMap(d => BracketsParser.parseDoc(d, bracketCols, spanUris = true))) &&
+        same(Pipeline.parse(docs((_, w) => KgOracle.srlSpansFor(w)), srlCols)) &&
+        same(Pipeline.parseTtl(ttl))
+    }, n = 6)
+  }
 }

@@ -121,7 +121,7 @@ class UdGoldenSpec extends AnyFunSuite {
     val sents = SpanParser.parseDoc(docOf(lines.take(8)), analyzeCols)
       .map { s => val g = SentGraph(s)
         Pipeline.analyzeCascade.foreach { case (sc, n) => sc.run(g, n) }
-        SentGraph.toSentence(s.docId, s.sent, s.comments, g) }
+        Sentence(s.docId, s.sent, g.all) }
     val t = spark.createDataset(sents.flatMap(s =>
       s.triples.map(tr => TripleRow(s.docId, s.sent, tr.s, tr.p, tr.o, tr.oUri)))).toDF()
     val rows = Serializers.evalPossyntSelect(t)

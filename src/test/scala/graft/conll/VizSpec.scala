@@ -49,7 +49,7 @@ class VizSpec extends AnyFunSuite {
   test("K6 GRAMMAR: OLiA type concepts rendered in red") {
     val g = SentGraph(s)
     g.add(Triple(":s1_2", "rdf:type", "olia:CommonNoun", oUri = true))
-    val tree = Viz.asciiTree(SentGraph.toSentence("d1", 1L, Nil, g))
+    val tree = Viz.asciiTree(Sentence("d1", 1L, g.all))
     assert(tree.contains(Viz.RED + "olia:CommonNoun" + Viz.RESET))
   }
 
@@ -64,7 +64,7 @@ class VizSpec extends AnyFunSuite {
     g.add(Triple(":s1_2", "terms:theme", ":s1_3", oUri = true))
     g.add(Triple(":s1_2", "terms:theme", ":s1_4", oUri = true))
     g.add(Triple(":s1_1", "rdfs:label", "John", oUri = false))
-    val out = Viz.termGraph(SentGraph.toSentence("d1", 1L, Nil, g))
+    val out = Viz.termGraph(Sentence("d1", 1L, g.all))
     // Hand-derived against extractTermGraph's row loop: the rdf:type row
     // sorts first (its ?nr is unbound), in/out count only
     // terms:-predicate edges (rdf:type is rdf-ns → out = 3, not 4), the
@@ -80,7 +80,7 @@ class VizSpec extends AnyFunSuite {
     assert(out == exp, s"\ngot:\n${out.replace("\u001b", "<ESC>")}\nexp:\n${exp.replace("\u001b", "<ESC>")}")
     // includeTermConcepts=false: the 'a terms:want' line is suppressed,
     // the header still prints (the reference prints it before the check)
-    val noConcepts = Viz.termGraph(SentGraph.toSentence("d1", 1L, Nil, g),
+    val noConcepts = Viz.termGraph(Sentence("d1", 1L, g.all),
       includeTermConcepts = false)
     assert(!noConcepts.contains("\ta "))
     assert(noConcepts.contains("\ns1_2 (0 > node > 3)"))

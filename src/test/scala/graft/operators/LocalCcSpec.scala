@@ -90,43 +90,29 @@ class LocalCcSpec extends AnyFunSuite {
     }
   }
 
-  test("depths(): local == distributed on forest and DAG; same cycle failure") {
-    def run(edges: Seq[(String, String)], roots: Seq[String], forest: Boolean,
-            conf: String): Map[String, Int] = withConf(CC, conf) {
+  test("depths(): local == distributed on a forest; same failures") {
+    def run(edges: Seq[(String, String)], roots: Seq[String], conf: String,
+            maxIter: Int = 64): Map[String, Int] = withConf(CC, conf) {
       IterativeClosure.depths(spark, edges.toDF("child", "parent"),
-          roots.toDF("node"), forest = forest)
+          roots.toDF("node"), maxIter)
         .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     }
     val chain = (2 to 9).map(i => (s"c$i", s"c${i - 1}"))
     val tree = (2 to 15).map(i => (s"t$i", s"t${i / 2}"))
-    val forest = chain ++ tree
-    assert(run(forest, Seq("c1", "t1"), forest = true, "500000") ==
-      run(forest, Seq("c1", "t1"), forest = true, "0"))
-    val dag = Seq(("b", "a"), ("c1", "a"), ("c2", "c1"), ("d", "b"), ("d", "c2"),
-      ("x", "y")) // x unreachable
-    assert(run(dag, Seq("a"), forest = false, "500000") ==
-      run(dag, Seq("a"), forest = false, "0"))
-    // multi-parent input under forest=true fails identically
+    val forest = chain ++ tree :+ (("x", "y")) // x unreachable
+    assert(run(forest, Seq("c1", "t1"), "500000") == run(forest, Seq("c1", "t1"), "0"))
+    // a multi-parent input fails identically, naming the contract
     val multi = Seq(("d", "a"), ("d", "b"))
-    intercept[IllegalArgumentException] { run(multi, Seq("a"), forest = true, "500000") }
-    intercept[IllegalArgumentException] { run(multi, Seq("a"), forest = true, "0") }
-    // root-reachable cycle under forest mode (each child has one parent,
-    // so the contract check passes and only the round budget can stop
-    // the walk) exhausts the budget loudly in both regimes; DAG mode's
-    // seen-filter drains it silently in both (covered above via 'dag')
+    for (conf <- Seq("500000", "0"))
+      assert(intercept[IllegalArgumentException](run(multi, Seq("a"), conf))
+        .getMessage.contains("takes a forest"), conf)
+    // a root-reachable cycle (each child has one parent, so the contract
+    // check passes and only the round budget can stop the walk) exhausts
+    // the budget loudly in both regimes
     val cyc = Seq(("b", "a"), ("a", "b"))
-    intercept[IllegalArgumentException] {
-      withConf(CC, "500000") {
-        IterativeClosure.depths(spark, cyc.toDF("child", "parent"),
-          Seq("a").toDF("node"), maxIter = 5, forest = true).count()
-      }
-    }
-    intercept[IllegalArgumentException] {
-      withConf(CC, "0") {
-        IterativeClosure.depths(spark, cyc.toDF("child", "parent"),
-          Seq("a").toDF("node"), maxIter = 5, forest = true).count()
-      }
-    }
+    for (conf <- Seq("500000", "0"))
+      assert(intercept[IllegalArgumentException](run(cyc, Seq("a"), conf, maxIter = 5))
+        .getMessage.contains("did not drain"), conf)
   }
 
   test("registry CC entries: cutover result equals forced-distributed result (sf0.001)") {

@@ -7,8 +7,8 @@ import graft.queries.KgOracle
 /** Ordered sentence dump of the three CoNLL-family readers over their
   * deterministic corpora, for a byte compare of two trees after a reader
   * change: each corpus's docs are collected, sorted by doc id and parsed
-  * on the driver, and every sentence is printed with its comments and
-  * its triples in emitted order.
+  * on the driver, and every sentence is printed with its triples in the
+  * order the rewrite cascade sees them, `SentGraph(sentence).all`.
   *
   * {{{
   * sbt "Test/runMain graft.tools.ReaderDump <testdata dir, e.g. sf0.01> <out file>"
@@ -51,10 +51,11 @@ object ReaderDump {
       var nTriples = 0L
       out.println(s"== $name")
       for (d <- docs().sortBy(_.doc_id); sent <- parse(d, cols)) {
-        out.println(s"${sent.docId}\t${sent.sent}\t${sent.comments.mkString("\\n")}")
-        for (t <- sent.triples) out.println(s"  ${t.s}\t${t.p}\t${t.o}\t${t.oUri}")
+        val triples = SentGraph(sent).all
+        out.println(s"${sent.docId}\t${sent.sent}")
+        for (t <- triples) out.println(s"  ${t.s}\t${t.p}\t${t.o}\t${t.oUri}")
         nSents += 1
-        nTriples += sent.triples.length
+        nTriples += triples.length
       }
       println(s"[readers] $name: $nSents sentences, $nTriples triples")
     } finally out.close()
