@@ -64,11 +64,13 @@ object Sizing {
   def repartition(df: DataFrame, width: Int, cols: Column*): DataFrame =
     if (width > 0) df.repartition(width, cols: _*) else df
 
-  /** The driver-cutover bound ([[LocalMaxEdgesKey]], default 500k). */
+  /** The driver-cutover bound ([[LocalMaxEdgesKey]], default 500k). A
+    * value that is not a whole number ≥ 0 fails naming the key: a
+    * negative bound would act as 0 under another spelling. */
   def localMaxEdges(spark: SparkSession): Long =
     spark.conf.getOption(LocalMaxEdgesKey).fold(500000L) { v =>
-      v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"$LocalMaxEdgesKey must be a whole number of edges, got '$v'"))
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$LocalMaxEdgesKey must be a whole number of edges, 0 or more, got '$v'"))
     }
 
   /** `key` is in the engine's conf namespace but is not a key it reads,

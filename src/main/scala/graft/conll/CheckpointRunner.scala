@@ -27,6 +27,14 @@ import Rules.Script
   * over the input, processed by all executors); buckets bound the blast
   * radius of a failure, they do not serialize the work — pick nBuckets
   * around the number of desired resume points, not the cluster size.
+  *
+  * What a bucket costs: a full scan of the input. The bucket filter
+  * `pmod(xxhash64(doc_id), n) === b` is no predicate a parquet reader
+  * can prune by, so every bucket job reads every input row and drops
+  * the rows of the other buckets, and a resumed bucket reads them all
+  * again. A complete n-bucket run reads its input n times: 64 times for
+  * `graft.Main`'s default of 64 buckets. ROADMAP L tracks buckets that
+  * read only their own rows.
   */
 object CheckpointRunner {
 

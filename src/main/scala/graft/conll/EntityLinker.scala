@@ -102,17 +102,19 @@ object EntityLinker {
   /** Canonicalize entity ids over sameAs evidence via connected
     * components; rewrites linked triples' objects to the canonical
     * (minimum) id. Join strategy: a STATIC broadcast hint when the
-    * MEASURED component count is under [[Sizing.BroadcastRows]]. AQE
-    * would convert the join at runtime anyway, but only AFTER the
+    * MEASURED component-table row count is under [[Sizing.BroadcastRows]].
+    * AQE would convert the join at runtime anyway, but only AFTER the
     * corpus-sized linked side has written its full shuffle; the hint
-    * removes that write. The count is a block scan of CC's
-    * localCheckpointed output, not a recompute. Above the bound the
+    * removes that write. The count costs no job: CC hands it over with
+    * its labels (`ConnectedComponents.runCounted`), exact on the driver
+    * finish and at-least-once on the distributed path, where an inflated
+    * reading can only decline the broadcast. Above the bound the
     * strategy is left to Catalyst/AQE, because the component table is
     * entity-count-sized and outgrows a broadcast at corpus scale. */
   def canonicalize(spark: SparkSession, linked: DataFrame, sameAs: DataFrame): DataFrame = {
-    val comp = graft.operators.ConnectedComponents.run(spark, sameAs)
+    val (comp, nodes) = graft.operators.ConnectedComponents.runCounted(spark, sameAs)
     val compSized =
-      if (comp.count() <= Sizing.BroadcastRows) broadcast(comp) else comp
+      if (nodes <= Sizing.BroadcastRows) broadcast(comp) else comp
     linked.join(compSized, linked("obj") === compSized("node"), "left_outer")
       .withColumn("obj", coalesce(col("component"), col("obj")))
       .drop("node", "component")

@@ -20,16 +20,31 @@ object Fixpoint {
     * UDF and every column keeps its type. The UDF is marked non-deterministic
     * so the optimizer may neither fold a constant `counted` nor move or
     * repeat the bump. The reading is at-least-once (a task retry can
-    * inflate it): callers use it as a convergence TRIGGER and confirm an
-    * exit exactly, or to route (the driver cutover, the exchange width),
-    * where an inflated reading only keeps a small graph distributed.
+    * inflate it): callers use it as a convergence TRIGGER whose firing an
+    * exact check must confirm, or to size and route (the driver cutover,
+    * the exchange width, CC's node count for the canonicalize broadcast),
+    * where an inflated reading only keeps a small graph distributed or a
+    * small table unbroadcast.
     *
     * @return the checkpointed frame (`df`'s columns) and the reading */
   def checkpointCounting(df: DataFrame, counted: Column, name: String): (DataFrame, Long) = {
-    val acc = df.sparkSession.sparkContext.longAccumulator(name)
-    val bump = udf { (hit: Boolean) => if (hit) acc.add(1); hit }.asNondeterministic()
-    val out = df.withColumn("_counted", bump(counted)).localCheckpoint().drop("_counted")
-    (out, acc.value)
+    val (out, Seq(n)) = checkpointCounts(df, Seq(counted), name)
+    (out, n)
+  }
+
+  /** [[checkpointCounting]] with one counter per predicate in `counted`,
+    * all read in the one checkpoint job; each accumulator is named
+    * `name`. */
+  def checkpointCounts(df: DataFrame, counted: Seq[Column], name: String): (DataFrame, Seq[Long]) = {
+    val sc = df.sparkSession.sparkContext
+    val accs = counted.map(_ => sc.longAccumulator(name))
+    val flags = counted.indices.map(k => s"_counted$k")
+    val marked = counted.indices.foldLeft(df) { (d, k) =>
+      val acc = accs(k)
+      val bump = udf { (hit: Boolean) => if (hit) acc.add(1); hit }.asNondeterministic()
+      d.withColumn(flags(k), bump(counted(k)))
+    }
+    (marked.localCheckpoint().drop(flags: _*), accs.map(_.value.longValue))
   }
 
   /** The small-graph cutover of every graph fixpoint (CC `run` and

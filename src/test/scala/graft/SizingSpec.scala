@@ -56,4 +56,13 @@ class SizingSpec extends AnyFunSuite {
       assert(e.getMessage.contains("spark.graft.cc.localMaxEdges") && e.getMessage.contains("'500k'"))
     } finally spark.conf.unset(key)
   }
+
+  test("spark.graft.cc.localMaxEdges: a negative value fails naming the key and the value") {
+    val key = Sizing.LocalMaxEdgesKey
+    try for (v <- Seq("-1", " -500000 ")) {
+      spark.conf.set(key, v)
+      val e = intercept[IllegalArgumentException](Sizing.localMaxEdges(spark))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$v'"), v)
+    } finally spark.conf.unset(key)
+  }
 }

@@ -114,6 +114,26 @@ class ConnectedComponentsSpec extends AnyFunSuite with org.scalatest.BeforeAndAf
     }
   }
 
+  test("job budget: one distributed run over stars centred on their minimum") {
+    // perfbench kg_pipeline's sameAs shape: each entity links to the first
+    // of its block of 8 with probability 1/2. The seed labels are already
+    // the fixpoint, so the loop takes one round. 8 jobs: the symmetrized
+    // edges' exchange and checkpoint (2), round 0's broadcast, two
+    // exchanges and checkpoint (4), the exit test's broadcast and take
+    // (2). Before the exit test replaced the anti-join confirm, the seed
+    // checkpoint and the post-loop assert, one run took 13.
+    val rnd = new scala.util.Random(11)
+    val edges = (1 to 600).flatMap { k =>
+      val head = (k - 1) / 8 * 8 + 1
+      if (head != k && rnd.nextBoolean()) Some((f"ent:$k%05d", f"ent:$head%05d")) else None
+    }
+    val (labels, jobs) = org.apache.spark.graft.JobLog.of(spark.sparkContext) {
+      ConnectedComponents.run(spark, edges.toDF("src", "dst"))
+    }
+    assert(jobs.size <= 8, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(labelsOf(labels) == edges.flatMap { case (a, h) => Seq(a -> h, h -> h) }.toMap)
+  }
+
   test("assertComponentLabels rejects a non-fixpoint labeling") {
     val edges = Seq((n(1), n(2)), (n(2), n(3))).toDF("src", "dst")
     // n3 carries a stale label — exactly the early-convergence signature

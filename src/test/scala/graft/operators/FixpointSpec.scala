@@ -3,10 +3,11 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[Fixpoint.checkpointCounting]], the one counted round of the graph
-  * fixpoints: its reading must be the filter count of the predicate (no
-  * retries happen here, so at-least-once is exact), and the checkpointed
-  * frame must be the input frame, column types included. */
+/** [[Fixpoint.checkpointCounting]] and [[Fixpoint.checkpointCounts]],
+  * the one counted round of the graph fixpoints: each reading must be
+  * the filter count of its predicate (no retries happen here, so
+  * at-least-once is exact), and the checkpointed frame must be the input
+  * frame, column types included. */
 class FixpointSpec extends AnyFunSuite {
   private val spark = graft.TestSpark.spark
   import spark.implicits._
@@ -38,6 +39,10 @@ class FixpointSpec extends AnyFunSuite {
         assert(n == df.filter(p).count(), s"$name at seed $seed")
         assert(out.count() == df.count(), s"$name at seed $seed")
       }
+      // every predicate at once: one reading each, from one checkpoint job
+      val (out, ns) = Fixpoint.checkpointCounts(df, preds.map(_._2), s"fixpoint_spec_all_$seed")
+      assert(ns == preds.map(p => df.filter(p._2).count()), s"all at seed $seed")
+      assert(out.schema == df.schema, s"all at seed $seed")
     }
   }
 

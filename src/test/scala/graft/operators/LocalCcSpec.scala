@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.conll.EntityLinker
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The r9 small-graph driver cutover must be OBSERVATIONALLY IDENTICAL
@@ -88,6 +89,79 @@ class LocalCcSpec extends AnyFunSuite {
       assert(dist(smile) == rep && dist("a" + smile) == "a" + rep)
       assert(local == dist)
     }
+  }
+
+  /** A graph over node indices 0 until 40, where index order is the key
+    * order, that min-label propagation needs two or more rounds for:
+    * paths with their minimum at one end or inside, stars centred on
+    * their largest node (off the minimum), disjoint pairs, a self-loop,
+    * and duplicated and reversed copies of some edges. */
+  private def multiRound(rnd: scala.util.Random): Seq[(Int, Int)] = {
+    val pool = rnd.shuffle((0 until 40).toVector).iterator
+    def take(k: Int) = Vector.fill(k)(pool.next())
+    val long = take(5 + rnd.nextInt(4)).sorted
+    val minAtEnd = long.head +: rnd.shuffle(long.tail)
+    val paths = minAtEnd +: Vector.fill(1 + rnd.nextInt(2))(take(2 + rnd.nextInt(5)))
+    val stars = Vector.fill(1 + rnd.nextInt(2))(take(3 + rnd.nextInt(4)).sorted)
+    val pairs = Vector.fill(1 + rnd.nextInt(3))(take(2))
+    val edges = paths.flatMap(p => p.zip(p.tail)) ++
+      stars.flatMap(s => s.init.map(leaf => (s.last, leaf))) ++
+      pairs.map(p => (p(0), p(1))) :+ ((minAtEnd(1), minAtEnd(1)))
+    val again = rnd.shuffle(edges).take(4)
+    rnd.shuffle(edges ++ again ++ again.map(_.swap))
+  }
+
+  /** Spark's string order: unsigned UTF-8 bytes. */
+  private val utf8Order: Ordering[String] = (a: String, b: String) =>
+    java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+
+  test("run(): forced-distributed == cutover on multi-round graphs; string, bigint and non-BMP keys") {
+    // index order is key order, so a star's centre stays off the minimum
+    // under each type's own order: non-BMP and U+FFFD prefixes order
+    // differently as UTF-8 (Spark's MIN) and as UTF-16
+    val strKeys = (0 until 40).map(i => f"n$i%02d")
+    val nonBmp = (0 until 40).map(i => Seq("\uFFFD", "\uD83D\uDE00", "a\uD83D\uDE00", "\u00E9")(i % 4) + (i / 4))
+      .sorted(utf8Order)
+    val longs = (0 until 40).map(i => if (i % 3 == 0) i.toLong else 1000L * i).sorted
+    def check[K](keys: IndexedSeq[K], seed: Int)(labels: org.apache.spark.sql.DataFrame => Map[K, K])(
+        implicit enc: org.apache.spark.sql.Encoder[(K, K)]): Unit = {
+      val graph = multiRound(new scala.util.Random(seed)).map { case (a, b) => (keys(a), keys(b)) }
+      val df = spark.createDataset(graph).toDF("src", "dst")
+      val (cut, cutN) = ConnectedComponents.runCounted(spark, df)
+      val (dist, distN) = withConf(CC, "0")(ConnectedComponents.runCounted(spark, df))
+      val (c, d) = (labels(cut), labels(dist))
+      assert(c == d, s"forced-distributed != cutover at seed $seed")
+      assert(cutN == c.size && distN == d.size, s"node counts $cutN / $distN of ${c.size} at seed $seed")
+    }
+    for (seed <- 1 to 4) {
+      check(strKeys, seed)(_.as[(String, String)].collect().toMap)
+      check(nonBmp, seed)(_.as[(String, String)].collect().toMap)
+      check(longs, seed)(_.as[(Long, Long)].collect().toMap)
+    }
+  }
+
+  test("canonicalize: identical rows on the driver and forced-distributed CC paths") {
+    // objects: entity links inside and outside a component, a WORD literal
+    // equal to a component node (any object equal to a node is rewritten),
+    // and a null object
+    val rnd = new scala.util.Random(5)
+    val sameAs = multiRound(rnd).map { case (a, b) => (f"ent:$a%02d", f"ent:$b%02d") }.toDF("src", "dst")
+    val objs = (0 until 44).map(i => f"ent:$i%02d")
+    val linked = (objs.zipWithIndex.flatMap { case (o, i) => Seq(
+        ("d1", 1L, s":t$i", "conll:ENTITY", o, true),
+        ("d1", 2L, s":w$i", "conll:WORD", o, false)) } :+
+      (("d2", 1L, ":n", "conll:WORD", null, false)))
+      .toDF("doc_id", "sent", "subj", "pred", "obj", "obj_is_uri")
+    def rows(conf: String) = withConf(CC, conf) {
+      EntityLinker.canonicalize(spark, linked, sameAs).collect().map(_.toString).sorted.toSeq
+    }
+    val (local, dist) = (rows("500000"), rows("0"))
+    assert(local == dist)
+    assert(local.size == linked.count())
+    // a WORD literal equal to a node took its component's minimum
+    val canon = withConf(CC, "0")(ConnectedComponents.run(spark, sameAs).as[(String, String)].collect().toMap)
+    val (node, min) = canon.find { case (n, m) => n != m }.get
+    assert(local.contains(s"[d1,2,:w${node.stripPrefix("ent:").toInt},conll:WORD,$min,false]"))
   }
 
   test("depths(): local == distributed on a forest; same failures") {
