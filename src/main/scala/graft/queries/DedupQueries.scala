@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Sizing
-import graft.functions.Hashing
+import graft.functions.{Hashing, Signatures}
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -14,34 +14,28 @@ import org.apache.spark.sql.expressions.Window
   * All hashes are md5-based so DuckDB computes bit-identical values.
   * Ratios divide exact integers in IEEE double (deterministic), rounded to
   * 6 places on both sides.
+  *
+  * The per-document signatures (shingle sets, MinHash, SimHash) are
+  * compiled kernels, [[Signatures]] and [[Hashing.minMd5Hex]], each called
+  * once per document row: no higher-order-function lambda, token explode
+  * or group-by builds them. The oracle SQL keeps the exploded forms.
   */
 object DedupQueries {
 
   private def md5s(c: Column): Column = md5(c.cast("binary"))
 
-  /** SimHash signature of each document with ≥1 token, as an `Int`:
-    * (doc_id, sig). Bit `nBits-1-i` is set when hex digit i of the word's
-    * md5 is ≥ '8' on a strict majority of the doc's tokens, so the
-    * signature printed MSB-first is the oracle's '0'/'1' string (bit i
-    * of that string = digit i's vote). A digit is ≥ '8' exactly when its
-    * nibble's top bit is set: each 8-digit group of the md5 is read once
-    * as a 32-bit word (`conv`) and the votes are shifts and masks. The md5
-    * is projected once per token, ahead of the words that share it.
-    * `nBits` ≤ 16 (the md5's first 16 hex digits). */
-  private[graft] def simhashSig(tokens: DataFrame, nBits: Int): DataFrame = {
+  /** SimHash signature of each document with a non-null text, as an
+    * `Int`: (doc_id, sig), one [[Signatures.simhashSig]] call per row. Bit
+    * `nBits-1-i` is set when hex digit i of the token's md5 is ≥ '8' on a
+    * strict majority of the doc's `split(text, '\\s+')` tokens, so the
+    * signature printed MSB-first is the oracle's '0'/'1' string (bit i of
+    * that string = digit i's vote). Per row, not grouped by `doc_id`:
+    * `documents.doc_id` is unique (SignatureKernelSpec pins it on the
+    * fixtures), so each row is one document. `nBits` ≤ 16. */
+  private[graft] def simhashSig(docs: DataFrame, nBits: Int): DataFrame = {
     require(nBits >= 1 && nBits <= 16, s"simhash bits must be in 1..16, got $nBits")
-    val words = (0 until (nBits + 7) / 8).map(w =>
-      conv(substring(col("h"), 8 * w + 1, 8), 16, 10).cast("bigint").as(s"w$w"))
-    val votes = (0 until nBits).map(i =>
-      sum(shiftright(col(s"w${i / 8}"), 31 - 4 * (i % 8)).bitwiseAND(1L)).as(s"s$i"))
-    val sig = (0 until nBits).map(i =>
-      when(col(s"s$i") * 2 > col("n"), lit(1 << (nBits - 1 - i))).otherwise(lit(0)))
-      .reduce(_ bitwiseOR _)
-    tokens.select(tokens("doc_id"), md5s(tokens("word")).as("h"))
-      .select(col("doc_id") +: words: _*)
-      .groupBy(col("doc_id"))
-      .agg(votes.head, (votes.tail :+ count(lit(1)).as("n")): _*)
-      .select(col("doc_id"), sig.as("sig"))
+    val sig = udf((t: String) => Signatures.simhashSig(t, nBits)).withName("simhash")
+    docs.filter(docs("text").isNotNull).select(docs("doc_id"), sig(docs("text")).as("sig"))
   }
 
   /** Band b's bucket of a 16-bit [[simhashSig]]: hex-digit group b of the
@@ -102,25 +96,27 @@ object DedupQueries {
   /** doc_id + DISTINCT word-3-gram shingle SET, one array row per doc
     * with ≥1 shingle.
     *
-    * This is the NARROW formulation of the shingle pipeline: the 3-grams
-    * are sliced out of the per-doc token array with `transform(sequence)`
-    * and deduped with `array_distinct`, entirely inside the scan's map
-    * side — zero shuffles, where the exploded formulation paid a window
-    * sort (per-doc lead×2), a multiset explode, and a global `distinct`
-    * before the first useful operator. A document's shingle set is
+    * NARROW: one [[Signatures.shingleSet]] call per document slices the
+    * 3-grams out of its `split(text, '\\s+')` tokens (exactly
+    * [[TextQueries.tokens]]'s) and keeps the first occurrence of each,
+    * inside the scan's map side. Zero shuffles: the exploded formulation
+    * paid a window sort (per-doc lead×2), a multiset explode and a global
+    * `distinct` before the first useful operator, and the
+    * `transform(sequence(…), i -> concat_ws(…))` + `array_distinct` that
+    * followed it ran its lambda uncompiled. A document's shingle set is
     * bounded by its text length, so the row stays small at any corpus
-    * scale (the per-DOC work is identical at 100 TB; only doc COUNT
-    * grows, and that parallelizes). Token semantics are exactly
-    * [[TextQueries.tokens]]'s `split(text, '\\s+')`; the DuckDB CTE
-    * keeps the exploded window form, which defines the same set. */
+    * scale. The DuckDB CTE keeps the exploded window form, which defines
+    * the same set. */
   private def shingleSets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.widened(s, dir, "documents")
-      .withColumn("ws", split($"text", "\\s+"))
-      .filter(size($"ws") >= 3)
-      .select($"doc_id", array_distinct(expr(
-        "transform(sequence(0, size(ws)-3), i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))"
-      )).as("shset"))
+    // the kernel's set, or none for a doc without shingles, exploded: a
+    // Filter on the set would be pushed below its projection (even below
+    // the widening exchange) and run the kernel a second time
+    val shingles = udf { (t: String) =>
+      val xs = Signatures.shingleSet(t)
+      if (xs == null || xs.isEmpty) Array.empty[Array[String]] else Array(xs)
+    }.withName("shingle_set")
+    Tables.widened(s, dir, "documents").select($"doc_id", explode(shingles($"text")).as("shset"))
   }
 
   /** MinHash 0..n-1 as one narrow array column `mh` over the shingle-set
@@ -132,7 +128,8 @@ object DedupQueries {
     * `array_min(transform(…))` per salt would run its lambda without
     * codegen and build a hex string per shingle per salt. */
   private def minhashes(n: Int): Column =
-    udf((xs: Seq[String]) => Hashing.minMd5Hex(xs, n)).apply(col("shset")).as("mh")
+    udf((xs: Seq[String]) => Hashing.minMd5Hex(xs, n)).withName("minhash")
+      .apply(col("shset")).as("mh")
 
   private val shinglesCte: String =
     s"""${TextQueries.tokensCte}, sh AS (
@@ -176,16 +173,21 @@ object DedupQueries {
       s: SparkSession, dir: String,
       nBands: Int = 8, nRows: Int = 1): DataFrame = {
     import s.implicits._
-    // ONE narrow shingle-set table feeds everything: the banding keys
-    // (via the per-doc minhash array), the set sizes (`size`), and
-    // the exact-Jaccard verification (`array_intersect`). Persisted once;
-    // everything before the band-bucket window is shuffle-free (the r5
+    // ONE narrow per-doc table feeds everything: the banding keys (the
+    // minhash array `mh`), the set sizes (`size`), and the exact-Jaccard
+    // verification (`array_intersect`). It is persisted with `mh` in it,
+    // so both sides of the band self-join read the minhashes from the
+    // cache: the two sides of a self-join over a persisted relation share
+    // no exchange, so a minhash projected above the cache would run once
+    // per side.
+    // Everything before the band-bucket window is shuffle-free (the r5
     // formulation paid a window sort + a global distinct + a grouped
     // minhash agg — three corpus-wide shuffles — before its first
     // candidate). Shuffles that remain are the ones candidate generation
     // inherently needs: the bucket-width window + band self-join, the
     // candidate distinct, and the two pair→set hash joins.
     val sets = shingleSets(s, dir)
+      .select($"doc_id", $"shset", minhashes(nBands * nRows))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // one struct per band over the doc's one minhash array, exploded in
     // a single pass (no nBands-way self-union of the signature table)
@@ -200,7 +202,6 @@ object DedupQueries {
     // source text, so the session default scheduled core-count-wide
     // shuffles for kilobytes of keys
     val banded = sets
-      .select($"doc_id", minhashes(nBands * nRows))
       .select($"doc_id", explode(array(bandStructs: _*)).as("bk"))
       .select($"doc_id", $"bk.band".as("band"), $"bk.bucket".as("bucket"))
     val candidates = bandPairs(banded, Tables.byteWidth(s, dir, "documents"))
@@ -363,7 +364,7 @@ object DedupQueries {
         // signature row per doc, so the bucket-size window's exchange is
         // sized from the source bytes instead of the session default
         val p = Tables.byteWidth(s, dir, "documents")
-        val sigd = simhashSig(TextQueries.tokens(s, dir), 8)
+        val sigd = simhashSig(Tables.widened(s, dir, "documents"), 8)
           .select($"doc_id", lpad(bin($"sig"), 8, "0").as("simhash"))
         Sizing.repartition(sigd, p, $"simhash")
           .withColumn("bucket_size",
@@ -395,7 +396,7 @@ object DedupQueries {
       "q37_simhash_hamming",
       (s, dir) => {
         import s.implicits._
-        val sigs = simhashSig(TextQueries.tokens(s, dir), 16)
+        val sigs = simhashSig(Tables.widened(s, dir, "documents"), 16)
         // all four band buckets of a signature come out of ONE explode
         // pass (the q22 banding shape)
         val bandStructs = (0 until 4).map(b =>

@@ -186,7 +186,7 @@ object Probe {
       throw new IllegalArgumentException(s"gen:<nDocs> needs a non-negative integer, got '$dir'")))
 
   /** The table dir behind `dir`: a `gen:` corpus is generated on first use. */
-  private def tableDir(spark: SparkSession, dir: String): String = genDocs(dir).fold(dir) { n =>
+  private[graft] def tableDir(spark: SparkSession, dir: String): String = genDocs(dir).fold(dir) { n =>
     // v-tag: bump when the generator changes (v2: floorMod hash) so a
     // stale /tmp corpus can never satisfy the _SUCCESS check
     val path = s"/tmp/graft-scale-$n-v2"

@@ -111,8 +111,8 @@ class PlanSpec extends AnyFunSuite {
     "q23_simhash"             -> (2, 0),
     "q29_ann_lsh_buckets"     -> (3, 0),
     "q33_cdc_chunks"          -> (2, 0),
-    // integer signatures banded by one explode pass: the doc-signature
-    // agg, the (band,bucket) exchange shared by the bucket window and
+    // integer signatures computed per row and banded by one explode
+    // pass: the (band,bucket) exchange shared by the bucket window and
     // the band self-join, and the output exchange (at width 1 the (a,b)
     // candidate dedup needs none); the self-join's other side reuses the
     // (band,bucket) exchange and is broadcast — that reuse disappearing

@@ -7,13 +7,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.DedupQueries
 
 /** q23/q37's integer simhash fast path ≡ the string path it replaced, on
-  * generated token lists. The reference is the '0'/'1' string formulation
-  * the registry's oracle SQL still spells out: one `substring(h, i+1, 1)
-  * IN ('8'..'f')` vote sum per hex digit, a `concat` of majority bits, band
-  * buckets as `substring(sig, 4b+1, 4)` and Hamming as a per-character
-  * compare. Generated docs mix ASCII, BMP and non-BMP words and the empty
-  * word, include one-token and empty docs (no token rows), and favour
-  * small even token counts so per-digit ties (2·s_i == n, bit clear) occur. */
+  * generated texts. The fast path is one `Signatures.simhashSig` call per
+  * document. The reference explodes the text into its
+  * `posexplode(split(text, '\\s+'))` token rows and spells out the '0'/'1'
+  * string formulation the registry's oracle SQL still uses: one
+  * `substring(h, i+1, 1) IN ('8'..'f')` vote sum per hex digit grouped by
+  * document, a `concat` of majority bits, band buckets as
+  * `substring(sig, 4b+1, 4)` and Hamming as a per-character compare. The
+  * texts (`TextGen`) mix ASCII, BMP and non-BMP words, put NBSP and U+2003
+  * inside words, lead, trail and mix `\t \n \r \f \u000B` runs (empty
+  * tokens), and include null and empty texts, docs of 0–3 tokens and small
+  * even token counts, so per-digit ties (2·s_i == n, bit clear) occur. */
 class SimhashSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -32,27 +36,17 @@ class SimhashSpec extends AnyFunSuite {
       .withColumn("ssig", concat(bits: _*))
   }
 
-  private val asciiWord = Gen.choose(1, 8).flatMap(n => Gen.listOfN(n, Gen.alphaLowerChar)).map(_.mkString)
-  private val bmpWord = Gen.choose(1, 5).flatMap(n => Gen.listOfN(n, Gen.choose('À', '鿿'))).map(_.mkString)
-  private val nonBmpWord = Gen.choose(1, 4)
-    .flatMap(n => Gen.listOfN(n, Gen.oneOf(Gen.choose(0x1d400, 0x1d7ff), Gen.choose(0x1f300, 0x1faff))))
-    .map(cps => new String(cps.toArray, 0, cps.length))
-  private val word = Gen.frequency(6 -> asciiWord, 2 -> bmpWord, 2 -> nonBmpWord, 1 -> Gen.const(""))
-  private val doc = Gen.frequency(
-    1 -> Gen.const(0), 2 -> Gen.const(1), 3 -> Gen.oneOf(2, 4, 6), 2 -> Gen.choose(3, 60))
-    .flatMap(n => Gen.listOfN(n, word))
-  private val corpus = Gen.choose(1, 30).flatMap(n => Gen.listOfN(n, doc))
+  private val corpus = Gen.choose(1, 30).flatMap(n => Gen.listOfN(n, TextGen.text))
 
   test("integer simhash signature, band buckets and popcount Hamming equal the string path") {
     import spark.implicits._
     var ties = 0L
-    var nonBmpDocs = 0
     var pairs = 0L
-    val prop = Prop.forAll(corpus) { docs =>
-      val tokens = docs.zipWithIndex
-        .flatMap { case (ws, d) => ws.map(w => (f"d$d%03d", w)) }
-        .toDF("doc_id", "word")
-      nonBmpDocs += docs.count(_.exists(_.codePoints().anyMatch(Character.isSupplementaryCodePoint)))
+    val cases = new TextGen.Cases
+    val prop = Prop.forAll(corpus) { texts =>
+      cases.see(texts)
+      val docs = texts.zipWithIndex.map { case (t, d) => (f"d$d%03d", t) }.toDF("doc_id", "text")
+      val tokens = docs.select($"doc_id", posexplode(split($"text", "\\s+")).as(Seq("pos", "word")))
 
       val ref16 = stringSig(tokens, 16)
       ties += ref16.select((0 until 16).map(i => when(col(s"s$i") * 2 === col("n"), 1L).otherwise(0L))
@@ -60,8 +54,8 @@ class SimhashSpec extends AnyFunSuite {
 
       // signature bits: the Int printed MSB-first is the string signature
       // (16 bits for q37, and q23's 8-bit lpad(bin) column)
-      val sigs = DedupQueries.simhashSig(tokens, 16)
-      val sig8 = DedupQueries.simhashSig(tokens, 8)
+      val sigs = DedupQueries.simhashSig(docs, 16)
+      val sig8 = DedupQueries.simhashSig(docs, 8)
         .select($"doc_id", lpad(bin($"sig"), 8, "0").as("fsig"))
       val bitsOk = sigs.join(ref16, Seq("doc_id"), "full_outer")
         .filter($"sig".isNull || $"ssig".isNull || lpad(bin($"sig"), 16, "0") =!= $"ssig")
@@ -91,7 +85,7 @@ class SimhashSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
     // the generators must actually reach the edge cases named above
     assert(ties > 0, "no 2·s_i == n tie was generated")
-    assert(nonBmpDocs > 0, "no document with a non-BMP word was generated")
+    assert(cases.missing.isEmpty, s"no generated text had: ${cases.missing.mkString(", ")}")
     assert(pairs > 0, "no signature pairs were compared")
   }
 }

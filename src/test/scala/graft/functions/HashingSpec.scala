@@ -11,7 +11,8 @@ import graft.TestSpark
   * `%02x`. Generated strings mix ASCII, BMP (surrogates excluded) and
   * non-BMP characters (surrogate pairs in UTF-16, 4 bytes in UTF-8), the
   * empty string and strings over 1 KB. `Hashing.minMd5Hex`, the MinHash
-  * kernel, ≡ its per-salt slow paths over generated shingle sets. */
+  * kernel, ≡ its per-salt slow paths over generated shingle sets, at
+  * n = 1 and 8 and past its 64 prebuilt salts. */
 class HashingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -76,7 +77,9 @@ class HashingSpec extends AnyFunSuite {
       Seq(1, 8).forall { n =>
         val fast = sets.map(xs => Hashing.minMd5Hex(xs, n).toSeq)
         fast == sets.map(slow(_, n)) && fast == viaSpark(sets, n)
-      }
+      } &&
+        // past the 64 prebuilt salts
+        sets.map(xs => Hashing.minMd5Hex(xs, 65).toSeq) == sets.map(slow(_, 65))
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25), prop)
     assert(res.passed, res.status.toString)
