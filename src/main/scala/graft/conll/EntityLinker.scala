@@ -62,9 +62,6 @@ object EntityLinker {
         lit("conll:ENTITY").as("pred"),
         col("entity_id").as("obj"), lit(true).as("obj_is_uri"))
 
-  def linkBroadcast(triples: DataFrame, gazetteer: DataFrame): DataFrame =
-    linkJoined(triples, broadcast(gazetteer))
-
   /** triples ∪ entity links, size-routed (VERDICT r1 item 6): the fused
     * route only when the gazetteer is provably small, otherwise the
     * equi-join; an unconditional broadcast of a corpus-derived vocabulary

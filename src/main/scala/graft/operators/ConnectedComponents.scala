@@ -24,15 +24,14 @@ import org.apache.spark.sql.types._
   *    job, whose at-least-once count (changed labels; runStar: surviving
   *    edges) is the cheap TRIGGER only (ADVICE r5 / VERDICT r5 #1 — the
   *    trigger-only variant produced one nondeterministic wrong-label run).
-  *    `run` exits on ONE exact test, run only on rounds where the trigger
-  *    fires (normally once per call): every edge's endpoints share one
-  *    label and no endpoint is unlabeled ([[isFixpoint]]). With the
-  *    label invariant min(component) ≤ label ≤ node, a passing test
-  *    alone proves the exact min-label answer, so no early-convergence
-  *    anomaly, known or unknown, can exit the loop; a failing one keeps
-  *    it looping into the `maxIter` failure. `runStar` confirms its
-  *    trigger with an exact edge-set compare and then verifies the star
-  *    read-off with the same test ([[assertComponentLabels]]).
+  *    Both loops exit on ONE exact test, run only on rounds where the
+  *    trigger fires (normally once per call): every edge of the
+  *    checkpointed input has endpoints that share one label, and none is
+  *    unlabeled ([[isFixpoint]]). With the label invariant
+  *    min(component) ≤ label ≤ node, a passing test alone proves the
+  *    exact min-label answer, so no early-convergence anomaly, known or
+  *    unknown, can exit a loop; a failing one keeps it looping into the
+  *    `maxIter` failure.
   *  - small-graph cutover: both loops pass their counted edges and a
   *    driver union-find to the one driver finish, [[Fixpoint.driverFinish]]:
   *    under [[Sizing.localMaxEdges]] edges the fixpoint is solved on the
@@ -214,13 +213,14 @@ object ConnectedComponents {
     (labels.select($"node", $"lbl".as("component")), nodes)
   }
 
-  /** The exact fixpoint test (VERDICT r5 #1a): `run`'s exit test and
-    * `runStar`'s post-loop verification.
+  /** The exact fixpoint test (VERDICT r5 #1a): the exit test of `run`
+    * and `runStar`.
     *
     * Exactness argument, independent of any accumulator or convergence
     * trigger: both algorithms maintain the invariant
-    * `min(component(v)) ≤ label(v) ≤ v` (labels are seeded from node
-    * ids and only ever replaced by minima of existing labels). If every
+    * `min(component(v)) ≤ label(v) ≤ v` (`run` seeds labels from node
+    * ids and only ever replaces them by minima of existing labels;
+    * `runStar` reads them off edges v < u inside one component). If every
     * edge's endpoints carry the SAME label, labels are constant per
     * component; the component's minimum node m has label ≤ m by the
     * invariant and ≥ min(component) = m, so the constant IS m — i.e.
@@ -264,10 +264,18 @@ object ConnectedComponents {
     *    m = min(N(u) ∪ {u});
     *  - small-star: orient edges large→small; per node u, connect u and
     *    every smaller neighbor to the minimum;
-    *  - converged when the edge set is a fixpoint (the result is then a
-    *    star per component); `localCheckpoint` truncates lineage per
-    *    round, the equality check is an exact count + one-sided
-    *    anti-join (both sides are distinct sets).
+    *  - exit: `run`'s rule. When a round keeps the edge count (the
+    *    counted checkpoint's trigger), its labels are read off — each
+    *    node u gets every v of an edge (u → v), each target v gets
+    *    itself — and returned, checkpointed, if [[isFixpoint]] passes
+    *    against the checkpointed input edges. Every round emits edges
+    *    with v < u inside one component, so each read-off label of a node
+    *    is a node of its component no larger than it: min(component) ≤
+    *    label ≤ node, the test's invariant. A node with two read-off labels
+    *    fails the test on any of its edges (the join pairs each of its
+    *    labels with each of a neighbour's), so a passing test proves the
+    *    exact min-label answer even on a round whose edge set is not yet
+    *    a star; a failing one loops on into the `maxIter` failure.
     */
   def runStar(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): DataFrame =
     runStarStats(spark, edges, maxIter)._1
@@ -277,15 +285,14 @@ object ConnectedComponents {
     * ~log2(d) rounds, not d). */
   def runStarStats(spark: SparkSession, edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
     import spark.implicits._
-    val (e0, e0Count) = Fixpoint.checkpointCounting(
+    // the checkpointed input edges are the exit test's reference:
+    // re-traversing the caller's raw plan would recompute its full
+    // upstream chain (q34's LSH cascade) a second time
+    var (e, eCount) = Fixpoint.checkpointCounting(
       edges.select($"src".as("u"), $"dst".as("v")).filter($"u" =!= $"v").distinct(),
       lit(true), "star_edges_in")
-    // keep the checkpointed ORIGINAL edge set for the final label
-    // verification — re-traversing the caller's raw plan would recompute
-    // its full upstream chain (q34's LSH cascade) a second time
-    var e = e0
-    var eCount = e0Count
-    var converged = false
+    val input = e.select($"u".as("src"), $"v".as("dst"))
+    var out: Option[DataFrame] = None
     var i = 0
     // Small-graph cutover (see the object doc): checked at every round
     // head, because the star contraction shrinks the edge set
@@ -295,97 +302,86 @@ object ConnectedComponents {
     // are invariants of the star rounds (edges only ever connect nodes
     // of one component and the minimum is always retained as a target),
     // so the union-find over the CONTRACTED edges yields the identical
-    // label set; the original-edge fixpoint assert below still runs when
-    // any distributed round contracted the graph first. eCount is the
-    // at-least-once accumulator reading: an inflated count only DELAYS
-    // the cutover by a round, never fires it early on a too-big graph
-    // (the true count is ≤ the reading... the reading is ≥ true count,
-    // so reading ≤ bound ⟹ true count ≤ bound).
+    // label set. At i == 0 it ran on exactly the input edges, exact by
+    // construction; after contracted rounds a failed exit test is a bug
+    // and fails loudly.
     val dt = e.schema("u").dataType
     val ord = orderingFor(dt)
-    var localOut: Option[DataFrame] = None
-    while (localOut.isEmpty && !converged && i < maxIter) {
-      localOut = ord.flatMap(o => Fixpoint.driverFinish(e, eCount)(unionFind(dt, o)))
-      if (localOut.isEmpty) {
-      // Each star pass shares ONE exchange between its aggregation and
-      // its join: the adjacency is explicitly hash-partitioned on `u`
-      // at the width the CURRENT edge count calls for (the count is
-      // already tracked for the convergence trigger; the contraction
-      // shrinks the graph round over round), so the groupBy needs no
-      // further shuffle and the subsequent join finds both sides
-      // co-partitioned. Three exchanges per round total (sym, ori,
-      // final dedup) — the naive formulation paid ~six, all at the
-      // session default width regardless of graph size.
-      val p = Sizing.width(spark, eCount * 2, Sizing.EdgesPerPartition)
-      // large-star over the symmetrized adjacency
-      val sym = e.select($"u", $"v").union(e.select($"v".as("u"), $"u".as("v")))
-        .repartition(p, $"u")
-      val mins = sym.groupBy($"u").agg(min($"v").as("mv"))
-        .select($"u", least($"mv", $"u").as("m"))
-      // no dedup here: the orientation step aggregates again anyway, and
-      // u' = v > v' = m holds by construction (m ≤ u < v), so no self-loops
-      val ls = sym.filter($"v" > $"u")
-        .join(mins, "u")
+    while (out.isEmpty && i < maxIter) {
+      out = ord.flatMap(o => Fixpoint.driverFinish(e, eCount)(unionFind(dt, o)))
+      if (out.isEmpty) {
+        val (ss, ssCount) = starRound(spark, e, eCount, i)
+        // An unchanged count is only the TRIGGER for the exact exit test
+        // (see runStar): it also fires on rounds whose labels are not yet
+        // exact (a chain keeps one edge per non-minimum node for several
+        // rounds), and a retry-inflated count fires it spuriously or
+        // suppresses it for a round. Each costs a failed test or a spare
+        // round; none can mislabel. The read-off is checkpointed only
+        // once it passed.
+        if (ssCount == eCount) {
+          val labels = ss.select($"u".as("node"), $"v".as("component"))
+            .union(ss.select($"v".as("node"), $"v".as("component")))
+            .distinct()
+          if (isFixpoint(input, labels)) out = Some(labels.localCheckpoint())
+        }
+        e = ss
+        eCount = ssCount
+        i += 1
+      } else if (i > 0) assertComponentLabels(input, out.get)
+    }
+    // labels that failed every exit test in maxIter rounds may be wrong
+    // with no signal (ADVICE r4). 50 rounds covers diameter 2^50; hitting
+    // the cap means a bug, not a big graph — fail loudly instead of
+    // mislabeling.
+    require(out.isDefined,
+      s"large-star/small-star CC did not converge in $maxIter rounds")
+    (out.get, i)
+  }
+
+  /** One large-star + small-star round over the distinct edges `e`
+    * (`eCount` of them, at-least-once), checkpointed with its own
+    * at-least-once edge count. */
+  private def starRound(spark: SparkSession, e: DataFrame, eCount: Long, i: Int): (DataFrame, Long) = {
+    import spark.implicits._
+    // Each star pass shares ONE exchange between its aggregation and
+    // its join: the adjacency is explicitly hash-partitioned on `u`
+    // at the width the CURRENT edge count calls for (the count is
+    // already tracked for the convergence trigger; the contraction
+    // shrinks the graph round over round), so the groupBy needs no
+    // further shuffle and the subsequent join finds both sides
+    // co-partitioned. Three exchanges per round total (sym, ori,
+    // final dedup) — the naive formulation paid ~six, all at the
+    // session default width regardless of graph size.
+    val p = Sizing.width(spark, eCount * 2, Sizing.EdgesPerPartition)
+    // large-star over the symmetrized adjacency
+    val sym = e.select($"u", $"v").union(e.select($"v".as("u"), $"u".as("v")))
+      .repartition(p, $"u")
+    val mins = sym.groupBy($"u").agg(min($"v").as("mv"))
+      .select($"u", least($"mv", $"u").as("m"))
+    // no dedup here: the orientation step aggregates again anyway, and
+    // u' = v > v' = m holds by construction (m ≤ u < v), so no self-loops
+    val ls = sym.filter($"v" > $"u")
+      .join(mins, "u")
+      .select($"v".as("u"), $"m".as("v"))
+    // small-star over large→small oriented edges; duplicate oriented
+    // edges are harmless (MIN is duplicate-invariant, the final
+    // distinct dedups the round's output), so the mid-round dedup
+    // exchange is dropped in favor of the u-partitioning the agg+join
+    // pair reuses
+    val ori = ls.select(greatest($"u", $"v").as("u"), least($"u", $"v").as("v"))
+      .repartition(p, $"u")
+    val mins2 = ori.groupBy($"u").agg(min($"v").as("m"))
+    // The counted round replaces a per-round count() action.
+    Fixpoint.checkpointCounting(
+      ori.join(mins2, "u")
         .select($"v".as("u"), $"m".as("v"))
-      // small-star over large→small oriented edges; duplicate oriented
-      // edges are harmless (MIN is duplicate-invariant, the final
-      // distinct dedups the round's output), so the mid-round dedup
-      // exchange is dropped in favor of the u-partitioning the agg+join
-      // pair reuses
-      val ori = ls.select(greatest($"u", $"v").as("u"), least($"u", $"v").as("v"))
-        .repartition(p, $"u")
-      val mins2 = ori.groupBy($"u").agg(min($"v").as("m"))
-      // The counted round replaces a per-round count() action. A
-      // retry-inflated count only delays the trigger by a round (the
-      // fixpoint is stable); convergence is confirmed by exact two-sided
-      // anti-join set equality (both sides distinct, mutual ⊆ ⇒ equal),
-      // and an every-round-retry stall hits the maxIter require below.
-      val (ss, ssCount) = Fixpoint.checkpointCounting(
-        ori.join(mins2, "u")
-          .select($"v".as("u"), $"m".as("v"))
-          .union(mins2.select($"u", $"m".as("v")))
-          .filter($"u" =!= $"v")
-          // dedup rides an explicit (u, v) exchange at width p: the
-          // aggregate behind dropDuplicates sees the clustering satisfied
-          // and inserts no second, session-default-width shuffle
-          .repartition(p, $"u", $"v").dropDuplicates(),
-        lit(true),
-        s"star_edges_$i")
-      converged = ssCount == eCount &&
-        ss.join(e, Seq("u", "v"), "left_anti").isEmpty &&
-        e.join(ss, Seq("u", "v"), "left_anti").isEmpty
-      e = ss
-      eCount = ssCount
-      i += 1
-      }
-    }
-    localOut match {
-      case Some(out) =>
-        // i == 0: the union-find ran on the exact (deduped) input graph —
-        // exact by construction, nothing to verify. i > 0: the read-off
-        // came from contracted edges — keep the original-edge fixpoint
-        // gate, same as the distributed exit.
-        if (i > 0) assertComponentLabels(
-          e0.select($"u".as("src"), $"v".as("dst")), out)
-        (out, i)
-      case None =>
-        // a non-converged edge set is NOT a star per component — the labels
-        // read off below would be wrong with no signal (ADVICE r4). 50
-        // rounds covers diameter 2^50; hitting the cap means a bug, not a
-        // big graph — fail loudly instead of mislabeling.
-        require(converged,
-          s"large-star/small-star CC did not converge in $maxIter rounds")
-        // converged edge set is a star per component: (node → center), with
-        // each center mapping to itself
-        val out = e.select($"u".as("node"), $"v".as("component"))
-          .union(e.select($"v".as("node"), $"v".as("component")))
-          .distinct()
-          .localCheckpoint()
-        // the exact fixpoint test of run()'s exit: the star read-off is
-        // verified against the original (deduped, checkpointed) edges, once
-        assertComponentLabels(
-          e0.select($"u".as("src"), $"v".as("dst")), out)
-        (out, i)
-    }
+        .union(mins2.select($"u", $"m".as("v")))
+        .filter($"u" =!= $"v")
+        // dedup rides an explicit (u, v) exchange at width p: the
+        // aggregate behind dropDuplicates sees the clustering satisfied
+        // and inserts no second, session-default-width shuffle
+        .repartition(p, $"u", $"v").dropDuplicates(),
+      lit(true),
+      s"star_edges_$i")
   }
 }

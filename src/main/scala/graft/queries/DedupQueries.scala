@@ -289,7 +289,12 @@ object DedupQueries {
       "q21_minhash_sigs",
       (s, dir) => {
         import s.implicits._
-        minhashDf(s, dir).orderBy($"doc_id")
+        // persisted, as lshJaccardPairs persists its sets: the output
+        // sort's range-boundary sampling job would otherwise compute every
+        // document's shingle set and MinHash before its map stage does
+        minhashDf(s, dir)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .orderBy($"doc_id")
       },
       Some(s"$shinglesCte $minhashSelect ORDER BY doc_id")
     ),
@@ -317,10 +322,12 @@ object DedupQueries {
       // length — hence min-label round count — grows with the corpus;
       // measured 5.25× time for 10× docs in the r5 scale sweep), so this
       // uses the large-star/small-star variant: O(log n) rounds
-      // regardless of diameter, exact two-sided anti-join convergence,
-      // and the label read-off verified as an exact fixpoint against the
-      // input edges (VERDICT r5 #1/#2). Same labels as min-label (both
-      // are component = min node id) — the oracle hash is unchanged.
+      // regardless of diameter, leaving on the exact fixpoint test of its
+      // read-off labels against the input edges, as min-label does
+      // (VERDICT r5 #1/#2); a graph under the cutover bound is solved by
+      // one driver union-find on those edges before any round. Same
+      // labels as min-label (both are component = min node id) — the
+      // oracle hash is unchanged.
       "q34_dup_clusters",
       (s, dir) => {
         import s.implicits._

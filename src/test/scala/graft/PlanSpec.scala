@@ -159,4 +159,19 @@ class PlanSpec extends AnyFunSuite {
           "a broadcast degrading to a shuffle join is the 100 TB regression this gates)")
     }
   }
+
+  test("q34_dup_clusters: job budget at sf0.01") {
+    // The final-plan pin above sees only q34's output sort; the LSH pair
+    // chain and runStar's round-0 driver finish run as jobs of their own.
+    // 17 jobs: the documents' parquet schema (1), the pair chain's stages
+    // ending in runStar's counted input checkpoint (12), the driver
+    // finish's collect (1) and the output sort (3). A driver finish on the
+    // exact input edges needs no exit test, so the rounds' exit adds none.
+    assume(new java.io.File(s"$dir/documents.parquet").exists())
+    val (_, jobs) = org.apache.spark.graft.JobLog.of(spark.sparkContext) {
+      SparkEntry.queries("q34_dup_clusters")(spark, dir).collect()
+    }
+    Probe.reset(spark)
+    assert(jobs.size <= 17, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+  }
 }

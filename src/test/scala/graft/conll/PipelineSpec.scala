@@ -78,7 +78,7 @@ class PipelineSpec extends AnyFunSuite {
     val t = Pipeline.triples(Pipeline.parse(docs, DocGen.columns)).toDF().cache()
     val vocab = t.filter($"pred" === "conll:WORD").select($"obj".as("word"))
     val gaz = EntityLinker.gazetteerFromVocab(vocab).cache()
-    val a = EntityLinker.linkBroadcast(t, gaz)
+    val a = EntityLinker.linkJoined(t, broadcast(gaz))
     val b = EntityLinker.linkJoined(t, gaz)
     assert(a.count() > 0)
     assert(a.exceptAll(b).count() == 0)

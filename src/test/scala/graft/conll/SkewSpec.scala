@@ -4,6 +4,7 @@ import java.util.Locale
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
@@ -57,7 +58,7 @@ class SkewSpec extends AnyFunSuite {
   private def word(i: Int, w: String): TripleRow =
     TripleRow("d1", 1L + i / 40, s":s${1 + i / 40}_${i % 40 + 1}", "conll:WORD", w, false)
 
-  test("join route: AQE splits a hot surface's partition; rows equal linkBroadcast's") {
+  test("join route: AQE splits a hot surface's partition; rows equal the broadcast join's") {
     import spark.implicits._
     // Zipf-ish mentions: 'the' is half of them
     val words = (1 to 2000).map(i => if (i % 2 == 0) "the" else s"w${i % 37}")
@@ -66,7 +67,7 @@ class SkewSpec extends AnyFunSuite {
     // are shuffle stages, as for one read from storage
     val gaz = words.distinct.map(w => (w, s"ent:$w")).toDF("surface", "entity_id")
     val reference = rows(triples.toDF().unionByName(
-      EntityLinker.linkBroadcast(triples.toDF(), gaz)))
+      EntityLinker.linkJoined(triples.toDF(), broadcast(gaz))))
     withConfs(shuffleJoinSkewSplit) {
       val joined = EntityLinker.linkUnioned(triples, gaz, broadcastMax = 0)
       joined.collect() // finalizes this Dataset's own adaptive plan
@@ -86,7 +87,7 @@ class SkewSpec extends AnyFunSuite {
     }.toDS
     val gaz = EntityLinker.gazetteerFromVocab(words.distinct.toDF("word"))
     val reference = rows(triples.toDF().unionByName(
-      EntityLinker.linkBroadcast(triples.toDF(), gaz)))
+      EntityLinker.linkJoined(triples.toDF(), broadcast(gaz))))
     assert(rows(EntityLinker.linkUnioned(triples, gaz)) == reference)
     // broadcastMax below the gazetteer size → the union with the join
     assert(rows(EntityLinker.linkUnioned(triples, gaz, broadcastMax = 3)) == reference)

@@ -91,9 +91,12 @@ class ConnectedComponentsSpec extends AnyFunSuite with org.scalatest.BeforeAndAf
       (1 until 6).map(i => (n(b * 10), n(b * 10 + i)))
     }.toDF("src", "dst")
     val a = labelsOf(ConnectedComponents.run(spark, edges))
-    val b = labelsOf(ConnectedComponents.runStar(spark, edges))
-    assert(a == b)
+    val (star, rounds) = ConnectedComponents.runStarStats(spark, edges)
+    assert(a == labelsOf(star))
     assert(a(n(13)) == n(10))
+    // the stars are given centre-first, (min, leaf): round 0 reverses
+    // each edge and keeps the count, and its read-off labels are exact
+    assert(rounds == 1, s"took $rounds rounds")
   }
 
   test("long chain: runStar converges in O(log n) rounds where min-label cannot") {
@@ -132,6 +135,23 @@ class ConnectedComponentsSpec extends AnyFunSuite with org.scalatest.BeforeAndAf
     }
     assert(jobs.size <= 8, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
     assert(labelsOf(labels) == edges.flatMap { case (a, h) => Seq(a -> h, h -> h) }.toMap)
+  }
+
+  test("job budget: one distributed runStar over the 60-node chain") {
+    // the long-chain test's path. 72 jobs: the input edges' exchange and
+    // checkpoint (2); six rounds of 8 (five shuffle map stages, two
+    // broadcasts, the checkpoint); every round keeps the count of 59
+    // edges, so each runs the exit test on its read-off (3 jobs, 4 on the
+    // last two rounds); the passing read-off's checkpoint (2). Before the exit
+    // test replaced the anti-join confirm and the post-loop read-off and
+    // assert, one run took 84: a seventh round, the confirm after every
+    // round (2 jobs, 8 on the last) and the assert (4).
+    val edges = (1 until 60).map(i => (n(i), n(i + 1))).toDF("src", "dst")
+    val (labels, jobs) = org.apache.spark.graft.JobLog.of(spark.sparkContext) {
+      ConnectedComponents.runStar(spark, edges)
+    }
+    assert(jobs.size <= 72, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(labelsOf(labels) == (1 to 60).map(i => n(i) -> n(1)).toMap)
   }
 
   test("assertComponentLabels rejects a non-fixpoint labeling") {

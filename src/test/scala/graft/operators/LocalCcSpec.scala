@@ -115,7 +115,7 @@ class LocalCcSpec extends AnyFunSuite {
   private val utf8Order: Ordering[String] = (a: String, b: String) =>
     java.util.Arrays.compareUnsigned(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
 
-  test("run(): forced-distributed == cutover on multi-round graphs; string, bigint and non-BMP keys") {
+  test("run()/runStar(): forced-distributed == cutover on multi-round graphs; string, bigint and non-BMP keys") {
     // index order is key order, so a star's centre stays off the minimum
     // under each type's own order: non-BMP and U+FFFD prefixes order
     // differently as UTF-8 (Spark's MIN) and as UTF-16
@@ -132,6 +132,9 @@ class LocalCcSpec extends AnyFunSuite {
       val (c, d) = (labels(cut), labels(dist))
       assert(c == d, s"forced-distributed != cutover at seed $seed")
       assert(cutN == c.size && distN == d.size, s"node counts $cutN / $distN of ${c.size} at seed $seed")
+      val star = labels(ConnectedComponents.runStar(spark, df))
+      val starDist = withConf(CC, "0")(labels(ConnectedComponents.runStar(spark, df)))
+      assert(star == c && starDist == c, s"runStar != run at seed $seed")
     }
     for (seed <- 1 to 4) {
       check(strKeys, seed)(_.as[(String, String)].collect().toMap)
